@@ -274,17 +274,21 @@ def main() -> None:
     if not os.path.isdir(warm_dir):
         print(f"note: warm-up skipped ({warm_dir} missing)", file=sys.stderr)
     if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != os.path.abspath(sf_dir):
-        for name in HEADLINE:
+        # A warm-up failure must not sink the timed run, but it is
+        # reported on stderr (stdout carries only the one-line result).
+        for name in [*HEADLINE, "pipeline_airport_revenue"]:
             try:
-                queries[name](spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass
-        try:
-            _pipeline_airport_revenue(spark, warm_dir)
-        except Exception:
-            pass
+                if name == "pipeline_airport_revenue":
+                    _pipeline_airport_revenue(spark, warm_dir)
+                else:
+                    queries[name](spark, warm_dir).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+            except Exception as e:  # noqa: BLE001 — reported, not fatal
+                print(
+                    f"warm-up {name} failed: {type(e).__name__}: {e}",
+                    file=sys.stderr,
+                )
 
     # Cache honesty: some builders persist an intermediate (LSH shingle
     # hashes, simhash signatures). Left cached, the CacheManager silently

@@ -69,7 +69,7 @@ PQ_MAXITER = 20
 # ROW POSITION, so without this the fitted model tracks the training
 # file's row layout — the named round-14 cross-session hash variable
 # (SCALE_ann_r14.md §2: a same-rows shuffled rewrite moved 1999/2000 pq
-# book cells; tools/fit_order_probe.py experiment 3 proves the sorted
+# book cells; SCALE_ann_r15.md §1 records that the sorted
 # single-partition sample restores bit-identical books across layouts).
 # One sorted partition of a TRAIN_SAMPLE_CAP-bounded sample is the FAISS
 # train-on-a-RAM-sample shape, not a scalability cost. ``o1`` in the

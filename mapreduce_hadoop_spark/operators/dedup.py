@@ -336,14 +336,6 @@ def _minhash_from(hs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mh0..mh{n-1}) — min of (a*h + b) mod p over shingle hashes.
-
-    Map-only: each minhash is an array_min over the in-row hash array.
-    """
-    return _minhash_from(_shingle_hashes(spark, sf_dir))
-
-
 def _minhash_sigs_sql() -> str:
     mins = ", ".join(
         f"list_min([({a} * h + {b}) % {P} for h in hs]) AS mh{i}"

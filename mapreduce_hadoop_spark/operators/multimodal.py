@@ -182,10 +182,6 @@ def decode_media(media: DataFrame, real_decode: bool = False) -> DataFrame:
     )
 
 
-def media_decode_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return decode_media(media_table(spark, sf_dir))
-
-
 # --- real round-trip: synthesize valid media bytes, decode them back --------
 
 
@@ -1486,22 +1482,6 @@ FROM documents
 """
 
 
-# The fake decoder is pure byte-length arithmetic, so the oracle can verify
-# the whole mapInPandas path end-to-end.
-MEDIA_DECODE_ORACLE = """
-SELECT
-    doc_id,
-    CASE WHEN doc_id % 3 = 0 THEN 'image/png'
-         WHEN doc_id % 3 = 1 THEN 'audio/wav'
-         ELSE 'video/mp4' END AS mime,
-    (octet_length(encode(text)) % 64) + 16 AS width,
-    ((octet_length(encode(text)) // 64) % 64) + 16 AS height,
-    CAST(((octet_length(encode(text)) % 64) + 16)
-         * (((octet_length(encode(text)) // 64) % 64) + 16) AS BIGINT) AS n_pixels
-FROM documents
-"""
-
-
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """Video-style frame sampling: N output rows per input payload.
 
@@ -1535,25 +1515,6 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     return media.mapInPandas(
         batches, schema="doc_id bigint, frame int, n_bytes int, digest16 string"
     )
-
-
-def frame_sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sample_frames(media_table(spark, sf_dir))
-
-
-FRAME_SAMPLE_ORACLE = """
-WITH m AS (SELECT doc_id, text AS txt FROM documents),
-f AS (SELECT m.doc_id, m.txt, fr.frame
-      FROM m, LATERAL (VALUES (0), (1), (2), (3)) AS fr(frame))
-SELECT
-    doc_id,
-    frame,
-    ((octet_length(encode(txt)) * (frame + 1)) // 4
-     - (octet_length(encode(txt)) * frame) // 4) AS n_bytes,
-    substr(sha256(txt[(octet_length(encode(txt)) * frame) // 4 + 1 :
-                     (octet_length(encode(txt)) * (frame + 1)) // 4]), 1, 16) AS digest16
-FROM f
-"""
 
 
 RESIZE_BOX = 32  # aspect-fit target box (stand-in for a thumbnail pipeline)

@@ -17,6 +17,11 @@
   default, near-dup pair recall 0.82 at 8 bands). The 100 TB shape:
   (band, bucket) is the shuffle/join key; bands is the recall dial,
   bits the scale guard — neither changes the plan.
+- The PQ family (``topk_pq*``, ``ann_append_serving*``, ``topk_ivfpq*``)
+  is ONE serving pipeline: books (in-plan aggregation, a persisted
+  artifact, or k-means) -> driver-built ADC arrays (``_query_side``) ->
+  one ADC scan -> shortlist -> exact re-rank (``_adc_rank``); the
+  variants differ only in the books source and the shortlist rule.
 - ``topk_ivf_trained`` / ``topk_ivf`` (oracle twin):
   inverted-file ANN — broadcast coarse centroids, nearest-list assignment,
   nprobe-list probe join. Default nprobe=8 is the measured knee (sf0.01
@@ -24,9 +29,9 @@
   trained variant fits k-means once per sf_dir (cached) and probes with
   the identical plan.
 - ``topk_ivfpq_trained`` (PRIMARY ANN — the deployed serving shape) /
-  ``topk_ivfpq`` (oracle twin): full FAISS IVFPQ — K=sqrt(n) trained
-  coarse quantizer x residual-encoded PQ-ADC with per-list codebooks x
-  scale-adaptive exact re-rank. Recall@5 0.84 at sf0.1 scanning 36% of
+  ``topk_ivfpq_fixed`` (oracle twin): full FAISS IVFPQ — K=sqrt(n)
+  trained coarse quantizer x residual-encoded PQ-ADC x scale-adaptive
+  exact re-rank. Recall@5 0.84 at sf0.1 scanning 36% of
   the corpus (the fixed-K twin: 0.72 at 51%), 4 code bytes per scanned
   vector instead of 64 floats; the memory shape that lets a 100 TB
   corpus' index live in cluster RAM.
@@ -1837,9 +1842,10 @@ def _shortlist_topr(
     scored: DataFrame, shortlist: int, candidates_per_query: "int | None"
 ) -> DataFrame:
     """Top-``shortlist`` rows per query by (adc asc, vec_id) — the shared
-    shortlist stage of every PQ scan. Two-phase bucketed when a query's
-    candidate list is too big for one reducer (or unknown), one window
-    otherwise; identical output either way."""
+    shortlist stage of every PQ scan — with their rank kept as ``sr``.
+    Two-phase bucketed when a query's candidate list is too big for one
+    reducer (or unknown), one window otherwise; identical output either
+    way."""
     if candidates_per_query is None or candidates_per_query > PQ_TWO_PHASE_MIN:
         w1 = Window.partitionBy(
             "query_id", F.col("vec_id") % PQ_TOPK_BUCKETS
@@ -1850,10 +1856,8 @@ def _shortlist_topr(
             .drop("lr")
         )
     w2 = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w2).alias("sr"))
-        .filter(F.col("sr") <= shortlist)
-        .drop("sr")
+    return scored.select("*", F.row_number().over(w2).alias("sr")).filter(
+        F.col("sr") <= shortlist
     )
 
 # ADC shortlist per query (exact-re-ranked to TOP_K): SCALE-ADAPTIVE,
@@ -1891,12 +1895,11 @@ def _emb_count(emb: DataFrame, sf_dir: str) -> int:
 
     return ann_index.corpus_count(emb, sf_dir)
 
-# The ADC lookup table is the broadcast side of all four scan joins; built
-# unpersisted, each broadcast build would recompute its codebook lineage
-# (a full corpus scan apiece — measured 22 parquet scans in the plan).
-# Persisted, the codebook pass runs once. Same contract as dedup._PERSISTED:
-# callers release via ``unpersist_intermediates`` (bench.py does, between
-# queries).
+# PQ intermediates cached for the life of one query — today the in-plan
+# codes relation of ``topk_pq`` (``_adc_rank(persist_codes=True)``). Same
+# contract as dedup._PERSISTED: callers release via
+# ``unpersist_intermediates`` (bench.py does, between queries); the PQ
+# cache-lifecycle test pins that nothing survives it.
 _PERSISTED: "list[DataFrame]" = []
 
 
@@ -1951,25 +1954,17 @@ def topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-independent), and divide once at the edge; every float fold is
     the strict left-to-right form the other similarity oracles share.
 
-    Round 19 (optimization; output bit-identical, oracle unchanged): the
-    query side adopts the trained path's round-12 DRIVER-BUILT shape.
-    The codebook aggregation is still the same ONE exact fixed-point
-    Spark pass over the corpus — but its 1,024-row result is collected
-    and the per-query ADC lookup arrays are computed driver-side
-    (``_adc_arrays_np``: the identical ascending-d IEEE accumulation the
-    ``0.0D + (q-cd)^2 + ...`` expression performed, so every ``t`` is
-    bit-for-bit the old value), then shipped as a LocalTableScan. This
-    removes the q x cent crossJoin, the two ``_adc_scatter_arrays``
-    exchanges (groupBy(query_id, m) + pivot), and the adc persist — the
-    per-invocation 256^2-per-group interpreted scatter the trained paths
-    dropped in round 12. SQL-expressibility of the codebook construction
-    is still demonstrated where it is checked: the DuckDB oracle computes
-    the books, the ADC tables, and the shortlist entirely in SQL, and
-    the driver hash pins this plan against it.
+    The codebook aggregation is ONE exact fixed-point Spark pass over the
+    corpus (``_fixed_books_rows``); its model-sized result is collected and
+    the query side is built driver-side (``_query_side``: the per-query ADC
+    lookup arrays come from ``_adc_arrays_np``, the identical ascending-d
+    IEEE accumulation of ``0.0D + (q-cd)^2 + ...``, so every ``t`` is
+    bit-for-bit the in-plan value), shipped as LocalTableScans. The DuckDB
+    oracle computes the books, the ADC tables and the shortlist entirely in
+    SQL, and the value-hash gate pins this plan against it.
     """
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     n = _emb_count(emb, sf_dir)
-    shortlist = _pq_shortlist(n)
     nvt = emb.select(
         "vec_id", _div_by("v", "norm").alias("nv")
     )
@@ -1978,62 +1973,18 @@ def topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nv",
         *[_pq_code(F.col("nv"), m).alias(f"c{m}") for m in range(PQ_M)],
     )
-
-    # Codebooks: still the same ONE exact fixed-point aggregation over
-    # the corpus (``_fixed_books_rows`` — the append twin's train half;
-    # partial aggregation bounds its exchange at 1,024 rows per map task
-    # regardless of corpus size), collected model-sized and recomputed
-    # per invocation — nothing is cached across runs.
-    book_rows = _fixed_books_rows(nvt)
-
-    # Query side: driver-built local relations (the trained path's r12
-    # fusion — `_query_nv_rows` is the arithmetic twin of
-    # nvt.filter(vec_id < N_QUERIES), bit-identical by construction).
-    qnv_rows = _query_nv_rows(emb, sf_dir)
-    q = spark.createDataFrame(qnv_rows, "query_id long, qnv array<double>")
-    qarr = _local_qarr_df(
-        spark,
-        [("query_id", "long")],
-        [(qid,) for qid, _ in qnv_rows],
-        [nv for _, nv in qnv_rows],
-        book_rows,
-        PQ_M,
-        PQ_SUB,
-    )
-
-    return _pq_adc_rank(
+    # Codebooks are recomputed per invocation (partial aggregation bounds
+    # the exchange at 1,024 rows per map task) — nothing is cached across
+    # runs.
+    q, qarr = _query_side(spark, emb, sf_dir, _fixed_books_rows(nvt), PQ_M, PQ_SUB)
+    return _adc_rank(
         codes,
         qarr,
         emb.select("vec_id", "v"),
         q,
-        shortlist,
+        _pq_shortlist(n),
         candidates_per_query=n,
-    )
-
-
-def _adc_scatter_arrays(adc: DataFrame, keys: "list[str]", m_subspaces: int) -> DataFrame:
-    """(.., m, code, t) ADC rows -> one row per ``keys`` with M DENSE
-    256-slot lookup arrays (columns `0`..`M-1`): ts_m[code+1] = t.
-
-    The scatter walks a 256-entry map per slot (Spark map element_at is
-    a linear scan), so its cost is #groups x 256^2 interpreted ops —
-    fine for the flat-PQ paths (Q x M groups) and the fixed-K ivfpq
-    (Q x nprobe x M), but it is why the TRAINED paths build their arrays
-    straight from the driver-side codebooks instead (``_adc_arrays_np``,
-    driver-built local relations since round 12): at K=sqrt(n),
-    Q x nprobe x M groups made the scatter the top cost of the whole
-    query (measured +13% on topk_ivfpq_trained at sf1). Codes never referenced stay +inf (never
-    matched: every emitted code has a codebook row), keeping the asc
-    sort sane if one ever leaks."""
-    mp = F.map_from_entries(F.collect_list(F.struct("code", "t")))
-    per_m = adc.groupBy(*keys, "m").agg(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(255)),
-            lambda i: F.coalesce(F.try_element_at(mp, i), F.lit(float("inf"))),
-        ).alias("ts")
-    )
-    return per_m.groupBy(*keys).pivot("m", list(range(m_subspaces))).agg(
-        F.first("ts")
+        persist_codes=True,
     )
 
 
@@ -2069,76 +2020,119 @@ def _query_nv_rows(emb: DataFrame, sf_dir: str) -> "list[tuple[int, list[float]]
 
 def _adc_arrays_np(
     qvecs: "list[list[float]]",
-    rows: "list[tuple[int, int, list[float]]]",
+    rows: "list[tuple]",
     m_subspaces: int,
     sub: int,
+    list_ids: "list[int] | None" = None,
 ):
-    """Per-query dense ADC lookup arrays computed driver-side from the
-    trained codebooks: for query g, subspace m, code c —
-    ts[g][m][c] = sum_d (qvec[m*sub+d] - cd[d])^2, accumulated in
-    ascending-d order so every entry is bit-identical to the JVM
-    zip_with/aggregate fold it replaces (numpy elementwise ops are the
-    same IEEE doubles; only the STAGE moves to the driver, not the
-    arithmetic). Book cells never emitted by the encoder are +inf (the
-    asc shortlist can never surface them — the sparse-artifact trap
-    ADVICE r11 flagged). The arrays span the FULL byte range (256 slots)
-    rather than 1 + max(observed code): a books artifact that ever loads
-    sparse at the top — or a codes row carrying a code above every
-    loaded book cell — would otherwise make ``element_at`` run past the
-    array and return NULL, and a NULL ADC sum sorts NULLS FIRST into the
-    shortlist (VERDICT r12). With the pad, any such cell reads +inf and
-    can never win the asc sort; PQ codes are < book k <= 256 by
-    construction, so the pad is dead weight only (10 queries x M x 256
-    doubles — request-sized). Returns a list of M (G, 256) float64
-    arrays."""
+    """Dense ADC lookup arrays computed driver-side from codebook rows:
+    for query row g, subspace m, code c —
+    ts[g][m][c] = sum_d (qvec[m*sub+d] - cd[d])^2.
+
+    ``rows`` is ``[(m, code, cd)]`` for books shared by every query row,
+    or ``[(cent_id, m, code, cd)]`` for per-list books, in which case row
+    g scores against the books of list ``list_ids[g]``. Either way the
+    books become a +inf-padded (M, 256, sub) tensor — or a (G, M, 256,
+    sub) stack, one per query row — and both broadcast through the same
+    ascending-d accumulation, so every entry is bit-identical to the JVM
+    zip_with/aggregate fold (numpy elementwise ops are the same IEEE
+    doubles). Book cells never emitted by the encoder are +inf, and the
+    arrays span the FULL byte range (256 slots) rather than 1 + max
+    observed code: a books artifact loaded sparse at the top would
+    otherwise make ``element_at`` run past the array and return NULL,
+    which sorts NULLS FIRST into the asc shortlist; a +inf cell can never
+    win it. Returns a list of M (G, 256) float64 arrays."""
+    from collections import defaultdict
+
     import numpy as np
 
     k = 256
-    books = np.full((m_subspaces, k, sub), np.inf, dtype=np.float64)
-    for m, code, cd in rows:
-        books[m, code] = cd
+    books: "dict[tuple, object]" = defaultdict(
+        lambda: np.full((m_subspaces, k, sub), np.inf)
+    )
+    for *key, m, code, cd in rows:
+        books[tuple(key)][m, code] = cd
+    if rows and len(rows[0]) == 4:
+        bt = np.stack([books[(cid,)] for cid in list_ids])
+    else:
+        bt = books[()]
     x = np.asarray(qvecs, dtype=np.float64)
     out = []
     for m in range(m_subspaces):
         acc = np.zeros((len(x), k), dtype=np.float64)
         for d in range(sub):
-            diff = x[:, m * sub + d][:, None] - books[m, :, d][None, :]
+            diff = x[:, m * sub + d][:, None] - bt[..., m, :, d]
             acc = acc + diff * diff
         out.append(acc)
     return out
 
 
-def _local_qarr_df(
+def _query_side(
     spark: SparkSession,
-    key_fields: "list[tuple[str, str]]",
-    key_rows: "list[tuple]",
-    qvecs: "list[list[float]]",
-    rows: "list[tuple[int, int, list[float]]]",
+    emb: DataFrame,
+    sf_dir: str,
+    rows: "list[tuple]",
     m_subspaces: int,
     sub: int,
-    adc: "list | None" = None,
-) -> DataFrame:
-    """The per-query ADC lookup-array relation as a LOCAL DataFrame
-    (one row per ``key_rows`` entry, M array<double> columns `0`..`M-1`)
-    — a LocalTableScan, so broadcasting it costs no Spark job at all.
-    ``key_fields`` is [(name, ddl_type)] for the leading key columns.
-    ``adc`` lets a caller that already built the lookup arrays (the
-    adaptive bulk estimate shares them) pass them in instead of paying
-    the identical computation twice (ADVICE r14)."""
-    if adc is None:
-        adc = _adc_arrays_np(qvecs, rows, m_subspaces, sub)
-    data = [
-        (*key_rows[g], *[adc[m][g].tolist() for m in range(m_subspaces)])
-        for g in range(len(key_rows))
-    ]
-    schema = ", ".join(
-        [f"{name} {t}" for name, t in key_fields]
-        + [f"`{m}` array<double>" for m in range(m_subspaces)]
+    probe_lists: "list[list[int]] | None" = None,
+    cents_rows: "list[tuple[int, list[float]]] | None" = None,
+    hist: "list[tuple[int, int, int]] | None" = None,
+) -> "tuple[DataFrame, DataFrame]":
+    """The driver-built query side of every PQ serve, as LOCAL relations
+    (LocalTableScans, so broadcasting them costs no Spark job): returns
+    ``(q, qarr)``.
+
+    - ``q`` is (query_id, qnv), the normalized query vectors the exact
+      re-rank joins (``_query_nv_rows``).
+    - ``qarr`` carries M dense 256-slot ADC lookup arrays (columns
+      `0`..`M-1`, ``_adc_arrays_np``) against the books ``rows``. Flat PQ:
+      one row per query_id. IVF-PQ (``probe_lists`` given): one row per
+      (query_id, cent_id) probed list, scored on the query residual
+      qnv - ncv_L, where ncv_L normalizes list L's centroid from
+      ``cents_rows`` with the strict fold — the same doubles the JVM
+      residual ``_div_by`` + ``zip_with`` produced.
+    - ``hist`` (the adaptive flat serve) adds a per-query ``bulk`` column,
+      the mean candidate ADC (``_bulk_adc_estimates``) over the same
+      arrays.
+    """
+    import math
+
+    qnv_rows = _query_nv_rows(emb, sf_dir)
+    q = spark.createDataFrame(qnv_rows, "query_id long, qnv array<double>")
+    fields = ["query_id long"]
+    if probe_lists is None:
+        keys: "list[tuple]" = [(qid,) for qid, _ in qnv_rows]
+        qvecs = [nv for _, nv in qnv_rows]
+        list_ids = None
+    else:
+        fields.append("cent_id int")
+        ncv = {}
+        for cid, cv in cents_rows:
+            norm = math.sqrt(_strict_dot(cv, cv))
+            ncv[cid] = [x / norm for x in cv]
+        keys, qvecs = [], []
+        for (qid, nv), plist in zip(qnv_rows, probe_lists):
+            for cid in plist:
+                keys.append((qid, cid))
+                qvecs.append([a - b for a, b in zip(nv, ncv[cid])])
+        list_ids = [cid for _qid, cid in keys]
+    adc = _adc_arrays_np(qvecs, rows, m_subspaces, sub, list_ids)
+    if hist is not None:
+        fields.append("bulk double")
+        bulk = _bulk_adc_estimates(adc, hist, m_subspaces)
+        keys = [(*key, b) for key, b in zip(keys, bulk)]
+    fields += [f"`{m}` array<double>" for m in range(m_subspaces)]
+    qarr = spark.createDataFrame(
+        [
+            (*key, *[adc[m][g].tolist() for m in range(m_subspaces)])
+            for g, key in enumerate(keys)
+        ],
+        ", ".join(fields),
     )
-    return spark.createDataFrame(data, schema)
+    return q, qarr
 
 
-def _pq_adc_rank(
+def _adc_rank(
     codes: DataFrame,
     qarr: DataFrame,
     raw: DataFrame,
@@ -2146,44 +2140,49 @@ def _pq_adc_rank(
     shortlist: int,
     m_subspaces: int = PQ_M,
     candidates_per_query: "int | None" = None,
-    persist_codes: bool = True,
+    persist_codes: bool = False,
     adaptive: bool = False,
 ) -> DataFrame:
-    """Shared flat-PQ ADC scan + two-phase shortlist + exact re-rank;
-    ``codes`` is (vec_id, c0..c{M-1}), ``raw`` is the (vec_id, v) double
-    corpus for the post-join re-rank, ``qarr`` is one row per query
-    carrying M dense 256-slot ADC lookup arrays (columns `0`..`M-1`).
-    Used by both the sign-orthant oracle twin (``topk_pq``) and the
-    Lloyd-trained primary (``topk_pq_trained``) — identical plan shape,
-    only the codebook/encode source (and M) differs.
+    """The one PQ serving scan: ADC scan -> shortlist -> exact re-rank.
 
-    ADC scan: the per-query arrays broadcast ONCE; each candidate row
-    costs one broadcast nested-loop fan-out + M O(1) array
-    ``element_at`` probes. Round 10 measured and rejected map<code, t>
-    columns (map element_at LINEAR-scans ArrayBasedMapData, +46% on the
-    ivfpq scan); round 11 measured this array form against the M
-    broadcast-hash-join form it replaces: outputs identical, wash at
-    M=4, -30% wall at M=8/sf1 (32.6 -> 23.0 s before the codes persist)
-    — one join instead of M beats M O(1) hash probes once M grows.
+    ``codes`` is (vec_id, [cent_id,] c0..c{M-1}), ``raw`` the (vec_id, v)
+    double corpus for the re-rank, and ``q``/``qarr`` the query side from
+    ``_query_side``. The fan-out follows ``qarr``'s shape:
 
-    ``adaptive=True`` (the trained flat primary): ``qarr`` additionally
-    carries a per-query ``bulk`` column (driver-side mean-ADC estimate,
-    ``_bulk_adc_estimates``) and the shortlist becomes per-query — the
-    exact re-rank reads ``PQ_ADAPT_WIDEN x shortlist`` candidates iff
-    the query's covered-gap signal fires (see the constants' comment).
-    The widened budget flows through the same window exchange; the
-    signal is one extra window aggregate over the already-partitioned
-    ranked relation — no new shuffle, no new scan.
+    - flat PQ (one ``qarr`` row per query): a broadcast nested-loop
+      crossJoin of every code row with every query;
+    - IVF-PQ (one row per (query_id, cent_id) probed list): a broadcast
+      hash join on cent_id, which IS the probe filter — a lookup-array row
+      exists only for a probed list.
+
+    Each candidate then pays M O(1) array ``element_at`` probes: map<code,
+    t> columns linear-scan ArrayBasedMapData (measured slower), and one
+    array join beats M broadcast hash joins as M grows.
+
+    ``persist_codes`` caches the codes relation for callers whose codes
+    carry an in-plan codebook aggregation in their lineage; artifact
+    scans are read once and stay uncached.
+
+    ``adaptive=True`` (the trained flat primary): ``qarr`` also carries a
+    per-query ``bulk`` column and the keep depth becomes per-query — the
+    floor ``shortlist``, ``PQ_ADAPT_WIDEN`` x it, or ``PQ_ADAPT_WIDEN_DEEP``
+    x it, by the covered-gap signal (see the constants' comment). The
+    widened budget flows through the same window exchange; the signal is
+    window aggregates over the already-partitioned ranked relation — no
+    new shuffle, no new scan.
     """
-    # The 8-ish-byte codes relation is scanned by the broadcast fan-out.
-    # Sign-orthant twins persist it (its lineage carries the in-plan
-    # codebook aggregation); the trained paths pass persist_codes=False —
-    # their codes are a read-once parquet ARTIFACT scan, and caching a
-    # read-once relation only adds a materialization pass.
-    codes = codes.select("vec_id", *[f"c{m}" for m in range(m_subspaces)])
+    keyed = "cent_id" in qarr.columns
+    codes = codes.select(
+        "vec_id",
+        *(["cent_id"] if keyed else []),
+        *[f"c{m}" for m in range(m_subspaces)],
+    )
     if persist_codes:
         codes = _persisted(codes)
-    sc = codes.crossJoin(F.broadcast(qarr))
+    if keyed:
+        sc = codes.join(F.broadcast(qarr), "cent_id")
+    else:
+        sc = codes.crossJoin(F.broadcast(qarr))
     t_sum = " + ".join(f"element_at(`{m}`, c{m} + 1)" for m in range(m_subspaces))
     scored = sc.select(
         "query_id",
@@ -2193,31 +2192,14 @@ def _pq_adc_rank(
     ).filter(F.col("vec_id") != F.col("query_id"))
 
     # Shortlist (one window or bucketed two-phase by candidate volume —
-    # see _shortlist_topr; identical output either way).
+    # see _shortlist_topr; identical output either way). The adaptive
+    # serve ranks down to the deepest budget once, then keeps per query.
+    depth = shortlist * PQ_ADAPT_WIDEN_DEEP if adaptive else shortlist
+    ranked = _shortlist_topr(scored, depth, candidates_per_query)
     if not adaptive:
-        short = _shortlist_topr(scored, shortlist, candidates_per_query)
+        short = ranked.drop("sr")
     else:
-        # Escalating widen (round 16): rank down to the DEEP budget once;
-        # the per-query keep depth is then floor / 4x / 16x by the same
-        # covered-gap signal (see the PQ_ADAPT_* constants' comment).
-        wide = shortlist * PQ_ADAPT_WIDEN
-        wide_deep = shortlist * PQ_ADAPT_WIDEN_DEEP
-        if candidates_per_query is None or candidates_per_query > PQ_TWO_PHASE_MIN:
-            w1 = Window.partitionBy(
-                "query_id", F.col("vec_id") % PQ_TOPK_BUCKETS
-            ).orderBy(F.col("adc").asc(), F.col("vec_id"))
-            scored = (
-                scored.select("*", F.row_number().over(w1).alias("lr"))
-                .filter(F.col("lr") <= wide_deep)
-                .drop("lr")
-            )
-        w2 = Window.partitionBy("query_id").orderBy(
-            F.col("adc").asc(), F.col("vec_id")
-        )
         wq = Window.partitionBy("query_id")
-        ranked = scored.select("*", F.row_number().over(w2).alias("sr")).filter(
-            F.col("sr") <= wide_deep
-        )
         a_top = F.max(F.when(F.col("sr") <= TOP_K, F.col("adc"))).over(wq)
         a_floor = F.max(F.when(F.col("sr") <= shortlist, F.col("adc"))).over(wq)
         gap_bulk = F.greatest(F.col("bulk") - a_top, F.lit(1e-9))
@@ -2227,7 +2209,7 @@ def _pq_adc_rank(
             ranked.select("*", fire.alias("_fire"), fire_deep.alias("_deep"))
             .filter(
                 (F.col("sr") <= shortlist)
-                | (F.col("_fire") & (F.col("sr") <= wide))
+                | (F.col("_fire") & (F.col("sr") <= shortlist * PQ_ADAPT_WIDEN))
                 | F.col("_deep")
             )
             .drop("sr", "bulk", "_fire", "_deep")
@@ -2235,15 +2217,10 @@ def _pq_adc_rank(
 
     # Exact re-rank of the shortlist: the query vectors join the Q*R
     # survivors INSIDE the broadcast build (q is query-sized), so the
-    # final stage is ONE broadcast-hash join against one pruned scan of
-    # the corpus — not two separate broadcast jobs (round-12 stage
-    # fusion). Round 13: the join runs on the RAW (vec_id, v) scan and
-    # the normalize-fold + cosine evaluate ABOVE it — r12's plan kept
-    # the O(d) norm fold + divide in a Project BELOW the join, paying
-    # ~200 interpreted lambda ops for EVERY corpus row when only the
-    # ~Q*R shortlist survivors reach the cosine. Same expression tree
-    # (_div_by keeps the fold once-per-row), same bits, n-fold fewer
-    # evaluations.
+    # final stage is ONE broadcast-hash join against one scan of the RAW
+    # (vec_id, v) corpus, with the normalize-fold + cosine evaluated ABOVE
+    # the join — only the ~Q*R survivors pay the O(d) folds (``_div_by``
+    # keeps the norm fold once per row).
     rer = raw.join(
         F.broadcast(short.join(F.broadcast(q), "query_id")), "vec_id"
     ).select(
@@ -2263,7 +2240,22 @@ def _pq_adc_rank(
     )
 
 
-def _topk_pq_oracle() -> str:
+def _topk_pq_oracle(base_only: bool = False) -> str:
+    """``topk_pq`` in DuckDB SQL. ``base_only`` restricts the MODEL rows
+    (the codebook aggregation) to the append demo's derived base,
+    ``vec_id < greatest(10, n*9//10)``: the fixed-books append serve
+    restated over the original corpus. Candidates whose codes are unseen
+    in the base drop out of the inner ADC join, mirroring the +inf
+    exclusion (see the parity bound in ``topk_pq_fixed``)."""
+    wm_cte = (
+        f"wm AS (SELECT greatest({N_QUERIES}, (count(*) * 9) // 10) AS w FROM e),\n"
+        if base_only
+        else ""
+    )
+    model_where = (
+        "\n         WHERE codes.vec_id < (SELECT w FROM wm)" if base_only else ""
+    )
+
     def code_sql(m: int) -> str:
         return " + ".join(
             f"CASE WHEN nv[{m * PQ_SUB + j + 1}] >= 0.0 THEN {1 << j} ELSE 0 END"
@@ -2292,11 +2284,11 @@ def _topk_pq_oracle() -> str:
     return f"""
 WITH e AS ({EMB_NORM_SQL}),
 nvt AS (SELECT vec_id, [v[i]/norm for i in range(1, {EMB_DIM + 1})] AS nv FROM e),
-codes AS (SELECT vec_id, nv,
+{wm_cte}codes AS (SELECT vec_id, nv,
           {", ".join(f"{code_sql(m)} AS c{m}" for m in range(PQ_M))}
           FROM nvt),
 subs AS (SELECT ms.m AS m, {case_code} AS code, nv
-         FROM codes, (SELECT unnest(range({PQ_M})) AS m) ms),
+         FROM codes, (SELECT unnest(range({PQ_M})) AS m) ms{model_where}),
 cb AS (SELECT m, code, count(*) AS n,
          {sums}
        FROM subs GROUP BY m, code),
@@ -2416,7 +2408,7 @@ assert IVFPQ_PROBE_EPS == IVF_ADAPT_EPS
 # well toward the bulk, the top ranks are already separated and the
 # floor suffices. Calibration: round 14 measured five corpora with a
 # clean gap (losses <= 0.333, lossless >= 0.367) and set 0.35 in it;
-# round 15 MEASURED the gap itself (tools/dial_band_probe.py —
+# round 15 MEASURED the gap itself (SCALE_ann_r15.md §3 —
 # intermediate mutation factors 20/30/50, n=40k/60k/100k, VERDICT r14
 # order 6) and found it is not clean: 1-2-neighbor losses occur up to
 # covered = 0.372, and 4x widening RECOVERS every one of them
@@ -2435,7 +2427,7 @@ assert IVFPQ_PROBE_EPS == IVF_ADAPT_EPS
 # per-query arithmetic over the already-shuffled ranked relation,
 # request-sized extra join rows, zero new distributed passes.
 # Round 17 (VERDICT r16 order 3): 4 -> 8. The second corpus family
-# (tools/dial_family2_probe.py — seeded Gaussian mixtures, cluster
+# (SCALE_ann_r17.md §2 — seeded Gaussian mixtures, cluster
 # count/overlap as the axes instead of the replica recipe) produced the
 # first measured ordinary fire 4x does NOT recover: covered = 0.369
 # (c4_wide, 4 broad clusters) reads recall 0.8 at 4x and 1.0 at 8x.
@@ -2693,7 +2685,7 @@ def _assign_arrow_udf(cents_rows: "list[tuple[int, list[float]]]", n: int):
     cosine per vector, as one (B, d) x (d, K) matmul per batch — the
     trained-path replacement for ``_assign``'s crossJoin + window
     formulation, whose n x K interpreted folds and shuffled scored rows
-    dominate wall time once K=sqrt(n) (see ``_ivfpq_from``). Map-only,
+    dominate wall time once K=sqrt(n) (see ``topk_ivfpq_trained``). Map-only,
     deterministic; core shared with the driver-side query prep
     (``_assign_topn_np``)."""
     import numpy as np
@@ -2718,19 +2710,6 @@ def _books_array(
     for m, code, cd in rows:
         books[m, code] = cd
     return books
-
-
-def _adc_t(vec_col: str, sub: int, m_expr: str = "m") -> Column:
-    """||slice(vec, m) - cd||^2 as a JVM fold — the ADC table entry."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice(F.col(vec_col), F.expr(f"{m_expr} * {sub} + 1"), sub),
-            F.col("cd"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def topk_pq_trained(
@@ -2762,26 +2741,19 @@ def topk_pq_trained(
     map-only); k-means training is not SQL-expressible -> rows-only
     driver check, like every trained variant.
 
-    Round 12 — the warm serving path is STAGE-FUSED to the shape a
-    request actually needs: the query side (normalized query vectors,
-    per-query ADC lookup arrays) is built DRIVER-SIDE from the persisted
-    books and the persisted query-vector artifact
-    (ann_index.query_vectors) with bit-identical arithmetic
-    (``_query_nv_rows`` / ``_adc_arrays_np``), and the query vectors join
-    the shortlist inside its broadcast build — a warm query plans TWO
-    jobs (shortlist build over the codes artifact, then one
-    broadcast-hash re-rank pass over the corpus), not the ~12-stage
-    r11 chain whose per-stage latency dominated sf1 wall time.
+    The warm serving path is stage-fused to the shape a request needs:
+    the query side is built driver-side from the persisted books and
+    query-vector artifact with bit-identical arithmetic (``_query_side``),
+    and the query vectors join the shortlist inside its broadcast build —
+    a warm query plans TWO jobs (shortlist build over the codes artifact,
+    then one broadcast-hash re-rank pass over the corpus).
 
-    Round 14 — the DEFAULT serving shape is per-query ADAPTIVE: the
-    exact re-rank widens ``PQ_ADAPT_WIDEN``-fold for exactly the queries
-    whose ADC covered-gap signal says the floor shortlist has not
-    separated from the decoy bulk (see the ``PQ_ADAPT_*`` comment —
-    measured recall 0.80 -> 1.00 on organic sf0.1, 0.82 -> 1.00 on the
-    mutated n=20k crossover corpus, with ZERO widening on corpora that
-    lose no neighbor). The bulk estimate is driver-side arithmetic over
-    a persisted code histogram; ``adaptive=False`` reproduces the
-    round-13 fixed-floor plan bit-for-bit (the append demo pins it).
+    The DEFAULT serving shape is per-query ADAPTIVE: the exact re-rank
+    widens for exactly the queries whose ADC covered-gap signal says the
+    floor shortlist has not separated from the decoy bulk (see the
+    ``PQ_ADAPT_*`` comment), with ZERO widening on corpora that lose no
+    neighbor. The bulk estimate is driver-side arithmetic over a
+    persisted code histogram; ``adaptive=False`` serves the fixed floor.
     """
     from mapreduce_hadoop_spark.operators import ann_index
 
@@ -2822,31 +2794,15 @@ def topk_pq_trained(
     )
 
     # Query side: driver-built local relations (zero Spark jobs warm).
-    qnv_rows = _query_nv_rows(emb, sf_dir)
-    q = spark.createDataFrame(qnv_rows, "query_id long, qnv array<double>")
-    key_fields: "list[tuple[str, str]]" = [("query_id", "long")]
-    key_rows: "list[tuple]" = [(qid,) for qid, _ in qnv_rows]
-    # One ADC-array build feeds both the bulk estimate and the broadcast
-    # relation (ADVICE r14 — the two computations were identical).
-    adc_arrays = _adc_arrays_np(
-        [nv for _, nv in qnv_rows], rows, PQ_TRAINED_M, PQ_TRAINED_SUB
+    hist = (
+        _codes_histogram(spark, codes, sf_dir, PQ_TRAINED_M, k, tag="nv")
+        if adaptive
+        else None
     )
-    if adaptive:
-        hist = _codes_histogram(spark, codes, sf_dir, PQ_TRAINED_M, k, tag="nv")
-        bulk = _bulk_adc_estimates(adc_arrays, hist, PQ_TRAINED_M)
-        key_fields.append(("bulk", "double"))
-        key_rows = [(qid, b) for (qid, _), b in zip(qnv_rows, bulk)]
-    qarr = _local_qarr_df(
-        spark,
-        key_fields,
-        key_rows,
-        [nv for _, nv in qnv_rows],
-        rows,
-        PQ_TRAINED_M,
-        PQ_TRAINED_SUB,
-        adc=adc_arrays,
+    q, qarr = _query_side(
+        spark, emb, sf_dir, rows, PQ_TRAINED_M, PQ_TRAINED_SUB, hist=hist
     )
-    return _pq_adc_rank(
+    return _adc_rank(
         codes,
         qarr,
         emb.select("vec_id", "v"),
@@ -2854,7 +2810,6 @@ def topk_pq_trained(
         _pq_trained_shortlist(n),
         m_subspaces=PQ_TRAINED_M,
         candidates_per_query=n,
-        persist_codes=False,
         adaptive=adaptive,
     )
 
@@ -2957,38 +2912,40 @@ FIXED_BOOKS_FNAME = f"pqfix_nv_m{PQ_M}.parquet"
 FIXED_CODES_FNAME = f"codes_pqfix_m{PQ_M}.parquet"
 
 
-def _fixed_books_rows(nvt_model: DataFrame) -> "list[tuple[int, int, list[float]]]":
-    """Sign-orthant PQ codebooks as driver-side rows ``[(m, code, cd)]``
-    — the deterministic 'train' half of the fixed-books append twin.
+def _fixed_books_rows(src: DataFrame, vec: str = "nv") -> "list[tuple]":
+    """Sign-orthant PQ codebooks of ``src``'s ``vec`` column as driver-side
+    rows ``[(m, code, cd)]`` — or ``[(cent_id, m, code, cd)]``, one book
+    per coarse list, when ``src`` carries a ``cent_id`` column (the IVF-PQ
+    residuals, ``vec="r"``). The deterministic 'train' half of every
+    sign-orthant PQ serve.
 
-    ONE exact fixed-point aggregation over the MODEL corpus — since
-    round 19 this IS ``topk_pq``'s codebook stage too (the sign-orthant
-    twin adopted the driver-built query side; both callers share this
-    single definition) — collected model-sized
-    (<= M * 2^8 rows x 16 doubles). Centroid
-    arithmetic mirrors Spark's cast/divide order exactly —
-    ``float(bigint_sum) / float(bigint_n) / 1e9`` is the same IEEE
-    double sequence as ``cast(s as double) / n / 1e9`` — so the
-    persisted artifact is bit-identical to the in-plan form the
-    ``topk_pq`` oracle verifies, and DuckDB reproduces it verbatim."""
-    codes = nvt_model.select(
-        "nv", *[_pq_code(F.col("nv"), m).alias(f"c{m}") for m in range(PQ_M)]
+    ONE exact fixed-point aggregation over the model rows, collected
+    model-sized (<= [K x] M x 2^8 rows x 16 doubles). Centroid arithmetic
+    mirrors Spark's cast/divide order exactly —
+    ``float(bigint_sum) / float(bigint_n) / 1e9`` is the same IEEE double
+    sequence as ``cast(s as double) / n / 1e9`` — so the rows (and any
+    artifact persisted from them) are bit-identical to the in-plan form
+    the oracles verify, and DuckDB reproduces them verbatim."""
+    keys = ["cent_id"] if "cent_id" in src.columns else []
+    codes = src.select(
+        *keys, vec, *[_pq_code(F.col(vec), m).alias(f"c{m}") for m in range(PQ_M)]
     )
     subs = codes.select(
+        *keys,
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(m).alias("m"),
                         F.col(f"c{m}").alias("code"),
-                        F.slice("nv", m * PQ_SUB + 1, PQ_SUB).alias("sub"),
+                        F.slice(vec, m * PQ_SUB + 1, PQ_SUB).alias("sub"),
                     )
                     for m in range(PQ_M)
                 ]
             )
-        ).alias("s")
-    ).select("s.m", "s.code", "s.sub")
-    cb = subs.groupBy("m", "code").agg(
+        ).alias("s"),
+    ).select(*keys, "s.m", "s.code", "s.sub")
+    cb = subs.groupBy(*keys, "m", "code").agg(
         F.count(F.lit(1)).alias("n"),
         *[
             F.sum(
@@ -2998,10 +2955,10 @@ def _fixed_books_rows(nvt_model: DataFrame) -> "list[tuple[int, int, list[float]
         ],
     )
     out = []
-    for r in cb.collect():  # model-sized: <= M * 256 rows
+    for r in cb.collect():  # model-sized
         cd = [float(r[f"s{d}"]) / float(r["n"]) / 1e9 for d in range(1, PQ_SUB + 1)]
-        out.append((int(r["m"]), int(r["code"]), cd))
-    out.sort(key=lambda t: (t[0], t[1]))
+        out.append((*[int(r[c]) for c in keys], int(r["m"]), int(r["code"]), cd))
+    out.sort(key=lambda t: t[:-1])
     return out
 
 
@@ -3068,26 +3025,14 @@ def topk_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_build=lambda wm: encode_src(emb.filter(F.col("vec_id") >= wm)),
     )
 
-    qnv_rows = _query_nv_rows(emb, sf_dir)
-    q = spark.createDataFrame(qnv_rows, "query_id long, qnv array<double>")
-    qarr = _local_qarr_df(
-        spark,
-        [("query_id", "long")],
-        [(qid,) for qid, _ in qnv_rows],
-        [nv for _, nv in qnv_rows],
-        rows,
-        PQ_M,
-        PQ_SUB,
-    )
-    return _pq_adc_rank(
+    q, qarr = _query_side(spark, emb, sf_dir, rows, PQ_M, PQ_SUB)
+    return _adc_rank(
         codes,
         qarr,
         emb.select("vec_id", "v"),
         q,
         _pq_shortlist(n),
-        m_subspaces=PQ_M,
         candidates_per_query=n,
-        persist_codes=False,
     )
 
 
@@ -3117,148 +3062,10 @@ def ann_append_serving_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_pq_fixed(spark, full_dir)
 
 
-def _ann_append_fixed_oracle() -> str:
-    """The fixed-books append serve, restated over the ORIGINAL corpus:
-    the derived base is exactly ``vec_id < greatest(10, n*9//10)``, so
-    the frozen books are the sign-orthant centroid means of those rows
-    and everything else is ``topk_pq``'s oracle with the model CTEs
-    filtered to the base — candidates with codes unseen in the base drop
-    out of the inner ADC join, mirroring the +inf exclusion (see the
-    parity bound in ``topk_pq_fixed``)."""
-
-    def code_sql(m: int) -> str:
-        return " + ".join(
-            f"CASE WHEN nv[{m * PQ_SUB + j + 1}] >= 0.0 THEN {1 << j} ELSE 0 END"
-            for j in range(PQ_CODE_BITS)
-        )
-
-    sums = ",\n         ".join(
-        f"sum(CAST(floor(nv[m*{PQ_SUB}+{d}] * 1e9 + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS s{d}"
-        for d in range(1, PQ_SUB + 1)
-    )
-    cents = ", ".join(
-        f"CAST(s{d} AS DOUBLE)/n/1e9 AS cd{d}" for d in range(1, PQ_SUB + 1)
-    )
-    adc_terms = " + ".join(
-        f"(q.qnv[c.m*{PQ_SUB}+{d}] - c.cd{d}) * (q.qnv[c.m*{PQ_SUB}+{d}] - c.cd{d})"
-        for d in range(1, PQ_SUB + 1)
-    )
-    joins = "\n  ".join(
-        f"JOIN adc a{m} ON a{m}.m = {m} AND a{m}.code = cd.c{m}"
-        + ("" if m == 0 else f" AND a{m}.query_id = a0.query_id")
-        for m in range(PQ_M)
-    )
-    case_code = "CASE ms.m " + " ".join(
-        f"WHEN {m} THEN c{m}" for m in range(PQ_M - 1)
-    ) + f" ELSE c{PQ_M - 1} END"
-    return f"""
-WITH e AS ({EMB_NORM_SQL}),
-nvt AS (SELECT vec_id, [v[i]/norm for i in range(1, {EMB_DIM + 1})] AS nv FROM e),
-wm AS (SELECT greatest({N_QUERIES}, (count(*) * 9) // 10) AS w FROM e),
-codes AS (SELECT vec_id, nv,
-          {", ".join(f"{code_sql(m)} AS c{m}" for m in range(PQ_M))}
-          FROM nvt),
-subs AS (SELECT ms.m AS m, {case_code} AS code, nv
-         FROM codes, (SELECT unnest(range({PQ_M})) AS m) ms
-         WHERE codes.vec_id < (SELECT w FROM wm)),
-cb AS (SELECT m, code, count(*) AS n,
-         {sums}
-       FROM subs GROUP BY m, code),
-cent AS (SELECT m, code, {cents} FROM cb),
-q AS (SELECT vec_id AS query_id, nv AS qnv FROM nvt WHERE vec_id < {N_QUERIES}),
-adc AS (SELECT q.query_id, c.m, c.code,
-          CAST(0 AS DOUBLE) + {adc_terms} AS t
-        FROM q, cent c),
-scored AS (
-  SELECT a0.query_id, cd.vec_id,
-         round(CAST(0 AS DOUBLE) + {" + ".join(f"a{m}.t" for m in range(PQ_M))}, 6) AS adc
-  FROM codes cd
-  {joins}
-  WHERE cd.vec_id <> a0.query_id
-),
-local AS (SELECT query_id, vec_id, adc FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id, vec_id % {PQ_TOPK_BUCKETS}
-        ORDER BY adc, vec_id) AS lr
-    FROM scored) WHERE lr <= {PQ_SHORTLIST_SQL}),
-short AS (SELECT query_id, vec_id, adc FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc, vec_id) AS sr
-    FROM local) WHERE sr <= {PQ_SHORTLIST_SQL}),
-rer AS (SELECT s.query_id, s.vec_id,
-          round({DOT_SQL.format(a="qq.qnv", b="nvt.nv")}, 6) AS cosine,
-          s.adc
-        FROM short s
-        JOIN nvt ON nvt.vec_id = s.vec_id
-        JOIN q qq ON qq.query_id = s.query_id)
-SELECT query_id, vec_id, cosine, adc, rank FROM (
-  SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM rer)
-WHERE rank <= {TOP_K}
-"""
-
-
-ANN_APPEND_FIXED_ORACLE = _ann_append_fixed_oracle()
+ANN_APPEND_FIXED_ORACLE = _topk_pq_oracle(base_only=True)
 
 
 # --- IVF-PQ composition ------------------------------------------------------
-
-
-def topk_ivfpq(
-    spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
-) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding: the full FAISS IVFPQ composition —
-    coarse IVF pruning cuts WHICH vectors are scanned (nprobe/K of the
-    corpus per query), PQ-ADC over the RESIDUAL x - c_list cuts WHAT is
-    read per scanned vector (4 code bytes + 4 lookup adds instead of 64
-    floats), and a scale-adaptive (max(50, n/10))-deep exact re-rank
-    (``_pq_shortlist``) restores precision on the shortlist.
-
-    Residual encoding (round 10, README lever 1): each vector is coded as
-    r = nv - nc_list (its normalized self minus its normalized coarse
-    centroid), so the reconstruction x_hat = nc_list + r_hat carries the
-    list centroid EXACTLY and quantizes only the residual — the part of
-    the vector the coarse quantizer already explains costs zero code
-    budget. Codebooks are PER LIST, keyed (list, m, code): with this
-    one-step sign-orthant codebook family a global residual book mixes 16
-    lists' differently-scaled residual clouds and its cell means wash out
-    (measured: global-residual recall@5 0.56 at sf0.01 — WORSE than the
-    0.72 no-residual variant it replaced); per-list books quantize each
-    list's own cloud. Measured at nprobe=8: recall@5 0.78 at sf0.001 (=
-    the IVF pruning ceiling exactly; no-residual was 0.72) and 0.72 at
-    sf0.01 with shortlist/ceiling ratio 0.92 (vs 0.98 at sf0.001);
-    tests/test_similarity_pq.py pins the floor. The ADC table becomes
-    per-(query, probed list): t[q, L, m, code] = ||(q - nc_L)_m - cd||^2,
-    still model-sized (N_QUERIES x nprobe x M x 2^bits <= 82k rows) and
-    broadcast.
-
-    Scale caveat, stated honestly: per-list books grow as
-    K x M x 2^bits x PQ_SUB doubles (~2 MB at K=16; ~8 GB at the
-    K=65536 a billion-vector deployment would use). At that K the right
-    evolution is FAISS's: a GLOBAL residual book with TRAINED (Lloyd-
-    iterated) centroids instead of sign orthants — the training mass
-    concentrates and the wash-out this per-list layout works around
-    disappears. The plan shape (broadcast ADC, one corpus scan) is
-    identical either way; only the codebook CTE changes.
-
-    Plan shape: centroids, probe assignments, and ADC tables broadcast
-    (model-sized); the candidate scan is ONE pass over
-    (vec_id, cent_id, 4 PQ codes) with four broadcast hash joins — the
-    probe filter FOLDS INTO the first ADC join (its key is
-    (cent_id, code), so matching an ADC row IS being probed); the
-    shortlist runs the same two-phase vec_id % 64 fan-out as ``topk_pq``.
-    Every stage is deterministic (fixed centroids, sign-pattern residual
-    codebooks, fixed-point centroid means, exact float subtraction in
-    both engines), so the full composition is SQL-expressible and
-    hash-verified; ``topk_ivfpq_trained`` drops k-means centroids into
-    this identical plan.
-    """
-    emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    n = _emb_count(emb, sf_dir)
-    return _ivfpq_from(
-        emb, _ivf_centroids(emb), nprobe, _pq_shortlist(n), candidates_per_query=n
-    )
 
 
 def _bylist_raw_source(
@@ -3284,7 +3091,7 @@ def _bylist_raw_source(
     dictionary compression the clustered copy cannot keep, and an
     adaptive probe set near K would read most of a bigger artifact. The
     rule makes the layout NEVER-WORSE in the measured currency. Shared
-    by the trained path (``_ivfpq_from``) and its deterministic-books
+    by the trained path (``topk_ivfpq_trained``) and its deterministic-books
     driver-hash twin (``topk_ivfpq_fixed``) — both branches are
     output-identical by construction (shortlist candidates all come
     from probed lists), pinned by tests/test_similarity_pq.py."""
@@ -3432,387 +3239,6 @@ def _bylist_codes_source(
     )
 
 
-def _ivfpq_from(
-    emb: DataFrame,
-    cents: DataFrame,
-    nprobe: int,
-    shortlist: int,
-    spark: "SparkSession | None" = None,
-    sf_dir: "str | None" = None,
-    trained_books: bool = False,
-    cents_rows: "list[tuple[int, list[float]]] | None" = None,
-    candidates_per_query: "int | None" = None,
-    probe_eps: "float | None" = None,
-    nprobe_max: "int | None" = None,
-) -> DataFrame:
-    """Shared residual IVF-PQ plan; ``cents`` is any (cent_id, cv, cn)
-    relation (fixed rows for the oracle twin, k-means for the trained).
-
-    ``trained_books=True`` swaps the per-list sign-orthant residual
-    codebooks for ONE GLOBAL Lloyd-trained residual book
-    (ann_index.pq_codebooks over the residual column, persisted) — the
-    FAISS IVFPQ layout proper. Round 10 measured that a global
-    SIGN-ORTHANT book washes out (0.56 recall: 16 lists'
-    differently-scaled residual clouds share fixed cells) and worked
-    around it with per-list books, at K x M x 2^bits x 16 doubles (~8 GB
-    at K=65536). Trained cells place themselves where the pooled
-    residual mass actually is, so the global book works — and the book
-    is M x 2^bits x 16 doubles FLAT IN K, which removes the round-10
-    scale caveat. ADC tables stay per-(query, probed list) because the
-    query residual differs per list; the cent_id broadcast join remains
-    the probe filter. Plan shape identical either way.
-
-    ``cents_rows`` (trained path only) is the driver-side centroid list
-    behind ``cents``: with it, list assignment runs as an Arrow-batched
-    matmul-argmax UDF instead of the crossJoin + window formulation —
-    at K=sqrt(n) the JVM form evaluates n x K interpreted array folds
-    and shuffles the n x K scored rows (measured as THE top cost of
-    topk_ivfpq_trained at sf1: 2.8M folds, ~30 s of a 44 s query). The
-    hash-verified fixed-K twin keeps the JVM form: its output is
-    oracle-pinned and K=16 keeps the crossJoin small.
-    """
-    nvt = emb.select(
-        "vec_id", _div_by("v", "norm").alias("nv")
-    )
-    ncents = cents.select(
-        "cent_id", _div_by("cv", "cn").alias("ncv")
-    )
-
-    # Residual per vector: r = nv - nc_list, in the same projection as the
-    # list assignment (no corpus-side join beyond the broadcast centroids).
-    if cents_rows is not None:
-        assign1 = _assign_arrow_udf(cents_rows, 1)
-        lists = emb.select(
-            "vec_id",
-            "v",
-            "norm",
-            F.element_at(assign1(F.col("v")), 1).alias("cent_id"),
-        )
-    else:
-        lists = _assign(emb, cents, 1, "cent_id")
-    base = lists.join(F.broadcast(ncents), "cent_id").select(
-        "vec_id",
-        "cent_id",
-        F.zip_with(
-            _div_by("v", "norm"),
-            F.col("ncv"),
-            lambda a, b: a - b,
-        ).alias("r"),
-    )
-
-    if trained_books:
-        import math
-
-        from mapreduce_hadoop_spark.operators import ann_index
-
-        assert cents_rows is not None, "trained_books requires cents_rows"
-        coarse_k = len(cents_rows)
-        # Book geometry from the TRAINED snapshot (frozen under an
-        # append lineage), like the flat path.
-        model_n = ann_index.model_corpus_count(emb, sf_dir)
-        k = min(PQ_TRAINED_K, max(16, model_n // 2))
-        rows = ann_index.pq_codebooks(
-            spark, base.select("vec_id", F.col("r").alias("res")),
-            sf_dir, PQ_TRAINED_M, PQ_TRAINED_SUB, k, tag="res",
-            coarse_k=coarse_k,
-        )
-        def codes_src(src: DataFrame) -> DataFrame:
-            enc = _pq_encode_udf(
-                _books_array(rows, PQ_TRAINED_M, k, PQ_TRAINED_SUB),
-                residual=True,
-            )
-            plain = src.join(F.broadcast(ncents), "cent_id")
-            return plain.select(
-                "vec_id",
-                enc(F.col("v"), F.col("norm"), F.col("ncv")).alias("cs"),
-                "cent_id",
-            ).select(
-                "vec_id",
-                *[
-                    F.element_at("cs", m + 1).alias(f"c{m}")
-                    for m in range(PQ_TRAINED_M)
-                ],
-                "cent_id",
-            )
-
-        def raw_src(src: DataFrame) -> DataFrame:
-            return src.select("vec_id", "v", "cent_id")
-
-        # The FAISS ``add`` half, BY-LIST RAW-IN-INDEX since round 15
-        # (VERDICT r14 order 2): the codes AND a serving copy of the raw
-        # vectors persist hive-partitioned by coarse list — FAISS's
-        # ``add``, where the index owns the raw data clustered the way
-        # queries read it. TWO co-partitioned artifacts rather than one:
-        # the ADC scan reads code columns and the exact re-rank reads
-        # vector columns, and a shared artifact would make every scan
-        # open (and a byte-accounting reader count) the other side's
-        # bytes. Both prune to the driver-known probed-list union
-        # (directory pruning — the mechanism SCALE_ann_r14.md §5
-        # measured as the one matching FAISS's contiguous-list reads;
-        # the flat layout scanned the FULL codes artifact and the FULL
-        # raw corpus per query, 162 MB at n=1M regardless of batch
-        # size). Codes name keys the residual book (k), the coarse
-        # quantizer (K), and the training recipe; the raw copy depends
-        # only on the assignment, so it keys the coarse recipe alone.
-        # Deterministic given the models; assignment included, so a
-        # warm session also skips the corpus assign. Appended corpora
-        # assign + encode only the delta against the frozen models,
-        # partitioned the same way.
-        codes_name = "bylist_" + ann_index.codes_artifact_name(
-            "res", PQ_TRAINED_M, k, coarse_k=coarse_k
-        )
-
-        def open_bylist_codes() -> DataFrame:
-            return ann_index.cached_relation(
-                spark,
-                sf_dir,
-                codes_name,
-                lambda: codes_src(lists),
-                delta_build=lambda wm: codes_src(
-                    lists.filter(F.col("vec_id") >= wm)
-                ),
-                partition_by="cent_id",
-            )
-
-        raw_name = (
-            f"bylist_raw_K{coarse_k}_"
-            f"{ann_index._recipe(ann_index.COARSE_MAXITER)}.parquet"
-        )
-
-        def open_bylist_raw() -> DataFrame:
-            return ann_index.cached_relation(
-                spark,
-                sf_dir,
-                raw_name,
-                lambda: raw_src(lists),
-                delta_build=lambda wm: raw_src(
-                    lists.filter(F.col("vec_id") >= wm)
-                ),
-                partition_by="cent_id",
-            )
-
-        # Query side, DRIVER-BUILT (round-12 stage fusion): probe
-        # assignment runs the SAME numpy core the corpus UDF uses
-        # (_assign_topn_np), per-list query residuals and ADC arrays
-        # replicate the JVM folds term for term (_query_nv_rows /
-        # _adc_arrays_np), and everything ships as local relations — a
-        # warm query plans zero query-side Spark jobs where the r11
-        # chain planned an Arrow UDF stage + two broadcast joins.
-        import numpy as np
-
-        qv_rows = ann_index.query_vectors(emb, sf_dir, N_QUERIES)
-        qnv_rows = _query_nv_rows(emb, sf_dir)
-        xq = np.asarray([v for _, v in qv_rows], dtype=np.float64)
-        if probe_eps is not None:
-            # Adaptive probe width (round 13): the SPANN closeness rule
-            # on the query side — see _probe_lists_adaptive.
-            probe_lists = _probe_lists_adaptive(
-                xq, cents_rows, nprobe, probe_eps,
-                nprobe_max if nprobe_max is not None else len(cents_rows),
-            )
-        else:
-            probe_lists = _assign_topn_np(xq, cents_rows, nprobe)
-        # Directory pruning on the driver-known probe-set union: the
-        # cent_id broadcast join below is still the per-query probe
-        # filter; this literal isin() is what lets the parquet source
-        # skip unprobed list directories at planning time (a join alone
-        # prunes rows, not partitions). Shortlist candidates all come
-        # from probed lists, so serving the re-rank from the same pruned
-        # relation is exact.
-        probed = sorted({int(c) for pl in probe_lists for c in pl})
-        pruned = _bylist_codes_source(
-            spark,
-            sf_dir,
-            open_bylist_codes,
-            codes_name,
-            ann_index.codes_artifact_name(
-                "res", PQ_TRAINED_M, k, coarse_k=coarse_k
-            ),
-            probed,
-            PQ_TRAINED_M,
-        )
-        raw = _bylist_raw_source(emb, open_bylist_raw, sf_dir, raw_name, probed)
-        ncv = {
-            cid: [x / math.sqrt(_strict_dot(cv, cv)) for x in cv]
-            for cid, cv in cents_rows
-        }
-        keys: "list[tuple]" = []
-        qrs: "list[list[float]]" = []
-        for (qid, nv), plist in zip(qnv_rows, probe_lists):
-            for cid in plist:
-                keys.append((qid, cid))
-                qrs.append([a - b for a, b in zip(nv, ncv[cid])])
-        q = spark.createDataFrame(qnv_rows, "query_id long, qnv array<double>")
-        qarr = _local_qarr_df(
-            spark,
-            [("query_id", "long"), ("cent_id", "int")],
-            keys,
-            qrs,
-            rows,
-            PQ_TRAINED_M,
-            PQ_TRAINED_SUB,
-        )
-        return _ivfpq_scan_rank(
-            pruned,
-            qarr,
-            raw,
-            q,
-            shortlist,
-            m_subspaces=PQ_TRAINED_M,
-            candidates_per_query=candidates_per_query,
-            persist_codes=False,
-        )
-
-    codes = base.select(
-        "vec_id",
-        "cent_id",
-        "r",
-        *[_pq_code(F.col("r"), m).alias(f"c{m}") for m in range(PQ_M)],
-    )
-
-    # Residual codebooks PER LIST: ONE shuffle over (list, m, code).
-    # Residuals from different lists have different scales/shapes, so a
-    # global book washes out (measured: global-residual recall@5 0.56 vs
-    # per-list 0.74 at sf0.01); per-list books quantize each list's own
-    # residual cloud. Book size K x M x 2^bits cells — still model-sized.
-    subs = codes.select(
-        "cent_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.col(f"c{m}").alias("code"),
-                        F.slice("r", m * PQ_SUB + 1, PQ_SUB).alias("sub"),
-                    )
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("s"),
-    ).select("cent_id", "s.m", "s.code", "s.sub")
-    cb = subs.groupBy("cent_id", "m", "code").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.expr(f"cast(floor(element_at(sub, {d}) * 1e9 + 0.5D) as bigint)")
-            ).alias(f"s{d}")
-            for d in range(1, PQ_SUB + 1)
-        ],
-    )
-    cent = cb.select(
-        "cent_id",
-        "m",
-        "code",
-        *[
-            (F.col(f"s{d}").cast("double") / F.col("n") / F.lit(1e9)).alias(f"cd{d}")
-            for d in range(1, PQ_SUB + 1)
-        ],
-    )
-
-    q = nvt.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("nv").alias("qnv")
-    )
-    # Query residual per PROBED list: qr = qnv - nc_L for each of the
-    # nprobe lists the query visits.
-    qres = (
-        _assign(emb.filter(F.col("vec_id") < N_QUERIES), cents, nprobe, "cent_id")
-        .join(F.broadcast(ncents), "cent_id")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cent_id",
-            F.zip_with(
-                _div_by("v", "norm"),
-                F.col("ncv"),
-                lambda a, b: a - b,
-            ).alias("qr"),
-        )
-    )
-    # ADC tables keyed by (query, probed list): distance from the query's
-    # per-list residual to each cell of THAT list's residual book. Bounded
-    # at N_QUERIES * nprobe * PQ_M * 2^PQ_CODE_BITS rows — model-sized.
-    adc_terms = " + ".join(
-        f"(element_at(qr, m * {PQ_SUB} + {d}) - cd{d})"
-        f" * (element_at(qr, m * {PQ_SUB} + {d}) - cd{d})"
-        for d in range(1, PQ_SUB + 1)
-    )
-    adc = _persisted(
-        cent.join(F.broadcast(qres), "cent_id").select(
-            "query_id", "cent_id", "m", "code", F.expr(f"0.0D + {adc_terms}").alias("t")
-        )
-    )
-
-    return _ivfpq_scan_rank(
-        codes,
-        _adc_scatter_arrays(adc, ["query_id", "cent_id"], PQ_M),
-        emb.select("vec_id", "v"),
-        q,
-        shortlist,
-        candidates_per_query=candidates_per_query,
-    )
-
-
-def _ivfpq_scan_rank(
-    codes: DataFrame,
-    qarr: DataFrame,
-    raw: DataFrame,
-    q: DataFrame,
-    shortlist: int,
-    m_subspaces: int = PQ_M,
-    candidates_per_query: "int | None" = None,
-    persist_codes: bool = True,
-) -> DataFrame:
-    """Shared IVF-PQ ADC scan + two-phase shortlist + exact re-rank;
-    ``codes`` is (vec_id, cent_id, c0..c{M-1}), ``qarr`` is one row per
-    (query_id, cent_id) — PROBED lists only — carrying M dense 256-slot
-    ADC lookup arrays (columns `0`..`M-1`).
-
-    The single ``cent_id`` broadcast join IS the probe filter — a
-    per-query ADC-array row exists only for (query, probed list), so
-    joining on cent_id both fans out the probed queries and delivers the
-    M lookup arrays; each candidate then pays M O(1) array
-    ``element_at`` probes. Round 10 measured and rejected map<code, t>
-    columns (map element_at LINEAR-scans ArrayBasedMapData, 8.17 vs
-    5.58 s at sf0.1); round 11 replaced the M broadcast hash joins with
-    the array form: outputs identical, and one join instead of M wins as
-    M grows (measured on the flat-PQ scan: -30% at M=8/sf1).
-    """
-    codes = codes.select("vec_id", "cent_id", *[f"c{m}" for m in range(m_subspaces)])
-    if persist_codes:
-        codes = _persisted(codes)
-    sc = codes.join(F.broadcast(qarr), "cent_id")
-    t_sum = " + ".join(f"element_at(`{m}`, c{m} + 1)" for m in range(m_subspaces))
-    scored = sc.select(
-        "query_id",
-        "vec_id",
-        F.round(F.expr(f"0.0D + {t_sum}"), 6).alias("adc"),
-    ).filter(F.col("vec_id") != F.col("query_id"))
-
-    # Shortlist (one window or bucketed two-phase by candidate volume —
-    # see _shortlist_topr; identical output either way).
-    short = _shortlist_topr(scored, shortlist, candidates_per_query)
-    # Re-rank with q folded into the shortlist broadcast — one
-    # broadcast-hash join against the RAW corpus scan, with the
-    # normalize-fold + cosine computed ABOVE the join (shortlist
-    # survivors only), same fusion + fold placement as _pq_adc_rank.
-    rer = raw.join(
-        F.broadcast(short.join(F.broadcast(q), "query_id")), "vec_id"
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _dot(F.col("qnv"), _div_by(F.col("v"), F.sqrt(_dot(F.col("v"), F.col("v"))))),
-            6,
-        ).alias("cosine"),
-        "adc",
-    )
-    w3 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        rer.select("*", F.row_number().over(w3).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "cosine", "adc", "rank")
-    )
-
-
 def _topk_ivfpq_oracle() -> str:
     def code_sql(m: int) -> str:
         return " + ".join(
@@ -3928,121 +3354,37 @@ FIXED_IVFPQ_FLAT_CODES_FNAME = f"codes_ivfpqfix_m{PQ_M}_K{IVF_K}.parquet"
 FIXED_IVFPQ_RAW_FNAME = f"bylist_raw_ivfpqfix_K{IVF_K}.parquet"
 
 
-def _fixed_ivfpq_books_rows(
-    base: DataFrame,
-) -> "list[tuple[int, int, int, list[float]]]":
-    """The per-list sign-orthant RESIDUAL codebooks as driver-side rows
-    ``[(cent_id, m, code, cd)]`` — ``topk_ivfpq``'s in-plan cb/cent
-    stages restated over the (vec_id, cent_id, r) relation and collected
-    model-sized (<= K * M * 2^8 rows x 16 doubles). Same exact
-    fixed-point arithmetic as ``_fixed_books_rows`` (the flat twin):
-    ``float(bigint_sum) / float(bigint_n) / 1e9`` is the identical IEEE
-    double sequence to Spark's ``cast(s as double) / n / 1e9``, so the
-    persisted artifact is bit-identical to the in-plan aggregation the
-    ``topk_ivfpq`` oracle verifies, and DuckDB reproduces it verbatim."""
-    codes = base.select(
-        "cent_id",
-        "r",
-        *[_pq_code(F.col("r"), m).alias(f"c{m}") for m in range(PQ_M)],
-    )
-    subs = codes.select(
-        "cent_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.col(f"c{m}").alias("code"),
-                        F.slice("r", m * PQ_SUB + 1, PQ_SUB).alias("sub"),
-                    )
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("s"),
-    ).select("cent_id", "s.m", "s.code", "s.sub")
-    cb = subs.groupBy("cent_id", "m", "code").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.expr(f"cast(floor(element_at(sub, {d}) * 1e9 + 0.5D) as bigint)")
-            ).alias(f"s{d}")
-            for d in range(1, PQ_SUB + 1)
-        ],
-    )
-    out = []
-    for r in cb.collect():  # model-sized: <= K * M * 256 rows
-        cd = [float(r[f"s{d}"]) / float(r["n"]) / 1e9 for d in range(1, PQ_SUB + 1)]
-        out.append((int(r["cent_id"]), int(r["m"]), int(r["code"]), cd))
-    out.sort(key=lambda t: (t[0], t[1], t[2]))
-    return out
-
-
-def _adc_arrays_np_keyed(
-    qrs: "list[list[float]]",
-    list_ids: "list[int]",
-    rows: "list[tuple[int, int, int, list[float]]]",
-    m_subspaces: int,
-    sub: int,
-):
-    """``_adc_arrays_np`` under PER-LIST books: row g's lookup arrays are
-    computed against the codebook of the list it probes (``list_ids[g]``),
-    with the identical ascending-d accumulation order, so every entry is
-    bit-identical to the JVM adc-join formulation it replaces. Cells a
-    list's book never emitted are +inf (same pad semantics — an asc
-    shortlist can never surface them; here every scanned candidate's
-    code exists in its own list's book by construction, because book
-    cells are means of that list's occupants)."""
-    import numpy as np
-
-    k = 256
-    books: "dict[int, object]" = {}
-    for cid, m, code, cd in rows:
-        b = books.get(cid)
-        if b is None:
-            b = books[cid] = np.full((m_subspaces, k, sub), np.inf, dtype=np.float64)
-        b[m, code] = cd
-    x = np.asarray(qrs, dtype=np.float64)
-    bmat = np.stack([books[cid] for cid in list_ids])  # (G, M, 256, sub)
-    out = []
-    for m in range(m_subspaces):
-        acc = np.zeros((len(list_ids), k), dtype=np.float64)
-        for d in range(sub):
-            diff = x[:, m * sub + d][:, None] - bmat[:, m, :, d]
-            acc = acc + diff * diff
-        out.append(acc)
-    return out
-
-
 def topk_ivfpq_fixed(
     spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
-    """Residual IVF-PQ served entirely through the BY-LIST ARTIFACT +
-    COST-RULE machinery — the deterministic serving twin that makes the
-    round-15 pruning layer driver-hash-verifiable (VERDICT r15 order 1,
-    the ``topk_pq_fixed`` pattern applied to the IVF-PQ composition).
+    """Residual IVF-PQ under deterministic books, served through the
+    BY-LIST ARTIFACT + COST-RULE machinery — the hash-verifiable
+    twin of ``topk_ivfpq_trained``'s serving layer.
 
-    Same ARITHMETIC as ``topk_ivfpq`` (fixed K=16 coarse centroids =
-    corpus rows [100,116), per-list sign-orthant residual books with
-    exact fixed-point means, nprobe=8, max(50, n/10) shortlist — all
-    hash-verified against DuckDB since round 10); same SERVING PLAN as
-    ``topk_ivfpq_trained`` (hive-partitioned codes + raw artifacts via
-    ``ann_index.cached_relation(partition_by="cent_id")``, driver-known
-    probe-union directory pruning, the ``_bylist_raw_source`` cost-based
-    re-rank branch over ``relation_paths``/``pruned_bytes``/
-    ``column_bytes``, driver-built per-(query, probed-list) ADC lookup
-    arrays, ``_ivfpq_scan_rank``). The combination is the point: every
-    artifact and every driver-side decision this path makes is a pure
-    function of the corpus, so the FULL by-list machinery — partition
-    layout, pruned scans, byte arithmetic, branch flip — lands under the
-    driver's value hash, where the k-means-trained path can only
-    rows-check. Output is bit-identical to ``topk_ivfpq`` (suite-pinned),
-    so the oracle IS ``TOPK_IVFPQ_ORACLE``, and both cost branches are
-    forced output-invariant by tests/test_similarity_pq.py.
+    Arithmetic: fixed K=16 coarse centroids (corpus rows [100,116)), each
+    vector coded on its residual r = nv - nc_list against its list's own
+    sign-orthant residual book (``_fixed_books_rows`` keyed by cent_id;
+    exact fixed-point means), nprobe=8, max(50, n/10) shortlist. Per-list
+    books because one global sign-orthant book mixes the lists'
+    differently-scaled residual clouds and its cell means wash out
+    (global-residual recall@5 0.56 vs per-list 0.74 at sf0.01); they grow
+    as K x M x 2^bits x 16 doubles, which is why the trained path uses
+    one global Lloyd-trained book instead.
+
+    Serving plan: the trained path's — hive-partitioned codes + raw
+    artifacts (``ann_index.cached_relation(partition_by="cent_id")``),
+    driver-known probe-union directory pruning, the cost-based
+    ``_bylist_codes_source`` / ``_bylist_raw_source`` branches, and the
+    driver-built per-(query, probed list) query side. Every artifact and
+    driver-side decision is a pure function of the corpus, so the whole
+    by-list machinery — partition layout, pruned scans, byte arithmetic,
+    branch flip — lands under the value hash of ``TOPK_IVFPQ_ORACLE``;
+    both cost branches are forced output-invariant by
+    tests/test_similarity_pq.py.
 
     Append lineages are NOT modeled here (books/codes derive from the
     live corpus): the append contract's hash coverage lives in
-    ``ann_append_serving_fixed``; this twin exists to pin the by-list
-    serving layer, one contract per twin."""
+    ``ann_append_serving_fixed``; one contract per twin."""
     import math
 
     from mapreduce_hadoop_spark.operators import ann_index
@@ -4069,14 +3411,14 @@ def topk_ivfpq_fixed(
         sf_dir,
         FIXED_IVFPQ_BOOKS_FNAME,
         ["cent_id", "m", "code", "cd"],
-        lambda: _fixed_ivfpq_books_rows(residuals(emb)),
+        lambda: _fixed_books_rows(residuals(emb), "r"),
         frozen_base=False,
     )
     rows = [(int(c), int(m), int(code), list(cd)) for c, m, code, cd in rows]
 
-    # The FAISS ``add`` half, by-list (round 15): codes AND a raw serving
-    # copy hive-partitioned by coarse list, both pruned to the probe
-    # union at read time — identical artifact layer to the trained path.
+    # The FAISS ``add`` half, by-list: codes AND a raw serving copy
+    # hive-partitioned by coarse list, both pruned to the probe union at
+    # read time — the same artifact layer as the trained path.
     def open_bylist_codes() -> DataFrame:
         return ann_index.cached_relation(
             spark,
@@ -4101,11 +3443,10 @@ def topk_ivfpq_fixed(
             partition_by="cent_id",
         )
 
-    # Query side, DRIVER-BUILT like the trained path — probe selection,
-    # per-list query residuals, and ADC arrays replicate the JVM folds
-    # term for term with STRICT sequential arithmetic (_strict_dot), so
-    # the probes match `_assign(..., nprobe)`'s (ccos DESC, cent_id)
-    # ranking bit-for-bit and DuckDB reproduces every value.
+    # Probe selection, driver-side with STRICT sequential arithmetic
+    # (_strict_dot), so the probes match `_assign(..., nprobe)`'s
+    # (ccos DESC, cent_id) ranking bit-for-bit and DuckDB reproduces
+    # every value.
     crows = ann_index.fixed_model(
         sf_dir,
         FIXED_IVFPQ_CENTS_FNAME,
@@ -4118,32 +3459,15 @@ def topk_ivfpq_fixed(
     )
     crows = [(int(cid), list(cv)) for cid, cv in crows]
     cn = {cid: math.sqrt(_strict_dot(cv, cv)) for cid, cv in crows}
-    ncv = {cid: [x / cn[cid] for x in cv] for cid, cv in crows}
-    qv_rows = ann_index.query_vectors(emb, sf_dir, N_QUERIES)
-    qnv_rows = _query_nv_rows(emb, sf_dir)
     probe_lists = []
-    for qid, v in qv_rows:
+    for _qid, v in ann_index.query_vectors(emb, sf_dir, N_QUERIES):
         qn = math.sqrt(_strict_dot(v, v))
         scored = sorted(
             (-(_strict_dot(v, cv) / (qn * cn[cid])), cid) for cid, cv in crows
         )
         probe_lists.append([cid for _neg, cid in scored[:nprobe]])
-    keys: "list[tuple]" = []
-    qrs: "list[list[float]]" = []
-    for (qid, nv), plist in zip(qnv_rows, probe_lists):
-        for cid in plist:
-            keys.append((qid, cid))
-            qrs.append([a - b for a, b in zip(nv, ncv[cid])])
-    adc = _adc_arrays_np_keyed(qrs, [cid for _q, cid in keys], rows, PQ_M, PQ_SUB)
-    qarr = _local_qarr_df(
-        spark,
-        [("query_id", "long"), ("cent_id", "int")],
-        keys,
-        qrs,
-        [],
-        PQ_M,
-        PQ_SUB,
-        adc=adc,
+    q, qarr = _query_side(
+        spark, emb, sf_dir, rows, PQ_M, PQ_SUB, probe_lists, crows
     )
 
     probed = sorted({int(c) for pl in probe_lists for c in pl})
@@ -4159,79 +3483,71 @@ def topk_ivfpq_fixed(
     raw = _bylist_raw_source(
         emb, open_bylist_raw, sf_dir, FIXED_IVFPQ_RAW_FNAME, probed
     )
-    q = spark.createDataFrame(qnv_rows, "query_id long, qnv array<double>")
-    return _ivfpq_scan_rank(
-        pruned,
-        qarr,
-        raw,
-        q,
-        _pq_shortlist(n),
-        m_subspaces=PQ_M,
-        candidates_per_query=n,
-        persist_codes=False,
-    )
+    return _adc_rank(pruned, qarr, raw, q, _pq_shortlist(n), candidates_per_query=n)
 
 
 def topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual IVF-PQ under the TRAINED coarse quantizer at K = sqrt(n)
-    lists — the deployed serving form: k-means centroids drop into the
-    identical ``_ivfpq_from`` plan, and the list count grows with the
-    corpus so the candidate fraction per query (nprobe/K ~ nprobe/sqrt(n))
-    SHRINKS as data grows — the FAISS nlist recipe, vs the fixed K=16
-    whose fraction is constant. Measured recall@5 as shipped (nprobe =
-    max(8, K//3), scale-adaptive shortlist): 0.76 / 0.74 / 0.84 at
-    sf0.001 / sf0.01 / sf0.1, vs the fixed-K twin's 0.78 / 0.72 / 0.72 —
-    at sf0.1 that is +0.12 recall while scanning 36% of the corpus
-    instead of 51% (K=44 vs 16), strictly better on both axes, and the
-    gap widens with n as nprobe/sqrt(n) falls.
+    lists — the deployed serving form. The list count grows with the
+    corpus, so the candidate fraction per query (nprobe/K ~
+    nprobe/sqrt(n)) SHRINKS as data grows — the FAISS nlist recipe, vs
+    the fixed K=16 whose fraction is constant. Measured recall@5 at the
+    fixed floor (nprobe = max(8, K//3), scale-adaptive shortlist): 0.76 /
+    0.74 / 0.84 at sf0.001 / sf0.01 / sf0.1, vs the fixed-K twin's 0.78 /
+    0.72 / 0.72 — at sf0.1 +0.12 recall while scanning 36% of the corpus
+    instead of 51% (K=44 vs 16).
 
-    Round 11: the residual codebooks are now ONE GLOBAL Lloyd-TRAINED
-    book (``_ivfpq_from(trained_books=True)``): flat in K (removes the
-    round-10 per-list ~8 GB-at-K=65536 caveat), persisted as an index
-    artifact alongside the coarse centroids (the FAISS train/add split —
-    a warm session plans ZERO training jobs), and with distortion that
-    falls as data fills the cells, which is what lets the exact re-rank
-    shortlist drop from the sign-orthant stopgap's n/10 to the
-    near-constant max(50, n/100) (``_pq_trained_shortlist``).
+    The residual codebook is ONE GLOBAL Lloyd-trained book
+    (ann_index.pq_codebooks over the residual column), the FAISS IVFPQ
+    layout proper: trained cells place themselves where the pooled
+    residual mass is, so the global book does not wash out the way a
+    global sign-orthant book does, and it is M x 2^bits x 16 doubles
+    FLAT IN K. Its distortion falls as data fills the cells, so the exact
+    re-rank shortlist stays near-constant (``_pq_trained_ivf_shortlist``).
+    Books, centroids, codes and the by-list raw copy persist as index
+    artifacts (the FAISS train/add split — a warm session plans zero
+    training jobs). ADC tables stay per-(query, probed list) because the
+    query residual differs per list.
+
+    Corpus-side list assignment is an Arrow-batched matmul-argmax UDF
+    (``_assign_arrow_udf``): at K=sqrt(n) the crossJoin + window form
+    evaluates n x K interpreted folds and shuffles n x K scored rows.
 
     K-means training is not SQL-expressible -> rows-only driver check;
     recall is bounded against brute force in tests/test_similarity_pq.py,
-    and the fixed-centroid ``topk_ivfpq`` is the hash-verified oracle twin
-    of the plan shape.
+    and ``topk_ivfpq_fixed`` is the hash-verified twin of the serving
+    plan.
     """
     import math
+
+    import numpy as np
 
     from mapreduce_hadoop_spark.operators import ann_index
 
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     n = _emb_count(emb, sf_dir)
-    # K (list count) is fixed at TRAIN time — the FAISS nlist contract:
-    # under an append lineage the frozen base quantizer keeps serving,
-    # so K derives from the snapshot it was trained on.
-    import numpy as np
-
-    k = max(IVF_K, math.isqrt(ann_index.model_corpus_count(emb, sf_dir)))
+    # Model geometry (list count, book cells) is fixed at TRAIN time — the
+    # FAISS nlist contract: under an append lineage the frozen base models
+    # keep serving, so it derives from the snapshot they were trained on.
+    model_n = ann_index.model_corpus_count(emb, sf_dir)
+    k = max(IVF_K, math.isqrt(model_n))
     nprobe = max(IVF_NPROBE, k // 3)
     cents = _trained_centroids(spark, emb, sf_dir, k=k)
     cents_rows = ann_index.coarse_centroids(spark, emb, sf_dir, k)
+    coarse_k = len(cents_rows)
 
-    # Round 13 (VERDICT r12 order 3): both serving dials ADAPT to the
-    # query/quantizer geometry instead of sitting on constants that were
-    # right only for organic data — fixed nprobe=K/3 with the base
-    # shortlist read recall 0.54 on the clustered n=20k crossover corpus
-    # (vs 1.00 organic). Probe width: the SPANN closeness rule, query
-    # side (_probe_lists_adaptive — boundary queries widen their own
-    # probe set). Shortlist: scaled by the SQUARE of the measured
-    # width/floor ratio, the free clusteredness signal (see the
-    # IVFPQ_PROBE_EPS block for the measured grid). Everything here is
-    # driver-side arithmetic over artifact-backed, request-sized
-    # relations — a warm query still plans zero query-side Spark jobs.
+    # Both serving dials ADAPT to the query/quantizer geometry instead of
+    # sitting on constants that were right only for organic data. Probe
+    # width: the SPANN closeness rule, query side (_probe_lists_adaptive —
+    # boundary queries widen their own probe set). Shortlist: scaled by
+    # the SQUARE of the measured width/floor ratio, the free clusteredness
+    # signal (see the IVFPQ_PROBE_EPS block). Driver-side arithmetic over
+    # artifact-backed, request-sized relations — a warm query plans zero
+    # query-side Spark jobs.
     qv_rows = ann_index.query_vectors(emb, sf_dir, N_QUERIES)
     xq = np.asarray([v for _, v in qv_rows], dtype=np.float64)
-    widths = [
-        len(p)
-        for p in _probe_lists_adaptive(xq, cents_rows, nprobe, IVFPQ_PROBE_EPS, k)
-    ]
+    probe_lists = _probe_lists_adaptive(xq, cents_rows, nprobe, IVFPQ_PROBE_EPS, k)
+    widths = [len(p) for p in probe_lists]
     ratio = (sum(widths) / len(widths)) / min(nprobe, k)
     base_shortlist = _pq_trained_ivf_shortlist(n)
     shortlist = min(
@@ -4239,18 +3555,116 @@ def topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         max(base_shortlist, n // PQ_SHORTLIST_DIV),
     )
 
-    return _ivfpq_from(
-        emb,
-        cents,
-        nprobe,
+    # Residual per vector: r = nv - nc_list, in the same projection as the
+    # list assignment (no corpus-side join beyond the broadcast centroids).
+    ncents = cents.select("cent_id", _div_by("cv", "cn").alias("ncv"))
+    assign1 = _assign_arrow_udf(cents_rows, 1)
+    lists = emb.select(
+        "vec_id",
+        "v",
+        "norm",
+        F.element_at(assign1(F.col("v")), 1).alias("cent_id"),
+    )
+    base = lists.join(F.broadcast(ncents), "cent_id").select(
+        "vec_id",
+        "cent_id",
+        F.zip_with(_div_by("v", "norm"), F.col("ncv"), lambda a, b: a - b).alias(
+            "r"
+        ),
+    )
+    book_k = min(PQ_TRAINED_K, max(16, model_n // 2))
+    rows = ann_index.pq_codebooks(
+        spark, base.select("vec_id", F.col("r").alias("res")),
+        sf_dir, PQ_TRAINED_M, PQ_TRAINED_SUB, book_k, tag="res",
+        coarse_k=coarse_k,
+    )
+
+    def codes_src(src: DataFrame) -> DataFrame:
+        enc = _pq_encode_udf(
+            _books_array(rows, PQ_TRAINED_M, book_k, PQ_TRAINED_SUB),
+            residual=True,
+        )
+        plain = src.join(F.broadcast(ncents), "cent_id")
+        return plain.select(
+            "vec_id",
+            enc(F.col("v"), F.col("norm"), F.col("ncv")).alias("cs"),
+            "cent_id",
+        ).select(
+            "vec_id",
+            *[F.element_at("cs", m + 1).alias(f"c{m}") for m in range(PQ_TRAINED_M)],
+            "cent_id",
+        )
+
+    def raw_src(src: DataFrame) -> DataFrame:
+        return src.select("vec_id", "v", "cent_id")
+
+    # The FAISS ``add`` half, BY-LIST RAW-IN-INDEX: the codes AND a
+    # serving copy of the raw vectors persist hive-partitioned by coarse
+    # list, the way queries read them. TWO co-partitioned artifacts rather
+    # than one: the ADC scan reads code columns and the exact re-rank
+    # reads vector columns, and a shared artifact would make every scan
+    # open (and a byte-accounting reader count) the other side's bytes.
+    # Both prune to the driver-known probed-list union (directory pruning,
+    # measured in SCALE_ann_r14.md §5). The codes name keys the residual
+    # book, the coarse quantizer and the training recipe; the raw copy
+    # depends only on the assignment, so it keys the coarse recipe alone.
+    # Appended corpora assign + encode only the delta against the frozen
+    # models, partitioned the same way.
+    flat_codes_name = ann_index.codes_artifact_name(
+        "res", PQ_TRAINED_M, book_k, coarse_k=coarse_k
+    )
+    codes_name = "bylist_" + flat_codes_name
+
+    def open_bylist_codes() -> DataFrame:
+        return ann_index.cached_relation(
+            spark,
+            sf_dir,
+            codes_name,
+            lambda: codes_src(lists),
+            delta_build=lambda wm: codes_src(lists.filter(F.col("vec_id") >= wm)),
+            partition_by="cent_id",
+        )
+
+    raw_name = (
+        f"bylist_raw_K{coarse_k}_"
+        f"{ann_index._recipe(ann_index.COARSE_MAXITER)}.parquet"
+    )
+
+    def open_bylist_raw() -> DataFrame:
+        return ann_index.cached_relation(
+            spark,
+            sf_dir,
+            raw_name,
+            lambda: raw_src(lists),
+            delta_build=lambda wm: raw_src(lists.filter(F.col("vec_id") >= wm)),
+            partition_by="cent_id",
+        )
+
+    # The literal probe-union isin() is what lets the parquet source skip
+    # unprobed list directories at planning time (the cent_id broadcast
+    # join prunes rows, not partitions). Shortlist candidates all come from
+    # probed lists, so serving the re-rank from the same pruned relation is
+    # exact.
+    probed = sorted({int(c) for pl in probe_lists for c in pl})
+    pruned = _bylist_codes_source(
+        spark,
+        sf_dir,
+        open_bylist_codes,
+        codes_name,
+        flat_codes_name,
+        probed,
+        PQ_TRAINED_M,
+    )
+    raw = _bylist_raw_source(emb, open_bylist_raw, sf_dir, raw_name, probed)
+    q, qarr = _query_side(
+        spark, emb, sf_dir, rows, PQ_TRAINED_M, PQ_TRAINED_SUB, probe_lists, cents_rows
+    )
+    return _adc_rank(
+        pruned,
+        qarr,
+        raw,
+        q,
         shortlist,
-        spark=spark,
-        sf_dir=sf_dir,
-        trained_books=True,
-        # Driver-side centroids (memoized/persisted) let assignment run
-        # as the Arrow matmul instead of the n x K crossJoin + window.
-        cents_rows=cents_rows,
+        m_subspaces=PQ_TRAINED_M,
         candidates_per_query=n,
-        probe_eps=IVFPQ_PROBE_EPS,
-        nprobe_max=k,
     )

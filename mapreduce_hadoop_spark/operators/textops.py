@@ -38,17 +38,9 @@ def _lang_counts(toks: Column) -> dict[str, Column]:
     return {lang: T.occurrence_count(toks, words) for lang, words in LANG_STOPWORDS.items()}
 
 
-def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-count language ID: argmax over per-language hit counts.
-
-    RETIRED from the registry late round 10 (size policy; strictly
-    dominated by ``language_id_ngram``) — the scoring stays pinned by
-    tests/test_corpus_filters.py::test_language_id_scoring via
-    ``language_id_from``."""
-    return language_id_from(load_table(spark, sf_dir, "documents"))
-
-
 def language_id_from(docs: DataFrame) -> DataFrame:
+    """Stopword-count language ID: argmax over per-language hit counts
+    (pinned by tests/test_corpus_filters.py::test_language_id_scoring)."""
     toks = T.tokens("text")
     counts = _lang_counts(toks)
     pred = F.lit("unknown")
@@ -68,29 +60,6 @@ def language_id_from(docs: DataFrame) -> DataFrame:
         *[counts[lang].alias(f"hits_{lang}") for lang in LANG_ORDER],
         pred.alias("pred_lang"),
     )
-
-
-def _lang_counts_sql() -> dict[str, str]:
-    toks = T.tokens_sql("text")
-    return {
-        lang: T.occurrence_count_sql(toks, words) for lang, words in LANG_STOPWORDS.items()
-    }
-
-
-def _language_id_oracle() -> str:
-    c = _lang_counts_sql()
-    whens = []
-    for i, lang in enumerate(LANG_ORDER):
-        conds = [f"{c[lang]} > 0"]
-        conds += [f"{c[lang]} >= {c[other]}" for other in LANG_ORDER[i + 1 :]]
-        conds += [f"{c[lang]} > {c[other]}" for other in LANG_ORDER[:i]]
-        whens.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
-    case = "CASE " + " ".join(whens) + " ELSE 'unknown' END"
-    hit_cols = ", ".join(f"{c[lang]} AS hits_{lang}" for lang in LANG_ORDER)
-    return f"SELECT doc_id, {hit_cols}, {case} AS pred_lang FROM documents"
-
-
-LANGUAGE_ID_ORACLE = _language_id_oracle()
 
 
 # Characteristic character trigrams per language (space-padded word edges

@@ -233,8 +233,7 @@ all rotate in. Head = 7 reference + 41 rotations + 2 spare change slots
 for the round's planned output changes (VERDICT r14 orders 1 and 4):
 the DETERMINISTIC k-means fit (``repartition(1).sortWithinPartitions
 ("vec_id")`` on the capped training sample — proven bit-identical
-across physical row layouts in round 14, tools/fit_order_probe.py
-experiment 3) changes every kmeans-trained query's output, and the two
+across physical row layouts in round 14, SCALE_ann_r15.md §1) changes every kmeans-trained query's output, and the two
 kmeans queries NOT already forced into the head by rotation
 (``similarity_topk_pq_trained``, ``similarity_topk_ivf_spann``, both
 r14 head) take the spares; the other three kmeans entries
@@ -407,7 +406,7 @@ ROUND = 17
 # centroids; landed in the immediately preceding commit).
 # Added mid-round: the adaptive dial's two consumers — the ordinary
 # widen moved 4x -> 8x on the second-family calibration point
-# (tools/dial_family2_probe.py: covered 0.369 reads 0.8 at 4x, 1.0 at
+# (SCALE_ann_r17.md §2: covered 0.369 reads 0.8 at 4x, 1.0 at
 # 8x; PQ_ADAPT_WIDEN comment has the table). Output-neutral at all
 # five gate scales vs the committed r16 logs
 # (tools/dial_escalation_check.py, 0 differences, run pre-landing),
@@ -449,12 +448,13 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     # output verified BIT-IDENTICAL against the committed r18 gate logs
     # at sf0.001/0.01/0.1 before landing (see OPTIMIZATION_r19.md).
     # In-window, so the round-19 driver run re-hashes them directly:
-    # - the sign-orthant flat-PQ twin adopts the trained path's r12
-    #   driver-built query side (_fixed_books_rows collect +
-    #   _adc_arrays_np local relation): the q x cent crossJoin, both
-    #   _adc_scatter_arrays exchanges, and the adc persist are gone;
-    #   the codebook aggregation itself is unchanged and re-runs per
-    #   invocation (VERDICT r18 order 4 — decided, not re-deferred):
+    # - the sign-orthant flat-PQ twin serves through the single PQ
+    #   pipeline (books -> driver-built ADC arrays -> one ADC scan ->
+    #   shortlist -> exact re-rank): its codebook rows are collected
+    #   and the query side is a local relation, so the q x cent
+    #   crossJoin, the ADC scatter exchanges and the adc persist are
+    #   gone; the codebook aggregation itself is unchanged and re-runs
+    #   per invocation (VERDICT r18 order 4 — decided, not re-deferred):
     "similarity_topk_pq",
 )
 
@@ -980,11 +980,13 @@ def _specs() -> dict[str, QuerySpec]:
         "multimodal_real_wav": (multimodal.media_real_wav, multimodal.MEDIA_REAL_WAV_ORACLE),
         # similarity_topk_ivfpq RETIRED round 13 (size policy's sixth
         # exercise, VERDICT r12 order 1): the trained twin carries the
-        # driver rows at 4.1x the sf1 wall; full row-for-row oracle
-        # parity survives as tests/test_similarity_pq.py::
-        # test_ivfpq_matches_oracle_post_retirement, the per-list-books
-        # recall/plan floor as test_ivfpq_recall_and_plan. Its slot went
-        # to ann_append_serving below.
+        # gate rows at 4.1x the sf1 wall; its output is served
+        # bit-identically by similarity_topk_ivfpq_fixed below (which
+        # carries TOPK_IVFPQ_ORACLE), and tests/test_similarity_pq.py::
+        # test_ivfpq_matches_oracle_post_retirement /
+        # test_ivfpq_recall_and_plan pin the per-list-books parity,
+        # recall and plan floor on that twin. Its slot went to
+        # ann_append_serving below.
         # NEW round 13: the incremental-add contract served end-to-end —
         # a derived base snapshot is indexed once, the appended corpus
         # declares its lineage (ann_base.json) and serves flat trained-PQ
@@ -1005,11 +1007,12 @@ def _specs() -> dict[str, QuerySpec]:
             similarity.ANN_APPEND_FIXED_ORACLE,
         ),
         # Rule 1b, round 10: residual IVF-PQ under the TRAINED coarse
-        # quantizer — k-means centroids dropped into the identical
-        # _ivfpq_from plan (README lever 2). Training is not
-        # SQL-expressible -> rows-only, like similarity_topk_ivf_trained;
-        # recall bounded vs brute force in tests/test_similarity_pq.py and
-        # the fixed-centroid similarity_topk_ivfpq hash-verifies the plan.
+        # quantizer — k-means centroids served through the single PQ
+        # pipeline (README lever 2). Training is not SQL-expressible ->
+        # rows-only, like similarity_topk_ivf_trained; recall bounded vs
+        # brute force in tests/test_similarity_pq.py, and the
+        # fixed-centroid similarity_topk_ivfpq_fixed hash-verifies the
+        # serving plan.
         # Takes the registry's LAST free slot (92/92 = MAX_REGISTRY):
         # any further addition requires retiring from the ranked list in
         # the module docstring.
@@ -1017,10 +1020,9 @@ def _specs() -> dict[str, QuerySpec]:
         # NEW round 16 (VERDICT r15 order 1): the round-15 by-list
         # artifact + cost-rule serving machinery (hive-partitioned
         # codes/raw, probe-union directory pruning, cost-based re-rank
-        # source) under topk_ivfpq's deterministic books — output
-        # bit-identical to the in-plan twin (suite-pinned), so the
-        # SAME oracle hash-verifies the whole pruning layer the trained
-        # path can only rows-check.
+        # source) under deterministic per-list sign-orthant books, so
+        # TOPK_IVFPQ_ORACLE hash-verifies the whole pruning layer the
+        # trained path can only rows-check.
         "similarity_topk_ivfpq_fixed": (
             similarity.topk_ivfpq_fixed,
             similarity.TOPK_IVFPQ_ORACLE,

@@ -445,7 +445,7 @@ def test_fit_is_layout_independent(spark, sf_dir, index_dir, tmp_path):
     physical order must yield bit-identical coarse centroids AND PQ
     books — the property whose absence caused the round-13/14
     cross-session hash shifts (k-means|| seeds by row position;
-    tools/fit_order_probe.py experiment 2 measured 1999/2000 book cells
+    SCALE_ann_r15.md §1 records 1999/2000 book cells
     moving without the canonicalization)."""
     import numpy as np
     import pyarrow as pa

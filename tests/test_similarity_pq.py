@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from mapreduce_hadoop_spark.operators.similarity import (
     N_QUERIES,
@@ -103,16 +104,24 @@ def test_pq_plan_shape(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 2, "re-rank must broadcast-hash"
 
 
-def test_ivfpq_recall_and_plan(spark, sf_dir):
-    from mapreduce_hadoop_spark.operators.similarity import topk_ivfpq
+def test_ivfpq_recall_and_plan(spark, sf_dir, tmp_path, monkeypatch):
+    from mapreduce_hadoop_spark.operators import ann_index
+    from mapreduce_hadoop_spark.operators.similarity import topk_ivfpq_fixed
 
-    exact = topk_bruteforce(spark, sf_dir).collect()
-    df = topk_ivfpq(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    approx = df.collect()
-    unpersist_intermediates()
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    ann_index.clear_memos()
+    try:
+        exact = topk_bruteforce(spark, sf_dir).collect()
+        df = topk_ivfpq_fixed(spark, sf_dir)
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+        approx = df.collect()
+    finally:
+        unpersist_intermediates()
+        ann_index.clear_memos()
 
     # IVF pruning caps recall at the fixed-centroid nprobe=8 ceiling
     # (0.78 at sf0.001, 0.74 at sf0.01, 0.74 at sf0.1); residual encoding
@@ -535,17 +544,16 @@ def test_ivfpq_bylist_raw_source_is_output_invariant(spark, sf_dir, tmp_path, mo
 
 
 def test_ivfpq_fixed_twin_is_bit_identical_and_branch_invariant(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, duck, tmp_path, monkeypatch
 ):
-    """``topk_ivfpq_fixed`` (VERDICT r15 order 1): the by-list artifact +
-    cost-rule serving plan under deterministic books must produce rows
-    BIT-IDENTICAL to the in-plan ``topk_ivfpq`` the driver has
-    hash-verified since round 10 — cold (artifact build) and warm
+    """``topk_ivfpq_fixed``: the by-list artifact + cost-rule serving plan
+    under deterministic books must produce rows BIT-IDENTICAL to the
+    DuckDB ``TOPK_IVFPQ_ORACLE`` — cold (artifact build) and warm
     (artifact load) — and under BOTH forced cost branches, so the
     driver's value hash on the twin pins the whole pruning layer."""
     from mapreduce_hadoop_spark.operators import ann_index
     from mapreduce_hadoop_spark.operators.similarity import (
-        topk_ivfpq,
+        TOPK_IVFPQ_ORACLE,
         topk_ivfpq_fixed,
         unpersist_intermediates,
     )
@@ -553,8 +561,10 @@ def test_ivfpq_fixed_twin_is_bit_identical_and_branch_invariant(
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     ann_index.clear_memos()
     try:
-        ref = sorted(map(tuple, topk_ivfpq(spark, sf_dir).collect()))
-        unpersist_intermediates()
+        ref = sorted(
+            (int(q), int(v), float(c), float(a), int(rk))
+            for q, v, c, a, rk in duck.execute(TOPK_IVFPQ_ORACLE).fetchall()
+        )
         cold = sorted(map(tuple, topk_ivfpq_fixed(spark, sf_dir).collect()))
         unpersist_intermediates()
         ann_index.clear_memos()  # drop memos; disk artifacts remain
@@ -609,25 +619,31 @@ def test_pruned_bytes_counts_probed_directories_only(tmp_path):
     assert ann_index.tree_bytes(str(art)) == sum(sizes.values())
 
 
-def test_ivfpq_matches_oracle_post_retirement(spark, sf_dir, duck):
-    """``similarity_topk_ivfpq`` RETIRED from the registry in round 13
-    (size policy, VERDICT r12 order 1: its trained twin carries driver
-    rows, 4x the sf1 wall, and crossover-measured economics; the freed
-    slot went to ``ann_append_serving``). The oracle parity the driver
-    re-verified every round survives HERE: full row-for-row equality
-    against the module's DuckDB oracle — the per-list residual books,
-    probe-filter ADC join, and two-phase shortlist stay bit-pinned."""
+def test_ivfpq_matches_oracle_post_retirement(
+    spark, sf_dir, duck, tmp_path, monkeypatch
+):
+    """``similarity_topk_ivfpq`` is retired from the registry; the oracle
+    parity it carried survives on its serving twin ``topk_ivfpq_fixed``:
+    full row-for-row equality against the module's DuckDB oracle — the
+    per-list residual books, probe-filter ADC join, and two-phase
+    shortlist stay bit-pinned."""
+    from mapreduce_hadoop_spark.operators import ann_index
     from mapreduce_hadoop_spark.operators.similarity import (
         TOPK_IVFPQ_ORACLE,
-        topk_ivfpq,
+        topk_ivfpq_fixed,
         unpersist_intermediates,
     )
 
-    got = sorted(
-        (r["query_id"], r["vec_id"], round(r["cosine"], 6), round(r["adc"], 6), r["rank"])
-        for r in topk_ivfpq(spark, sf_dir).collect()
-    )
-    unpersist_intermediates()
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    ann_index.clear_memos()
+    try:
+        got = sorted(
+            (r["query_id"], r["vec_id"], round(r["cosine"], 6), round(r["adc"], 6), r["rank"])
+            for r in topk_ivfpq_fixed(spark, sf_dir).collect()
+        )
+    finally:
+        unpersist_intermediates()
+        ann_index.clear_memos()
     want = sorted(
         (int(q), int(v), round(float(c), 6), round(float(a), 6), int(rk))
         for q, v, c, a, rk in duck.execute(TOPK_IVFPQ_ORACLE).fetchall()
@@ -766,7 +782,7 @@ def test_escalating_widen_keep_depths(spark):
     band edge off by one) changes the output rows, not just the cost."""
     from mapreduce_hadoop_spark.operators.similarity import (
         TOP_K,
-        _pq_adc_rank,
+        _adc_rank,
     )
 
     shortlist, n = 6, 200
@@ -801,7 +817,7 @@ def test_escalating_widen_keep_depths(spark):
         [(qid, [1.0 if d == qid else 0.0 for d in range(dim)]) for qid in range(3)],
         "query_id long, qnv array<double>",
     )
-    out = _pq_adc_rank(
+    out = _adc_rank(
         codes,
         qarr,
         raw,
@@ -916,4 +932,48 @@ def test_floor_probe_lineage_commits_no_flat_codes(spark, sf_dir, tmp_path, monk
             map(tuple, narrow2.select("vec_id", "cent_id", "c0").collect())
         ) == got
     finally:
+        ann_index.clear_memos()
+
+
+PQ_REGISTRY_QUERIES = [
+    "similarity_topk_pq",
+    "similarity_topk_pq_trained",
+    "ann_append_serving",
+    "ann_append_serving_fixed",
+    "similarity_topk_ivfpq_fixed",
+    "similarity_topk_ivfpq_trained",
+]
+
+
+@pytest.mark.parametrize("name", PQ_REGISTRY_QUERIES)
+def test_pq_serve_releases_every_cached_intermediate(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    """Cache lifecycle of the PQ serving pipeline: after a registered PQ
+    query is built and collected, ``unpersist_intermediates`` must leave
+    NO persisted RDD behind — whichever books source, codes layout, or
+    cost branch the query took."""
+    from mapreduce_hadoop_spark import registry
+    from mapreduce_hadoop_spark.operators import ann_index, dedup
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    ann_index.clear_memos()
+    spark.catalog.clearCache()
+    dedup.unpersist_intermediates()
+    unpersist_intermediates()
+    jsc = spark.sparkContext._jsc
+    # Start from an empty cache: an RDD another test left persisted is not
+    # this query's leak.
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist()
+    assert jsc.getPersistentRDDs().isEmpty()
+    try:
+        rows = registry.queries()[name](spark, sf_dir).collect()
+        assert len(rows) > 0
+        unpersist_intermediates()
+        assert jsc.getPersistentRDDs().isEmpty(), (
+            f"{name} left persisted RDDs: {jsc.getPersistentRDDs().keySet()}"
+        )
+    finally:
+        unpersist_intermediates()
         ann_index.clear_memos()

@@ -1,5 +1,4 @@
-"""Interleaved bench pool at ANY scale dir (round 18 — VERDICT r17 order
-2 generalized from the sf1-only ``bench_sf1_pool.py``).
+"""Interleaved bench pool at ANY scale dir.
 
 Same-window machine noise is the dominant term of single-shot bench
 numbers on the shared VM (r17: a same-tree sf0.1 re-run moved 35%; the
