@@ -1,36 +1,37 @@
-"""Multimodal (binary) column operators (north-star extension).
+"""Multimodal (binary) column operators.
 
 Pattern for image/audio/video at 100 TB: the payload is an opaque `binary`
 column with typed metadata beside it; decode / feature-extraction runs as
 Arrow-batched Python (``mapInPandas``), everything else (filtering, joins,
 grouping, metadata math) stays JVM-side.
 
-The driver testdata has no real media, so ``media_table`` synthesizes a
-binary column from `documents.text` (utf-8 bytes) with a deterministic mime
-split, and ``decode_media``'s DEFAULT path computes deterministic fake
-dimensions from the byte stream so the full mapInPandas plumbing stays
-oracle-checkable. ``real_decode=True`` is REAL for metadata: a pure-stdlib
-container-header parse (PNG IHDR / JPEG SOFn / GIF logical screen) reads
-width x height from the actual bytes — no PIL needed; payloads that are
-not a recognized image container yield NULL dimensions.
+The bundled testdata has no real media. ``media_table`` exposes
+`documents.text` as a binary column for the JVM-side metadata query;
+every other query synthesizes spec-valid media bytes per document
+in-plan (``_per_doc``) and decodes them back, so the oracle predicts the
+decoded result from doc_id alone. Codecs are stdlib+numpy only:
 
-PIXEL decode is REAL for three formats, stdlib+numpy only: 8-bit
-grayscale PNG (``_png_decode_gray``: zlib inflate + complete scanline
-unfilter None/Sub/Up/Average/Paeth), 8-bit palette GIF
-(``_gif_decode_gray``: sub-block reassembly + dictionary LZW + palette
-lookup), and baseline-sequential grayscale JPEG (``_jpeg_decode_gray``:
-canonical Huffman from DHT + DPCM/run-length entropy decode +
-dequantize + inverse DCT, round 10). ``resize_media(real_resize=True)``
-nearest-neighbor-resamples the actual pixels (``media_real_resize`` /
-``media_real_jpeg`` are the oracle-checked end-to-end round-trips).
-Video and out-of-profile image payloads (progressive JPEG, color PNG,
-interlaced GIF) still need a codec library, absent in this container —
-they yield NULL dimensions on the real path, never a throw.
+- container headers (``_parse_image_header``: PNG IHDR / JPEG SOFn / GIF
+  logical screen);
+- 8-bit grayscale PNG (``_png_decode_gray``: zlib inflate + the full
+  None/Sub/Up/Average/Paeth unfilter);
+- 8-bit palette GIF (``_gif_decode_gray``: sub-block reassembly +
+  dictionary LZW + palette lookup);
+- baseline-sequential JPEG, grayscale or YCbCr at 4:2:0 / 4:2:2 / 4:4:4
+  (``_jpeg_encode`` / ``_jpeg_decode``: canonical Huffman from DHT,
+  DPCM/run-length entropy coding, DRI/RSTn restarts, dequantize +
+  inverse DCT);
+- RIFF/WAVE PCM (``_wav_decode``) and RIFF/AVI uncompressed 8-bit DIB
+  (``_avi_decode``).
+
+Out-of-profile payloads (progressive JPEG, colour PNG, interlaced GIF,
+compressed video) need a codec library, absent in this container — every
+decoder returns None for them and the queries emit NULLs, never a throw.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from functools import lru_cache as _lru_cache
 import pandas as pd
@@ -38,8 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_hadoop_spark.sources.tables import load_table
-
-MIME_KINDS = ["image/png", "audio/wav", "video/mp4"]
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,12 +79,38 @@ FROM documents
 """
 
 
-def _fake_dimensions(payload: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for a real decoder: dimensions from byte stats."""
-    n = len(payload)
-    width = (n % 64) + 16
-    height = ((n // 64) % 64) + 16
-    return width, height
+def _per_doc(
+    spark: SparkSession, sf_dir: str, row: "Callable[[int], tuple]", schema: str
+) -> DataFrame:
+    """One ``row(doc_id)`` per document, computed in one Arrow-batched
+    ``mapInPandas`` over the doc_id column.
+
+    The narrow doc_id scan is repartitioned to the session's parallelism
+    BEFORE the Python stage: codec work costs milliseconds per row, so
+    parallelism must follow cores, not parquet split count — and the
+    exchange moves only 8-byte doc_ids, three orders of magnitude cheaper
+    than the per-row Python it unlocks. (Without it, a single ~150 MB
+    parquet file caps a pixel pipeline at 2 threads.) Payloads built by
+    ``row`` live and die inside the batch; they never cross a shuffle."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame([row(int(d)) for d in pdf["doc_id"]], columns=columns)
+
+    return docs.mapInPandas(batches, schema=schema)
+
+
+def _doc_dims(d: int) -> "tuple[int, int]":
+    """(width, height) of document ``d``'s synthesized image; the oracles
+    spell the same law as ``(doc_id % 64) + 16`` / ``((doc_id // 64) %
+    64) + 16``."""
+    return (d % 64) + 16, (d // 64) % 64 + 16
 
 
 # JPEG "start of frame" markers carrying dimensions: SOF0-SOF15 minus the
@@ -141,54 +166,12 @@ def _parse_image_header(payload: bytes) -> "tuple[int, int] | None":
     return None
 
 
-def decode_media(media: DataFrame, real_decode: bool = False) -> DataFrame:
-    """Arrow-batched decode over (doc_id, mime, payload).
-
-    ``real_decode=False`` (default): deterministic fake dimensions from
-    byte stats, keeping the full Spark plumbing live AND oracle-checkable
-    (the driver corpus has no real media). ``real_decode=True``: parse
-    width x height from the actual PNG/JPEG/GIF container header —
-    stdlib-only, no PIL — with NULL dimensions for unrecognized payloads.
-    Codec-quality pixel decode would replace ``_parse_image_header`` with
-    a real decoder; only that last step needs PIL/ffmpeg.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if real_decode:
-                dims = [_parse_image_header(bytes(p)) for p in pdf["payload"]]
-            else:
-                dims = [_fake_dimensions(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["mime"],
-                    # Nullable dtypes: Arrow maps pd.NA -> SQL NULL; plain
-                    # int lists would coerce to float64 on any None.
-                    "width": pd.array(
-                        [d[0] if d else None for d in dims], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [d[1] if d else None for d in dims], dtype="Int32"
-                    ),
-                    "n_pixels": pd.array(
-                        [d[0] * d[1] if d else None for d in dims], dtype="Int64"
-                    ),
-                }
-            )
-
-    return media.mapInPandas(
-        batches, schema="doc_id bigint, mime string, width int, height int, n_pixels bigint"
-    )
+# --- PNG / GIF: synthesize valid image bytes, decode them back --------------
 
 
-# --- real round-trip: synthesize valid media bytes, decode them back --------
-
-
-def _png_bytes(width: int, height: int) -> bytes:
-    """A complete, spec-valid PNG (signature, IHDR, IDAT, IEND, real CRCs)
-    of the given dimensions — 8-bit grayscale, all-zero pixels, stdlib
-    only. Any compliant decoder (PIL included) opens it; ~80 bytes."""
+def _png_file(width: int, height: int, raw: bytes) -> bytes:
+    """A complete 8-bit grayscale PNG (signature, IHDR, one zlib-9 IDAT
+    over the filtered scanlines ``raw``, IEND, real CRCs), stdlib only."""
     import struct
     import zlib
 
@@ -201,7 +184,6 @@ def _png_bytes(width: int, height: int) -> bytes:
         )
 
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    raw = b"".join(b"\x00" + b"\x00" * width for _ in range(height))
     return (
         b"\x89PNG\r\n\x1a\n"
         + chunk(b"IHDR", ihdr)
@@ -210,30 +192,23 @@ def _png_bytes(width: int, height: int) -> bytes:
     )
 
 
+def _png_bytes(width: int, height: int) -> bytes:
+    """A complete, spec-valid PNG of the given dimensions — 8-bit
+    grayscale, all-zero pixels. Any compliant decoder (PIL included)
+    opens it; ~80 bytes."""
+    return _png_file(width, height, b"\x00" * ((width + 1) * height))
+
+
 def _png_bytes_patterned(width: int, height: int, seed: int) -> bytes:
     """A spec-valid 8-bit grayscale PNG whose pixel (x, y) value is
     ``(3*x + 7*y + seed) % 256``, with scanline filters cycling through all
     five PNG filter types (None/Sub/Up/Average/Paeth by row index) so a
     decoder must implement the complete unfilter suite to reproduce the
-    pattern. Stdlib only; the inverse lives in ``_png_decode_gray``."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
+    pattern. The inverse lives in ``_png_decode_gray``."""
     import numpy as np
 
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
     # Filtering references RAW (reconstructed) neighbors, which the encoder
-    # knows up front — so every filter type vectorizes row-wise in numpy
-    # (the byte-identical replacement for a per-pixel Python loop that made
-    # this encoder the slow half of the pixel round-trip).
+    # knows up front — so every filter type vectorizes row-wise in numpy.
     xs = np.arange(width, dtype=np.int64)
     px = (3 * xs[None, :] + 7 * np.arange(height, dtype=np.int64)[:, None] + seed) % 256
     raw = bytearray()
@@ -264,12 +239,7 @@ def _png_bytes_patterned(width: int, height: int, seed: int) -> bytes:
     # The Paeth branch mirrors the spec's scalar predictor tie-break for
     # tie-break (<= ordering) — the decoder's scalar paeth() is the
     # reference; round-trip equality is asserted in tests.
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw), 9))
-        + chunk(b"IEND", b"")
-    )
+    return _png_file(width, height, bytes(raw))
 
 
 def _png_decode_gray(payload: bytes) -> "object | None":
@@ -395,14 +365,10 @@ def _lzw_encode(indices: "bytes", min_code_size: int) -> bytes:
     Real dictionary compression — the decoder's growth path is exercised,
     not the 'uncompressed GIF' literal-code shortcut.
 
-    Bit-identical rewrite of the round-7 version (golden stream hashes
-    pinned in tests/test_multimodal.py): the dictionary is keyed on
-    (prefix CODE, next byte) integer pairs instead of growing byte
-    strings — same greedy parse, same reset policy, but O(1) hashing per
-    input byte instead of O(len(run)) — and the LSB-first bit packing is
-    a single vectorized numpy pass over the collected (code, width)
-    stream instead of a per-code accumulator. Measured 2.7x on the
-    sf-shaped corpus (see the round-10 bench note)."""
+    The dictionary is keyed on (prefix CODE, next byte) integer pairs —
+    O(1) hashing per input byte — and the LSB-first bit packing is one
+    vectorized numpy pass over the collected (code, width) stream; golden
+    stream hashes are pinned in tests/test_multimodal.py."""
     clear = 1 << min_code_size
     eoi = clear + 1
     codes: list[int] = []
@@ -466,13 +432,12 @@ def _lzw_decode(data: bytes, min_code_size: int) -> "bytearray | None":
     """Inverse of ``_lzw_encode``: LSB-first variable-width code reader,
     CLEAR/EOI handling, dictionary growth with the KwKwK special case.
 
-    Hardened (round 10, tolerate-don't-throw contract): ``min_code_size``
-    outside the GIF-legal [2, 8] returns None (a hostile value used to
-    size a 2^mcs root table unchecked), and the dictionary FREEZES at the
-    spec's 4096-entry ceiling — further codes keep decoding against the
-    frozen table until a CLEAR, and a code that would have indexed past
-    it is corrupt (None), where the round-7 version grew the table
-    unboundedly on malicious streams.
+    Tolerate-don't-throw: ``min_code_size`` outside the GIF-legal [2, 8]
+    returns None (a hostile value would size a 2^mcs root table), and
+    the dictionary FREEZES at the spec's 4096-entry ceiling — further
+    codes keep decoding against the frozen table until a CLEAR, and a
+    code that would index past it is corrupt (None), so malicious
+    streams cannot grow it without bound.
 
     Code extraction is numpy-segmented: the stream is unpacked to a bit
     array once, and all codes sharing a width (the run until the
@@ -574,7 +539,7 @@ def _gif_decode_gray(payload: bytes) -> "object | None":
     profile (local color tables, interlacing, animation frames need a
     codec library; the crawl contract is tolerate-don't-throw).
 
-    Hardened (round 10): a truncated global color table, zero image
+    A truncated global color table, zero image
     dimensions, a GIF-illegal LZW min-code-size (outside [2, 8] — checked
     in ``_lzw_decode``), and palette indices past the declared table size
     all return None instead of raising."""
@@ -626,21 +591,22 @@ def _gif_decode_gray(payload: bytes) -> "object | None":
     return pal[ia].reshape(h, w)
 
 
-# --- Baseline-sequential grayscale JPEG (ITU-T T.81 SOF0, one component) ---
+# --- Baseline-sequential JPEG (ITU-T T.81 SOF0): grayscale or YCbCr --------
 #
-# The round-7 README parked "JPEG pixel decode" as feasible; this is that
-# decode, closing the last header-only format. Both halves are first-
-# principles from the public spec: 8x8 forward/inverse DCT-II (one numpy
-# einsum over all blocks), a quantization table with q[0][0] = 8 so a
-# BLOCK-CONSTANT image round-trips bit-exactly (DC = v - 128 survives
-# round(F/q) with zero AC energy, which is what makes a closed-form
-# DuckDB px_sum oracle possible for a lossy codec — see
-# MEDIA_REAL_JPEG_ORACLE), canonical Huffman tables shipped in DHT (all
-# 162 AC run/size symbols at 9 bits, 12 DC categories at 5 bits — legal,
-# symmetric, and decoder-agnostic; the decoder builds whatever DHT
-# declares), DPCM DC, EOB/ZRL AC run-lengths, and 0xFF00 byte stuffing.
-# Out-of-profile shapes (progressive SOF2, multi-component, restart
-# intervals, 12-bit precision) return None per the crawl contract.
+# Both halves are first-principles from the public spec: 8x8 forward /
+# inverse DCT-II (one numpy einsum over all blocks), quantization tables
+# with q[0][0] = 8 so a BLOCK-CONSTANT plane round-trips bit-exactly
+# (DC = v - 128 survives round(F/q) with zero AC energy, which is what
+# makes a closed-form DuckDB oracle possible for a lossy codec — see
+# MEDIA_REAL_JPEG_ORACLE), canonical Huffman tables shipped in DHT (the
+# decoder builds whatever DHT declares), DPCM DC, EOB/ZRL AC run-lengths,
+# 0xFF00 byte stuffing and DRI/RSTn restart intervals. A frame is one
+# grayscale component, or Y/Cb/Cr with Y at (h, v) sampling 2x2, 2x1 or
+# 1x1 and chroma at 1x1: interleaved MCUs of 8h x 8v pixels (h*v Y
+# blocks + one Cb + one Cr). Table id 0 is luma, id 1 chroma — distinct
+# quantization AND Huffman specs, so the component -> table-id wiring is
+# exercised end-to-end. Progressive SOF2, 12-bit precision, other
+# component counts or samplings, and corrupt streams return None.
 
 _JPEG_ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -649,27 +615,54 @@ _JPEG_ZIGZAG = [
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ]
 
-# DC: 12 category symbols, all 5 bits. AC: EOB + 160 (run, size) + ZRL,
-# all 9 bits. Canonical (codes are consecutive integers), and no code is
-# the all-ones pattern of its length, as T.81 requires.
-_JPEG_DC_SPEC = ([0, 0, 0, 0, 12] + [0] * 11, list(range(12)))
-_JPEG_AC_SPEC = (
-    [0] * 8 + [162] + [0] * 7,
-    [0x00] + [(r << 4) | s for r in range(16) for s in range(1, 11)] + [0xF0],
+# (BITS, HUFFVAL) per table id. DC: 12 category symbols, all 5 bits for
+# luma, 6 for chroma. AC: EOB + 160 (run, size) + ZRL, all 9 bits for
+# luma, 10 for chroma. Canonical (codes are consecutive integers), and no
+# code is the all-ones pattern of its length, as T.81 requires.
+_JPEG_AC_SYMBOLS = (
+    [0x00] + [(r << 4) | s for r in range(16) for s in range(1, 11)] + [0xF0]
+)
+_JPEG_DC_SPECS = (
+    ([0, 0, 0, 0, 12] + [0] * 11, list(range(12))),
+    ([0, 0, 0, 0, 0, 12] + [0] * 10, list(range(12))),
+)
+_JPEG_AC_SPECS = (
+    ([0] * 8 + [162] + [0] * 7, _JPEG_AC_SYMBOLS),
+    ([0] * 9 + [162] + [0] * 6, _JPEG_AC_SYMBOLS),
 )
 
+# Y (h, v) sampling factors with chroma at 1x1 -> the layout label.
+# MCU = 8h x 8v pixels; chroma plane dims = (ceil(H/v), ceil(W/h)).
+_JPEG_SAMPLINGS = {(2, 2): "420", (2, 1): "422", (1, 1): "444"}
 
-def _jpeg_canonical_codes(bits: "list[int]", vals: "list[int]"):
-    """symbol -> (code, length) per T.81 Annex C code construction."""
-    out: dict[int, tuple[int, int]] = {}
+
+def _jpeg_canonical_codes(bits, vals) -> "dict[tuple[int, int], int]":
+    """{(length, code): symbol} per the T.81 Annex C code construction —
+    the decode map of a DHT table; the encoder inverts it. A symbol
+    listed twice simply owns two codes."""
+    out: dict[tuple[int, int], int] = {}
     code, k = 0, 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
+            out[(length, code)] = vals[k]
             code += 1
             k += 1
         code <<= 1
     return out
+
+
+@_lru_cache(maxsize=None)
+def _jpeg_encoder_codes(tid: int) -> "tuple[dict, dict]":
+    """(DC, AC) symbol -> (code, length) maps of Huffman table ``tid``:
+    its DHT decode maps inverted, built once per worker. Read-only by
+    contract — ``_JpegScanWriter`` only looks codes up."""
+    return tuple(
+        {
+            sym: (code, length)
+            for (length, code), sym in _jpeg_canonical_codes(*specs[tid]).items()
+        }
+        for specs in (_JPEG_DC_SPECS, _JPEG_AC_SPECS)
+    )
 
 
 @_lru_cache(maxsize=None)
@@ -692,13 +685,16 @@ def _jpeg_dct_matrix():
 
 
 @_lru_cache(maxsize=None)
-def _jpeg_qtable():
+def _jpeg_qtable(tid: int = 0):
+    """Quantization table ``tid`` (0 luma, 1 chroma): q = 8 + slope*(u+v)
+    with slope 4 / 6, natural order, cached and write-protected like the
+    DCT matrix. q[0][0] = 8 in both — the block-constant exactness
+    anchor."""
     import numpy as np
 
     u = np.arange(8).reshape(8, 1)
     v = np.arange(8).reshape(1, 8)
-    q = 8 + 4 * (u + v)  # q[0][0] = 8: the block-constant exactness anchor
-    q = q.astype(np.int64)
+    q = (8 + (4, 6)[tid] * (u + v)).astype(np.int64)
     q.setflags(write=False)
     return q
 
@@ -725,14 +721,15 @@ def _pack_codes_msb(codes: "list[int]", widths: "list[int]") -> bytes:
     return packed.tobytes()
 
 
-def _jpeg_quantized_blocks(plane, q, mult: "int | tuple[int, int]" = 8):
+def _jpeg_quantized_blocks(plane, q, mult: "tuple[int, int]"):
     """(h, w) uint8 plane -> (bh, bw, 8, 8) int64 quantized DCT blocks,
-    edge-padded to a multiple of ``mult`` per axis — 8 for standalone
-    components, (8*v, 8*h) for the luma plane of a subsampled frame
-    whose MCU is 8h x 8v pixels (16x16 for 4:2:0, 16x8 for 4:2:2)."""
+    edge-padded to a multiple of ``mult`` = (8v, 8h) rows x columns for a
+    component at (h, v) sampling: 8 for a 1x1 component, the whole MCU
+    (16x16 for 4:2:0, 8 rows x 16 columns for 4:2:2) for a subsampled
+    frame's luma plane."""
     import numpy as np
 
-    mh, mw = (mult, mult) if isinstance(mult, int) else mult
+    mh, mw = mult
     a = np.asarray(plane, dtype=np.uint8)
     h, w = a.shape
     ph, pw = -(-h // mh) * mh, -(-w // mw) * mw
@@ -748,9 +745,8 @@ def _jpeg_quantized_blocks(plane, q, mult: "int | tuple[int, int]" = 8):
 
 
 class _JpegScanWriter:
-    """Entropy-coded-segment builder: DPCM DC + run-length AC per block,
-    any (dc, ac) canonical table pair per call — the shared half of the
-    grayscale and 4:2:0 color encoders."""
+    """Entropy-coded-segment builder for ``_jpeg_encode``: DPCM DC +
+    run-length AC per block, any (dc, ac) canonical table pair per call."""
 
     def __init__(self) -> None:
         self.codes: list[int] = []
@@ -825,62 +821,95 @@ class _JpegScanWriter:
         return b"".join(self._chunks) + _pack_codes_msb(self.codes, self.widths)
 
 
-def _jpeg_encode_gray(px, restart_interval: int = 0) -> bytes:
-    """Spec-valid baseline JPEG bytes for an (h, w) uint8 array.
-    ``restart_interval`` > 0 emits a DRI segment and RSTn markers every
-    that many MCUs (one MCU = one block for a 1x1 single component),
-    resetting the DPCM predictor — the camera-typical stream shape."""
+def _jpeg_encode(
+    planes, samp: "tuple[int, int]" = (1, 1), restart_interval: int = 0
+) -> bytes:
+    """Spec-valid baseline JPEG bytes. ``planes`` is either ``(gray,)``,
+    one (H, W) uint8 plane at ``samp`` (1, 1), or ``(y, cb, cr)`` with
+    ``y`` (H, W) and ``cb``/``cr`` (ceil(H/v), ceil(W/h)) uint8 — the
+    subsampled planes a real encoder codes — at Y sampling ``samp`` =
+    (h, v), a key of ``_JPEG_SAMPLINGS``. A grayscale frame carries only
+    the luma DQT/DHT. ``restart_interval`` > 0 emits DRI + RSTn every
+    that many MCUs, resetting every DPCM predictor — the camera-typical
+    stream shape."""
     import struct
 
     import numpy as np
 
-    a = np.asarray(px, dtype=np.uint8)
-    h, w = a.shape
-    q = _jpeg_qtable()
-    coeffs = _jpeg_quantized_blocks(a, q)
-    zz = np.asarray(_JPEG_ZIGZAG)
-    dc_codes = _jpeg_canonical_codes(*_JPEG_DC_SPEC)
-    ac_codes = _jpeg_canonical_codes(*_JPEG_AC_SPEC)
+    n = len(planes)
+    if samp not in _JPEG_SAMPLINGS or n not in (1, 3) or (n == 1 and samp != (1, 1)):
+        raise ValueError(f"unsupported layout: {n} planes at sampling {samp}")
+    height, width = np.shape(planes[0])
+    # (component id, h, v, table id): Y carries the frame sampling.
+    comps = [(1, *samp, 0), (2, 1, 1, 1), (3, 1, 1, 1)][:n]
+    tables = (0,) if n == 1 else (0, 1)
+    coeffs = [
+        _jpeg_quantized_blocks(p, _jpeg_qtable(t), mult=(8 * v, 8 * h))
+        for p, (_, h, v, t) in zip(planes, comps)
+    ]
+    # The Y grid is padded to whole MCUs; chroma blocks are 1:1 with MCUs.
+    mcu_h, mcu_w = coeffs[0].shape[0] // samp[1], coeffs[0].shape[1] // samp[0]
+    for c, (_, h, v, _) in zip(coeffs, comps):
+        if c.shape[:2] != (v * mcu_h, h * mcu_w):
+            raise ValueError("plane shapes disagree with the MCU grid")
+    scan = [
+        (c, h, v, *_jpeg_encoder_codes(t)) for c, (_, h, v, t) in zip(coeffs, comps)
+    ]
     writer = _JpegScanWriter()
-    prev_dc = 0
+    pdc = [0] * n  # per-component DPCM predictors
     mcu = 0
-    for by in range(coeffs.shape[0]):
-        for bx in range(coeffs.shape[1]):
+    for my in range(mcu_h):
+        for mx in range(mcu_w):
             if restart_interval and mcu and mcu % restart_interval == 0:
                 writer.restart()
-                prev_dc = 0
-            prev_dc = writer.block(coeffs[by, bx], prev_dc, dc_codes, ac_codes)
+                pdc = [0] * n
             mcu += 1
-    scan = writer.tobytes()
-    qz = bytes(int(q.reshape(64)[zz[i]]) for i in range(64))
+            for ci, (c, h, v, dc_codes, ac_codes) in enumerate(scan):
+                for dy in range(v):  # a component's blocks in raster order
+                    for dx in range(h):
+                        pdc[ci] = writer.block(
+                            c[v * my + dy, h * mx + dx], pdc[ci], dc_codes, ac_codes
+                        )
+    zz = np.asarray(_JPEG_ZIGZAG)
     segs = [b"\xff\xd8"]
-    segs.append(b"\xff\xdb" + struct.pack(">HB", 67, 0) + qz)
+    for t in tables:
+        qz = bytes(_jpeg_qtable(t).reshape(64)[zz].tolist())
+        segs.append(b"\xff\xdb" + struct.pack(">HB", 67, t) + qz)
     segs.append(
-        b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 1) + b"\x01\x11\x00"
+        b"\xff\xc0"
+        + struct.pack(">HBHHB", 8 + 3 * n, 8, height, width, n)
+        + b"".join(bytes([cid, (h << 4) | v, t]) for cid, h, v, t in comps)
     )
-    for cls, (bits, vals) in ((0, _JPEG_DC_SPEC), (1, _JPEG_AC_SPEC)):
-        payload = bytes(bits) + bytes(vals)
-        segs.append(
-            b"\xff\xc4" + struct.pack(">HB", 3 + len(payload), cls << 4) + payload
-        )
+    for t in tables:
+        for cls, specs in ((0, _JPEG_DC_SPECS), (1, _JPEG_AC_SPECS)):
+            bits, vals = specs[t]
+            payload = bytes(bits) + bytes(vals)
+            segs.append(
+                b"\xff\xc4"
+                + struct.pack(">HB", 3 + len(payload), (cls << 4) | t)
+                + payload
+            )
     if restart_interval:
         segs.append(b"\xff\xdd" + struct.pack(">HH", 4, restart_interval))
-    segs.append(b"\xff\xda" + struct.pack(">HB", 8, 1) + b"\x01\x00\x00\x3f\x00")
-    segs.append(scan)
+    segs.append(
+        b"\xff\xda"
+        + struct.pack(">HB", 6 + 2 * n, n)
+        + b"".join(bytes([cid, (t << 4) | t]) for cid, _, _, t in comps)
+        + b"\x00\x3f\x00"
+    )
+    segs.append(writer.tobytes())
     segs.append(b"\xff\xd9")
     return b"".join(segs)
 
 
 def _jpeg_walk(payload: bytes):
-    """Baseline marker walk shared by the grayscale and 4:2:0 color
-    decoders: DQT (8-bit only), DHT (any canonical tables the file
-    declares), DRI (restart interval, round 12 — camera-typical streams
-    use it), the SOF0 frame header, and the SOS scan header. Returns
-    ``(qtables, dc_tabs, ac_tabs, sof_data, sos_data, scan_start, ri)``
-    with sof_data/sos_data the RAW segment payloads (component layout is
-    profile-specific, each decoder validates its own) and ``ri`` the
-    restart interval in MCUs (0 = none), or None for anything outside
-    baseline sequential (progressive SOF2 and friends, 16-bit DQT,
+    """Baseline marker walk for ``_jpeg_decode``: DQT (8-bit only), DHT
+    (any canonical tables the file declares), DRI, the SOF0 frame header,
+    and the SOS scan header. Returns ``(qtables, dc_tabs, ac_tabs,
+    sof_data, sos_data, scan_start, ri)`` with sof_data/sos_data the RAW
+    segment payloads (the decoder validates the component layout) and
+    ``ri`` the restart interval in MCUs (0 = none), or None for anything
+    outside baseline sequential (progressive SOF2 and friends, 16-bit DQT,
     corrupt segment structure)."""
     import numpy as np
 
@@ -929,15 +958,7 @@ def _jpeg_walk(payload: bytes):
                 vals = data[j + 17 : j + 17 + cnt]
                 if len(vals) < cnt or tc > 1:
                     return None
-                tab: dict[tuple[int, int], int] = {}
-                code = k = 0
-                for length in range(1, 17):
-                    for _ in range(bits[length - 1]):
-                        tab[(length, code)] = vals[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                (dc_tabs if tc == 0 else ac_tabs)[th] = tab
+                (dc_tabs if tc == 0 else ac_tabs)[th] = _jpeg_canonical_codes(bits, vals)
                 j += 17 + cnt
         elif marker in _JPEG_SOF:
             if marker != 0xC0 or len(data) < 6 or len(data) < 6 + 3 * data[5]:
@@ -961,7 +982,7 @@ def _jpeg_walk(payload: bytes):
 
 class _JpegBitReader:
     """Entropy-segment bit cursor: canonical-Huffman code reads and T.81
-    amplitude (SSSS-extended) reads, shared by both MCU loops."""
+    amplitude (SSSS-extended) reads."""
 
     def __init__(self, bits: "list[int]") -> None:
         self.bl = bits
@@ -995,12 +1016,12 @@ class _JpegBitReader:
 
 
 def _jpeg_entropy_segments(payload: bytes, start: int) -> "list[list[int]] | None":
-    """Entropy-coded data -> one bit list PER RESTART SEGMENT (round 12:
-    DRI/RSTn in profile). Each segment ends at an RSTn marker (whose
-    modulo-8 index must follow the D0..D7 cycle — an out-of-sequence
-    marker means a dropped segment and fails the stream) or at the first
-    other non-stuffed marker; 0xFF00 unstuffed per segment. A stream
-    with no restarts returns exactly one segment."""
+    """Entropy-coded data -> one bit list PER RESTART SEGMENT. Each
+    segment ends at an RSTn marker (whose modulo-8 index must follow the
+    D0..D7 cycle — an out-of-sequence marker means a dropped segment and
+    fails the stream) or at the first other non-stuffed marker; 0xFF00
+    unstuffed per segment. A stream with no restarts returns exactly one
+    segment."""
     import numpy as np
 
     n = len(payload)
@@ -1083,295 +1104,124 @@ def _jpeg_idct_plane(zzvec, qtab):
     return px.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
 
 
-def _jpeg_decode_gray(payload: bytes) -> "object | None":
-    """REAL pixel decode for baseline-sequential 8-bit single-component
-    JPEG (SOF0): marker walk -> DQT/DHT (any canonical tables the file
-    declares) -> 0xFF00 unstuffing -> Huffman + DPCM DC + run-length AC
-    -> dequantize -> inverse DCT (one einsum over all blocks) -> level
-    shift, round-half-even, clamp, crop. DRI/RSTn restart intervals are
-    IN profile (round 12): segment boundaries are validated against the
-    D0..D7 cycle and the DPCM predictor resets per segment. Returns an
-    (h, w) uint8 array, or None for anything outside the profile
-    (progressive SOF2, multiple components, 12-bit precision, corrupt
-    streams) — the same tolerate-don't-throw contract as the PNG and
-    GIF paths."""
+def _jpeg_decode(payload: bytes) -> "tuple | None":
+    """REAL pixel decode for baseline-sequential 8-bit JPEG (SOF0): marker
+    walk -> DQT/DHT -> per-restart-segment 0xFF00 unstuffing -> one
+    interleaved-MCU loop of Huffman + per-component DPCM DC + run-length
+    AC -> per-plane dequantize + inverse DCT -> nearest-neighbor chroma
+    upsample, crop. Restart segments must match the declared DRI interval
+    exactly and follow the D0..D7 cycle; every DC predictor resets per
+    segment. Returns the full-resolution uint8 planes — ``(gray,)`` for
+    one component, ``(y, cb, cr)`` for three — or None for anything
+    outside the profile (progressive SOF2, 12-bit precision, other
+    component counts or samplings, corrupt streams): the same
+    tolerate-don't-throw contract as the PNG and GIF paths."""
     import numpy as np
 
     walked = _jpeg_walk(payload)
     if walked is None:
         return None
     qtables, dc_tabs, ac_tabs, sof, sos, start, ri = walked
-    if len(sof) < 9 or sof[0] != 8 or sof[5] != 1 or sof[7] != 0x11:
-        return None  # 8-bit, one component, 1x1 sampling
-    h = int.from_bytes(sof[1:3], "big")
-    w = int.from_bytes(sof[3:5], "big")
-    qid = sof[8]
-    if sos[0] != 1 or len(sos) < 4:
+    n = sof[5]
+    height = int.from_bytes(sof[1:3], "big")
+    width = int.from_bytes(sof[3:5], "big")
+    if sof[0] != 8 or n not in (1, 3) or width == 0 or height == 0:
         return None
-    dc_id, ac_id = sos[2] >> 4, sos[2] & 15
-    if w == 0 or h == 0 or qid not in qtables:
+    # Colour needs the complete 10-byte scan header; a gray one is read
+    # only up to its table byte (3n + 1 bytes covers both).
+    if sos[0] != n or len(sos) < 3 * n + 1:
         return None
-    if dc_id not in dc_tabs or ac_id not in ac_tabs:
-        return None
-    segs = _jpeg_entropy_segments(payload, start)
-    if segs is None:
-        return None
-    bh, bw = -(-h // 8), -(-w // 8)
-    # Segment count must match the declared interval exactly: one MCU
-    # (= one block here) grid of bh*bw, a restart every ri MCUs.
-    expected = 1 if ri == 0 else -(-(bh * bw) // ri)
-    if len(segs) != expected:
-        return None
-    rd = _JpegBitReader(segs[0])
-    seg_i = mcu = 0
-    zzvec = np.zeros((bh, bw, 64), dtype=np.int64)
-    prev_dc = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if ri and mcu and mcu % ri == 0:
-                seg_i += 1
-                rd = _JpegBitReader(segs[seg_i])
-                prev_dc = 0  # T.81: predictors reset at every restart
-            prev_dc = _jpeg_read_block(
-                rd, dc_tabs[dc_id], ac_tabs[ac_id], zzvec[by, bx], prev_dc
-            )
-            if prev_dc is None:
-                return None
-            mcu += 1
-    return _jpeg_idct_plane(zzvec, qtables[qid])[:h, :w]
-
-
-def _jpeg_bytes_patterned(width: int, height: int, seed: int) -> bytes:
-    """A spec-valid baseline JPEG whose pixel (x, y) is
-    ``(3*(x//8) + 7*(y//8) + seed) % 256`` — constant per 8x8 block, so
-    the lossy DCT round-trip is bit-EXACT (only the DC coefficient is
-    nonzero and q[0][0] = 8 divides it out), which is what lets the
-    driver's DuckDB oracle predict decoded pixels in closed form. The
-    Huffman/DPCM/byte-stuffing machinery in the stream is the full real
-    baseline path; richer AC content is exercised by the round-trip unit
-    tests against the decoder's reference reconstruction."""
-    import numpy as np
-
-    bw, bh = -(-width // 8), -(-height // 8)
-    v = (
-        3 * np.arange(bw, dtype=np.int64)[None, :]
-        + 7 * np.arange(bh, dtype=np.int64)[:, None]
-        + seed
-    ) % 256
-    px = np.repeat(np.repeat(v, 8, axis=0), 8, axis=1)[:height, :width]
-    return _jpeg_encode_gray(px.astype(np.uint8))
-
-
-# --- Baseline YCbCr color JPEG (SOF0, 4:2:0 / 4:2:2 / 4:4:4) -----------------
-#
-# One real-media step past round 10's grayscale decode, on the same
-# committed kernels (_jpeg_walk / _JpegBitReader / _jpeg_read_block /
-# _jpeg_idct_plane / _JpegScanWriter): interleaved MCUs of 8h x 8v
-# pixels (h*v Y blocks at (h, v) sampling + one Cb + one Cr at 1x1; all
-# three common layouts — Y 2x2, 2x1, 1x1 — are in profile), separate
-# luma/chroma quantization AND Huffman tables (ids 0/1 — distinct specs,
-# so a decoder that ignores table ids fails loudly), per-component DPCM
-# DC predictors, JFIF YCbCr -> RGB with floor(x + 0.5) rounding (chosen
-# over numpy's round-half-even because DuckDB can reproduce it exactly —
-# the cross-engine rounding discipline of functions/fixedpoint.py).
-
-# Chroma tables: same canonical-code construction as the luma specs but
-# different widths (DC 6-bit, AC 10-bit) and a different qtable slope, so
-# the component -> table-id wiring is actually exercised end-to-end.
-_JPEG_DC_SPEC_CHROMA = ([0, 0, 0, 0, 0, 12] + [0] * 10, list(range(12)))
-_JPEG_AC_SPEC_CHROMA = (
-    [0] * 9 + [162] + [0] * 6,
-    [0x00] + [(r << 4) | s for r in range(16) for s in range(1, 11)] + [0xF0],
-)
-
-
-@_lru_cache(maxsize=None)
-def _jpeg_qtable_chroma():
-    import numpy as np
-
-    u = np.arange(8).reshape(8, 1)
-    v = np.arange(8).reshape(1, 8)
-    q = 8 + 6 * (u + v)  # q[0][0] = 8: same block-constant exactness anchor
-    q = q.astype(np.int64)
-    q.setflags(write=False)
-    return q
-
-
-# Baseline chroma-subsampling layouts: Y sampling factors (h, v) with
-# chroma at 1x1. MCU = 8h x 8v pixels; h*v Y blocks + 1 Cb + 1 Cr per
-# MCU; chroma plane dims = (ceil(H/v), ceil(W/h)).
-_JPEG_SAMPLINGS = {(2, 2): "420", (2, 1): "422", (1, 1): "444"}
-
-
-def _jpeg_encode_color(
-    y, cb, cr, samp: "tuple[int, int]" = (2, 2), restart_interval: int = 0
-) -> bytes:
-    """Spec-valid baseline YCbCr JPEG at 4:2:0 / 4:2:2 / 4:4:4 (``samp``
-    = Y's (h, v) sampling factors): ``y`` is (H, W) uint8, ``cb``/``cr``
-    are (ceil(H/v), ceil(W/h)) uint8 — the subsampled planes a real
-    encoder actually codes. ``restart_interval`` > 0 emits DRI + RSTn
-    every that many interleaved MCUs, resetting all three DPCM
-    predictors."""
-    import struct
-
-    import numpy as np
-
-    if samp not in _JPEG_SAMPLINGS:
-        raise ValueError(f"unsupported sampling {samp}")
-    sh, sv = samp
-    y = np.asarray(y, dtype=np.uint8)
-    h, w = y.shape
-    ql, qc = _jpeg_qtable(), _jpeg_qtable_chroma()
-    # Y pads to the (8v x 8h) MCU grid; chroma blocks are 1:1 with MCUs,
-    # so the chroma planes pad to 8 (ceil(ceil(w/h)/8) == ceil(w/8h)).
-    cy = _jpeg_quantized_blocks(y, ql, mult=(8 * sv, 8 * sh))
-    ccb = _jpeg_quantized_blocks(cb, qc)
-    ccr = _jpeg_quantized_blocks(cr, qc)
-    mcu_h, mcu_w = ccb.shape[0], ccb.shape[1]
-    if cy.shape[0] != sv * mcu_h or cy.shape[1] != sh * mcu_w or ccr.shape != ccb.shape:
-        raise ValueError("plane shapes disagree with the MCU grid")
-    dc_l = _jpeg_canonical_codes(*_JPEG_DC_SPEC)
-    ac_l = _jpeg_canonical_codes(*_JPEG_AC_SPEC)
-    dc_c = _jpeg_canonical_codes(*_JPEG_DC_SPEC_CHROMA)
-    ac_c = _jpeg_canonical_codes(*_JPEG_AC_SPEC_CHROMA)
-    writer = _JpegScanWriter()
-    pdc = [0, 0, 0]  # per-component DPCM predictors
-    mcu = 0
-    for my in range(mcu_h):
-        for mx in range(mcu_w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                writer.restart()
-                pdc = [0, 0, 0]
-            mcu += 1
-            for dy in range(sv):  # Y blocks in raster order within the MCU
-                for dx in range(sh):
-                    pdc[0] = writer.block(
-                        cy[sv * my + dy, sh * mx + dx], pdc[0], dc_l, ac_l
-                    )
-            pdc[1] = writer.block(ccb[my, mx], pdc[1], dc_c, ac_c)
-            pdc[2] = writer.block(ccr[my, mx], pdc[2], dc_c, ac_c)
-    zz = np.asarray(_JPEG_ZIGZAG)
-    segs = [b"\xff\xd8"]
-    for qid, q in ((0, ql), (1, qc)):
-        qz = bytes(int(q.reshape(64)[zz[i]]) for i in range(64))
-        segs.append(b"\xff\xdb" + struct.pack(">HB", 67, qid) + qz)
-    segs.append(
-        b"\xff\xc0"
-        + struct.pack(">HBHHB", 17, 8, h, w, 3)
-        + bytes([1, (sh << 4) | sv, 0])  # Y: (h, v) sampling, qtable 0
-        + b"\x02\x11\x01"  # Cb: 1x1, qtable 1
-        + b"\x03\x11\x01"  # Cr: 1x1, qtable 1
-    )
-    for cls, tid, (bits, vals) in (
-        (0, 0, _JPEG_DC_SPEC),
-        (1, 0, _JPEG_AC_SPEC),
-        (0, 1, _JPEG_DC_SPEC_CHROMA),
-        (1, 1, _JPEG_AC_SPEC_CHROMA),
-    ):
-        payload = bytes(bits) + bytes(vals)
-        segs.append(
-            b"\xff\xc4"
-            + struct.pack(">HB", 3 + len(payload), (cls << 4) | tid)
-            + payload
-        )
-    if restart_interval:
-        segs.append(b"\xff\xdd" + struct.pack(">HH", 4, restart_interval))
-    segs.append(
-        b"\xff\xda"
-        + struct.pack(">HB", 12, 3)
-        + b"\x01\x00\x02\x11\x03\x11\x00\x3f\x00"
-    )
-    segs.append(writer.tobytes())
-    segs.append(b"\xff\xd9")
-    return b"".join(segs)
-
-
-def _jpeg_decode_color(payload: bytes) -> "object | None":
-    """REAL pixel decode for baseline-sequential 8-bit YCbCr JPEG (SOF0,
-    three components) at the three common chroma layouts — 4:2:0 (Y 2x2),
-    4:2:2 (Y 2x1), 4:4:4 (Y 1x1), chroma always 1x1: interleaved-MCU
-    entropy decode with per-component Huffman tables and DC predictors,
-    per-plane dequantize + inverse DCT, nearest-neighbor chroma
-    upsample, crop. Returns (Y, Cb, Cr) full-resolution uint8 planes, or
-    None for anything outside the profile — grayscale streams go to
-    ``_jpeg_decode_gray``; exotic samplings (4:1:1, subsampled-Y) are
-    out of profile."""
-    import numpy as np
-
-    walked = _jpeg_walk(payload)
-    if walked is None:
-        return None
-    qtables, dc_tabs, ac_tabs, sof, sos, start, ri = walked
-    if len(sof) < 15 or sof[0] != 8 or sof[5] != 3:
-        return None  # 8-bit, three components
-    h = int.from_bytes(sof[1:3], "big")
-    w = int.from_bytes(sof[3:5], "big")
-    if w == 0 or h == 0:
-        return None
-    comps = {}  # component id -> (sampling, qtable id)
-    for c in range(3):
-        cid, samp, qid = sof[6 + 3 * c], sof[7 + 3 * c], sof[8 + 3 * c]
-        comps[cid] = (samp, qid)
-    if len(sos) < 10 or sos[0] != 3:
-        return None
-    order = []  # (sampling, qtable, dc_tab, ac_tab) in scan order
-    for c in range(3):
-        cid, tabs = sos[1 + 2 * c], sos[2 + 2 * c]
-        if cid not in comps:
+    frame = {sof[6 + 3 * c]: sof[7 + 3 * c : 9 + 3 * c] for c in range(n)}
+    order = []  # (h, v, qtable, dc_tab, ac_tab) per component, scan order
+    for c in range(n):
+        # A one-component scan can only code the frame's one component.
+        comp = frame.get(sos[1 + 2 * c]) if n > 1 else sof[7:9]
+        if comp is None:
             return None
-        samp, qid = comps[cid]
+        (samp, qid), tabs = comp, sos[2 + 2 * c]
         dc_id, ac_id = tabs >> 4, tabs & 15
         if qid not in qtables or dc_id not in dc_tabs or ac_id not in ac_tabs:
             return None
-        order.append((samp, qtables[qid], dc_tabs[dc_id], ac_tabs[ac_id]))
-    sh, sv = order[0][0] >> 4, order[0][0] & 15
-    if (sh, sv) not in _JPEG_SAMPLINGS:
-        return None  # Y must be 2x2, 2x1, or 1x1
-    if order[1][0] != 0x11 or order[2][0] != 0x11:
+        order.append((samp >> 4, samp & 15, qtables[qid], dc_tabs[dc_id], ac_tabs[ac_id]))
+    sh, sv = order[0][:2]
+    if (sh, sv) not in _JPEG_SAMPLINGS or (n == 1 and (sh, sv) != (1, 1)):
+        return None  # gray is 1x1; Y is 2x2, 2x1 or 1x1
+    if any(o[:2] != (1, 1) for o in order[1:]):
         return None  # chroma always 1x1
     segs = _jpeg_entropy_segments(payload, start)
     if segs is None:
         return None
-    mh, mw = -(-h // (8 * sv)), -(-w // (8 * sh))
-    expected = 1 if ri == 0 else -(-(mh * mw) // ri)
-    if len(segs) != expected:
+    mh, mw = -(-height // (8 * sv)), -(-width // (8 * sh))
+    if len(segs) != (1 if ri == 0 else -(-(mh * mw) // ri)):
         return None
+    zz = [np.zeros((v * mh, h * mw, 64), dtype=np.int64) for h, v, *_ in order]
     rd = _JpegBitReader(segs[0])
     seg_i = mcu = 0
-    zzy = np.zeros((sv * mh, sh * mw, 64), dtype=np.int64)
-    zzc = [np.zeros((mh, mw, 64), dtype=np.int64) for _ in range(2)]
-    pdc = [0, 0, 0]
+    pdc = [0] * n
     for my in range(mh):
         for mx in range(mw):
             if ri and mcu and mcu % ri == 0:
                 seg_i += 1
                 rd = _JpegBitReader(segs[seg_i])
-                pdc = [0, 0, 0]  # T.81: ALL predictors reset per restart
+                pdc = [0] * n  # T.81: ALL predictors reset per restart
             mcu += 1
-            for dy in range(sv):
-                for dx in range(sh):
-                    pdc[0] = _jpeg_read_block(
-                        rd,
-                        order[0][2],
-                        order[0][3],
-                        zzy[sv * my + dy, sh * mx + dx],
-                        pdc[0],
-                    )
-                    if pdc[0] is None:
-                        return None
-            for ci in (1, 2):
-                pdc[ci] = _jpeg_read_block(
-                    rd, order[ci][2], order[ci][3], zzc[ci - 1][my, mx], pdc[ci]
-                )
-                if pdc[ci] is None:
-                    return None
-    yp = _jpeg_idct_plane(zzy, order[0][1])[:h, :w]
-    ch, cw = -(-h // sv), -(-w // sh)
-    planes = [yp]
-    for ci in (1, 2):
-        c = _jpeg_idct_plane(zzc[ci - 1], order[ci][1])[:ch, :cw]
-        planes.append(np.repeat(np.repeat(c, sv, axis=0), sh, axis=1)[:h, :w])
+            for ci, (h, v, _, dc_tab, ac_tab) in enumerate(order):
+                for dy in range(v):
+                    for dx in range(h):
+                        pdc[ci] = _jpeg_read_block(
+                            rd, dc_tab, ac_tab, zz[ci][v * my + dy, h * mx + dx], pdc[ci]
+                        )
+                        if pdc[ci] is None:
+                            return None
+    planes = []
+    for (h, v, q, _, _), z in zip(order, zz):
+        p = _jpeg_idct_plane(z, q)
+        if (h, v) != (sh, sv):  # subsampled chroma: crop, then upsample
+            p = p[: -(-height // sv), : -(-width // sh)]
+            p = np.repeat(np.repeat(p, sv, axis=0), sh, axis=1)
+        planes.append(p[:height, :width])
     return tuple(planes)
+
+
+def _jpeg_pattern_planes(width: int, height: int, seed: int, samp: "tuple[int, int]"):
+    """(y, cb, cr) uint8 planes, each constant per MCU (8h x 8v pixels at
+    Y sampling ``samp`` = (h, v)), cb/cr at their subsampled size:
+    Y(x, y) = (3*(x//(8h)) + 7*(y//(8v)) + seed) % 256,
+    Cb = (11*mx + 5*my + 2*seed) % 256, Cr = (13*mx + 3*my + 3*seed) % 256.
+    Every 8x8 block of every plane is constant, so the lossy DCT round-trip
+    is bit-exact (both qtables anchor q[0][0] = 8) — what lets the DuckDB
+    oracles predict decoded pixels in closed form. Richer AC/chroma
+    content is exercised by the round-trip unit tests."""
+    import numpy as np
+
+    sh, sv = samp
+    pw, ph = 8 * sh, 8 * sv  # MCU pixel dims
+    mw, mh = -(-width // pw), -(-height // ph)
+    mx = np.arange(mw, dtype=np.int64)[None, :]
+    my = np.arange(mh, dtype=np.int64)[:, None]
+    yv = (3 * mx + 7 * my + seed) % 256
+    cbv = (11 * mx + 5 * my + 2 * seed) % 256
+    crv = (13 * mx + 3 * my + 3 * seed) % 256
+    y = np.repeat(np.repeat(yv, ph, axis=0), pw, axis=1)[:height, :width]
+    ch, cw = -(-height // sv), -(-width // sh)
+    cb = np.repeat(np.repeat(cbv, 8, axis=0), 8, axis=1)[:ch, :cw]
+    cr = np.repeat(np.repeat(crv, 8, axis=0), 8, axis=1)[:ch, :cw]
+    return y.astype(np.uint8), cb.astype(np.uint8), cr.astype(np.uint8)
+
+
+def _jpeg_bytes_patterned(width: int, height: int, seed: int) -> bytes:
+    """A spec-valid grayscale baseline JPEG: the 1x1 Y plane of
+    ``_jpeg_pattern_planes``, pixel (x, y) = (3*(x//8) + 7*(y//8) + seed)
+    % 256."""
+    return _jpeg_encode(_jpeg_pattern_planes(width, height, seed, (1, 1))[:1])
+
+
+def _jpeg_color_bytes_patterned(
+    width: int, height: int, seed: int, samp: "tuple[int, int]" = (2, 2)
+) -> bytes:
+    """A spec-valid YCbCr baseline JPEG of ``_jpeg_pattern_planes`` at any
+    of the three supported samplings."""
+    return _jpeg_encode(_jpeg_pattern_planes(width, height, seed, samp), samp)
 
 
 def _ycbcr_to_rgb(y, cb, cr):
@@ -1391,84 +1241,25 @@ def _ycbcr_to_rgb(y, cb, cr):
     return clip(r), clip(g), clip(b)
 
 
-def _jpeg_color_bytes_patterned(
-    width: int, height: int, seed: int, samp: "tuple[int, int]" = (2, 2)
-) -> bytes:
-    """A spec-valid color JPEG (any of the three supported samplings)
-    whose Y/Cb/Cr are each constant per MCU (8h x 8v pixels) —
-    Y(x, y) = (3*(x//(8h)) + 7*(y//(8v)) + seed) % 256,
-    Cb = (11*mx + 5*my + 2*seed) % 256, Cr = (13*mx + 3*my + 3*seed) % 256
-    — so every 8x8 block in every component plane is constant and the
-    lossy DCT round-trip is bit-exact for all three planes (both qtables
-    anchor q[0][0] = 8), which is what lets the DuckDB oracle predict the
-    decoded RGB sums in closed form. Richer AC/chroma content is
-    exercised by the round-trip unit tests."""
-    import numpy as np
-
-    sh, sv = samp
-    pw, ph = 8 * sh, 8 * sv  # MCU pixel dims
-    mw, mh = -(-width // pw), -(-height // ph)
-    mx = np.arange(mw, dtype=np.int64)[None, :]
-    my = np.arange(mh, dtype=np.int64)[:, None]
-    yv = (3 * mx + 7 * my + seed) % 256
-    cbv = (11 * mx + 5 * my + 2 * seed) % 256
-    crv = (13 * mx + 3 * my + 3 * seed) % 256
-    y = np.repeat(np.repeat(yv, ph, axis=0), pw, axis=1)[:height, :width]
-    ch, cw = -(-height // sv), -(-width // sh)
-    cb = np.repeat(np.repeat(cbv, 8, axis=0), 8, axis=1)[:ch, :cw]
-    cr = np.repeat(np.repeat(crv, 8, axis=0), 8, axis=1)[:ch, :cw]
-    return _jpeg_encode_color(
-        y.astype(np.uint8), cb.astype(np.uint8), cr.astype(np.uint8), samp
-    )
-
-
 def media_real_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL container bytes, decoded for REAL — the driver-verifiable twin
-    of ``decode_media(real_decode=True)``.
+    """REAL container bytes, decoded for REAL: a spec-valid PNG (even
+    doc_id) or GIF89a (odd doc_id) sized by ``_doc_dims``, then width x
+    height parsed back out of the actual bytes with the stdlib header
+    parser, both in the one Arrow-batched pass of ``_per_doc``. The
+    oracle predicts the dimensions from doc_id alone and agrees only if
+    encoder and parser are both correct. Byte-level encoder integrity
+    (lengths, CRCs, and that a strict third-party decoder accepts the
+    files) is pinned in tests/test_multimodal.py, where zlib is available
+    to check."""
 
-    Synthesizes a spec-valid PNG (even doc_id) or GIF89a (odd doc_id) with
-    dimensions derived from doc_id, then parses width x height back out of
-    the actual bytes with the stdlib header parser. Both steps run in ONE
-    Arrow-batched ``mapInPandas`` pass (encode -> parse, no Python
-    round-trip through the driver), so what the driver hash-checks is the
-    real byte-level decode path on real files — the oracle predicts the
-    dimensions from doc_id alone and agrees only if encoder and parser are
-    both correct. Byte-level encoder integrity (lengths, CRCs, and that a
-    strict third-party decoder accepts the files) is pinned in
-    tests/test_multimodal.py, where zlib is available to check.
+    def row(d: int) -> tuple:
+        w, h = _doc_dims(d)
+        payload = _png_bytes(w, h) if d % 2 == 0 else _gif_bytes(w, h)
+        dims = _parse_image_header(payload) or (None, None)
+        return (d, "image/png" if d % 2 == 0 else "image/gif", *dims)
 
-    100 TB shape: the narrow doc_id scan is repartitioned to cores (the
-    exchange carries 8 bytes/row; the Python codec work it parallelizes
-    costs ~ms/row — see ``patterned_media_table``), then payloads live
-    and die inside each Arrow batch.
-    """
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = (d % 64) + 16
-                h = (d // 64) % 64 + 16
-                payload = _png_bytes(w, h) if d % 2 == 0 else _gif_bytes(w, h)
-                dims = _parse_image_header(payload)
-                rows.append(
-                    (
-                        d,
-                        "image/png" if d % 2 == 0 else "image/gif",
-                        dims[0] if dims else None,
-                        dims[1] if dims else None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "mime", "width", "height"])
-
-    return docs.mapInPandas(
-        batches, schema="doc_id bigint, mime string, width int, height int"
+    return _per_doc(
+        spark, sf_dir, row, "doc_id bigint, mime string, width int, height int"
     )
 
 
@@ -1482,60 +1273,29 @@ FROM documents
 """
 
 
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Video-style frame sampling: N output rows per input payload.
-
-    Demonstrates the 1->N mapInPandas shape (frame extraction, audio
-    windowing, chunking). Frame 'content' is a deterministic byte slice
-    digest; a real pipeline would emit decoded frame tensors.
-    """
-    import hashlib
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload)
-                for f in range(n_frames):
-                    start = (n * f) // n_frames
-                    stop = (n * (f + 1)) // n_frames
-                    chunk = bytes(payload[start:stop])
-                    rows.append(
-                        (
-                            int(doc_id),
-                            f,
-                            stop - start,
-                            hashlib.sha256(chunk).hexdigest()[:16],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame", "n_bytes", "digest16"]
-            )
-
-    return media.mapInPandas(
-        batches, schema="doc_id bigint, frame int, n_bytes int, digest16 string"
-    )
-
-
 RESIZE_BOX = 32  # aspect-fit target box (stand-in for a thumbnail pipeline)
 
 
-def resize_media(media: DataFrame, real_resize: bool = False) -> DataFrame:
-    """Arrow-batched resize: aspect-fit into a RESIZE_BOX square.
+def resize_media(media: DataFrame) -> DataFrame:
+    """Arrow-batched resize over (doc_id, mime, payload): REAL pixel-level
+    decode dispatched on magic bytes — 8-bit grayscale PNG (stdlib
+    inflate + full scanline unfilter None/Sub/Up/Average/Paeth), 8-bit
+    palette GIF (sub-block reassembly + dictionary LZW + palette lookup),
+    or grayscale baseline JPEG (Huffman + dequantize + inverse DCT) — then
+    a nearest-neighbor aspect-fit into a RESIZE_BOX square, emitting
+    ``px_sum`` (sum of resampled pixel values, the verifiable fingerprint
+    of the pixel path). Payloads outside those profiles (video, colour
+    JPEG, progressive variants — still codec-library territory) yield
+    NULL dimensions and NULL px_sum, the tolerate-don't-throw crawl
+    contract."""
 
-    ``real_resize=False`` (default): dimensions come from the deterministic
-    fake decoder — the oracle-checkable plumbing twin.
-    ``real_resize=True``: REAL pixel-level decode + resample — dispatched
-    on magic bytes: 8-bit grayscale PNG (stdlib inflate + full scanline
-    unfilter None/Sub/Up/Average/Paeth), 8-bit palette GIF (sub-block
-    reassembly + dictionary LZW + palette lookup), or baseline grayscale
-    JPEG (Huffman + dequantize + inverse DCT) — then nearest-neighbor
-    resample, emitting an extra ``px_sum`` column (sum of resampled pixel
-    values, the verifiable fingerprint of the pixel path). Payloads
-    outside those profiles (video, progressive/color variants — still
-    codec-library territory) yield NULL dimensions and NULL px_sum, the
-    tolerate-don't-throw crawl contract.
-    """
+    def gray(raw: bytes):
+        if raw[:6] in (b"GIF89a", b"GIF87a"):
+            return _gif_decode_gray(raw)
+        if raw[:2] == b"\xff\xd8":
+            planes = _jpeg_decode(raw)
+            return planes[0] if planes is not None and len(planes) == 1 else None
+        return _png_decode_gray(raw)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1543,109 +1303,65 @@ def resize_media(media: DataFrame, real_resize: bool = False) -> DataFrame:
             for doc_id, mime, payload in zip(
                 pdf["doc_id"], pdf["mime"], pdf["payload"]
             ):
-                if real_resize:
-                    raw = bytes(payload)
-                    if raw[:6] in (b"GIF89a", b"GIF87a"):
-                        px = _gif_decode_gray(raw)
-                    elif raw[:2] == b"\xff\xd8":
-                        px = _jpeg_decode_gray(raw)
-                    else:
-                        px = _png_decode_gray(raw)
-                    if px is None:
-                        rows.append((int(doc_id), mime, None, None, None, None, None))
-                        continue
-                    h, w = px.shape
-                    scale = min(RESIZE_BOX / w, RESIZE_BOX / h)
-                    ow, oh = int(w * scale), int(h * scale)
-                    out = _nn_resize(px, ow, oh)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            mime,
-                            w,
-                            h,
-                            ow,
-                            oh,
-                            int(out.sum(dtype="int64")),
-                        )
-                    )
-                else:
-                    w, h = _fake_dimensions(payload)
-                    scale = min(RESIZE_BOX / w, RESIZE_BOX / h)
-                    rows.append(
-                        (int(doc_id), mime, w, h, int(w * scale), int(h * scale))
-                    )
-            cols = ["doc_id", "mime", "width", "height", "out_w", "out_h"]
-            if real_resize:
-                pdf_out = pd.DataFrame(rows, columns=cols + ["px_sum"])
-                for c in ("width", "height", "out_w", "out_h"):
-                    pdf_out[c] = pd.array(pdf_out[c], dtype="Int32")
-                pdf_out["px_sum"] = pd.array(pdf_out["px_sum"], dtype="Int64")
-            else:
-                pdf_out = pd.DataFrame(rows, columns=cols)
+                px = gray(bytes(payload))
+                if px is None:
+                    rows.append((int(doc_id), mime, None, None, None, None, None))
+                    continue
+                h, w = px.shape
+                scale = min(RESIZE_BOX / w, RESIZE_BOX / h)
+                ow, oh = int(w * scale), int(h * scale)
+                out = _nn_resize(px, ow, oh)
+                px_sum = int(out.sum(dtype="int64"))
+                rows.append((int(doc_id), mime, w, h, ow, oh, px_sum))
+            pdf_out = pd.DataFrame(
+                rows,
+                columns=["doc_id", "mime", "width", "height", "out_w", "out_h", "px_sum"],
+            )
+            for c in ("width", "height", "out_w", "out_h"):
+                pdf_out[c] = pd.array(pdf_out[c], dtype="Int32")
+            pdf_out["px_sum"] = pd.array(pdf_out["px_sum"], dtype="Int64")
             yield pdf_out
 
-    schema = "doc_id bigint, mime string, width int, height int, out_w int, out_h int"
-    if real_resize:
-        schema += ", px_sum bigint"
-    return media.mapInPandas(batches, schema=schema)
-
-
-def media_resize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return resize_media(media_table(spark, sf_dir))
+    return media.mapInPandas(
+        batches,
+        schema=(
+            "doc_id bigint, mime string, width int, height int, out_w int,"
+            " out_h int, px_sum bigint"
+        ),
+    )
 
 
 def patterned_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mime, payload) with a spec-valid patterned image per doc —
-    PNG for even doc_id (scanline filters cycling through all five types),
-    GIF89a for odd doc_id (real dictionary-LZW stream over a grayscale
-    palette) — pixel (x, y) = (3x + 7y + doc_id) % 256 in both formats.
-    The encode runs Arrow-batched in the plan (map-only, narrow doc_id
-    scan).
+    """(doc_id, mime, payload) with a spec-valid patterned image per doc,
+    sized by ``_doc_dims`` — PNG for even doc_id (scanline filters cycling
+    through all five types), GIF89a for odd doc_id (real dictionary-LZW
+    stream over a grayscale palette) — pixel (x, y) = (3x + 7y + doc_id)
+    % 256 in both formats."""
 
-    The scan is repartitioned to the session's parallelism BEFORE the
-    Python stage: codec work costs milliseconds per row, so parallelism
-    must follow cores, not parquet split count — and the exchange moves
-    only 8-byte doc_ids, three orders of magnitude cheaper than the
-    per-row Python it unlocks. (Without this, a single ~150 MB parquet
-    file caps the whole pixel pipeline at 2 threads.)"""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def row(d: int) -> tuple:
+        w, h = _doc_dims(d)
+        if d % 2 == 0:
+            return d, "image/png", _png_bytes_patterned(w, h, d)
+        return d, "image/gif", _gif_bytes_patterned(w, h, d)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = (d % 64) + 16
-                h = (d // 64) % 64 + 16
-                if d % 2 == 0:
-                    rows.append((d, "image/png", _png_bytes_patterned(w, h, d)))
-                else:
-                    rows.append((d, "image/gif", _gif_bytes_patterned(w, h, d)))
-            yield pd.DataFrame(rows, columns=["doc_id", "mime", "payload"])
-
-    return docs.mapInPandas(batches, schema="doc_id bigint, mime string, payload binary")
+    return _per_doc(spark, sf_dir, row, "doc_id bigint, mime string, payload binary")
 
 
 def media_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL pixel path, end-to-end and driver-verifiable: synthesize a
     patterned image per document — PNG (all five scanline filter types)
     for even doc_id, GIF89a (real dictionary-LZW stream) for odd — then
-    ``resize_media(real_resize=True)``: magic-byte dispatch into stdlib
-    inflate + full unfilter, or sub-block reassembly + LZW decode +
-    palette lookup, then nearest-neighbor resample. The oracle predicts
-    the resampled pixel SUM in closed form from doc_id alone, so the hash
-    only matches if both encoders, both decode paths, and the floor-index
-    resampling are all correct at the pixel level.
+    ``resize_media``: magic-byte dispatch into stdlib inflate + full
+    unfilter, or sub-block reassembly + LZW decode + palette lookup, then
+    nearest-neighbor resample. The oracle predicts the resampled pixel SUM
+    in closed form from doc_id alone, so the hash only matches if both
+    encoders, both decode paths, and the floor-index resampling are all
+    correct at the pixel level.
 
     100 TB shape: two pipelined map-only Arrow stages over a narrow
     doc_id scan; payloads never leave the executor or cross a shuffle.
     """
-    return resize_media(patterned_media_table(spark, sf_dir), real_resize=True)
+    return resize_media(patterned_media_table(spark, sf_dir))
 
 
 # Closed-form pixel-sum prediction for media_real_resize: the resampled
@@ -1685,46 +1401,17 @@ GROUP BY doc_id, w, h, ow, oh
 """
 
 
-MEDIA_RESIZE_ORACLE = f"""
-WITH dims AS (
-    SELECT doc_id,
-           CASE WHEN doc_id % 3 = 0 THEN 'image/png'
-                WHEN doc_id % 3 = 1 THEN 'audio/wav'
-                ELSE 'video/mp4' END AS mime,
-           (octet_length(encode(text)) % 64) + 16 AS width,
-           ((octet_length(encode(text)) // 64) % 64) + 16 AS height
-    FROM documents
-)
-SELECT doc_id, mime, width, height,
-       CAST(trunc(width * least({RESIZE_BOX}.0 / width, {RESIZE_BOX}.0 / height)) AS INT) AS out_w,
-       CAST(trunc(height * least({RESIZE_BOX}.0 / width, {RESIZE_BOX}.0 / height)) AS INT) AS out_h
-FROM dims
-"""
-
-
 def patterned_jpeg_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mime, payload): one spec-valid baseline JPEG per document,
-    block-constant pattern (3*(x//8) + 7*(y//8) + doc_id) % 256 — see
-    ``_jpeg_bytes_patterned`` for why block-constant makes the lossy codec
-    oracle-exact. Same 100 TB shape as ``patterned_media_table``: narrow
-    doc_id scan repartitioned to cores ahead of the Arrow codec stage."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    """(doc_id, mime, payload): one spec-valid grayscale baseline JPEG per
+    document, sized by ``_doc_dims``, block-constant pattern
+    (3*(x//8) + 7*(y//8) + doc_id) % 256 — see ``_jpeg_pattern_planes``
+    for why block-constant makes the lossy codec oracle-exact."""
+    return _per_doc(
+        spark,
+        sf_dir,
+        lambda d: (d, "image/jpeg", _jpeg_bytes_patterned(*_doc_dims(d), d)),
+        "doc_id bigint, mime string, payload binary",
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = (d % 64) + 16
-                h = (d // 64) % 64 + 16
-                rows.append((d, "image/jpeg", _jpeg_bytes_patterned(w, h, d)))
-            yield pd.DataFrame(rows, columns=["doc_id", "mime", "payload"])
-
-    return docs.mapInPandas(batches, schema="doc_id bigint, mime string, payload binary")
 
 
 def media_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1734,11 +1421,8 @@ def media_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest-neighbor resample. The oracle predicts the resampled pixel
     sum in closed form from doc_id alone — possible for a lossy codec
     only because the pattern is constant per 8x8 block, which the DCT
-    round-trip preserves exactly (see ``_jpeg_bytes_patterned``).
-
-    Closes the reference gap recorded in README/SURVEY: JPEG was
-    header-parse-only (``_parse_image_header``) through round 9."""
-    return resize_media(patterned_jpeg_table(spark, sf_dir), real_resize=True)
+    round-trip preserves exactly (see ``_jpeg_pattern_planes``)."""
+    return resize_media(patterned_jpeg_table(spark, sf_dir))
 
 
 # Resampled source pixel (i, j) -> ((j*w)//ow, (i*h)//oh); the pattern
@@ -1776,82 +1460,48 @@ GROUP BY doc_id, w, h, ow, oh
 
 
 def media_real_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """YCbCr color twin of ``media_real_jpeg`` — one real-media step past
-    grayscale, on the same committed kernels, covering ALL THREE common
+    """YCbCr colour twin of ``media_real_jpeg``, covering ALL THREE common
     baseline chroma layouts (doc_id % 3 cycles 4:2:0 / 4:2:2 / 4:4:4, so
     every driver run hash-verifies every MCU geometry): synthesize a
     spec-valid three-component SOF0 stream per document (interleaved
     MCUs, distinct luma/chroma quantization AND Huffman tables), then the
-    REAL decode path (``_jpeg_decode_color``: marker walk, per-component
+    REAL decode path (``_jpeg_decode``: marker walk, per-component
     sampling factors and table wiring, per-component DPCM, dequantize +
     inverse DCT per plane, nearest-neighbor chroma upsample) and the JFIF
     YCbCr -> RGB conversion, reporting per-channel pixel sums. The oracle
     predicts all three sums in closed form from doc_id alone — possible
     for a lossy SUBSAMPLED codec only because Y/Cb/Cr are each constant
-    per MCU (every 8x8 block in every plane constant -> DC-only ->
-    bit-exact DCT round-trip, see ``_jpeg_color_bytes_patterned``) and
-    the RGB rounding is floor(x + 0.5) in IDENTICAL left-associated
-    double arithmetic on both engines (``_ycbcr_to_rgb``).
+    per MCU (see ``_jpeg_pattern_planes``) and the RGB rounding is
+    floor(x + 0.5) in IDENTICAL left-associated double arithmetic on both
+    engines (``_ycbcr_to_rgb``).
 
-    Encode -> decode -> convert runs in ONE Arrow-batched ``mapInPandas``
-    pass (same 100 TB shape as ``media_real_roundtrip``: narrow doc_id
-    scan repartitioned to cores; payloads live and die inside each
-    batch). Richer AC/chroma content is pinned by the round-trip unit
-    tests in tests/test_multimodal.py, where the decoder is checked
-    against the encoder's reference reconstruction.
+    Encode -> decode -> convert runs in the one Arrow-batched pass of
+    ``_per_doc``; payloads live and die inside each batch. Richer
+    AC/chroma content is pinned by the round-trip unit tests in
+    tests/test_multimodal.py, where the decoder is checked against the
+    encoder's reference reconstruction.
     """
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
     samps = ((2, 2), (2, 1), (1, 1))  # doc_id % 3 -> 420 / 422 / 444
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = (d % 64) + 16
-                h = (d // 64) % 64 + 16
-                samp = samps[d % 3]
-                payload = _jpeg_color_bytes_patterned(w, h, d, samp)
-                decoded = _jpeg_decode_color(payload)
-                if decoded is None:
-                    rows.append(
-                        (d, "image/jpeg", _JPEG_SAMPLINGS[samp], w, h, None, None, None)
-                    )
-                    continue
-                r, g, b = _ycbcr_to_rgb(*decoded)
-                rows.append(
-                    (
-                        d,
-                        "image/jpeg",
-                        _JPEG_SAMPLINGS[samp],
-                        w,
-                        h,
-                        int(np.sum(r)),
-                        int(np.sum(g)),
-                        int(np.sum(b)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "samp", "width", "height",
-                    "r_sum", "g_sum", "b_sum",
-                ],
-            )
+    def row(d: int) -> tuple:
+        w, h = _doc_dims(d)
+        samp = samps[d % 3]
+        decoded = _jpeg_decode(_jpeg_color_bytes_patterned(w, h, d, samp))
+        sums = (
+            (None, None, None)
+            if decoded is None
+            else tuple(int(np.sum(c)) for c in _ycbcr_to_rgb(*decoded))
+        )
+        return (d, "image/jpeg", _JPEG_SAMPLINGS[samp], w, h, *sums)
 
-    return docs.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, mime string, samp string, width int, height int,"
-            " r_sum bigint, g_sum bigint, b_sum bigint"
-        ),
+    return _per_doc(
+        spark,
+        sf_dir,
+        row,
+        "doc_id bigint, mime string, samp string, width int, height int,"
+        " r_sum bigint, g_sum bigint, b_sum bigint",
     )
 
 
@@ -1991,24 +1641,13 @@ def _wav_decode(payload: bytes) -> "tuple[int, object] | None":
 
 
 def patterned_wav_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mime, payload) with one real WAV per document. Same 100 TB
-    shape as ``patterned_media_table``: narrow doc_id scan repartitioned
-    to cores ahead of the Arrow synth stage."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    """(doc_id, mime, payload) with one real WAV per document."""
+    return _per_doc(
+        spark,
+        sf_dir,
+        lambda d: (d, "audio/wav", _wav_bytes_patterned(d)),
+        "doc_id bigint, mime string, payload binary",
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (int(d), "audio/wav", _wav_bytes_patterned(int(d)))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "mime", "payload"])
-
-    return docs.mapInPandas(batches, schema="doc_id bigint, mime string, payload binary")
 
 
 def wav_features(media: DataFrame) -> DataFrame:
@@ -2325,24 +1964,13 @@ def _avi_decode(payload: bytes) -> "tuple[int, int, list] | None":
 
 
 def patterned_avi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mime, payload) with one real AVI per document. Same 100 TB
-    shape as ``patterned_wav_table``: narrow doc_id scan repartitioned to
-    cores ahead of the Arrow synth stage."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    """(doc_id, mime, payload) with one real AVI per document."""
+    return _per_doc(
+        spark,
+        sf_dir,
+        lambda d: (d, "video/avi", _avi_bytes_patterned(d)),
+        "doc_id bigint, mime string, payload binary",
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (int(d), "video/avi", _avi_bytes_patterned(int(d)))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "mime", "payload"])
-
-    return docs.mapInPandas(batches, schema="doc_id bigint, mime string, payload binary")
 
 
 def avi_frame_features(media: DataFrame) -> DataFrame:

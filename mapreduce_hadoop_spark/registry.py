@@ -58,8 +58,8 @@ changed while already carrying a fresh row, plus genuinely new queries
 query requires RETIRING one. Round 6 retired two redundant demo twins on
 this basis: ``multimodal_decode_stub`` (superseded by the strictly
 stronger ``multimodal_real_roundtrip`` + ``multimodal_real_resize``,
-whose oracles check the REAL byte paths end-to-end; the fake-decode
-plumbing remains exercised by ``multimodal_resize_stub``) and
+whose oracles check the REAL byte paths end-to-end; its fake-decode
+operator is since deleted) and
 ``airport_trips_microbatch`` (its batch-boundary replay stays pinned
 bit-identical to ``airport_trips_parity``'s golden fixture in
 ``tests/test_streaming_trips.py``; the registry keeps the parity and
@@ -275,8 +275,8 @@ list; each entry names where its evidence survives retirement.
 Round 10 exercised the list: ``multimodal_resize_stub`` (then candidate
 #1) retired in favor of ``multimodal_real_jpeg`` — all three real pixel
 paths (PNG r6, GIF r7, JPEG r10) cover the resize plumbing with the
-strictly stronger closed-form px_sum oracle, and the fake-decode path
-keeps a local oracle check in ``tests/test_multimodal.py``.
+strictly stronger closed-form px_sum oracle; the fake-decode branch of
+``resize_media`` and the stub's oracle are since deleted.
 
 Exercised again late in round 10: ``text_language_id`` (then candidate
 #1) retired in favor of ``multimodal_real_avi`` — the heuristic LID is
@@ -293,9 +293,8 @@ dedicated unit fixture in ``tests/test_timefns.py`` in the same commit.
 And a fourth, round 11: ``multimodal_frame_sample`` (then candidate #1)
 retired in favor of ``multimodal_real_jpeg_color`` — fake-payload frame
 sampling is strictly dominated by ``multimodal_real_avi`` (REAL
-container parse, same sampling law, stronger closed-form oracle); the
-fake-path 1->N plumbing stays pinned by
-``tests/test_multimodal.py::test_sample_frames_one_to_n``.
+container parse, same sampling law, stronger closed-form oracle); its
+fake-payload frame-sampling operator is since deleted.
 
 And a fifth, round 11: ``fn_width_bucket`` (then candidate #1) retired
 in favor of staging ``similarity_topk_ivf_spann`` (rule 1b) — the bin
@@ -732,11 +731,10 @@ def _specs() -> dict[str, QuerySpec]:
         "similarity_topk_ivf_spann": (similarity.topk_ivf_spann, None),
         # multimodal_decode_stub RETIRED round 6 (size policy);
         # multimodal_resize_stub RETIRED round 10 (retirement-candidate #1
-        # when the JPEG query took its slot): the fake-decode plumbing and
-        # its oracle stay exercised by tests/test_multimodal.py
-        # (test_resize_media_fake_path_matches_oracle), and all three real
-        # pixel paths (PNG r6, GIF r7, JPEG r10) cover the resize batch
-        # shape with the strictly stronger closed-form px_sum oracle.
+        # when the JPEG query took its slot): all three real pixel paths
+        # (PNG r6, GIF r7, JPEG r10) cover the resize batch shape with the
+        # strictly stronger closed-form px_sum oracle; both stubs' code is
+        # deleted.
         # NEW round 10: baseline-sequential grayscale JPEG pixel decode —
         # the reference gap parked since round 7. Block-constant pattern
         # makes the lossy DCT round-trip exact, so the oracle predicts

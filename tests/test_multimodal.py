@@ -10,11 +10,9 @@ from mapreduce_hadoop_spark.operators.multimodal import (
     _parse_image_header,
     _png_bytes_patterned,
     _png_decode_gray,
-    decode_media,
     media_table,
     patterned_media_table,
     resize_media,
-    sample_frames,
 )
 
 # Real container headers, byte-for-byte per spec (width x height noted).
@@ -58,33 +56,6 @@ def test_media_table_binary_column(spark, sf_dir):
     r = m.first()
     assert isinstance(r["payload"], (bytes, bytearray))
     assert r["mime"] in ("image/png", "audio/wav", "video/mp4")
-
-
-def test_decode_media_fake_dimensions(spark, sf_dir):
-    out = decode_media(media_table(spark, sf_dir)).collect()
-    assert len(out) == media_table(spark, sf_dir).count()
-    for r in out[:20]:
-        assert 16 <= r["width"] < 80 and 16 <= r["height"] < 80
-        assert r["n_pixels"] == r["width"] * r["height"]
-
-
-def test_decode_media_real_header_decode(spark):
-    """real_decode=True reads dimensions from actual container bytes via
-    the Spark mapInPandas path; unrecognized payloads get NULL dims."""
-    rows = [
-        (1, "image/png", bytearray(PNG_640x480)),
-        (2, "image/jpeg", bytearray(JPEG_320x240)),
-        (3, "image/gif", bytearray(GIF_99x12)),
-        (4, "audio/wav", bytearray(b"RIFF....WAVEnot an image")),
-    ]
-    media = spark.createDataFrame(
-        rows, "doc_id bigint, mime string, payload binary"
-    )
-    got = {r["doc_id"]: r for r in decode_media(media, real_decode=True).collect()}
-    assert (got[1]["width"], got[1]["height"], got[1]["n_pixels"]) == (640, 480, 640 * 480)
-    assert (got[2]["width"], got[2]["height"]) == (320, 240)
-    assert (got[3]["width"], got[3]["height"]) == (99, 12)
-    assert got[4]["width"] is None and got[4]["n_pixels"] is None
 
 
 def test_png_gif_encoders_emit_valid_files():
@@ -226,10 +197,10 @@ def test_nn_resize_floor_index_mapping():
 
 
 def test_resize_media_real_path_resamples_pixels(spark, sf_dir):
-    """real_resize=True must produce the pixel sums a local re-decode
+    """resize_media must produce the pixel sums a local re-decode
     predicts — the Spark plan and pure-python path agree pixel-for-pixel."""
     media = patterned_media_table(spark, sf_dir).limit(8)
-    got = resize_media(media, real_resize=True).collect()
+    got = resize_media(media).collect()
     assert len(got) == 8
     from mapreduce_hadoop_spark.operators.multimodal import RESIZE_BOX
 
@@ -246,40 +217,39 @@ def test_resize_media_real_path_resamples_pixels(spark, sf_dir):
 
 
 def test_resize_media_real_path_nulls_undecodable(spark, sf_dir):
-    """Non-PNG payloads (the text-derived fake media) must yield NULLs on
-    the real path, never an exception."""
-    got = resize_media(media_table(spark, sf_dir).limit(5), real_resize=True).collect()
-    assert len(got) == 5
+    """Non-image payloads (the text-derived media) and colour JPEGs (no
+    single grayscale plane to resize) must yield NULLs, never an
+    exception."""
+    from mapreduce_hadoop_spark.operators.multimodal import (
+        _jpeg_color_bytes_patterned,
+    )
+
+    color = spark.createDataFrame(
+        [(-1, "image/jpeg", bytearray(_jpeg_color_bytes_patterned(24, 16, 7)))],
+        "doc_id bigint, mime string, payload binary",
+    )
+    got = resize_media(media_table(spark, sf_dir).limit(5).unionByName(color)).collect()
+    assert len(got) == 6
     assert all(r["px_sum"] is None and r["width"] is None for r in got)
-
-
-def test_sample_frames_one_to_n(spark, sf_dir):
-    media = media_table(spark, sf_dir).limit(5)
-    frames = sample_frames(media, n_frames=4).collect()
-    assert len(frames) == 20
-    by_doc: dict[int, list] = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for doc_id, rows in by_doc.items():
-        assert sorted(r["frame"] for r in rows) == [0, 1, 2, 3]
-        total = sum(r["n_bytes"] for r in rows)
-        payload = next(
-            m["payload"] for m in media.collect() if m["doc_id"] == doc_id
-        )
-        assert total == len(payload)
+    assert [r["doc_id"] for r in got].count(-1) == 1
 
 
 def test_lzw_and_container_golden_streams_pinned():
-    """Bit-identity pins for the round-10 vectorized codec: these hashes
-    were captured from the round-7 scalar implementation BEFORE the
-    rewrite. If an 'optimization' ever changes one output byte, this
-    fails before any driver row can drift."""
+    """Bit-identity pins for the LZW, PNG, GIF and JPEG encoders: the
+    LZW/PNG/GIF hashes were captured from the scalar implementation before
+    it was vectorized, the JPEG hashes from the separate grayscale and
+    colour encoders before they were folded into ``_jpeg_encode``. If an
+    'optimization' ever changes one output byte, this fails before any
+    registered query's output can drift."""
     import hashlib
 
     import numpy as np
 
     from mapreduce_hadoop_spark.operators.multimodal import (
         _gif_bytes_patterned,
+        _jpeg_bytes_patterned,
+        _jpeg_color_bytes_patterned,
+        _jpeg_encode,
         _lzw_encode,
         _png_bytes_patterned,
     )
@@ -298,13 +268,31 @@ def test_lzw_and_container_golden_streams_pinned():
         data = bytes(v % (1 << mcs) for v in rng.integers(0, 256, 5000, dtype=np.uint8))
         assert hashlib.sha256(_lzw_encode(data, mcs)).hexdigest()[:16] == h
     containers = [
-        (1, (23, 17), "1d8e6390b93a03fb", "be6e5fc75220b904"),
-        (8, (64, 40), "68741400e9afb6f4", "2511dab5f70f4d30"),
-        (901, (79, 79), "d6d2111a0f955022", "f3fda74f79fd110c"),
+        (1, (23, 17), "1d8e6390b93a03fb", "be6e5fc75220b904", "3b3c4c28a71b1598"),
+        (8, (64, 40), "68741400e9afb6f4", "2511dab5f70f4d30", "d293afeb67285579"),
+        (901, (79, 79), "d6d2111a0f955022", "f3fda74f79fd110c", "95426e2031b7765d"),
     ]
-    for seed, (w, h), hp, hg in containers:
+    for seed, (w, h), hp, hg, hj in containers:
         assert hashlib.sha256(_png_bytes_patterned(w, h, seed)).hexdigest()[:16] == hp
         assert hashlib.sha256(_gif_bytes_patterned(w, h, seed)).hexdigest()[:16] == hg
+        assert hashlib.sha256(_jpeg_bytes_patterned(w, h, seed)).hexdigest()[:16] == hj
+    for samp, h in [
+        ((2, 2), "1a683df8fb30cd7e"),
+        ((2, 1), "43c2ceb77a22f9a7"),
+        ((1, 1), "52598d07f9d8d913"),
+    ]:
+        b = _jpeg_color_bytes_patterned(79, 33, 123, samp)
+        assert hashlib.sha256(b).hexdigest()[:16] == h
+    # Rich (AC-heavy) planes with restart intervals.
+    jrng = np.random.default_rng(41)
+    src = jrng.integers(0, 256, (24, 40), dtype=np.uint8)
+    b = _jpeg_encode((src,), restart_interval=3)
+    assert hashlib.sha256(b).hexdigest()[:16] == "7a83de1a96f25f85"
+    y = jrng.integers(0, 256, (24, 40), dtype=np.uint8)
+    cb = jrng.integers(0, 256, (12, 20), dtype=np.uint8)
+    cr = jrng.integers(0, 256, (12, 20), dtype=np.uint8)
+    b = _jpeg_encode((y, cb, cr), (2, 2), restart_interval=2)
+    assert hashlib.sha256(b).hexdigest()[:16] == "2422949284faa3f2"
 
 
 def test_gif_decode_hardened_against_malformed_payloads():
@@ -403,14 +391,16 @@ def test_jpeg_block_constant_roundtrip_is_exact():
 
     from mapreduce_hadoop_spark.operators.multimodal import (
         _jpeg_bytes_patterned,
-        _jpeg_decode_gray,
+        _jpeg_decode,
         _parse_image_header,
     )
 
     for seed, (w, h) in [(1, (23, 17)), (8, (64, 40)), (901, (79, 79))]:
         b = _jpeg_bytes_patterned(w, h, seed)
         assert _parse_image_header(b) == (w, h)  # SOFn header agrees
-        px = _jpeg_decode_gray(b)
+        planes = _jpeg_decode(b)
+        assert planes is not None and len(planes) == 1
+        (px,) = planes
         exp = (
             3 * (np.arange(w)[None, :] // 8)
             + 7 * (np.arange(h)[:, None] // 8)
@@ -427,9 +417,9 @@ def test_jpeg_rich_content_matches_reference_reconstruction():
     import numpy as np
 
     from mapreduce_hadoop_spark.operators.multimodal import (
-        _jpeg_decode_gray,
         _jpeg_dct_matrix,
-        _jpeg_encode_gray,
+        _jpeg_decode,
+        _jpeg_encode,
         _jpeg_qtable,
     )
 
@@ -438,8 +428,10 @@ def test_jpeg_rich_content_matches_reference_reconstruction():
     q = _jpeg_qtable()
     for w, h in [(24, 16), (33, 9), (8, 8), (79, 31)]:
         src = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        dec = _jpeg_decode_gray(_jpeg_encode_gray(src))
-        assert dec is not None and dec.shape == (h, w)
+        planes = _jpeg_decode(_jpeg_encode((src,)))
+        assert planes is not None and len(planes) == 1
+        (dec,) = planes
+        assert dec.shape == (h, w)
         ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
         padded = np.pad(src, ((0, ph - h), (0, pw - w)), mode="edge")
         blocks = (
@@ -466,59 +458,32 @@ def test_jpeg_decode_tolerates_out_of_profile():
 
     from mapreduce_hadoop_spark.operators.multimodal import (
         _jpeg_bytes_patterned,
-        _jpeg_decode_gray,
+        _jpeg_decode,
     )
 
-    assert _jpeg_decode_gray(b"not a jpeg") is None
-    assert _jpeg_decode_gray(b"\xff\xd8\xff\xd9") is None  # no frame
+    assert _jpeg_decode(b"not a jpeg") is None
+    assert _jpeg_decode(b"\xff\xd8\xff\xd9") is None  # no frame
     b = bytearray(_jpeg_bytes_patterned(24, 16, 5))
-    assert _jpeg_decode_gray(bytes(b)) is not None  # sanity
-    assert _jpeg_decode_gray(bytes(b[: len(b) // 2])) is None  # truncated
+    assert _jpeg_decode(bytes(b)) is not None  # sanity
+    assert _jpeg_decode(bytes(b[: len(b) // 2])) is None  # truncated
     # Progressive frame marker (SOF2) is out of profile.
     p = bytes(b).replace(b"\xff\xc0", b"\xff\xc2", 1)
-    assert _jpeg_decode_gray(p) is None
-    # Restart intervals are IN profile since round 12: a declared DRI
-    # that implies the stream's actual segment layout decodes (here
-    # ri=8 over 6 MCUs -> one segment, exactly what the stream has)...
+    assert _jpeg_decode(p) is None
+    # Restart intervals are in profile: a declared DRI that implies the
+    # stream's actual segment layout decodes (here ri=8 over 6 MCUs ->
+    # one segment, exactly what the stream has)...
     i = bytes(b).index(b"\xff\xda")
     with_dri = bytes(b[:i]) + b"\xff\xdd\x00\x04\x00\x08" + bytes(b[i:])
-    assert np.array_equal(_jpeg_decode_gray(with_dri), _jpeg_decode_gray(bytes(b)))
+    assert np.array_equal(_jpeg_decode(with_dri)[0], _jpeg_decode(bytes(b))[0])
     # ...but a DRI whose implied segment count disagrees with the stream
     # (ri=2 over 6 MCUs demands 3 segments; the stream has no RSTn) fails.
     bad_dri = bytes(b[:i]) + b"\xff\xdd\x00\x04\x00\x02" + bytes(b[i:])
-    assert _jpeg_decode_gray(bad_dri) is None
+    assert _jpeg_decode(bad_dri) is None
     # Random bytes after SOI never raise.
     rng = np.random.default_rng(9)
     for size in (0, 2, 64, 1024):
         for _ in range(8):
-            _jpeg_decode_gray(b"\xff\xd8" + rng.integers(0, 256, size, dtype=np.uint8).tobytes())
-
-
-def test_resize_media_fake_path_matches_oracle(spark, sf_dir):
-    """The retired registry query multimodal_resize_stub, kept honest
-    locally: the fake-decode plumbing twin still matches its DuckDB
-    oracle row-for-row (this test replaced the driver row when
-    multimodal_real_jpeg took the registry slot in round 10)."""
-    import duckdb
-
-    from mapreduce_hadoop_spark.operators.multimodal import (
-        MEDIA_RESIZE_ORACLE,
-        media_resize_query,
-    )
-
-    got = {
-        r["doc_id"]: (r["mime"], r["width"], r["height"], r["out_w"], r["out_h"])
-        for r in media_resize_query(spark, sf_dir).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    exp = {
-        int(d): (m, int(w), int(h), int(ow), int(oh))
-        for d, m, w, h, ow, oh in con.execute(MEDIA_RESIZE_ORACLE).fetchall()
-    }
-    assert got == exp
+            _jpeg_decode(b"\xff\xd8" + rng.integers(0, 256, size, dtype=np.uint8).tobytes())
 
 
 def test_jpeg_color_pattern_roundtrip_exact():
@@ -531,13 +496,13 @@ def test_jpeg_color_pattern_roundtrip_exact():
     from mapreduce_hadoop_spark.operators.multimodal import (
         _JPEG_SAMPLINGS,
         _jpeg_color_bytes_patterned,
-        _jpeg_decode_color,
+        _jpeg_decode,
     )
 
     for samp in _JPEG_SAMPLINGS:
         pw, ph = 8 * samp[0], 8 * samp[1]
         for w, h, seed in ((16, 16, 0), (20, 18, 5), (79, 33, 123), (17, 17, 255)):
-            out = _jpeg_decode_color(_jpeg_color_bytes_patterned(w, h, seed, samp))
+            out = _jpeg_decode(_jpeg_color_bytes_patterned(w, h, seed, samp))
             assert out is not None, (w, h, seed, samp)
             y, cb, cr = out
             assert y.shape == cb.shape == cr.shape == (h, w)
@@ -564,10 +529,9 @@ def test_jpeg_color_rich_roundtrip_matches_reference():
     from mapreduce_hadoop_spark.operators.multimodal import (
         _JPEG_SAMPLINGS,
         _jpeg_dct_matrix,
-        _jpeg_decode_color,
-        _jpeg_encode_color,
+        _jpeg_decode,
+        _jpeg_encode,
         _jpeg_qtable,
-        _jpeg_qtable_chroma,
     )
 
     m = _jpeg_dct_matrix()
@@ -600,20 +564,20 @@ def test_jpeg_color_rich_roundtrip_matches_reference():
             ysrc = rng.integers(0, 256, (h, w), dtype=np.uint8)
             cbsrc = rng.integers(0, 256, (ch, cw), dtype=np.uint8)
             crsrc = rng.integers(0, 256, (ch, cw), dtype=np.uint8)
-            out = _jpeg_decode_color(_jpeg_encode_color(ysrc, cbsrc, crsrc, samp))
+            out = _jpeg_decode(_jpeg_encode((ysrc, cbsrc, crsrc), samp))
             assert out is not None, samp
             y, cb, cr = out
             assert np.array_equal(
                 y, ref_plane(ysrc, _jpeg_qtable(), (8 * sv, 8 * sh))[:h, :w]
             ), samp
             for got, src in ((cb, cbsrc), (cr, crsrc)):
-                ref = ref_plane(src, _jpeg_qtable_chroma(), (8, 8))[:ch, :cw]
+                ref = ref_plane(src, _jpeg_qtable(1), (8, 8))[:ch, :cw]
                 up = np.repeat(np.repeat(ref, sv, axis=0), sh, axis=1)[:h, :w]
                 assert np.array_equal(got, up), samp
 
 
 def test_jpeg_color_profile_gates():
-    """Color and grayscale streams must route to their own decoders;
+    """Colour streams decode to 3 planes and grayscale streams to 1;
     exotic samplings are rejected; truncation and junk never raise (the
     crawl contract)."""
     import numpy as np
@@ -621,28 +585,26 @@ def test_jpeg_color_profile_gates():
     from mapreduce_hadoop_spark.operators.multimodal import (
         _jpeg_bytes_patterned,
         _jpeg_color_bytes_patterned,
-        _jpeg_decode_color,
-        _jpeg_decode_gray,
+        _jpeg_decode,
     )
 
     color = _jpeg_color_bytes_patterned(24, 16, 7)
     gray = _jpeg_bytes_patterned(24, 16, 7)
-    assert _jpeg_decode_color(color) is not None
-    assert _jpeg_decode_color(gray) is None  # one component
-    assert _jpeg_decode_gray(color) is None  # three components
-    assert _jpeg_decode_color(color[: len(color) // 2]) is None
-    # Progressive marker out of profile for the color path too.
-    assert _jpeg_decode_color(color.replace(b"\xff\xc0", b"\xff\xc2", 1)) is None
+    assert len(_jpeg_decode(color)) == 3  # three components
+    assert len(_jpeg_decode(gray)) == 1  # one component
+    assert _jpeg_decode(color[: len(color) // 2]) is None
+    # Progressive marker out of profile for colour streams too.
+    assert _jpeg_decode(color.replace(b"\xff\xc0", b"\xff\xc2", 1)) is None
     # Exotic sampling (4:1:1, Y byte 0x41) is out of profile: patch the
     # SOF Y sampling byte in place.
     i = color.index(b"\xff\xc0")
     y_samp = i + 2 + 2 + 6 + 1  # marker + len + prec/h/w/nf + comp id
     assert color[y_samp] == 0x22
     bad = color[:y_samp] + b"\x41" + color[y_samp + 1 :]
-    assert _jpeg_decode_color(bad) is None
+    assert _jpeg_decode(bad) is None
     rng = np.random.default_rng(13)
     for size in (0, 2, 64, 1024):
-        _jpeg_decode_color(
+        _jpeg_decode(
             b"\xff\xd8" + rng.integers(0, 256, size, dtype=np.uint8).tobytes()
         )
 
@@ -681,7 +643,7 @@ def test_ycbcr_to_rgb_rounding_matches_duckdb():
 
 
 def test_jpeg_restart_markers_roundtrip_gray_and_color():
-    """DRI/RSTn (round 12): encoding with a restart interval must decode
+    """DRI/RSTn: encoding with a restart interval must decode
     to EXACTLY the pixels of the restart-free encoding of the same plane
     (same quantized coefficients, predictors reset per segment), for
     both the grayscale and the interleaved color paths, at interval
@@ -689,38 +651,36 @@ def test_jpeg_restart_markers_roundtrip_gray_and_color():
     import numpy as np
 
     from mapreduce_hadoop_spark.operators.multimodal import (
-        _jpeg_decode_color,
-        _jpeg_decode_gray,
-        _jpeg_encode_color,
-        _jpeg_encode_gray,
+        _jpeg_decode,
+        _jpeg_encode,
     )
 
     rng = np.random.default_rng(31)
     src = rng.integers(0, 256, (24, 40), dtype=np.uint8)  # 3x5 = 15 MCUs
-    ref = _jpeg_decode_gray(_jpeg_encode_gray(src))
+    ref = _jpeg_decode(_jpeg_encode((src,)))
     assert ref is not None
     for ri in (1, 3, 5, 7, 15, 99):
-        out = _jpeg_decode_gray(_jpeg_encode_gray(src, restart_interval=ri))
+        out = _jpeg_decode(_jpeg_encode((src,), restart_interval=ri))
         assert out is not None and np.array_equal(out, ref), ri
 
     y = rng.integers(0, 256, (24, 40), dtype=np.uint8)
     cb = rng.integers(0, 256, (12, 20), dtype=np.uint8)
     cr = rng.integers(0, 256, (12, 20), dtype=np.uint8)
-    ref_c = _jpeg_decode_color(_jpeg_encode_color(y, cb, cr, (2, 2)))
+    ref_c = _jpeg_decode(_jpeg_encode((y, cb, cr), (2, 2)))
     assert ref_c is not None
     for ri in (1, 2, 4, 6):  # 2x3 = 6 MCUs at 4:2:0
-        out_c = _jpeg_decode_color(
-            _jpeg_encode_color(y, cb, cr, (2, 2), restart_interval=ri)
+        out_c = _jpeg_decode(
+            _jpeg_encode((y, cb, cr), (2, 2), restart_interval=ri)
         )
         assert out_c is not None, ri
         assert all(np.array_equal(a, b) for a, b in zip(out_c, ref_c)), ri
 
     # More than 8 restarts exercises the D0..D7 marker cycle wrap.
     big = rng.integers(0, 256, (8, 8 * 20), dtype=np.uint8)  # 20 MCUs
-    wrapped = _jpeg_encode_gray(big, restart_interval=1)
+    wrapped = _jpeg_encode((big,), restart_interval=1)
     assert wrapped.count(b"\xff\xd0") >= 2  # the cycle wrapped past D7
     assert np.array_equal(
-        _jpeg_decode_gray(wrapped), _jpeg_decode_gray(_jpeg_encode_gray(big))
+        _jpeg_decode(wrapped), _jpeg_decode(_jpeg_encode((big,)))
     )
 
 
@@ -731,18 +691,18 @@ def test_jpeg_restart_marker_sequence_validated():
     import numpy as np
 
     from mapreduce_hadoop_spark.operators.multimodal import (
-        _jpeg_decode_gray,
-        _jpeg_encode_gray,
+        _jpeg_decode,
+        _jpeg_encode,
     )
 
     rng = np.random.default_rng(32)
     src = rng.integers(0, 256, (16, 32), dtype=np.uint8)
-    b = _jpeg_encode_gray(src, restart_interval=2)
-    assert _jpeg_decode_gray(b) is not None
+    b = _jpeg_encode((src,), restart_interval=2)
+    assert _jpeg_decode(b) is not None
     # Corrupt the first RST0 into RST1: out of sequence -> None.
     i = b.index(b"\xff\xd0")
-    assert _jpeg_decode_gray(b[:i] + b"\xff\xd1" + b[i + 2 :]) is None
+    assert _jpeg_decode(b[:i] + b"\xff\xd1" + b[i + 2 :]) is None
     # Strip the DRI segment but keep the RSTn markers: segment count
     # disagrees with the (absent) declaration -> None.
     j = b.index(b"\xff\xdd")
-    assert _jpeg_decode_gray(b[:j] + b[j + 6 :]) is None
+    assert _jpeg_decode(b[:j] + b[j + 6 :]) is None
