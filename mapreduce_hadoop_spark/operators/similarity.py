@@ -1,9 +1,15 @@
 """Similarity search over the `embeddings` table (north-star extension).
 
-- ``topk_bruteforce``: exact top-k cosine neighbors for a small query set.
-  The query set is broadcast; the corpus is scanned once (k_q x n candidate
-  rows, never n^2). This is the exact baseline any ANN variant is judged
-  against.
+Every top-K builder below ends in ONE exact ranker: the query side is
+``_as_query`` (query_id, qv, qn), and ``_rank`` rounds the cosine to 6
+decimals and keeps each query's TOP_K rows by (cosine desc, vec_id) —
+the single operator of exact top-K similarity search. What differs
+between the builders is only how the candidate pairs are produced:
+
+- ``topk_bruteforce`` / ``topk_filtered``: every corpus row (or every
+  row passing a metadata pre-filter) against the broadcast query set —
+  k_q x n candidate rows, never n^2. The exact baseline any ANN variant
+  is judged against.
 - ``near_dup_cosine``: exact all-pairs cosine >= threshold. O(n^2) by
   definition — the correctness baseline, only for modest n.
 - ``topk_lsh`` / ``near_dup_cosine_lsh``: banded signed-random-projection
@@ -11,30 +17,28 @@
   the oracle) with ENTROPY-AWARE bit width — ``measured_sign_bits``
   picks the width from the corpus's measured sign-pattern collision
   mass (count-based ``auto_sign_bits`` as the floor) so candidate
-  volume stays linear even on low-entropy corpora (the round-7 residual
-  ~n^1.17; SCALE_sf10_r7.md). Recall is
-  1-(1-p^bits)^bands (measured at sf0.01: topk 0.86 at the 12-band
-  default, near-dup pair recall 0.82 at 8 bands). The 100 TB shape:
-  (band, bucket) is the shuffle/join key; bands is the recall dial,
-  bits the scale guard — neither changes the plan.
+  volume stays linear even on low-entropy corpora (SCALE_sf10_r7.md).
+  Recall is 1-(1-p^bits)^bands (measured at sf0.01: topk 0.86 at 12
+  bands, near-dup pair recall 0.82 at 8 bands). (band, bucket) is the
+  shuffle/join key; neither the band count nor the bit width changes
+  the plan.
+- The IVF family (``topk_ivf*``) is ONE probe-and-rank path: a centroid
+  source (fixed rows [100, 116) or persisted k-means), a list assignment
+  (nearest list, or SPANN boundary replication), and a probe selection
+  (nearest ``nprobe`` lists, or the adaptive (1+eps)^2 closeness rule)
+  feed ``lists JOIN broadcast(probes)`` -> self-filter -> ``_rank``.
+  Default nprobe=8 is the measured knee (sf0.01 recall@5: 0.80 trained
+  / 0.74 fixed at ~49% candidate budget). The fixed-centroid variants
+  are the oracle-checkable twins of the trained ones.
 - The PQ family (``topk_pq*``, ``ann_append_serving*``, ``topk_ivfpq*``)
   is ONE serving pipeline: books (in-plan aggregation, a persisted
   artifact, or k-means) -> driver-built ADC arrays (``_query_side``) ->
   one ADC scan -> shortlist -> exact re-rank (``_adc_rank``); the
   variants differ only in the books source and the shortlist rule.
-- ``topk_ivf_trained`` / ``topk_ivf`` (oracle twin):
-  inverted-file ANN — broadcast coarse centroids, nearest-list assignment,
-  nprobe-list probe join. Default nprobe=8 is the measured knee (sf0.01
-  recall@5: 0.80 trained / 0.74 fixed at ~49% candidate budget); the
-  trained variant fits k-means once per sf_dir (cached) and probes with
-  the identical plan.
-- ``topk_ivfpq_trained`` (PRIMARY ANN — the deployed serving shape) /
-  ``topk_ivfpq_fixed`` (oracle twin): full FAISS IVFPQ — K=sqrt(n)
-  trained coarse quantizer x residual-encoded PQ-ADC x scale-adaptive
-  exact re-rank. Recall@5 0.84 at sf0.1 scanning 36% of
-  the corpus (the fixed-K twin: 0.72 at 51%), 4 code bytes per scanned
-  vector instead of 64 floats; the memory shape that lets a 100 TB
-  corpus' index live in cluster RAM.
+  ``topk_ivfpq_trained`` is the deployed serving shape (K=sqrt(n)
+  trained coarse quantizer x residual PQ-ADC x adaptive exact re-rank;
+  recall@5 0.84 at sf0.1 scanning 36% of the corpus, 8 code bytes per
+  scanned vector instead of 64 floats).
 
 All arithmetic is a strict left-to-right fold (F.aggregate / list_reduce)
 over double-cast elements, so Spark and DuckDB produce bit-identical
@@ -101,36 +105,88 @@ FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
 """
 
 
+def _as_query(df: DataFrame, *extra: "Column | str") -> DataFrame:
+    """The query side of every top-K: ``df``'s rows as (query_id, qv,
+    qn), plus any ``extra`` columns (probe list, LSH band key)."""
+    return df.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("norm").alias("qn"),
+        *extra,
+    )
+
+
+def _rank(
+    pairs: DataFrame,
+    cos: "Column | None" = None,
+    dedup: bool = False,
+    carry: "tuple[str, ...]" = (),
+) -> DataFrame:
+    """The one exact top-K ranker: (query_id, vec_id) candidate pairs ->
+    cosine rounded to 6 decimals -> the TOP_K rows per query by (cosine
+    desc, vec_id), numbered ``rank``.
+
+    ``cos`` defaults to the qv/qn x v/norm cosine of ``_as_query`` pairs;
+    ``carry`` columns ride along to the output. ``dedup`` collapses
+    duplicate pairs (a candidate reached through several bands or lists)
+    before ranking: every copy carries the same cosine, so which copy
+    survives is immaterial. Cosine is projected BEFORE the collapse, so
+    the shuffle moves ~24 B rows rather than v[64] payloads, and the
+    repartition on query_id lets the dropDuplicates and the rank window
+    share ONE exchange (hashpartitioning(query_id) satisfies the
+    (query_id, vec_id) clustered distribution)."""
+    if cos is None:
+        cos = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm"))
+    scored = pairs.select("query_id", "vec_id", F.round(cos, 6).alias("cosine"), *carry)
+    if dedup:
+        scored = scored.repartition("query_id").dropDuplicates(["query_id", "vec_id"])
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
+    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
+        F.col("rank") <= TOP_K
+    )
+
+
+def _exact_topk(emb: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact top-K of every ``cand`` row against the broadcast query set
+    (vec_id < N_QUERIES of ``emb``)."""
+    q = _as_query(emb.filter(F.col("vec_id") < N_QUERIES))
+    return _rank(cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")))
+
+
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for query vectors (vec_id < N_QUERIES)."""
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
-    pairs = emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")), 6)
-    scored = pairs.select("query_id", "vec_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _exact_topk(emb, emb)
 
 
-TOPK_BRUTEFORCE_ORACLE = f"""
-WITH e AS ({EMB_NORM_SQL}),
-q AS (SELECT vec_id AS query_id, v AS qv, norm AS qn FROM e WHERE vec_id < {N_QUERIES}),
-scored AS (
-    SELECT q.query_id, e.vec_id,
-           round({DOT_SQL.format(a="q.qv", b="e.v")} / (q.qn * e.norm), 6) AS cosine
-    FROM e JOIN q ON e.vec_id <> q.query_id
-)
-SELECT query_id, vec_id, cosine, rank FROM (
+# SQL twin of ``_rank``'s window (over the `scored` CTE), the tail of
+# every exact top-K oracle.
+RANK_SQL = f"""SELECT query_id, vec_id, cosine, rank FROM (
     SELECT *, row_number() OVER (PARTITION BY query_id
                                  ORDER BY cosine DESC, vec_id) AS rank
     FROM scored
 ) WHERE rank <= {TOP_K}
 """
+
+
+def _cos_sql(q: str, x: str) -> str:
+    return f"round({DOT_SQL.format(a=f'{q}.qv', b=f'{x}.v')} / ({q}.qn * {x}.norm), 6)"
+
+
+def _exact_topk_sql(cand: str) -> str:
+    """SQL twin of ``_exact_topk`` over the ``cand`` CTE."""
+    return f"""q AS (SELECT vec_id AS query_id, v AS qv, norm AS qn FROM e WHERE vec_id < {N_QUERIES}),
+scored AS (
+    SELECT q.query_id, {cand}.vec_id,
+           {_cos_sql("q", cand)} AS cosine
+    FROM {cand} JOIN q ON {cand}.vec_id <> q.query_id
+)
+{RANK_SQL}"""
+
+
+TOPK_BRUTEFORCE_ORACLE = f"""
+WITH e AS ({EMB_NORM_SQL}),
+{_exact_topk_sql("e")}"""
 
 
 def _near_dup_blocks(n: int, parallelism: int) -> int:
@@ -900,12 +956,7 @@ WHERE round({DOT_SQL.format(a="ea.v", b="eb.v")} / (ea.norm * eb.norm), 6) >= {N
 """
 
 
-def topk_lsh(
-    spark: SparkSession,
-    sf_dir: str,
-    bands: int = TOPK_BANDS,
-    bits: "int | None" = None,
-) -> DataFrame:
+def topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via banded signed-random-projection LSH.
 
     OR-of-ANDs construction (TOPK_BANDS=12 bands — the measured topk
@@ -913,20 +964,15 @@ def topk_lsh(
     bits; the hash FAMILY is shared with ``near_dup_cosine_lsh``): a
     corpus vector is a candidate when ANY band's full sign pattern
     matches the query's, then exact cosine ranks the candidates. A single
-    wide bucket (the original formulation) has recall ~p^bits which
-    collapses for moderate-cosine neighbors; banding lifts recall to
-    1-(1-p^bits)^bands at candidate volume ~bands/2^bits of the corpus —
-    and the entropy-aware bits keep per-query candidates
-    ~bands * TARGET_BUCKET, flat in corpus size.
-
-    The driver oracle (TOPK_LSH_ORACLE) is generated for the DEFAULT
-    bands/bits: a caller passing non-default values gets a correct query
-    but must not compare it against the fixed-default oracle twin.
+    wide bucket has recall ~p^bits, which collapses for moderate-cosine
+    neighbors; banding lifts recall to 1-(1-p^bits)^bands at candidate
+    volume ~bands/2^bits of the corpus — and the entropy-aware bits keep
+    per-query candidates ~bands * TARGET_BUCKET, flat in corpus size.
+    A candidate matching in several bands is collapsed once by the
+    ranker's ``dedup``.
     """
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    if bits is None:
-        bits = measured_sign_bits(emb)
-    signs = srp_signs(bands, bits)
+    signs = srp_signs(TOPK_BANDS, measured_sign_bits(emb))
     banded = emb.select(
         "vec_id",
         "v",
@@ -938,42 +984,23 @@ def topk_lsh(
                         F.lit(j).alias("band"),
                         _band_bucket(F.col("v"), signs[j]).alias("bucket"),
                     )
-                    for j in range(bands)
+                    for j in range(TOPK_BANDS)
                 ]
             )
         ).alias("bk"),
     ).select("vec_id", "v", "norm", "bk.band", "bk.bucket")
-    q = banded.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
+    q = _as_query(
+        banded.filter(F.col("vec_id") < N_QUERIES),
         F.col("band").alias("qband"),
         F.col("bucket").alias("qbucket"),
     )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")), 6)
-    # Cosine is computed BEFORE the duplicate collapse (every copy of a
-    # (query, candidate) pair carries the same qv/qn/v/norm, so the same
-    # cosine — which copy survives is immaterial): the dedup exchange now
-    # moves (query_id, vec_id, cosine) ~24 B rows instead of both v[64]
-    # payloads (~1 KB). The repartition folds that dedup and the rank
-    # window into ONE query_id exchange (hashpartitioning(query_id)
-    # satisfies the (query_id, vec_id) clustered distribution).
-    scored = (
-        banded.join(
-            F.broadcast(q),
-            (F.col("band") == F.col("qband"))
-            & (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", "vec_id", cos.alias("cosine"))
-        .repartition("query_id")
-        .dropDuplicates(["query_id", "vec_id"])
+    pairs = banded.join(
+        F.broadcast(q),
+        (F.col("band") == F.col("qband"))
+        & (F.col("bucket") == F.col("qbucket"))
+        & (F.col("vec_id") != F.col("query_id")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _rank(pairs, dedup=True)
 
 
 def _topk_lsh_oracle() -> str:
@@ -998,12 +1025,7 @@ scored AS (
     JOIN e eq ON eq.vec_id = c.query_id
     JOIN e ev ON ev.vec_id = c.vec_id
 )
-SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, vec_id) AS rank
-    FROM scored
-) WHERE rank <= {TOP_K}
-"""
+{RANK_SQL}"""
 
 
 TOPK_LSH_ORACLE = _topk_lsh_oracle()
@@ -1033,17 +1055,13 @@ def clear_stats_cache() -> None:
     ann_index.clear_memos()
 
 
-def _trained_centroids(
-    spark: SparkSession, emb: DataFrame, sf_dir: str, k: int = IVF_K
+def _cents_relation(
+    spark: SparkSession, cents_rows: "list[tuple[int, list[float]]]"
 ) -> DataFrame:
-    """K-means coarse centroids as a (cent_id, cv, cn) relation — the
-    trained drop-in for ``_ivf_centroids``. Load-or-fit through the
-    persisted index artifact (ann_index.coarse_centroids): the FAISS
-    train/add split — a session that finds the artifact plans ZERO
-    k-means jobs. Model parameters, legitimately driver-sized."""
-    from mapreduce_hadoop_spark.operators import ann_index
-
-    cents_rows = ann_index.coarse_centroids(spark, emb, sf_dir, k)
+    """Coarse-centroid rows (``ann_index.coarse_centroids``: k-means,
+    load-or-fit through the persisted index artifact) as the (cent_id,
+    cv, cn) relation ``_ivf_centroids`` yields for the fixed centroids.
+    Model parameters, legitimately driver-sized."""
     return spark.createDataFrame(cents_rows, "cent_id int, cv array<double>").select(
         "cent_id",
         "cv",
@@ -1062,7 +1080,7 @@ def _ivf_centroids(emb: DataFrame) -> DataFrame:
 def _cents_array(cents: DataFrame) -> DataFrame:
     """All centroids as ONE row carrying a cent_id-sorted
     ``array<struct<cent_id, cv, cn>>`` — the broadcast side of the
-    in-row assignment below. Model-sized by construction (K centroids);
+    in-row assignments below. Model-sized by construction (K centroids);
     the collect_list aggregate moves K rows, never the corpus, and
     ``sort_array`` canonicalizes the nondeterministic collect order."""
     return cents.agg(
@@ -1072,50 +1090,67 @@ def _cents_array(cents: DataFrame) -> DataFrame:
     )
 
 
-def _ccos_desc_cent_asc(l: Column, r: Column) -> Column:
-    """array_sort comparator: (ccos DESC, cent_id ASC) — the exact order
-    the pre-r18 window row_number used. Spark SQL comparison semantics
-    (NaN greater than everything, -0.0 == 0.0) match the sort order the
-    window applied, so ties and float corners break identically."""
-    return (
-        F.when(l["ccos"] > r["ccos"], F.lit(-1))
-        .when(l["ccos"] < r["ccos"], F.lit(1))
-        .when(l["cent_id"] < r["cent_id"], F.lit(-1))
-        .when(l["cent_id"] > r["cent_id"], F.lit(1))
-        .otherwise(F.lit(0))
-    )
-
-
-def _assign(emb: DataFrame, cents: DataFrame, n: int, out: str) -> DataFrame:
-    """Rank centroids by cosine per vector; keep the top ``n`` as ``out``.
-
-    MAP-SIDE since round 18 (guide §2.4): the centroids ride along as one
-    broadcast array row and each vector picks its top-``n`` in-row — an
-    array_sort over K scored structs, sliced and exploded. The pre-r18
-    form ranked with ``row_number() OVER (PARTITION BY vec_id)``, which
-    hash-exchanged the FULL CORPUS (vec_id, v[64], norm) just to pick a
-    per-row argmax — the single largest shuffle in every IVF plan, and
-    exactly what the operator docstrings always claimed was "a map-side
-    pass". Output is bit-identical: the cosine expression is unchanged
-    per (vector, centroid) pair, and the comparator reproduces the
-    window's (ccos DESC, cent_id ASC) order including NaN/tie corners
-    (re-verified against the committed r17 gate hashes at sf0.001/0.01/
-    0.1 for every consumer).
-    """
+def _sorted_cents(key: str, score: "Callable[[Column], Column]", desc: bool) -> Column:
+    """In-row over the broadcast ``_cents`` array: every centroid ``c``
+    scored as struct(``key`` = score(c), cent_id), ``array_sort``-ed by
+    (key, cent_id ASC) — key descending when ``desc``. This is the
+    order a (key, cent_id) window row_number applies: Spark SQL
+    comparison semantics (NaN greater than everything, -0.0 == 0.0)
+    break ties and float corners exactly as the oracles' windows do."""
     scored = F.transform(
         F.col("_cents"),
-        lambda c: F.struct(
-            (_dot(F.col("v"), c["cv"]) / (F.col("norm") * c["cn"])).alias(
-                "ccos"
-            ),
-            c["cent_id"].alias("cent_id"),
-        ),
+        lambda c: F.struct(score(c).alias(key), c["cent_id"].alias("cent_id")),
     )
-    top = F.slice(F.array_sort(scored, _ccos_desc_cent_asc), 1, n)
+
+    def cmp(l: Column, r: Column) -> Column:
+        gt, lt = l[key] > r[key], l[key] < r[key]
+        before, after = (gt, lt) if desc else (lt, gt)
+        return (
+            F.when(before, F.lit(-1))
+            .when(after, F.lit(1))
+            .when(l["cent_id"] < r["cent_id"], F.lit(-1))
+            .when(l["cent_id"] > r["cent_id"], F.lit(1))
+            .otherwise(F.lit(0))
+        )
+
+    return F.array_sort(scored, cmp)
+
+
+def _cent_cos(c: Column) -> Column:
+    """Cosine of the row's (v, norm) against centroid struct ``c``."""
+    return _dot(F.col("v"), c["cv"]) / (F.col("norm") * c["cn"])
+
+
+def _assign(emb: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """Each vector's top-``n`` centroids by (cosine DESC, cent_id) as
+    ``cent_id`` rows — MAP-SIDE: the centroids ride along as one
+    broadcast array row and each vector sorts its K scored centroids
+    in-row, so the corpus is never shuffled to pick a per-row argmax.
+    The DuckDB twin (``_nearest_sql``) is the equivalent window."""
+    top = F.slice(_sorted_cents("ccos", _cent_cos, desc=True), 1, n)
     return (
         emb.crossJoin(F.broadcast(_cents_array(cents)))
         .select("vec_id", "v", "norm", F.explode(top).alias("_a"))
-        .select("vec_id", "v", "norm", F.col("_a.cent_id").alias(out))
+        .select("vec_id", "v", "norm", F.col("_a.cent_id").alias("cent_id"))
+    )
+
+
+def _nearest_probes(
+    emb: DataFrame, cents: DataFrame, nprobe: int = IVF_NPROBE
+) -> DataFrame:
+    """Probe side: each query's ``nprobe`` nearest lists."""
+    return _as_query(
+        _assign(emb.filter(F.col("vec_id") < N_QUERIES), cents, nprobe), "cent_id"
+    )
+
+
+def _probe_pairs(lists: DataFrame, probes: DataFrame) -> DataFrame:
+    """The IVF probe join: inverted-list rows (vec_id, v, norm, cent_id)
+    JOIN the broadcast probe side (query_id, qv, qn, cent_id) on cent_id
+    — the equi-join that limits each query to its probed lists — minus
+    each query's own row. Candidate pairs for ``_rank``."""
+    return lists.join(F.broadcast(probes), "cent_id").filter(
+        F.col("vec_id") != F.col("query_id")
     )
 
 
@@ -1127,11 +1162,10 @@ def topk_ivf(
     nearest centroid's inverted list, a query probes its ``nprobe`` nearest
     lists and ranks only those candidates by exact cosine.
 
-    This is the ORACLE-CHECKABLE TWIN of the primary ANN path,
-    ``topk_ivf_trained`` — deterministic centroids make the whole plan
-    SQL-expressible so the driver can hash-verify it; the trained variant
-    is what a user should deploy (balanced lists, higher recall at equal
-    nprobe).
+    This is the ORACLE-CHECKABLE TWIN of ``topk_ivf_trained`` —
+    deterministic centroids make the whole plan SQL-expressible so the
+    driver can hash-verify it; the trained variant is what a user should
+    deploy (balanced lists, higher recall at equal nprobe).
 
     100 TB shape: centroids are broadcast (model-sized, not data-sized);
     list assignment is a map-side pass; the probe is an equi-join on
@@ -1145,150 +1179,155 @@ def topk_ivf(
     """
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     cents = _ivf_centroids(emb)
-    lists = _assign(emb, cents, 1, "cent_id")
-    probes = _assign(
-        emb.filter(F.col("vec_id") < N_QUERIES), cents, nprobe, "cent_id"
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        "cent_id",
-    )
-    pairs = lists.join(F.broadcast(probes), "cent_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")), 6)
-    scored = pairs.select("query_id", "vec_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    probes = _nearest_probes(emb, cents, nprobe)
+    return _rank(_probe_pairs(_assign(emb, cents, 1), probes))
 
 
 def topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with k-means-trained coarse centroids — the PRIMARY ANN
-    path (Spark ML KMeans, fixed seed). Same assign/probe/rank plan as
-    ``topk_ivf``; only the centroid source differs — trained centroids
-    track the data distribution, so inverted lists are balanced and recall
-    at equal nprobe improves (sf0.01, nprobe=8: 0.80 trained vs 0.74
-    fixed; bounded in tests/test_similarity_ivf.py). ``topk_ivf`` with its
-    deterministic centroids is the oracle-checkable twin the driver
-    hash-verifies.
+    """IVF ANN with k-means-trained coarse centroids — the PRIMARY IVF
+    path (Spark ML KMeans, fixed seed). ``topk_ivf``'s plan with only the
+    centroid source changed: trained centroids track the data
+    distribution, so inverted lists are balanced and recall at equal
+    nprobe improves (sf0.01, nprobe=8: 0.80 trained vs 0.74 fixed;
+    bounded in tests/test_similarity_ivf.py).
 
-    Training is not SQL-expressible -> rows-only driver check; the
-    centroids are model parameters, legitimately driver-sized (k x dim
-    doubles), broadcast into the plan. The fit is cached per sf_dir so
-    repeated calls (bench, gate) time the probe plan, not the training —
-    exactly how a deployed index works: train once, probe forever.
+    Training is not SQL-expressible -> rows-only driver check. The
+    centroids are persisted per corpus (ann_index), so repeated calls
+    time the probe plan, not the training: train once, probe forever.
     """
+    from mapreduce_hadoop_spark.operators import ann_index
+
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    cents = _trained_centroids(spark, emb, sf_dir)
-    lists = _assign(emb, cents, 1, "cent_id")
-    probes = _assign(
-        emb.filter(F.col("vec_id") < N_QUERIES), cents, IVF_NPROBE, "cent_id"
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        "cent_id",
-    )
-    pairs = lists.join(F.broadcast(probes), "cent_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")), 6)
-    scored = pairs.select("query_id", "vec_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    cents = _cents_relation(spark, ann_index.coarse_centroids(spark, emb, sf_dir, IVF_K))
+    return _rank(_probe_pairs(_assign(emb, cents, 1), _nearest_probes(emb, cents)))
+
+
+# SQL twins of the IVF building blocks: the fixed centroid relation, the
+# nearest-lists window (``_assign``), the assigned lists, the probe side
+# and the probe join + rank.
+IVF_CENTS_SQL = f"""c AS (SELECT vec_id AS cent_id, v AS cv, norm AS cn FROM e
+      WHERE vec_id >= {IVF_CENT_LO} AND vec_id < {IVF_CENT_HI})"""
+
+
+def _nearest_sql(cols: str, n: int, where: str = "") -> str:
+    return f"""SELECT {cols} FROM (
+        SELECT e.vec_id, e.v, e.norm, c.cent_id,
+               row_number() OVER (
+                   PARTITION BY e.vec_id
+                   ORDER BY {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) DESC,
+                            c.cent_id) AS crank
+        FROM e CROSS JOIN c{where}
+    ) WHERE crank <= {n}"""
+
+
+ASSIGNED_SQL = f"""assigned AS (
+    {_nearest_sql("vec_id, v, norm, cent_id", 1)}
+)"""
+PROBES_COLS_SQL = "vec_id AS query_id, v AS qv, norm AS qn, cent_id"
+PROBES_SQL = f"""probes AS (
+    {_nearest_sql(PROBES_COLS_SQL, IVF_NPROBE, f" WHERE e.vec_id < {N_QUERIES}")}
+)"""
+
+
+def _probe_rank_sql(lists: str, alias: str, distinct: str = "") -> str:
+    """SQL twin of ``_rank(_probe_pairs(lists, probes))``; ``distinct``
+    ("DISTINCT ") collapses replicated candidates like ``dedup``."""
+    return f"""scored AS (
+    SELECT {distinct}p.query_id, {alias}.vec_id,
+           {_cos_sql("p", alias)} AS cosine
+    FROM {lists} {alias} JOIN probes p ON {alias}.cent_id = p.cent_id
+    WHERE {alias}.vec_id <> p.query_id
+)
+{RANK_SQL}"""
 
 
 TOPK_IVF_ORACLE = f"""
 WITH e AS ({EMB_NORM_SQL}),
-c AS (SELECT vec_id AS cent_id, v AS cv, norm AS cn FROM e
-      WHERE vec_id >= {IVF_CENT_LO} AND vec_id < {IVF_CENT_HI}),
-assigned AS (
-    SELECT vec_id, v, norm, cent_id FROM (
-        SELECT e.vec_id, e.v, e.norm, c.cent_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) DESC,
-                            c.cent_id) AS crank
-        FROM e CROSS JOIN c
-    ) WHERE crank <= 1
-),
-probes AS (
-    SELECT vec_id AS query_id, v AS qv, norm AS qn, cent_id FROM (
-        SELECT e.vec_id, e.v, e.norm, c.cent_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) DESC,
-                            c.cent_id) AS crank
-        FROM e CROSS JOIN c
-        WHERE e.vec_id < {N_QUERIES}
-    ) WHERE crank <= {IVF_NPROBE}
-),
-scored AS (
-    SELECT p.query_id, a.vec_id,
-           round({DOT_SQL.format(a="p.qv", b="a.v")} / (p.qn * a.norm), 6) AS cosine
-    FROM assigned a JOIN probes p ON a.cent_id = p.cent_id
-    WHERE a.vec_id <> p.query_id
-)
-SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, vec_id) AS rank
-    FROM scored
-) WHERE rank <= {TOP_K}
-"""
+{IVF_CENTS_SQL},
+{ASSIGNED_SQL},
+{PROBES_SQL},
+{_probe_rank_sql("assigned", "a")}"""
 
 
-# Adaptive-probe twin dials: the SAME (1+eps)^2 cosine-gap closeness
-# rule the trained serving paths apply driver-side
-# (_probe_lists_adaptive), restated as a window formulation so the
-# driver can hash-verify its SEMANTICS. eps is shared with the deployed
-# dial (IVFPQ_PROBE_EPS); the floor sits below the fixed twin's
-# nprobe=8 so the rule — not the floor — decides most widths. The bound
-# is computed ONCE in Python and embedded as the same double literal in
-# the Spark plan and the SQL, so both engines compare against
-# bit-identical thresholds.
+def _closeness_sql(
+    out: str,
+    cols: str,
+    win: str,
+    rank: str,
+    eps: float,
+    floor: int,
+    cap: int,
+    where: str = "",
+) -> str:
+    """SQL: CTEs ``g``, ``win``, ``out`` — per vector, centroids ranked by
+    (gap ASC, cent_id) as ``rank``, keeping the first greatest(floor,
+    least(cap, close)) where close counts the gaps within (1+eps)^2 of
+    the smallest. The window twin of the in-row (1+eps)^2 closeness rule
+    (probe side: ``topk_ivf_adaptive``; list side: ``topk_ivf_spann_fixed``)."""
+    bound = (1.0 + eps) ** 2
+    return f"""g AS (
+    SELECT e.vec_id, e.v, e.norm, c.cent_id,
+           1.0 - {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) AS gap
+    FROM e CROSS JOIN c{where}
+),
+{win} AS (
+    SELECT *,
+           min(gap) OVER (PARTITION BY vec_id) AS gmin,
+           row_number() OVER (PARTITION BY vec_id
+                              ORDER BY gap ASC, cent_id) AS {rank}
+    FROM g
+),
+{out} AS (
+    SELECT {cols} FROM (
+        SELECT *,
+               sum(CASE WHEN gap <= {bound!r} * gmin THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY vec_id) AS close
+        FROM {win}
+    ) WHERE {rank} <= greatest({floor}, least({cap}, close))
+)"""
+
+
+# Query-side adaptive probe width: probe every list whose cosine-gap is
+# within (1+eps)^2 of the nearest list's, floored and capped. Served by
+# the trained IVF-PQ (floor K/3, cap K; ``_probe_lists_adaptive``) and
+# hash-verified through ``topk_ivf_adaptive`` (floor IVF_ADAPT_FLOOR,
+# cap IVF_K), both at this one eps. Measured on the CLUSTERED n=20k
+# crossover corpus (fixed nprobe read recall 0.54): eps=0.1 never
+# escapes the K/3 floor (all widths 47/47); eps=0.3 separates the
+# corpora — mutated queries widen to mean 104/141 lists while organic
+# sf1 queries stay near the floor (mean 73) — and is the knee: eps=0.4
+# saturates every mutated query at ~K for no recall gain at equal
+# shortlist (0.76 vs 0.78 at sl=450). Full grid in SCALE_ann_r13.md.
+IVFPQ_PROBE_EPS = 0.3
+# The oracle-checked twin's floor sits below the fixed nprobe=8 so the
+# rule — not the floor — decides most widths.
 IVF_ADAPT_FLOOR = 4
-# = IVFPQ_PROBE_EPS (defined with the trained-path dial constants below;
-# an assert next to that definition enforces the twin serves the
-# DEPLOYED eps — this literal exists only because the oracle string is
-# built at import time, before that block).
-IVF_ADAPT_EPS = 0.3
 
 
 def topk_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN under the ADAPTIVE probe-width rule, fixed centroids —
-    the oracle-checkable twin of the round-13 serving dial (VERDICT r15
-    order 5): a query probes its nearest list plus every list whose
-    cosine-gap ``1 - cos`` is within ``(1+eps)^2`` of the nearest's,
-    floored at ``IVF_ADAPT_FLOOR`` and capped at K — exactly
+    the oracle-checkable twin of the trained IVF-PQ's probe dial: a
+    query probes its nearest list plus every list whose cosine-gap
+    ``1 - cos`` is within ``(1+eps)^2`` of the nearest's, floored at
+    ``IVF_ADAPT_FLOOR`` and capped at K — exactly
     ``_probe_lists_adaptive``'s criterion (SPANN's closeness rule on
-    the probe side), which until this round only k-means-trained
-    rows-only paths exercised. Expressed as a pure window formulation
-    (min-gap + conditional count over the per-query centroid scores —
-    no driver arithmetic at all), so the whole dial is SQL-expressible
-    and the driver hash-pins its semantics: an off-by-one in the width
-    clamp, a wrong tie order, or a drifted eps would all hash-mismatch.
+    the probe side). Expressed as a pure window formulation (min-gap +
+    conditional count over the per-query centroid scores — no driver
+    arithmetic), so the driver hash-pins the rule: an off-by-one in the
+    width clamp, a wrong tie order, or a drifted eps would all
+    hash-mismatch. The bound is computed ONCE in Python and embedded as
+    the same double literal in the Spark plan and the SQL.
 
-    The trained paths compute the same rule driver-side over numpy (the
-    request-sized query matrix x the broadcast-sized centroid list);
-    this twin pins the RULE, not that vectorized evaluation — ties at
-    the bound break identically ((gap asc, cent_id) here = stable
-    argsort with cent_id-ascending input there).
+    Ties at the bound break identically to the numpy evaluation ((gap
+    asc, cent_id) here = stable argsort with cent_id-ascending input
+    there).
 
     100 TB shape: identical to ``topk_ivf`` — the probe relation stays
-    query-sized (the window runs over Q x K scored rows, model-sized),
-    and the candidate join still reads nprobe-ish/K of the corpus; the
-    dial only moves per-query width between the floor and K."""
-    bound = (1.0 + IVF_ADAPT_EPS) ** 2
+    query-sized (the window runs over Q x K scored rows), and the
+    candidate join still reads nprobe-ish/K of the corpus."""
+    bound = (1.0 + IVFPQ_PROBE_EPS) ** 2
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     cents = _ivf_centroids(emb)
-    lists = _assign(emb, cents, 1, "cent_id")
     cos = _dot(F.col("v"), F.col("cv")) / (F.col("norm") * F.col("cn"))
     g = (
         emb.filter(F.col("vec_id") < N_QUERIES)
@@ -1299,7 +1338,7 @@ def topk_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wq = Window.partitionBy("vec_id")
     wo = Window.partitionBy("vec_id").orderBy(F.col("gap").asc(), F.col("cent_id"))
-    probes = (
+    probes = _as_query(
         g.select(
             "*",
             F.min("gap").over(wq).alias("gmin"),
@@ -1318,83 +1357,19 @@ def topk_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.greatest(
                 F.lit(IVF_ADAPT_FLOOR), F.least(F.lit(IVF_K), F.col("close"))
             )
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qn"),
-            "cent_id",
-        )
-    )
-    pairs = lists.join(F.broadcast(probes), "cent_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        "vec_id",
-        F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")), 6).alias(
-            "cosine"
         ),
+        "cent_id",
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _rank(_probe_pairs(_assign(emb, cents, 1), probes))
 
 
-def _topk_ivf_adaptive_oracle() -> str:
-    bound = (1.0 + IVF_ADAPT_EPS) ** 2
-    return f"""
+TOPK_IVF_ADAPTIVE_ORACLE = f"""
 WITH e AS ({EMB_NORM_SQL}),
-c AS (SELECT vec_id AS cent_id, v AS cv, norm AS cn FROM e
-      WHERE vec_id >= {IVF_CENT_LO} AND vec_id < {IVF_CENT_HI}),
-assigned AS (
-    SELECT vec_id, v, norm, cent_id FROM (
-        SELECT e.vec_id, e.v, e.norm, c.cent_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) DESC,
-                            c.cent_id) AS crank
-        FROM e CROSS JOIN c
-    ) WHERE crank <= 1
-),
-g AS (
-    SELECT e.vec_id, e.v, e.norm, c.cent_id,
-           1.0 - {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) AS gap
-    FROM e CROSS JOIN c
-    WHERE e.vec_id < {N_QUERIES}
-),
-p AS (
-    SELECT *,
-           min(gap) OVER (PARTITION BY vec_id) AS gmin,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY gap ASC, cent_id) AS crank
-    FROM g
-),
-probes AS (
-    SELECT vec_id AS query_id, v AS qv, norm AS qn, cent_id FROM (
-        SELECT *,
-               sum(CASE WHEN gap <= {bound!r} * gmin THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY vec_id) AS close
-        FROM p
-    ) WHERE crank <= greatest({IVF_ADAPT_FLOOR}, least({IVF_K}, close))
-),
-scored AS (
-    SELECT p.query_id, a.vec_id,
-           round({DOT_SQL.format(a="p.qv", b="a.v")} / (p.qn * a.norm), 6) AS cosine
-    FROM assigned a JOIN probes p ON a.cent_id = p.cent_id
-    WHERE a.vec_id <> p.query_id
-)
-SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, vec_id) AS rank
-    FROM scored
-) WHERE rank <= {TOP_K}
-"""
-
-
-TOPK_IVF_ADAPTIVE_ORACLE = _topk_ivf_adaptive_oracle()
+{IVF_CENTS_SQL},
+{ASSIGNED_SQL},
+{_closeness_sql("probes", PROBES_COLS_SQL, "p", "crank", IVFPQ_PROBE_EPS,
+                IVF_ADAPT_FLOOR, IVF_K, f" WHERE e.vec_id < {N_QUERIES}")},
+{_probe_rank_sql("assigned", "a")}"""
 
 
 # --- SPANN-style boundary replication ---------------------------------------
@@ -1425,30 +1400,49 @@ SPANN_EPS = 0.1
 SPANN_RMAX = 4
 
 
+def _cent_matrix(cents_rows: "list[tuple[int, list[float]]]"):
+    """Centroid rows sorted by cent_id as numpy ``(ids, cmat, cn)`` —
+    the one centroid core of every numpy assignment and probe rule.
+    cent_id-ascending input is what makes their stable argsorts break
+    ties by cent_id, like the (key, cent_id) windows."""
+    import numpy as np
+
+    rows_sorted = sorted(cents_rows)
+    ids = np.asarray([cid for cid, _ in rows_sorted], dtype=np.int64)
+    cmat = np.asarray([cv for _, cv in rows_sorted], dtype=np.float64)
+    return ids, cmat, np.sqrt((cmat * cmat).sum(axis=1))
+
+
+def _gap_order(x, cmat, cn):
+    """Per row of ``x``: centroid columns ordered by cosine gap ``1 -
+    cos`` ascending (stable, so ties keep cent_id order), and the gaps
+    in that order — the numpy twin of the (gap ASC, cent_id) window."""
+    import numpy as np
+
+    xn = np.sqrt((x * x).sum(axis=1))
+    gap = 1.0 - (x @ cmat.T) / cn / xn[:, None]  # ||x-c||^2 / 2 on normalized vectors
+    order = np.argsort(gap, axis=1, kind="stable")
+    return order, np.take_along_axis(gap, order, axis=1)
+
+
 def _assign_spann_udf(
     cents_rows: "list[tuple[int, list[float]]]", eps: float, rmax: int
 ):
     """Arrow-batched SPANN assignment: nearest list + boundary replicas
     within the (1+eps) closeness bound, capped at ``rmax`` per vector
-    (closest-first). Same matmul core as ``_assign_arrow_udf``; returns a
-    VARIABLE-length cent_id array (>= 1 entry)."""
-    import numpy as np
+    (closest-first) — the first ``rmax`` columns of ``_gap_order``.
+    Returns a VARIABLE-length cent_id array (>= 1 entry)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    rows_sorted = sorted(cents_rows)
-    ids = np.asarray([cid for cid, _ in rows_sorted], dtype=np.int64)
-    cmat = np.asarray([cv for _, cv in rows_sorted], dtype=np.float64)
-    cn = np.sqrt((cmat * cmat).sum(axis=1))
+    ids, cmat, cn = _cent_matrix(cents_rows)
     bound = (1.0 + eps) ** 2
 
     def assign(vcol):
-        x = np.asarray(vcol.tolist(), dtype=np.float64)
-        norms = np.sqrt((x * x).sum(axis=1))
-        cos = (x @ cmat.T) / cn / norms[:, None]
-        gap = 1.0 - cos  # ||x-c||^2 / 2 on normalized vectors
-        order = np.argsort(gap, axis=1, kind="stable")[:, :rmax]
-        ranked = np.take_along_axis(gap, order, axis=1)
+        import numpy as np
+
+        order, ranked = _gap_order(np.asarray(vcol.tolist(), dtype=np.float64), cmat, cn)
+        order, ranked = order[:, :rmax], ranked[:, :rmax]
         keep = ranked <= bound * ranked[:, :1]
         keep[:, 0] = True  # the nearest list always
         return pd.Series(
@@ -1458,9 +1452,28 @@ def _assign_spann_udf(
     return pandas_udf(assign, "array<int>")
 
 
-def topk_ivf_spann(
-    spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
+def _spann_lists(
+    emb: DataFrame, cents_rows: "list[tuple[int, list[float]]]", eps: float = SPANN_EPS
 ) -> DataFrame:
+    """Inverted lists under SPANN replication: one (vec_id, v, norm,
+    cent_id) row per list a vector files into (one Arrow pass + explode)."""
+    rep = _assign_spann_udf(cents_rows, eps, SPANN_RMAX)
+    return emb.select("vec_id", "v", "norm", F.explode(rep(F.col("v"))).alias("cent_id"))
+
+
+def _arrow_probes(
+    emb: DataFrame, cents_rows: "list[tuple[int, list[float]]]"
+) -> DataFrame:
+    """Probe side via the Arrow matmul assignment: each query's
+    IVF_NPROBE nearest lists."""
+    probe = _assign_arrow_udf(cents_rows, IVF_NPROBE)
+    return _as_query(
+        emb.filter(F.col("vec_id") < N_QUERIES),
+        F.explode(probe(F.col("v"))).alias("cent_id"),
+    )
+
+
+def topk_ivf_spann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with SPANN-style boundary replication over the TRAINED
     coarse quantizer — recall at equal nprobe bought with index size
     instead of probe width: boundary vectors are filed into EVERY list
@@ -1472,13 +1485,12 @@ def topk_ivf_spann(
     replication factor — the honest cost — are both recorded).
 
     Plan shape: assignment is one Arrow matmul pass emitting a
-    variable-length list array + one explode (the replication);
-    probe/rank identical to ``topk_ivf_trained``; duplicate (query,
-    candidate) pairs from multi-list membership collapse with one
-    ``dropDuplicates`` BEFORE ranking (same cosine on every copy, so the
-    dedup is value-deterministic). K-means training is not
-    SQL-expressible -> rows-only driver check; recall bounded vs brute
-    force in tests/test_similarity_ivf.py.
+    variable-length list array + one explode (the replication); the
+    probe side is the Arrow nearest-``nprobe`` assignment; duplicate
+    (query, candidate) pairs from multi-list membership collapse in the
+    ranker's ``dedup``. K-means training is not SQL-expressible ->
+    rows-only driver check; recall bounded vs brute force in
+    tests/test_similarity_ivf.py.
 
     100 TB shape: replication multiplies the INDEX by the measured
     factor (bounded by SPANN_RMAX), not the scan — a query still reads
@@ -1488,109 +1500,46 @@ def topk_ivf_spann(
 
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     cents_rows = ann_index.coarse_centroids(spark, emb, sf_dir, IVF_K)
-
-    rep = _assign_spann_udf(cents_rows, SPANN_EPS, SPANN_RMAX)
-    lists = emb.select(
-        "vec_id", "v", "norm", F.explode(rep(F.col("v"))).alias("cent_id")
-    )
-    probe = _assign_arrow_udf(cents_rows, nprobe)
-    probes = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qn"),
-            F.explode(probe(F.col("v"))).alias("cent_id"),
-        )
-    )
-    pairs = lists.join(F.broadcast(probes), "cent_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")), 6)
-    # One candidate exchange, not two: hashpartitioning(query_id) already
-    # satisfies the (query_id, vec_id) dedup's clustered distribution, so
-    # repartitioning by query_id FIRST lets the dropDuplicates aggregate
-    # AND the rank window share a single exchange (the dedup previously
-    # inserted its own (query_id, vec_id) exchange, then the window
-    # re-exchanged by query_id). Value-identical: every duplicate carries
-    # the same cosine, so which copy survives is immaterial.
-    scored = (
-        pairs.select("query_id", "vec_id", cos.alias("cosine"))
-        .repartition("query_id")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
+    return _rank(
+        _probe_pairs(_spann_lists(emb, cents_rows), _arrow_probes(emb, cents_rows)),
+        dedup=True,
     )
 
 
 def topk_ivf_spann_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPANN boundary replication under FIXED centroids — the
-    oracle-checkable twin of ``topk_ivf_spann``'s REPLICATION rule
-    (VERDICT r16 order 1: the last ANN serving rule with no
-    driver-hash-verified row). The memory-side closeness bound —
-    every vector files into its nearest list AND every list whose
+    oracle-checkable twin of ``topk_ivf_spann``'s REPLICATION rule.
+    Every vector files into its nearest list AND every list whose
     cosine-gap is within ``(1+eps)^2`` of the nearest's, capped at
-    ``SPANN_RMAX`` replicas closest-first — is exactly
-    ``_assign_spann_udf``'s criterion (``ranked <= bound*ranked[:,0]``
-    over a stable gap-ascending argsort truncated at rmax), restated
-    as a pure window formulation over corpus x 16 broadcast
-    centroids, so the driver hash-pins its semantics: a drifted eps,
-    an off-by-one in the RMAX clamp, or a wrong tie order at the
+    ``SPANN_RMAX`` replicas closest-first — exactly
+    ``_assign_spann_udf``'s criterion — evaluated in-row over the
+    broadcast centroid array, with a window formulation as the DuckDB
+    twin, so the driver hash-pins its semantics: a drifted eps, an
+    off-by-one in the RMAX clamp, or a wrong tie order at the
     replication cut would all hash-mismatch. eps and RMAX are the
-    DEPLOYED constants (``SPANN_EPS``/``SPANN_RMAX``, defined above,
-    referenced directly — no duplicate literals to drift).
+    DEPLOYED constants (``SPANN_EPS``/``SPANN_RMAX``).
 
-    The trained path applies the same rule in one Arrow matmul pass;
-    this twin pins the RULE, not that vectorized evaluation — ties at
-    the bound break identically ((gap asc, cent_id) here = stable
-    argsort with cent_id-ascending input there; the RMAX tie cut is
-    pinned by a constructed equi-gap fixture in
-    tests/test_similarity_ivf.py, an arm organic float64 data never
-    hits). Probe side and rank are ``topk_ivf``'s (fixed nprobe);
+    Ties at the bound break identically to the numpy evaluation ((gap
+    asc, cent_id) here = stable argsort with cent_id-ascending input
+    there); the RMAX tie cut is pinned by a constructed equi-gap
+    fixture in tests/test_similarity_ivf.py, an arm organic float64
+    data never hits. Probe side is ``topk_ivf``'s (fixed nprobe);
     duplicate (query, candidate) pairs from multi-list membership
-    collapse via DISTINCT before ranking — value-deterministic, the
-    cosine is identical on every replica.
+    collapse in the ranker's ``dedup`` (the oracle's DISTINCT).
 
     100 TB shape: identical to ``topk_ivf_spann`` — replication
     multiplies the INDEX (bounded by SPANN_RMAX), never the scan; the
-    assignment is MAP-SIDE since round 18 (in-row over the broadcast
-    centroid array, replacing the vec_id-partitioned window exchange of
-    the full corpus — guide §2.4; output bit-identical, the DuckDB
-    oracle keeps the equivalent window formulation and the driver hash
-    still pins every rule detail), and a query still reads nprobe lists
-    of ~factor/K of the corpus each."""
+    assignment is map-side, and a query still reads nprobe lists of
+    ~factor/K of the corpus each."""
     bound = (1.0 + SPANN_EPS) ** 2
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     cents = _ivf_centroids(emb)
-    # Per-vector, in one row: gaps to all K broadcast centroids, sorted
+    # Per vector, in one row: gaps to all K broadcast centroids, sorted
     # (gap ASC, cent_id ASC) — the window's exact order; `close` counts
-    # the (1+eps)^2-closeness hits against gmin = the sorted head's gap
-    # (same double min(gap) produced); the kept replica set is the sorted
-    # prefix of length greatest(1, least(RMAX, close)) — precisely the
-    # rows the old `arank <= clamp` filter kept.
-    gaps = F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            (
-                F.lit(1.0)
-                - _dot(F.col("v"), c["cv"]) / (F.col("norm") * c["cn"])
-            ).alias("gap"),
-            c["cent_id"].alias("cent_id"),
-        ),
-    )
-    sg = F.array_sort(
-        gaps,
-        lambda l, r: (
-            F.when(l["gap"] < r["gap"], F.lit(-1))
-            .when(l["gap"] > r["gap"], F.lit(1))
-            .when(l["cent_id"] < r["cent_id"], F.lit(-1))
-            .when(l["cent_id"] > r["cent_id"], F.lit(1))
-            .otherwise(F.lit(0))
-        ),
-    )
+    # the (1+eps)^2-closeness hits against gmin = the sorted head's gap;
+    # the kept replica set is the sorted prefix of length
+    # greatest(1, least(RMAX, close)).
+    sg = _sorted_cents("gap", lambda c: F.lit(1.0) - _cent_cos(c), desc=False)
     gmin = F.element_at(F.col("_sg"), 1)["gap"]
     close = F.size(
         F.filter(F.col("_sg"), lambda x: x["gap"] <= F.lit(bound) * gmin)
@@ -1618,86 +1567,16 @@ def topk_ivf_spann_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", "v", "norm", F.col("_g.cent_id").alias("cent_id"))
     )
-    probes = _assign(
-        emb.filter(F.col("vec_id") < N_QUERIES), cents, IVF_NPROBE, "cent_id"
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        "cent_id",
-    )
-    pairs = lists.join(F.broadcast(probes), "cent_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    qcos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")), 6)
-    # Same single-exchange fold as ``topk_ivf_spann``: repartition by
-    # query_id so the duplicate-collapse aggregate and the rank window
-    # share one exchange (duplicates carry identical cosines — which copy
-    # survives is immaterial, and the oracle's DISTINCT agrees).
-    scored = (
-        pairs.select("query_id", "vec_id", qcos.alias("cosine"))
-        .repartition("query_id")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _rank(_probe_pairs(lists, _nearest_probes(emb, cents)), dedup=True)
 
 
-def _topk_ivf_spann_fixed_oracle() -> str:
-    bound = (1.0 + SPANN_EPS) ** 2
-    return f"""
+TOPK_IVF_SPANN_FIXED_ORACLE = f"""
 WITH e AS ({EMB_NORM_SQL}),
-c AS (SELECT vec_id AS cent_id, v AS cv, norm AS cn FROM e
-      WHERE vec_id >= {IVF_CENT_LO} AND vec_id < {IVF_CENT_HI}),
-g AS (
-    SELECT e.vec_id, e.v, e.norm, c.cent_id,
-           1.0 - {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) AS gap
-    FROM e CROSS JOIN c
-),
-a AS (
-    SELECT *,
-           min(gap) OVER (PARTITION BY vec_id) AS gmin,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY gap ASC, cent_id) AS arank
-    FROM g
-),
-lists AS (
-    SELECT vec_id, v, norm, cent_id FROM (
-        SELECT *,
-               sum(CASE WHEN gap <= {bound!r} * gmin THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY vec_id) AS close
-        FROM a
-    ) WHERE arank <= greatest(1, least({SPANN_RMAX}, close))
-),
-probes AS (
-    SELECT vec_id AS query_id, v AS qv, norm AS qn, cent_id FROM (
-        SELECT e.vec_id, e.v, e.norm, c.cent_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) DESC,
-                            c.cent_id) AS crank
-        FROM e CROSS JOIN c
-        WHERE e.vec_id < {N_QUERIES}
-    ) WHERE crank <= {IVF_NPROBE}
-),
-scored AS (
-    SELECT DISTINCT p.query_id, l.vec_id,
-           round({DOT_SQL.format(a="p.qv", b="l.v")} / (p.qn * l.norm), 6) AS cosine
-    FROM lists l JOIN probes p ON l.cent_id = p.cent_id
-    WHERE l.vec_id <> p.query_id
-)
-SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, vec_id) AS rank
-    FROM scored
-) WHERE rank <= {TOP_K}
-"""
-
-
-TOPK_IVF_SPANN_FIXED_ORACLE = _topk_ivf_spann_fixed_oracle()
+{IVF_CENTS_SQL},
+{_closeness_sql("lists", "vec_id, v, norm, cent_id", "a", "arank",
+                SPANN_EPS, 1, SPANN_RMAX)},
+{PROBES_SQL},
+{_probe_rank_sql("lists", "l", "DISTINCT ")}"""
 
 
 # --- metadata-filtered search ---------------------------------------------
@@ -1721,38 +1600,14 @@ def topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"))
     )
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-    )
-    cand = emb.join(en, "vec_id", "left_semi")
-    pairs = cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")), 6)
-    scored = pairs.select("query_id", "vec_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _exact_topk(emb, emb.join(en, "vec_id", "left_semi"))
 
 
 TOPK_FILTERED_ORACLE = f"""
 WITH e AS ({EMB_NORM_SQL}),
 en AS (SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'),
 c AS (SELECT e.* FROM e WHERE vec_id IN (SELECT vec_id FROM en)),
-q AS (SELECT vec_id AS query_id, v AS qv, norm AS qn FROM e WHERE vec_id < {N_QUERIES}),
-scored AS (
-    SELECT q.query_id, c.vec_id,
-           round({DOT_SQL.format(a="q.qv", b="c.v")} / (q.qn * c.norm), 6) AS cosine
-    FROM c JOIN q ON c.vec_id <> q.query_id
-)
-SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, vec_id) AS rank
-    FROM scored
-) WHERE rank <= {TOP_K}
-"""
+{_exact_topk_sql("c")}"""
 
 
 # --- int8 scalar quantization ----------------------------------------------
@@ -2221,23 +2076,9 @@ def _adc_rank(
     # (vec_id, v) corpus, with the normalize-fold + cosine evaluated ABOVE
     # the join — only the ~Q*R survivors pay the O(d) folds (``_div_by``
     # keeps the norm fold once per row).
-    rer = raw.join(
-        F.broadcast(short.join(F.broadcast(q), "query_id")), "vec_id"
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _dot(F.col("qnv"), _div_by(F.col("v"), F.sqrt(_dot(F.col("v"), F.col("v"))))),
-            6,
-        ).alias("cosine"),
-        "adc",
-    )
-    w3 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        rer.select("*", F.row_number().over(w3).alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "cosine", "adc", "rank")
-    )
+    rer = raw.join(F.broadcast(short.join(F.broadcast(q), "query_id")), "vec_id")
+    cos = _dot(F.col("qnv"), _div_by(F.col("v"), F.sqrt(_dot(F.col("v"), F.col("v")))))
+    return _rank(rer, cos, carry=("adc",))
 
 
 def _topk_pq_oracle(base_only: bool = False) -> str:
@@ -2367,22 +2208,8 @@ PQ_TRAINED_SHORTLIST_DIV = 100
 # rows/query is the cheaper side of that trade).
 PQ_TRAINED_IVF_SHORTLIST_MIN = 100
 
-# Query-side adaptive probe width for the trained IVF-PQ (round 13):
-# probe every list whose cosine-gap is within (1+eps)^2 of the nearest
-# list's, floored at the old fixed nprobe=K/3, capped at K. Measured on
-# the CLUSTERED n=20k crossover corpus (fixed nprobe read recall 0.54):
-# eps=0.1 never escapes the K/3 floor (all widths 47/47); eps=0.3
-# separates the corpora — mutated queries widen to mean 104/141 lists
-# while organic sf1 queries stay near the floor (mean 73) — and is the
-# knee: eps=0.4 saturates every mutated query at ~K for no recall gain
-# at equal shortlist (0.76 vs 0.78 at sl=450). Full grid in
-# SCALE_ann_r13.md.
-IVFPQ_PROBE_EPS = 0.3
-# The hash-verified adaptive twin (topk_ivf_adaptive) must pin the
-# deployed eps, not a drifted copy.
-assert IVFPQ_PROBE_EPS == IVF_ADAPT_EPS
-
-# The SAME width profile prices the second failure axis: residual-ADC
+# The adaptive probe width (IVFPQ_PROBE_EPS, defined with the IVF
+# family) prices the second failure axis: residual-ADC
 # distortion. On clustered corpora the global residual book pools many
 # disjoint clouds and the true neighbor's ADC rank degrades, so the
 # near-constant re-rank misses it even when its list WAS probed
@@ -2616,10 +2443,7 @@ def _assign_topn_np(x, cents_rows: "list[tuple[int, list[float]]]", n: int):
     + stable argsort). Returns ``list[list[int]]``."""
     import numpy as np
 
-    rows_sorted = sorted(cents_rows)
-    ids = np.asarray([cid for cid, _ in rows_sorted], dtype=np.int64)
-    cmat = np.asarray([cv for _, cv in rows_sorted], dtype=np.float64)
-    cn = np.sqrt((cmat * cmat).sum(axis=1))
+    ids, cmat, cn = _cent_matrix(cents_rows)
     scores = (x @ cmat.T) / cn
     idx = np.argsort(-scores, axis=1, kind="stable")[:, :n]
     return [ids[row].tolist() for row in idx]
@@ -2635,40 +2459,28 @@ def _probe_lists_adaptive(
     """Query-side ADAPTIVE probe selection: SPANN's (1+eps) closeness
     rule applied to the PROBE set instead of the posting lists — a query
     probes its nearest list plus every list whose cosine-gap is within
-    ``(1+eps)^2`` of the nearest's, floored at ``nprobe_min`` (the fixed
-    budget that was the only dial before round 13) and capped at
-    ``nprobe_max``.
+    ``(1+eps)^2`` of the nearest's, floored at ``nprobe_min`` and capped
+    at ``nprobe_max``.
 
-    Why (VERDICT r12 order 3): a fixed nprobe = K/3 is the wrong
-    constant for CLUSTERED corpora — on the mutated crossover corpus at
-    n=20k the coarse quantizer splits each replica cloud's boundary mass
-    across many near-equidistant lists and ivfpq_trained read recall
-    0.54, while the same constant scored 1.00 on the organic sf1
+    Why: a fixed nprobe = K/3 is the wrong constant for CLUSTERED
+    corpora — on the mutated crossover corpus at n=20k the coarse
+    quantizer splits each replica cloud's boundary mass across many
+    near-equidistant lists and ivfpq_trained read recall 0.54 at the
+    fixed width, while the same constant scored 1.00 on the organic sf1
     derivation. The gap profile distinguishes the two cases per query:
     an interior query's second-nearest list is far (few lists pass the
     eps bound — it keeps the floor), a boundary query sits between
     near-equidistant lists (many pass — it widens its own probe set).
-    Recall is bought exactly where it is lost, instead of raising the
-    constant for every query on every corpus. Measured in
-    SCALE_ann_r13.md; ties ranked like ``_assign_topn_np`` (stable
-    argsort, cent_id asc) so the floor probes are IDENTICAL to the
-    pre-r13 fixed set.
+    Recall is bought exactly where it is lost. Measured in
+    SCALE_ann_r13.md; ties break by cent_id (``_gap_order``), and the
+    rule is hash-verified through its window twin ``topk_ivf_adaptive``.
 
     Driver-side only (runs over the request-sized query matrix against
     the broadcast-sized centroid list); the corpus-side assignment is
     unchanged — at 100 TB this adds zero distributed work, it only
     changes how many posting lists a query's ADC join matches."""
-    import numpy as np
-
-    rows_sorted = sorted(cents_rows)
-    ids = np.asarray([cid for cid, _ in rows_sorted], dtype=np.int64)
-    cmat = np.asarray([cv for _, cv in rows_sorted], dtype=np.float64)
-    cn = np.sqrt((cmat * cmat).sum(axis=1))
-    xn = np.sqrt((x * x).sum(axis=1))
-    cos = (x @ cmat.T) / cn / xn[:, None]
-    gap = 1.0 - cos  # ||x-c||^2 / 2 on normalized vectors
-    order = np.argsort(gap, axis=1, kind="stable")
-    ranked = np.take_along_axis(gap, order, axis=1)
+    ids, cmat, cn = _cent_matrix(cents_rows)
+    order, ranked = _gap_order(x, cmat, cn)
     bound = (1.0 + eps) ** 2 * ranked[:, :1]
     nprobe_max = min(nprobe_max, len(ids))
     nprobe_min = min(nprobe_min, len(ids))
@@ -3239,6 +3051,65 @@ def _bylist_codes_source(
     )
 
 
+def _bylist_sources(
+    spark: SparkSession,
+    sf_dir: str,
+    emb: DataFrame,
+    lists: DataFrame,
+    probed: "list[int]",
+    m_subspaces: int,
+    names: "tuple[str, str, str]",
+    codes_of: "Callable[[DataFrame], DataFrame]",
+    delta: bool = False,
+) -> "tuple[DataFrame, DataFrame]":
+    """The IVF-PQ ``add`` half, BY-LIST: the (codes, raw) serving
+    relations of both IVF-PQ builders, pruned to the ``probed`` lists.
+
+    ``lists`` is the assigned corpus (vec_id, v, norm, cent_id); the
+    codes (``codes_of(lists)``) and a raw (vec_id, v) serving copy each
+    persist hive-partitioned by cent_id (``names`` = by-list codes, flat
+    codes, by-list raw artifact names) through
+    ``ann_index.cached_relation``. TWO co-partitioned artifacts rather
+    than one: the ADC scan reads code columns and the exact re-rank reads
+    vector columns, and a shared artifact would make every scan open the
+    other side's bytes. ``delta`` lets an append lineage assign + encode
+    only the rows past the watermark against the frozen models. Which
+    copy each side serves is the cost rule of ``_bylist_codes_source`` /
+    ``_bylist_raw_source``."""
+    from mapreduce_hadoop_spark.operators import ann_index
+
+    codes_name, flat_name, raw_name = names
+
+    def opener(name: str, build: "Callable[[DataFrame], DataFrame]"):
+        def open_() -> DataFrame:
+            return ann_index.cached_relation(
+                spark,
+                sf_dir,
+                name,
+                lambda: build(lists),
+                delta_build=(
+                    (lambda wm: build(lists.filter(F.col("vec_id") >= wm)))
+                    if delta
+                    else None
+                ),
+                partition_by="cent_id",
+            )
+
+        return open_
+
+    codes = _bylist_codes_source(
+        spark,
+        sf_dir,
+        opener(codes_name, codes_of),
+        codes_name,
+        flat_name,
+        probed,
+        m_subspaces,
+    )
+    raw_of = opener(raw_name, lambda src: src.select("vec_id", "v", "cent_id"))
+    return codes, _bylist_raw_source(emb, raw_of, sf_dir, raw_name, probed)
+
+
 def _topk_ivfpq_oracle() -> str:
     def code_sql(m: int) -> str:
         return " + ".join(
@@ -3268,19 +3139,9 @@ def _topk_ivfpq_oracle() -> str:
     ) + f" ELSE c{PQ_M - 1} END"
     return f"""
 WITH e AS ({EMB_NORM_SQL}),
-c AS (SELECT vec_id AS cent_id, v AS cv, norm AS cn FROM e
-      WHERE vec_id >= {IVF_CENT_LO} AND vec_id < {IVF_CENT_HI}),
+{IVF_CENTS_SQL},
 nc AS (SELECT cent_id, [cv[i]/cn for i in range(1, {EMB_DIM + 1})] AS ncv FROM c),
-assigned AS (
-    SELECT vec_id, v, norm, cent_id FROM (
-        SELECT e.vec_id, e.v, e.norm, c.cent_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) DESC,
-                            c.cent_id) AS crank
-        FROM e CROSS JOIN c
-    ) WHERE crank <= 1
-),
+{ASSIGNED_SQL},
 base AS (SELECT a.vec_id, a.cent_id,
            [a.v[i]/a.norm - nc.ncv[i] for i in range(1, {EMB_DIM + 1})] AS r
          FROM assigned a JOIN nc ON nc.cent_id = a.cent_id),
@@ -3299,15 +3160,7 @@ qres AS (
     SELECT p.query_id, p.cent_id,
            [p.qv[i]/p.qn - nc.ncv[i] for i in range(1, {EMB_DIM + 1})] AS qr
     FROM (
-        SELECT vec_id AS query_id, v AS qv, norm AS qn, cent_id FROM (
-            SELECT e.vec_id, e.v, e.norm, c.cent_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {DOT_SQL.format(a="e.v", b="c.cv")} / (e.norm * c.cn) DESC,
-                                c.cent_id) AS crank
-            FROM e CROSS JOIN c
-            WHERE e.vec_id < {N_QUERIES}
-        ) WHERE crank <= {IVF_NPROBE}
+        {_nearest_sql(PROBES_COLS_SQL, IVF_NPROBE, f" WHERE e.vec_id < {N_QUERIES}")}
     ) p JOIN nc ON nc.cent_id = p.cent_id
 ),
 adc AS MATERIALIZED (SELECT p.query_id, p.cent_id, c.m, c.code,
@@ -3354,9 +3207,7 @@ FIXED_IVFPQ_FLAT_CODES_FNAME = f"codes_ivfpqfix_m{PQ_M}_K{IVF_K}.parquet"
 FIXED_IVFPQ_RAW_FNAME = f"bylist_raw_ivfpqfix_K{IVF_K}.parquet"
 
 
-def topk_ivfpq_fixed(
-    spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
-) -> DataFrame:
+def topk_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual IVF-PQ under deterministic books, served through the
     BY-LIST ARTIFACT + COST-RULE machinery — the hash-verifiable
     twin of ``topk_ivfpq_trained``'s serving layer.
@@ -3372,15 +3223,14 @@ def topk_ivfpq_fixed(
     one global Lloyd-trained book instead.
 
     Serving plan: the trained path's — hive-partitioned codes + raw
-    artifacts (``ann_index.cached_relation(partition_by="cent_id")``),
-    driver-known probe-union directory pruning, the cost-based
-    ``_bylist_codes_source`` / ``_bylist_raw_source`` branches, and the
-    driver-built per-(query, probed list) query side. Every artifact and
-    driver-side decision is a pure function of the corpus, so the whole
-    by-list machinery — partition layout, pruned scans, byte arithmetic,
-    branch flip — lands under the value hash of ``TOPK_IVFPQ_ORACLE``;
-    both cost branches are forced output-invariant by
-    tests/test_similarity_pq.py.
+    artifacts (``_bylist_sources``), driver-known probe-union directory
+    pruning, the cost-based ``_bylist_codes_source`` /
+    ``_bylist_raw_source`` branches, and the driver-built per-(query,
+    probed list) query side. Every artifact and driver-side decision is a
+    pure function of the corpus, so the whole by-list machinery —
+    partition layout, pruned scans, byte arithmetic, branch flip — lands
+    under the value hash of ``TOPK_IVFPQ_ORACLE``; both cost branches are
+    forced output-invariant by tests/test_similarity_pq.py.
 
     Append lineages are NOT modeled here (books/codes derive from the
     live corpus): the append contract's hash coverage lives in
@@ -3393,55 +3243,23 @@ def topk_ivfpq_fixed(
     n = _emb_count(emb, sf_dir)
     cents = _ivf_centroids(emb)
     ncents = cents.select("cent_id", _div_by("cv", "cn").alias("ncv"))
+    lists = _assign(emb, cents, 1)
 
     def residuals(src: DataFrame) -> DataFrame:
-        return (
-            _assign(src, cents, 1, "cent_id")
-            .join(F.broadcast(ncents), "cent_id")
-            .select(
-                "vec_id",
-                "cent_id",
-                F.zip_with(
-                    _div_by("v", "norm"), F.col("ncv"), lambda a, b: a - b
-                ).alias("r"),
-            )
+        return src.join(F.broadcast(ncents), "cent_id").select(
+            "vec_id",
+            "cent_id",
+            F.zip_with(_div_by("v", "norm"), F.col("ncv"), lambda a, b: a - b).alias("r"),
         )
 
     rows = ann_index.fixed_model(
         sf_dir,
         FIXED_IVFPQ_BOOKS_FNAME,
         ["cent_id", "m", "code", "cd"],
-        lambda: _fixed_books_rows(residuals(emb), "r"),
+        lambda: _fixed_books_rows(residuals(lists), "r"),
         frozen_base=False,
     )
     rows = [(int(c), int(m), int(code), list(cd)) for c, m, code, cd in rows]
-
-    # The FAISS ``add`` half, by-list: codes AND a raw serving copy
-    # hive-partitioned by coarse list, both pruned to the probe union at
-    # read time — the same artifact layer as the trained path.
-    def open_bylist_codes() -> DataFrame:
-        return ann_index.cached_relation(
-            spark,
-            sf_dir,
-            FIXED_IVFPQ_CODES_FNAME,
-            lambda: residuals(emb).select(
-                "vec_id",
-                *[_pq_code(F.col("r"), m).alias(f"c{m}") for m in range(PQ_M)],
-                "cent_id",
-            ),
-            partition_by="cent_id",
-        )
-
-    def open_bylist_raw() -> DataFrame:
-        return ann_index.cached_relation(
-            spark,
-            sf_dir,
-            FIXED_IVFPQ_RAW_FNAME,
-            lambda: _assign(emb, cents, 1, "cent_id").select(
-                "vec_id", "v", "cent_id"
-            ),
-            partition_by="cent_id",
-        )
 
     # Probe selection, driver-side with STRICT sequential arithmetic
     # (_strict_dot), so the probes match `_assign(..., nprobe)`'s
@@ -3465,25 +3283,27 @@ def topk_ivfpq_fixed(
         scored = sorted(
             (-(_strict_dot(v, cv) / (qn * cn[cid])), cid) for cid, cv in crows
         )
-        probe_lists.append([cid for _neg, cid in scored[:nprobe]])
+        probe_lists.append([cid for _neg, cid in scored[:IVF_NPROBE]])
     q, qarr = _query_side(
         spark, emb, sf_dir, rows, PQ_M, PQ_SUB, probe_lists, crows
     )
 
     probed = sorted({int(c) for pl in probe_lists for c in pl})
-    pruned = _bylist_codes_source(
+    codes, raw = _bylist_sources(
         spark,
         sf_dir,
-        open_bylist_codes,
-        FIXED_IVFPQ_CODES_FNAME,
-        FIXED_IVFPQ_FLAT_CODES_FNAME,
+        emb,
+        lists,
         probed,
         PQ_M,
+        (FIXED_IVFPQ_CODES_FNAME, FIXED_IVFPQ_FLAT_CODES_FNAME, FIXED_IVFPQ_RAW_FNAME),
+        lambda src: residuals(src).select(
+            "vec_id",
+            *[_pq_code(F.col("r"), m).alias(f"c{m}") for m in range(PQ_M)],
+            "cent_id",
+        ),
     )
-    raw = _bylist_raw_source(
-        emb, open_bylist_raw, sf_dir, FIXED_IVFPQ_RAW_FNAME, probed
-    )
-    return _adc_rank(pruned, qarr, raw, q, _pq_shortlist(n), candidates_per_query=n)
+    return _adc_rank(codes, qarr, raw, q, _pq_shortlist(n), candidates_per_query=n)
 
 
 def topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3532,8 +3352,8 @@ def topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     model_n = ann_index.model_corpus_count(emb, sf_dir)
     k = max(IVF_K, math.isqrt(model_n))
     nprobe = max(IVF_NPROBE, k // 3)
-    cents = _trained_centroids(spark, emb, sf_dir, k=k)
     cents_rows = ann_index.coarse_centroids(spark, emb, sf_dir, k)
+    cents = _cents_relation(spark, cents_rows)
     coarse_k = len(cents_rows)
 
     # Both serving dials ADAPT to the query/quantizer geometry instead of
@@ -3595,67 +3415,32 @@ def topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cent_id",
         )
 
-    def raw_src(src: DataFrame) -> DataFrame:
-        return src.select("vec_id", "v", "cent_id")
-
-    # The FAISS ``add`` half, BY-LIST RAW-IN-INDEX: the codes AND a
-    # serving copy of the raw vectors persist hive-partitioned by coarse
-    # list, the way queries read them. TWO co-partitioned artifacts rather
-    # than one: the ADC scan reads code columns and the exact re-rank
-    # reads vector columns, and a shared artifact would make every scan
-    # open (and a byte-accounting reader count) the other side's bytes.
-    # Both prune to the driver-known probed-list union (directory pruning,
-    # measured in SCALE_ann_r14.md §5). The codes name keys the residual
-    # book, the coarse quantizer and the training recipe; the raw copy
-    # depends only on the assignment, so it keys the coarse recipe alone.
-    # Appended corpora assign + encode only the delta against the frozen
-    # models, partitioned the same way.
+    # The codes name keys the residual book, the coarse quantizer and the
+    # training recipe; the raw copy depends only on the assignment, so it
+    # keys the coarse recipe alone. The literal probe-union isin() is
+    # what lets the parquet source skip unprobed list directories at
+    # planning time (the cent_id broadcast join prunes rows, not
+    # partitions); shortlist candidates all come from probed lists, so
+    # serving the re-rank from the same pruned relation is exact.
     flat_codes_name = ann_index.codes_artifact_name(
         "res", PQ_TRAINED_M, book_k, coarse_k=coarse_k
     )
-    codes_name = "bylist_" + flat_codes_name
-
-    def open_bylist_codes() -> DataFrame:
-        return ann_index.cached_relation(
-            spark,
-            sf_dir,
-            codes_name,
-            lambda: codes_src(lists),
-            delta_build=lambda wm: codes_src(lists.filter(F.col("vec_id") >= wm)),
-            partition_by="cent_id",
-        )
-
     raw_name = (
         f"bylist_raw_K{coarse_k}_"
         f"{ann_index._recipe(ann_index.COARSE_MAXITER)}.parquet"
     )
-
-    def open_bylist_raw() -> DataFrame:
-        return ann_index.cached_relation(
-            spark,
-            sf_dir,
-            raw_name,
-            lambda: raw_src(lists),
-            delta_build=lambda wm: raw_src(lists.filter(F.col("vec_id") >= wm)),
-            partition_by="cent_id",
-        )
-
-    # The literal probe-union isin() is what lets the parquet source skip
-    # unprobed list directories at planning time (the cent_id broadcast
-    # join prunes rows, not partitions). Shortlist candidates all come from
-    # probed lists, so serving the re-rank from the same pruned relation is
-    # exact.
     probed = sorted({int(c) for pl in probe_lists for c in pl})
-    pruned = _bylist_codes_source(
+    pruned, raw = _bylist_sources(
         spark,
         sf_dir,
-        open_bylist_codes,
-        codes_name,
-        flat_codes_name,
+        emb,
+        lists,
         probed,
         PQ_TRAINED_M,
+        ("bylist_" + flat_codes_name, flat_codes_name, raw_name),
+        codes_src,
+        delta=True,
     )
-    raw = _bylist_raw_source(emb, open_bylist_raw, sf_dir, raw_name, probed)
     q, qarr = _query_side(
         spark, emb, sf_dir, rows, PQ_TRAINED_M, PQ_TRAINED_SUB, probe_lists, cents_rows
     )

@@ -716,18 +716,20 @@ def _specs() -> dict[str, QuerySpec]:
             temporal.views_before_purchase_range_join,
             temporal.VIEWS_BEFORE_PURCHASE_ORACLE,
         ),
-        # K-means training is not SQL-expressible -> rows-only; recall vs
-        # the fixed-centroid variant bounded in tests/test_similarity_ivf.py.
+        # The IVF entries are one probe-and-rank path (lists JOIN
+        # broadcast(probes) -> self-filter -> the exact top-K ranker);
+        # each differs only in centroid source, list assignment and probe
+        # selection. K-means centroids here: training is not
+        # SQL-expressible -> rows-only; recall vs the fixed-centroid
+        # variant bounded in tests/test_similarity_ivf.py.
         "similarity_topk_ivf_trained": (similarity.topk_ivf_trained, None),
-        # Rule 1b, round 11 (slot freed by retiring fn_width_bucket):
-        # SPANN-style boundary replication over the trained quantizer —
-        # boundary vectors file into every list within the (1+eps)
-        # closeness bound (eps=0.1: recall 0.98/0.94 at sf0.01/sf0.1 vs
+        # IVF path, trained centroids, SPANN boundary replication as the
+        # list assignment: every list within the (1+eps) closeness bound
+        # (eps=0.1: recall 0.98/0.94 at sf0.01/sf0.1 vs
         # topk_ivf_trained's 0.80/0.88, at a measured 2.3x/2.8x index
-        # replication bounded by SPANN_RMAX). Recall bought with index
-        # size instead of probe width — the third axis after nprobe and
-        # K. K-means + replication not SQL-expressible -> rows-only;
-        # recall bounded in tests/test_similarity_ivf.py.
+        # replication bounded by SPANN_RMAX) — recall bought with index
+        # size instead of probe width. Rows-only (k-means); recall
+        # bounded in tests/test_similarity_ivf.py.
         "similarity_topk_ivf_spann": (similarity.topk_ivf_spann, None),
         # multimodal_decode_stub RETIRED round 6 (size policy);
         # multimodal_resize_stub RETIRED round 10 (retirement-candidate #1
@@ -876,25 +878,25 @@ def _specs() -> dict[str, QuerySpec]:
             similarity.near_dup_cosine_lsh,
             similarity.NEAR_DUP_LSH_ORACLE,
         ),
+        # IVF path, fixed centroids (corpus rows [100, 116)), nearest-list
+        # assignment, nearest-nprobe probes: the oracle-checkable twin of
+        # similarity_topk_ivf_trained.
         "similarity_topk_ivf": (similarity.topk_ivf, similarity.TOPK_IVF_ORACLE),
-        # NEW round 17 (VERDICT r16 order 1): the SPANN memory-side
-        # replication rule — nearest list + every list within the
+        # IVF path, fixed centroids, the SPANN replication rule as the
+        # list assignment — nearest list + every list within the
         # (1+eps)^2 closeness bound of the nearest gap, capped at
-        # SPANN_RMAX closest-first, nearest ALWAYS kept — as a pure
-        # window formulation over fixed centroids, hash-verifying the
-        # last ANN serving rule that had no driver-enforced row (the
-        # probe-side rule got its twin in round 16). The RMAX tie cut
-        # is pinned by a constructed equi-gap fixture the organic
-        # float64 data never hits.
+        # SPANN_RMAX closest-first, nearest ALWAYS kept — hash-verifying
+        # the rule similarity_topk_ivf_spann serves. The RMAX tie cut is
+        # pinned by a constructed equi-gap fixture the organic float64
+        # data never hits.
         "similarity_topk_ivf_spann_fixed": (
             similarity.topk_ivf_spann_fixed,
             similarity.TOPK_IVF_SPANN_FIXED_ORACLE,
         ),
-        # NEW round 16 (VERDICT r15 order 5): the (1+eps)^2 adaptive
-        # probe-width rule (the round-13 serving dial, until now only on
-        # rows-only k-means paths) as a pure window formulation over the
-        # fixed centroids — hash-verifies the dial's SEMANTICS (width
-        # clamp, tie order, the deployed eps).
+        # IVF path, fixed centroids, the (1+eps)^2 adaptive probe-width
+        # rule the trained IVF-PQ serves as the probe selection, in a
+        # window formulation — hash-verifies the rule's width clamp, tie
+        # order and the deployed eps (IVFPQ_PROBE_EPS).
         "similarity_topk_ivf_adaptive": (
             similarity.topk_ivf_adaptive,
             similarity.TOPK_IVF_ADAPTIVE_ORACLE,

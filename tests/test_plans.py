@@ -7,6 +7,8 @@ or breaks scan pruning/pushdown.
 
 from __future__ import annotations
 
+import pytest
+
 from mapreduce_hadoop_spark.operators import analytics, histogram, sessionize
 from mapreduce_hadoop_spark.plans.checks import (
     plan_counts,
@@ -78,16 +80,6 @@ def test_cube_expands_in_one_pass(spark, sf_dir):
     c = plan_counts(events_cube(spark, sf_dir))
     assert c["expand"] == 1 and c["exchange"] == 1, c
     assert c["hash_aggregate"] == 2, c
-
-
-def test_ivf_never_cartesian(spark, sf_dir):
-    # Centroid scoring is a broadcast nested-loop over a 16-row side (bounded
-    # by construction); an unbroadcast CartesianProduct would be quadratic.
-    from mapreduce_hadoop_spark.operators.similarity import topk_ivf
-
-    c = plan_counts(topk_ivf(spark, sf_dir))
-    assert c["cartesian"] == 0, c
-    assert c["broadcast_exchange"] >= 1, c
 
 
 def test_cleanse_pipeline_single_scan(spark, sf_dir):
@@ -475,21 +467,49 @@ def test_topk_filtered_plan_identity_post_retirement(spark, duck, sf_dir):
     assert key(sdf) == key(odf) and len(sdf) > 0
 
 
-def test_spann_candidate_side_single_exchange(spark, sf_dir):
-    """Round 18: the SPANN twins' duplicate-collapse aggregate and rank
-    window must share ONE query_id exchange — the dropDuplicates used to
-    insert its own (query_id, vec_id) exchange and the window then
-    re-exchanged by query_id. hashpartitioning(query_id) satisfies the
-    (query_id, vec_id) clustered distribution, so the fold is free."""
+# Shuffle count of each top-K builder routed through the one ranker
+# (``similarity._rank``), pinned from the plans before the builders were
+# folded onto it. The adaptive twin's second exchange is its probe-width
+# window over (query x centroid) rows, keyed on vec_id.
+TOPK_RANKER_SHUFFLES = {
+    "topk_bruteforce": 1,
+    "topk_lsh": 1,
+    "topk_ivf": 1,
+    "topk_ivf_trained": 1,
+    "topk_ivf_adaptive": 2,
+    "topk_ivf_spann": 1,
+    "topk_ivf_spann_fixed": 1,
+}
+
+
+@pytest.mark.parametrize("builder", sorted(TOPK_RANKER_SHUFFLES))
+def test_spann_candidate_side_single_exchange(
+    spark, sf_dir, tmp_path, monkeypatch, builder
+):
+    """Every exact top-K builder keeps its shuffle count, and its rank
+    window's exchange keys on query_id alone: the SPANN/LSH duplicate
+    collapse shares that exchange (hashpartitioning(query_id) satisfies
+    the (query_id, vec_id) clustered distribution), so no exchange keys
+    on vec_id next to query_id. The query side (and any centroid side)
+    is broadcast: an unbroadcast CartesianProduct would be quadratic."""
     import re
 
-    from mapreduce_hadoop_spark.operators.similarity import topk_ivf_spann_fixed
+    from mapreduce_hadoop_spark.operators import ann_index, similarity
     from mapreduce_hadoop_spark.plans.checks import executed_plan
 
-    plan = executed_plan(topk_ivf_spann_fixed(spark, sf_dir))
-    shuffles = re.findall(r"Exchange hashpartitioning\([^)]*\)", plan)
-    assert len(shuffles) == 1, shuffles
-    assert "query_id" in shuffles[0] and "vec_id" not in shuffles[0], shuffles
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    ann_index.clear_memos()
+    try:
+        plan = executed_plan(getattr(similarity, builder)(spark, sf_dir))
+    finally:
+        ann_index.clear_memos()
+    shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    assert len(shuffles) == TOPK_RANKER_SHUFFLES[builder], shuffles
+    rank_keys = [s for s in shuffles if re.fullmatch(r"query_id#\d+L?, \d+", s)]
+    assert len(rank_keys) == 1, shuffles
+    assert not any("query_id" in s and "vec_id" in s for s in shuffles), shuffles
+    assert "CartesianProduct" not in plan
+    assert "BroadcastExchange" in plan
 
 
 def test_topk_lsh_dedups_narrow_rows_single_exchange(spark, sf_dir):

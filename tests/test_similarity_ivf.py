@@ -414,10 +414,10 @@ def test_ivf_adaptive_matches_oracle_and_clamps(spark, duck, sf_dir, tmp_path):
     from mapreduce_hadoop_spark.operators.similarity import (
         DOT_SQL,
         EMB_NORM_SQL,
-        IVF_ADAPT_EPS,
         IVF_ADAPT_FLOOR,
         IVF_CENT_HI,
         IVF_CENT_LO,
+        IVFPQ_PROBE_EPS,
         N_QUERIES,
         TOPK_IVF_ADAPTIVE_ORACLE,
         topk_ivf_adaptive,
@@ -430,7 +430,7 @@ def test_ivf_adaptive_matches_oracle_and_clamps(spark, duck, sf_dir, tmp_path):
     )
     assert key(sdf) == key(odf) and len(sdf) > 0
 
-    bound = (1.0 + IVF_ADAPT_EPS) ** 2
+    bound = (1.0 + IVFPQ_PROBE_EPS) ** 2
     widths = duck.execute(f"""
         WITH e AS ({EMB_NORM_SQL}),
         c AS (SELECT vec_id AS cent_id, v AS cv, norm AS cn FROM e

@@ -935,7 +935,14 @@ def test_floor_probe_lineage_commits_no_flat_codes(spark, sf_dir, tmp_path, monk
         ann_index.clear_memos()
 
 
-PQ_REGISTRY_QUERIES = [
+TOPK_REGISTRY_QUERIES = [
+    "similarity_topk_bruteforce",
+    "similarity_topk_lsh",
+    "similarity_topk_ivf",
+    "similarity_topk_ivf_trained",
+    "similarity_topk_ivf_adaptive",
+    "similarity_topk_ivf_spann",
+    "similarity_topk_ivf_spann_fixed",
     "similarity_topk_pq",
     "similarity_topk_pq_trained",
     "ann_append_serving",
@@ -945,14 +952,14 @@ PQ_REGISTRY_QUERIES = [
 ]
 
 
-@pytest.mark.parametrize("name", PQ_REGISTRY_QUERIES)
+@pytest.mark.parametrize("name", TOPK_REGISTRY_QUERIES)
 def test_pq_serve_releases_every_cached_intermediate(
     spark, sf_dir, tmp_path, monkeypatch, name
 ):
-    """Cache lifecycle of the PQ serving pipeline: after a registered PQ
-    query is built and collected, ``unpersist_intermediates`` must leave
-    NO persisted RDD behind — whichever books source, codes layout, or
-    cost branch the query took."""
+    """Cache lifecycle of every registered top-K serve: after the query
+    is built and collected, ``unpersist_intermediates`` must leave NO
+    persisted RDD behind — whichever ranker path, books source, codes
+    layout, or cost branch the query took."""
     from mapreduce_hadoop_spark import registry
     from mapreduce_hadoop_spark.operators import ann_index, dedup
 

@@ -54,47 +54,19 @@ def main() -> None:
         for r in similarity.topk_bruteforce(spark, sf_dir).collect():
             exact.setdefault(r["query_id"], set()).add(r["vec_id"])
         nprobe = similarity.IVF_NPROBE
+        probes = similarity._arrow_probes(emb, cents_rows)
         for eps in EPS_SWEEP:
-            rep_udf = similarity._assign_spann_udf(
-                cents_rows, eps, similarity.SPANN_RMAX
-            )
-            lists = emb.select(
-                "vec_id", "v", "norm", F.explode(rep_udf(F.col("v"))).alias("cent_id")
-            )
-            probe_udf = similarity._assign_arrow_udf(cents_rows, nprobe)
-            probes = emb.filter(F.col("vec_id") < similarity.N_QUERIES).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("v").alias("qv"),
-                F.col("norm").alias("qn"),
-                F.explode(probe_udf(F.col("v"))).alias("cent_id"),
-            )
+            # The served plan of topk_ivf_spann, with eps swept.
+            lists = similarity._spann_lists(emb, cents_rows, eps)
             index_rows = lists.count()
-            pairs = lists.join(F.broadcast(probes), "cent_id").filter(
-                F.col("vec_id") != F.col("query_id")
-            )
+            pairs = similarity._probe_pairs(lists, probes)
             stats = pairs.agg(
                 F.count(F.lit(1)).alias("cand"),
                 F.countDistinct("query_id", "vec_id").alias("dcand"),
                 F.countDistinct("query_id", "cent_id").alias("fetches"),
             ).collect()[0]
             q_n = similarity.N_QUERIES
-            cos = F.round(
-                similarity._dot(F.col("qv"), F.col("v"))
-                / (F.col("qn") * F.col("norm")),
-                6,
-            )
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("vec_id")
-            )
-            top = (
-                pairs.select("query_id", "vec_id", cos.alias("cosine"))
-                .dropDuplicates(["query_id", "vec_id"])
-                .select("*", F.row_number().over(w).alias("rank"))
-                .filter(F.col("rank") <= similarity.TOP_K)
-                .collect()
-            )
+            top = similarity._rank(pairs, dedup=True).collect()
             got: dict[int, set] = {}
             for r in top:
                 got.setdefault(r["query_id"], set()).add(r["vec_id"])
