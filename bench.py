@@ -495,8 +495,8 @@ def _stream_timeout_bench(spark, sf_dir: str) -> dict:
                 chunk = tbl.slice(i * step, step)
                 if chunk.num_rows == 0:
                     break
-                # Chunk 0 keeps the canonical name: positions_stream
-                # infers the stream schema from {dir}/events.parquet.
+                # Chunk 0 keeps the canonical name: the events stream
+                # reader infers its schema from {dir}/events.parquet.
                 name = "events.parquet" if i == 0 else f"events{i:02d}.parquet"
                 path = os.path.join(stage, name)
                 pq.write_table(chunk, path)
@@ -540,7 +540,8 @@ def _stream_timeout_bench(spark, sf_dir: str) -> dict:
             "state_rows_peak": max((so.get("numRowsTotal", 0) for so in ops), default=0),
             "state_rows_removed": sum(so.get("numRowsRemoved", 0) for so in ops),
         }
-    except Exception as e:  # never let the stream probe kill the headline
+    except Exception as e:  # noqa: BLE001 — reported, never kills the headline
+        print(f"stream probe failed: {type(e).__name__}: {e}", file=sys.stderr)
         return {"airport_trips_timeout_sec": -1.0, "err": type(e).__name__}
 
 

@@ -60,7 +60,11 @@ FROM events
 
 def positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPS-position stream: (taxi, t, lat, lon, status, event_id, event_date)."""
-    ev = load_table(spark, sf_dir, "events")
+    return positions_from(load_table(spark, sf_dir, "events"))
+
+
+def positions_from(ev: DataFrame) -> DataFrame:
+    """The positions projection of an events relation, batch or streaming."""
     return ev.select(
         F.col("user_id").alias("taxi"),
         (F.col("ts").cast("double") / F.lit(TIME_COMPRESSION)).alias("t"),

@@ -15,7 +15,7 @@ state machine over each taxi's time-ordered positions. Transitions:
 A closed trip is emitted only when cumulated distance >= 0.1 km and it
 touched the airport radius; revenue = 3.5 + 1.71 * distance.
 
-Two implementations, per SURVEY.md §7 step 4:
+Three implementations, per SURVEY.md §7 step 4:
 
 1. ``sessionize_window`` (engine default, SQL-expressible, one shuffle):
    lag() over (partition by taxi order by t) marks trip starts, a running
@@ -24,23 +24,35 @@ Two implementations, per SURVEY.md §7 step 4:
    whole-stage-codegen'd. It does NOT replicate the order-dependent
    speed-drop (a dropped point's successor distance would need the
    *pre-drop* previous point); on data without speed violations it is
-   bit-identical to the parity path (cross-checked in tests).
+   bit-identical to the parity paths (cross-checked in tests).
 
-2. ``sessionize_parity`` (exact reference semantics): per-taxi
-   ``applyInPandas`` replay of the state machine, Arrow-batched, parallel
-   across taxis. Intentional divergence from the reference, documented:
-   state is isolated per taxi (the reference leaks reducer state across
-   keys, ``:279-285``), which is the behavior the reference *intended*
-   (its partitioner routes whole taxis to one reducer precisely so state
-   never has to cross taxis).
+2. ``sessionize_parity`` (exact reference semantics): the Pandas replay.
+   ``replay_core`` transcribes the state machine; ``run_per_taxi`` feeds
+   it each taxi's time-ordered positions from an Arrow-batched
+   ``mapInPandas`` over taxi-partitioned data. Intentional divergence from
+   the reference, documented: state is isolated per taxi (the reference
+   leaks reducer state across keys, ``:279-285``), which is the behavior
+   the reference *intended* (its partitioner routes whole taxis to one
+   reducer precisely so state never has to cross taxis).
 
-Both paths leave trailing open trips unemitted, exactly like the reference
+3. ``sessionize_parity_sql`` (exact reference semantics, JVM only): the
+   same machine as a per-taxi ``F.aggregate`` fold; it backs the
+   registered ``airport_trips_parity``.
+
+The machine's whole state between two positions is one ``Carrier`` row
+(previous fix + open-trip accumulator, in ``STATE_SCHEMA`` order).
+``replay_core`` takes and returns it, so the streaming operator
+(``streaming/trips.py``) stores it in the state store as is and resumes a
+taxi exactly where the previous micro-batch left it.
+
+All paths leave trailing open trips unemitted, exactly like the reference
 (a trip still open at end-of-input is never written).
 """
 
 from __future__ import annotations
 
 import math
+from collections import namedtuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -71,13 +83,6 @@ def _round6_py(x: float) -> float:
 def _round6_col(c):
     """JVM twin of ``_round6_py`` — the same three IEEE ops."""
     return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-TRIP_SCHEMA = (
-    "taxi bigint, session_id bigint, start_t double, start_lat double, "
-    "start_lon double, stop_t double, stop_lat double, stop_lon double, "
-    "n_points bigint, dist_km double, is_airport boolean, revenue double, "
-    "trip_date string"
-)
 
 
 def sessionize_window(
@@ -266,38 +271,52 @@ SELECT * FROM t WHERE dist_km >= 0.1 AND is_airport
 
 # --- parity path: exact state-machine replay ------------------------------
 
-def fresh_carrier() -> dict:
+# The reducer carrier (``AirportTripsRevenue.java:279-285``): the previous
+# fix plus the open-trip accumulator, ``has_trip`` marking whether one is
+# open. It is also the streaming state-store row, hence the DDL.
+STATE_SCHEMA = (
+    "prev_status string, prev_lat double, prev_lon double, prev_t double, "
+    "has_trip boolean, start_t double, start_lat double, start_lon double, "
+    "airport boolean, dist double, trip_date string"
+)
+Carrier = namedtuple("Carrier", [f.split()[0] for f in STATE_SCHEMA.split(", ")])
+
+
+def fresh_carrier() -> Carrier:
     """Initial reducer-carrier state: before any input, the machine behaves
     as if the previous fix was an E at the epoch (reference field defaults,
-    ``AirportTripsRevenue.java:279-285``)."""
-    return {
-        "prev_status": "E",
-        "prev_lat": 0.0,
-        "prev_lon": 0.0,
-        "prev_t": 0.0,
-        "trip": None,
-    }
+    ``AirportTripsRevenue.java:279-285``), with no open trip."""
+    return Carrier("E", 0.0, 0.0, 0.0, False, 0.0, 0.0, 0.0, False, 0.0, "")
+
+
+# One emitted trip: taxi, start/stop fix, 6-dp distance and revenue, date.
+PARITY_SCHEMA = (
+    "taxi bigint, start_t double, start_lat double, start_lon double, "
+    "stop_t double, stop_lat double, stop_lon double, dist_km double, "
+    "revenue double, trip_date string"
+)
+PARITY_COLUMNS = [f.split()[0] for f in PARITY_SCHEMA.split(", ")]
 
 
 def replay_core(
     taxi: int,
     rows,
-    carrier: dict,
+    carrier: tuple,
     gap_s: float = C.MAX_SEGMENT_DELTA_TIME_S,
     max_speed_kmh: float = C.MAX_SEGMENT_SPEED_KMH,
     min_trip_km: float = C.MIN_TRIP_DISTANCE_KM,
     airport_lat: float = C.SFO_LAT,
     airport_lon: float = C.SFO_LONG,
     airport_radius_km: float = C.SFO_MAX_DISTANCE_KM,
-) -> tuple[list[tuple], dict]:
+) -> tuple[list[tuple], Carrier]:
     """Run the reference state machine over ``rows`` (iterable of
     (t, lat, lon, status, event_date), already time-ordered) starting from
-    ``carrier``; return (emitted airport trips, final carrier).
+    ``carrier`` (any tuple in ``STATE_SCHEMA`` order); return (emitted
+    airport trips, final carrier).
 
     Faithful transcription of ``AirportTripsRevenue.java:275-407`` with
     per-taxi state isolation (module docstring documents the divergence).
-    Shared by the batch parity path and the streaming stateful operator —
-    the carrier is exactly what persists across micro-batches there.
+    The open trip's date is carried as ``str(event_date)``.
     """
     d2r = C.DEGREES_TO_RADIANS
 
@@ -311,38 +330,21 @@ def replay_core(
         return dist(lat, lon, airport_lat, airport_lon) <= airport_radius_km
 
     out: list[tuple] = []
-    prev_status = carrier["prev_status"]
-    prev_lat, prev_lon, prev_t = carrier["prev_lat"], carrier["prev_lon"], carrier["prev_t"]
-    trip = carrier["trip"]
+    (prev_status, prev_lat, prev_lon, prev_t,
+     has_trip, start_t, start_lat, start_lon, airport, km, date) = carrier
 
     def close_trip(stop_t, stop_lat, stop_lon):
-        if trip is not None and trip["dist"] >= min_trip_km and trip["airport"]:
-            out.append(
-                (
-                    taxi,
-                    trip["start_t"],
-                    trip["start_lat"],
-                    trip["start_lon"],
-                    stop_t,
-                    stop_lat,
-                    stop_lon,
-                    _round6_py(trip["dist"]),
-                    _round6_py(C.START_FEE + C.KM_FEE * trip["dist"]),
-                    str(trip["date"])[:10],
-                )
-            )
+        if has_trip and km >= min_trip_km and airport:
+            out.append((
+                taxi, start_t, start_lat, start_lon, stop_t, stop_lat, stop_lon,
+                _round6_py(km), _round6_py(C.START_FEE + C.KM_FEE * km), date[:10],
+            ))
 
     for t, lat, lon, status, event_date in rows:
         delta = t - prev_t
         if prev_status == "E" and status == "M":
-            trip = {
-                "start_t": t,
-                "start_lat": lat,
-                "start_lon": lon,
-                "airport": near_airport(lat, lon),
-                "dist": 0.0,
-                "date": event_date,
-            }
+            has_trip, start_t, start_lat, start_lon = True, t, lat, lon
+            airport, km, date = near_airport(lat, lon), 0.0, str(event_date)
         elif prev_status == "M" and status == "M":
             if delta <= gap_s:
                 seg = dist(prev_lat, prev_lon, lat, lon)
@@ -352,70 +354,37 @@ def replay_core(
                     # previous point stays "previous" (reference `return`
                     # before the previous-position update, :331-334).
                     continue
-                trip["airport"] = trip["airport"] or near_airport(lat, lon)
-                trip["dist"] += seg
+                airport = airport or near_airport(lat, lon)
+                km += seg
             else:
                 close_trip(prev_t, prev_lat, prev_lon)
-                trip = {
-                    "start_t": t,
-                    "start_lat": lat,
-                    "start_lon": lon,
-                    "airport": near_airport(lat, lon),
-                    "dist": 0.0,
-                    "date": event_date,
-                }
+                has_trip, start_t, start_lat, start_lon = True, t, lat, lon
+                airport, km, date = near_airport(lat, lon), 0.0, str(event_date)
         elif prev_status == "M" and status == "E":
             close_trip(prev_t, prev_lat, prev_lon)
-            trip = None
+            has_trip = False
         prev_status, prev_lat, prev_lon, prev_t = status, lat, lon, t
 
-    carrier = {
-        "prev_status": prev_status,
-        "prev_lat": prev_lat,
-        "prev_lon": prev_lon,
-        "prev_t": prev_t,
-        "trip": trip,
-    }
-    return out, carrier
+    trip = (
+        (True, start_t, start_lat, start_lon, airport, km, date)
+        if has_trip
+        else fresh_carrier()[4:]
+    )
+    return out, Carrier(prev_status, prev_lat, prev_lon, prev_t, *trip)
 
 
-PARITY_COLUMNS = [
-    "taxi",
-    "start_t",
-    "start_lat",
-    "start_lon",
-    "stop_t",
-    "stop_lat",
-    "stop_lon",
-    "dist_km",
-    "revenue",
-    "trip_date",
-]
+def replay_frame(taxi, pdf: pd.DataFrame, carrier: tuple, **kwargs):
+    """``replay_core`` over one taxi's positions frame, sorted by
+    (t, event_id) first; returns (emitted trips, final carrier)."""
+    rows = pdf.sort_values(["t", "event_id"])[
+        ["t", "lat", "lon", "status", "event_date"]
+    ].itertuples(index=False, name=None)
+    return replay_core(int(taxi), rows, carrier, **kwargs)
 
 
-def _replay_taxi(pdf: pd.DataFrame, **kwargs) -> pd.DataFrame:
-    """Replay the reference reducer for one taxi (already a single group).
-
-    Emits only airport trips with dist >= MIN_TRIP_DISTANCE_KM; a trip still
-    open at end of input is never emitted (reference behavior).
-    """
-    pdf = pdf.sort_values(["t", "event_id"])
-    taxi = int(pdf["taxi"].iloc[0])
-    cols = ["t", "lat", "lon", "status", "event_date"]
-    rows = pdf[cols].itertuples(index=False, name=None)
-    out, _ = replay_core(taxi, rows, fresh_carrier(), **kwargs)
-    return pd.DataFrame(out, columns=PARITY_COLUMNS)
-
-
-PARITY_SCHEMA = (
-    "taxi bigint, start_t double, start_lat double, start_lon double, "
-    "stop_t double, stop_lat double, stop_lon double, dist_km double, "
-    "revenue double, trip_date string"
-)
-
-
-def sessionize_parity(pos: DataFrame, **kwargs) -> DataFrame:
-    """Exact-reference-semantics sessionization, Arrow-batched per partition.
+def run_per_taxi(pos: DataFrame, fn) -> DataFrame:
+    """Apply ``fn(taxi, pdf) -> list of trip tuples`` to every taxi's
+    positions, Arrow-batched per partition; output has ``PARITY_SCHEMA``.
 
     Partition-level mapInPandas over hash-partitioned, taxi-sorted data:
     one Python invocation per *partition* rather than per taxi (a per-group
@@ -424,26 +393,27 @@ def sessionize_parity(pos: DataFrame, **kwargs) -> DataFrame:
     they can span Arrow batches within one, so the runner carries the
     trailing taxi over to the next batch. Per-taxi state isolation is the
     same locality the reference's custom partitioner enforced
-    (``AirportTripsRevenue.java:236-252``). ``kwargs`` override the
-    reference thresholds (gap_s, max_speed_kmh, min_trip_km, airport_*).
+    (``AirportTripsRevenue.java:236-252``).
     """
 
+    def trips(pdf):
+        return pd.DataFrame(
+            [r for taxi, g in pdf.groupby("taxi", sort=False) for r in fn(taxi, g)],
+            columns=PARITY_COLUMNS,
+        )
+
     def run(batches):
-        leftover = None
+        tail = None
         for pdf in batches:
-            if leftover is not None:
-                pdf = pd.concat([leftover, pdf], ignore_index=True)
-                leftover = None
+            if tail is not None:
+                pdf = pd.concat([tail, pdf], ignore_index=True)
             if pdf.empty:
                 continue
-            last_taxi = pdf["taxi"].iloc[-1]
-            head = pdf[pdf["taxi"] != last_taxi]
-            leftover = pdf[pdf["taxi"] == last_taxi]
-            for _, g in head.groupby("taxi", sort=False):
-                yield _replay_taxi(g, **kwargs)
-        if leftover is not None and not leftover.empty:
-            for _, g in leftover.groupby("taxi", sort=False):
-                yield _replay_taxi(g, **kwargs)
+            done = pdf["taxi"] != pdf["taxi"].iloc[-1]
+            tail = pdf[~done]
+            yield trips(pdf[done])
+        if tail is not None:
+            yield trips(tail)
 
     # Explicit partition count: a bare repartition("taxi") lets AQE coalesce
     # the small shuffle output down to 1-2 partitions, which would serialize
@@ -456,13 +426,19 @@ def sessionize_parity(pos: DataFrame, **kwargs) -> DataFrame:
     return ordered.mapInPandas(run, schema=PARITY_SCHEMA)
 
 
-# --- JVM-side parity: the state machine as a per-taxi aggregate fold ------
+def sessionize_parity(pos: DataFrame, **kwargs) -> DataFrame:
+    """Exact-reference-semantics sessionization: each taxi replayed from a
+    fresh carrier through ``run_per_taxi``. Emits only airport trips with
+    dist >= MIN_TRIP_DISTANCE_KM; a trip still open at end of input is
+    never emitted (reference behavior). ``kwargs`` override the reference
+    thresholds (gap_s, max_speed_kmh, min_trip_km, airport_*).
+    """
+    return run_per_taxi(
+        pos, lambda taxi, pdf: replay_frame(taxi, pdf, fresh_carrier(), **kwargs)[0]
+    )
 
-_PARITY_OUT_T = (
-    "array<struct<start_t:double,start_lat:double,start_lon:double,"
-    "stop_t:double,stop_lat:double,stop_lon:double,dist_km:double,"
-    "revenue:double,trip_date:string>>"
-)
+
+# --- JVM-side parity: the state machine as a per-taxi aggregate fold ------
 
 
 def sessionize_parity_sql(
@@ -502,6 +478,8 @@ def sessionize_parity_sql(
             )
         ).alias("pts")
     )
+    # The emitted-trip struct: PARITY_SCHEMA without taxi, as type DDL.
+    trip_fields = ",".join(f.replace(" ", ":") for f in PARITY_SCHEMA.split(", ")[1:])
     init = F.struct(
         F.lit("E").alias("prev_status"),
         F.lit(0.0).alias("prev_lat"),
@@ -513,7 +491,7 @@ def sessionize_parity_sql(
         F.lit(False).alias("airport"),
         F.lit(0.0).alias("dist"),
         F.lit(None).cast("date").alias("date"),
-        F.expr(f"cast(array() as {_PARITY_OUT_T})").alias("out"),
+        F.expr(f"cast(array() as array<struct<{trip_fields}>>)").alias("out"),
     )
 
     def step(acc, x):

@@ -59,9 +59,9 @@ query requires RETIRING one. Round 6 retired two redundant demo twins on
 this basis: ``multimodal_decode_stub`` (superseded by the strictly
 stronger ``multimodal_real_roundtrip`` + ``multimodal_real_resize``,
 whose oracles check the REAL byte paths end-to-end; its fake-decode
-operator is since deleted) and
-``airport_trips_microbatch`` (its batch-boundary replay stays pinned
-bit-identical to ``airport_trips_parity``'s golden fixture in
+operator is since deleted) and the micro-batch trip twin (its code is
+since deleted; the real trip stream's carry across checkpoint restarts
+is pinned bit-identical to ``airport_trips_parity`` in
 ``tests/test_streaming_trips.py``; the registry keeps the parity and
 timeout variants).
 
@@ -947,11 +947,10 @@ def _specs() -> dict[str, QuerySpec]:
         ),
         "text_quality_score": (textops.quality_score, textops.QUALITY_ORACLE),
         "text_token_counts": (textops.token_counts, textops.TOKEN_COUNTS_ORACLE),
-        # airport_trips_microbatch RETIRED round 6 (size policy): its
-        # micro-batch-boundary replay stays pinned bit-identical to
-        # airport_trips_parity's golden fixture in
-        # tests/test_streaming_trips.py; the registry keeps the parity and
-        # timeout variants.
+        # The micro-batch trip twin is retired and deleted: the real trip
+        # stream's carry across 2 and 4 checkpoint restarts is pinned
+        # bit-identical to airport_trips_parity in
+        # tests/test_streaming_trips.py.
         # Generic gap sessionization via Spark's native session_window
         # (batch surface; streaming twin in streaming/sessions.py).
         "events_session_window": (sessions.session_agg, sessions.SESSION_AGG_ORACLE),

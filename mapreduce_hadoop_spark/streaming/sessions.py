@@ -88,7 +88,9 @@ FROM (
 """
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _events_stream(
+    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
     from mapreduce_hadoop_spark.sources.tables import ensure_confs, normalize_events
 
     ensure_confs(spark)
@@ -97,12 +99,14 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # load_table sets); the stream converts to TimestampType in-flight.
     raw_schema = spark.read.parquet(path).schema
     # The file stream source requires a directory; select the table file(s)
-    # with a glob filter ("events*" also admits redelivered copies in tests).
-    return normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .parquet(sf_dir)
+    # with a glob filter ("events*" also admits redelivered copies and
+    # continuation files such as events2.parquet).
+    reader = spark.readStream.schema(raw_schema).option(
+        "pathGlobFilter", "events*.parquet"
     )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return normalize_events(reader.parquet(sf_dir))
 
 
 def session_agg_stream(

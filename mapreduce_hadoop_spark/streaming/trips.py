@@ -2,11 +2,13 @@
 
 The reference's trip-reconstruction state machine
 (``src/AirportTripsRevenue.java:275-407``) is a batch reducer; this module
-runs the *same* state machine incrementally over an unbounded position
-stream with ``applyInPandasWithState``: per-taxi state (the reducer's
-carrier — previous fix + open-trip accumulator) persists in the state
-store across micro-batches, and a trip is emitted the moment the machine
-closes it (gap split or M->E), exactly as the batch parity path would.
+runs the *same* machine (``sessionize.replay_core``) incrementally over an
+unbounded position stream with ``applyInPandasWithState``. The per-taxi
+state is the machine's carrier row itself (``sessionize.Carrier``, stored
+under ``STATE_SCHEMA`` with no conversion), so a taxi resumes each
+micro-batch exactly where the last one left it, and a trip is emitted the
+moment the machine closes it (gap split or M->E), exactly as the batch
+parity path would.
 
 Semantics and their streaming caveats, explicitly:
 
@@ -19,19 +21,20 @@ Semantics and their streaming caveats, explicitly:
   entry point takes an optional ``dropped_acc`` Spark accumulator that
   tallies late-dropped positions (same observability stance as
   ``dedup.lsh_dropped_buckets``).
-- Trailing open trips are never emitted by the default path (reference
-  behavior: a trip still open at end-of-input is lost), so no timeout is
-  needed for result parity. ``airport_trips_stream_timeout`` is the
-  production extension: an event-time timeout force-closes any session
-  idle longer than ``idle_gap_s``, emits the flushed trip (same M->E close
-  as a gap split, bit-identical rounding via ``replay_core``), and evicts
-  the taxi's state — bounding the state store by |recently active taxis|.
-- State per taxi is O(1) — a handful of doubles — so the state store
-  scales with |active taxis|, not with data volume.
+- Trailing open trips are never emitted by ``airport_trips_stream``
+  (reference behavior: a trip still open at end-of-input is lost), so no
+  timeout is needed for result parity. ``airport_trips_stream_timeout`` is
+  the production extension: an event-time timeout force-closes any
+  session idle longer than ``idle_gap_s``, emits the flushed trip (the
+  machine's own M->E close, ``_flush_carrier``), and evicts the taxi's
+  state — bounding the state store by |recently active taxis|.
+  ``airport_trips_timeout_batch`` is its deterministic batch twin.
+- State per taxi is O(1) — one carrier row — so the state store scales
+  with |active taxis|, not with data volume.
 
 ``tests/test_streaming_trips.py`` replays the derived GPS stream with an
-availableNow trigger and asserts output identical to the batch parity
-path.
+availableNow trigger, in one delivery and across checkpoint restarts, and
+asserts output identical to the batch parity path.
 """
 
 from __future__ import annotations
@@ -48,173 +51,103 @@ from mapreduce_hadoop_spark.operators import gps
 from mapreduce_hadoop_spark.operators.sessionize import (
     PARITY_COLUMNS,
     PARITY_SCHEMA,
+    STATE_SCHEMA,
+    Carrier,
     fresh_carrier,
     replay_core,
+    replay_frame,
+    run_per_taxi,
 )
-
-# The reducer carrier, flattened for the state store. `trip_date` rides as a
-# string; `has_trip` discriminates the Optional open-trip accumulator.
-STATE_SCHEMA = (
-    "prev_status string, prev_lat double, prev_lon double, prev_t double, "
-    "has_trip boolean, start_t double, start_lat double, start_lon double, "
-    "airport boolean, dist double, trip_date string"
-)
+from mapreduce_hadoop_spark.streaming.sessions import _events_stream
 
 
-def _carrier_from_state(state: GroupState) -> dict:
-    if not state.exists:
-        return fresh_carrier()
-    (ps, plat, plon, pt, has_trip, st, slat, slon, ap, dist, date) = state.get
-    trip = (
-        {
-            "start_t": st,
-            "start_lat": slat,
-            "start_lon": slon,
-            "airport": ap,
-            "dist": dist,
-            "date": date,
-        }
-        if has_trip
-        else None
-    )
-    return {
-        "prev_status": ps,
-        "prev_lat": plat,
-        "prev_lon": plon,
-        "prev_t": pt,
-        "trip": trip,
-    }
-
-
-def _carrier_to_state(carrier: dict, state: GroupState) -> None:
-    trip = carrier["trip"]
-    state.update(
-        (
-            carrier["prev_status"],
-            carrier["prev_lat"],
-            carrier["prev_lon"],
-            carrier["prev_t"],
-            trip is not None,
-            trip["start_t"] if trip else 0.0,
-            trip["start_lat"] if trip else 0.0,
-            trip["start_lon"] if trip else 0.0,
-            trip["airport"] if trip else False,
-            trip["dist"] if trip else 0.0,
-            str(trip["date"]) if trip else "",
-        )
-    )
-
-
-def _drop_late(pdf: pd.DataFrame, carrier: dict, dropped_acc) -> pd.DataFrame:
+def _drop_late(pdf: pd.DataFrame, carrier: Carrier, dropped_acc) -> pd.DataFrame:
     """Drop positions older than state already consumed (module docstring),
     counting them into ``dropped_acc`` when one is supplied."""
-    late = pdf["t"] < carrier["prev_t"]
+    late = pdf["t"] < carrier.prev_t
     n_late = int(late.sum())
     if n_late and dropped_acc is not None:
         dropped_acc.add(n_late)
     return pdf[~late]
 
 
-def _make_fn(kwargs: dict, dropped_acc=None):
+def _flush_carrier(taxi: int, carrier: Carrier, kwargs: dict) -> list[tuple]:
+    """Force-close a carrier's open trip at its last-seen position.
+
+    Reuses ``replay_core``'s own M->E close by feeding one synthetic E at
+    (prev_t, prev_lat, prev_lon): delta is 0, so the machine closes the
+    open trip exactly as a speed-legal M->E would — the emission test and
+    6-dp rounding are bit-identical to the parity path, not re-implemented.
+    A carrier with no open trip (prev_status E, or no qualifying trip)
+    emits nothing, same as the machine itself.
+    """
+    synthetic = [(carrier.prev_t, carrier.prev_lat, carrier.prev_lon, "E", "")]
+    out, _ = replay_core(taxi, synthetic, carrier, **kwargs)
+    return out
+
+
+def _state_fn(kwargs: dict, idle_gap_s: float | None, dropped_acc):
+    """The per-taxi state function: replay the micro-batch's positions from
+    the stored carrier and store the result. With ``idle_gap_s`` set, also
+    arm an event-time timeout at last-seen + idle gap; when it fires, flush
+    the open trip and evict the taxi's state. Under ``NoTimeout``
+    (``idle_gap_s`` None) ``hasTimedOut`` is never true."""
+
     def fn(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         (taxi,) = key
-        carrier = _carrier_from_state(state)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["t", "event_id"])
-        pdf = _drop_late(pdf, carrier, dropped_acc)
-        rows = pdf[["t", "lat", "lon", "status", "event_date"]].itertuples(
-            index=False, name=None
-        )
-        out, carrier = replay_core(int(taxi), rows, carrier, **kwargs)
-        _carrier_to_state(carrier, state)
+        carrier = Carrier(*state.get) if state.exists else fresh_carrier()
+        if state.hasTimedOut:
+            # Watermark passed last-seen + idle gap with no new data.
+            state.remove()
+            out = _flush_carrier(int(taxi), carrier, kwargs)
+            yield pd.DataFrame(out, columns=PARITY_COLUMNS)
+            return
+        pdf = _drop_late(pd.concat(list(pdfs), ignore_index=True), carrier, dropped_acc)
+        out, carrier = replay_frame(taxi, pdf, carrier, **kwargs)
+        state.update(carrier)
+        if idle_gap_s is not None:
+            # The timestamp must lie beyond the current watermark (Spark
+            # requirement) — an all-late batch leaves prev_t behind the
+            # watermark, so clamp forward.
+            state.setTimeoutTimestamp(
+                max(
+                    int((carrier.prev_t + idle_gap_s) * 1000),
+                    state.getCurrentWatermarkMs() + 1,
+                )
+            )
         yield pd.DataFrame(out, columns=PARITY_COLUMNS)
 
     return fn
 
 
-def positions_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
+def _trips_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    kwargs: dict,
+    dropped_acc,
+    idle_gap_s: float | None = None,
+    watermark_delay: str = "0 seconds",
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """The gps.positions derivation over a file stream of the events table."""
-    from mapreduce_hadoop_spark.sources.tables import ensure_confs, normalize_events
-
-    ensure_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # "events*" (like sessions._events_stream): a continuation file
-    # (events2.parquet, e.g. the next ingest drop) joins the stream.
-    reader = spark.readStream.schema(raw_schema).option(
-        "pathGlobFilter", "events*.parquet"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    ev = normalize_events(reader.parquet(sf_dir))
-    from pyspark.sql import functions as F
-
-    return ev.select(
-        F.col("user_id").alias("taxi"),
-        (F.col("ts").cast("double") / F.lit(gps.TIME_COMPRESSION)).alias("t"),
-        (F.lit(37.58) + gps.fold(F.col("value"), 0.1)).alias("lat"),
-        (F.lit(-122.43) + gps.fold(F.col("value") * F.lit(0.618033), 0.1)).alias("lon"),
-        F.when(F.col("event_type").isin("click", "view", "purchase"), F.lit("M"))
-        .otherwise(F.lit("E"))
-        .alias("status"),
-        F.col("event_id"),
-        F.col("ts").cast("date").alias("event_date"),
-    )
-
-
-def airport_trips_microbatch(
-    spark: SparkSession, sf_dir: str, n_batches: int = 3, dropped_acc=None, **kwargs
-) -> DataFrame:
-    """Driver-checkable batch twin of ``airport_trips_stream``.
-
-    Simulates the micro-batch execution in one batch job: positions are
-    bucketed into ``n_batches`` global event-time windows (the stream's
-    arrival order), and each taxi replays its buckets IN ORDER through
-    ``replay_core``, carrying the reducer state across bucket boundaries
-    exactly as the state store does across micro-batches — including the
-    older-than-state drop guard. Because the carrier is the machine's
-    complete state, the output is bit-identical to the single-pass parity
-    replay (asserted against ``airport_trips_parity_query`` and the
-    committed golden fixture in ``tests/test_streaming_trips.py``), which
-    is what makes the cross-boundary carry verifiable by the driver.
-
-    Not SQL-expressible (order-dependent stateful fold) -> rows-only row.
-    """
-    from pyspark.sql import functions as F
-
     kwargs.setdefault("airport_radius_km", gps.DEMO_AIRPORT_RADIUS_KM)
-    pos = gps.positions(spark, sf_dir)
-    bounds = pos.agg(F.min("t").alias("t0"), F.max("t").alias("t1"))
-    width = (F.col("t1") - F.col("t0")) / F.lit(float(n_batches))
-    batch = F.when(F.col("t1") > F.col("t0"),
-                   F.least(
-                       F.lit(n_batches - 1),
-                       F.floor((F.col("t") - F.col("t0")) / width).cast("int"),
-                   )).otherwise(F.lit(0))
-    pos = (
-        pos.crossJoin(F.broadcast(bounds))
-        .withColumn("batch", batch)
-        .drop("t0", "t1")
+    pos = gps.positions_from(_events_stream(spark, sf_dir, max_files_per_trigger))
+    timeout = GroupStateTimeout.NoTimeout
+    if idle_gap_s is not None:
+        # The watermark rides a synthetic timestamp_seconds(t) column so
+        # timeout arithmetic stays in the stream's own timescale.
+        pos = pos.withColumn(
+            "t_event", F.timestamp_seconds(F.col("t"))
+        ).withWatermark("t_event", watermark_delay)
+        timeout = GroupStateTimeout.EventTimeTimeout
+    return pos.groupBy("taxi").applyInPandasWithState(
+        _state_fn(kwargs, idle_gap_s, dropped_acc),
+        outputStructType=PARITY_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=timeout,
     )
-
-    def fn(key: Any, pdf: pd.DataFrame) -> pd.DataFrame:
-        (taxi,) = key
-        carrier = fresh_carrier()
-        outs: list[tuple] = []
-        for b in sorted(pdf["batch"].unique()):
-            chunk = pdf[pdf["batch"] == b].sort_values(["t", "event_id"])
-            chunk = _drop_late(chunk, carrier, dropped_acc)
-            rows = chunk[["t", "lat", "lon", "status", "event_date"]].itertuples(
-                index=False, name=None
-            )
-            out, carrier = replay_core(int(taxi), rows, carrier, **kwargs)
-            outs.extend(out)
-        return pd.DataFrame(outs, columns=PARITY_COLUMNS)
-
-    return pos.groupBy("taxi").applyInPandas(fn, PARITY_SCHEMA)
 
 
 def airport_trips_stream(
@@ -227,71 +160,7 @@ def airport_trips_stream(
     are directly comparable. ``dropped_acc`` (optional Spark accumulator)
     counts late positions dropped at the state boundary.
     """
-    kwargs.setdefault("airport_radius_km", gps.DEMO_AIRPORT_RADIUS_KM)
-    pos = positions_stream(spark, sf_dir)
-    return pos.groupBy("taxi").applyInPandasWithState(
-        _make_fn(kwargs, dropped_acc),
-        outputStructType=PARITY_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --- event-time timeout variant -------------------------------------------
-
-
-def _flush_carrier(taxi: int, carrier: dict, kwargs: dict) -> list[tuple]:
-    """Force-close a carrier's open trip at its last-seen position.
-
-    Reuses ``replay_core``'s own M->E close by feeding one synthetic E at
-    (prev_t, prev_lat, prev_lon): delta is 0, so the machine closes the
-    open trip exactly as a speed-legal M->E would — the emission test and
-    6-dp rounding are bit-identical to the parity path, not re-implemented.
-    A carrier with no open trip (prev_status E, or no qualifying trip)
-    emits nothing, same as the machine itself.
-    """
-    synthetic = [
-        (carrier["prev_t"], carrier["prev_lat"], carrier["prev_lon"], "E", "")
-    ]
-    out, _ = replay_core(taxi, synthetic, carrier, **kwargs)
-    return out
-
-
-def _make_timeout_fn(kwargs: dict, idle_gap_s: float, dropped_acc=None):
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (taxi,) = key
-        if state.hasTimedOut:
-            # Watermark passed last-seen + idle gap with no new data:
-            # flush the open trip and evict this taxi's state entirely.
-            carrier = _carrier_from_state(state)
-            out = _flush_carrier(int(taxi), carrier, kwargs)
-            state.remove()
-            yield pd.DataFrame(out, columns=PARITY_COLUMNS)
-            return
-        carrier = _carrier_from_state(state)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["t", "event_id"])
-        pdf = _drop_late(pdf, carrier, dropped_acc)
-        rows = pdf[["t", "lat", "lon", "status", "event_date"]].itertuples(
-            index=False, name=None
-        )
-        out, carrier = replay_core(int(taxi), rows, carrier, **kwargs)
-        _carrier_to_state(carrier, state)
-        # Timeout fires once the event-time watermark passes last-seen +
-        # idle gap. The timestamp must lie beyond the current watermark
-        # (Spark requirement) — an all-late batch leaves prev_t behind the
-        # watermark, so clamp forward.
-        timeout_ms = max(
-            int((carrier["prev_t"] + idle_gap_s) * 1000),
-            state.getCurrentWatermarkMs() + 1,
-        )
-        state.setTimeoutTimestamp(timeout_ms)
-        yield pd.DataFrame(out, columns=PARITY_COLUMNS)
-
-    return fn
+    return _trips_stream(spark, sf_dir, kwargs, dropped_acc)
 
 
 def airport_trips_timeout_batch(
@@ -301,46 +170,35 @@ def airport_trips_timeout_batch(
     **kwargs,
 ) -> DataFrame:
     """Driver-checkable batch twin of ``airport_trips_stream_timeout`` —
-    the PRODUCTION trip semantics (bounded state, trailing trips emitted),
+    the production trip semantics (bounded state, trailing trips emitted),
     as a deterministic batch job.
 
     Models a finite run of the event-time-timeout stream at its
-    end-of-input watermark: each taxi's positions replay in (t, event_id)
-    order through ``replay_core`` (bit-identical machine to the parity
-    path, ``AirportTripsRevenue.java:275-407`` semantics), then any taxi
-    idle longer than ``idle_gap_s`` against the global end-of-input
-    watermark (max t over ALL taxis — one broadcast scalar) has its open
-    trip force-closed through the machine's own M->E flush
-    (``_flush_carrier``), exactly what the stream's timeout does when the
-    final watermark passes ``prev_t + idle_gap_s``. Taxis still active
+    end-of-input watermark: each taxi replays from a fresh carrier through
+    ``run_per_taxi`` (the parity path's runner), then any taxi idle longer
+    than ``idle_gap_s`` against the global end-of-input watermark (max t
+    over ALL taxis — one broadcast scalar) has its open trip force-closed
+    through ``_flush_carrier``, exactly what the stream's timeout does when
+    the final watermark passes ``prev_t + idle_gap_s``. Taxis still active
     within the gap at end-of-input keep their trip open — same as the
     store would.
 
-    Unlike the no-timeout paths, the output is NOT order-dependent across
-    micro-batch splits (the flush decision depends only on the final
-    watermark), so this twin is fully deterministic for the driver's
-    rows-only check; the flush semantics are pinned against the real
-    stream by ``tests/test_streaming_trips.py`` (fixture + equivalence).
-    Not SQL-expressible (stateful fold) -> no oracle entry.
+    The flush decision depends only on the final watermark, not on
+    micro-batch splits, so the output is deterministic, as its rows-only
+    gate check requires. Not SQL-expressible (stateful fold) -> no oracle
+    entry.
     """
     kwargs.setdefault("airport_radius_km", gps.DEMO_AIRPORT_RADIUS_KM)
     pos = gps.positions(spark, sf_dir)
-    bounds = pos.agg(F.max("t").alias("wm_t"))
-    pos = pos.crossJoin(F.broadcast(bounds))
+    pos = pos.crossJoin(F.broadcast(pos.agg(F.max("t").alias("wm_t"))))
 
-    def fn(key: Any, pdf: pd.DataFrame) -> pd.DataFrame:
-        (taxi,) = key
-        wm_t = float(pdf["wm_t"].iloc[0])
-        chunk = pdf.sort_values(["t", "event_id"])
-        rows = chunk[["t", "lat", "lon", "status", "event_date"]].itertuples(
-            index=False, name=None
-        )
-        out, carrier = replay_core(int(taxi), rows, fresh_carrier(), **kwargs)
-        if wm_t > carrier["prev_t"] + idle_gap_s:
+    def fn(taxi, pdf: pd.DataFrame) -> list[tuple]:
+        out, carrier = replay_frame(taxi, pdf, fresh_carrier(), **kwargs)
+        if float(pdf["wm_t"].iloc[0]) > carrier.prev_t + idle_gap_s:
             out.extend(_flush_carrier(int(taxi), carrier, kwargs))
-        return pd.DataFrame(out, columns=PARITY_COLUMNS)
+        return out
 
-    return pos.groupBy("taxi").applyInPandas(fn, PARITY_SCHEMA)
+    return run_per_taxi(pos, fn)
 
 
 def airport_trips_stream_timeout(
@@ -357,26 +215,19 @@ def airport_trips_stream_timeout(
     ``t`` timescale) is force-closed — its open trip is flushed through the
     machine's own M->E close and its state evicted from the store.
 
-    This is the production shape the no-timeout parity path documents as
-    missing: without it, idle taxis' carriers live forever and trailing
+    Without the timeout, idle taxis' carriers live forever and trailing
     trips are never emitted. With it, state is bounded by |taxis active
     within the idle gap| and every qualifying trip eventually emits. The
     default gap reuses the reference's 210 s session-split threshold
     (``AirportTripsRevenue.java:36-38``): a session the machine would have
     split on its next fix is exactly one the timeout may close in absentia.
-
-    The watermark rides a synthetic ``timestamp_seconds(t)`` column so
-    timeout arithmetic stays in the stream's own timescale.
     """
-    kwargs.setdefault("airport_radius_km", gps.DEMO_AIRPORT_RADIUS_KM)
-    pos = positions_stream(spark, sf_dir, max_files_per_trigger)
-    pos = pos.withColumn(
-        "t_event", F.timestamp_seconds(F.col("t"))
-    ).withWatermark("t_event", watermark_delay)
-    return pos.groupBy("taxi").applyInPandasWithState(
-        _make_timeout_fn(kwargs, idle_gap_s, dropped_acc),
-        outputStructType=PARITY_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _trips_stream(
+        spark,
+        sf_dir,
+        kwargs,
+        dropped_acc,
+        idle_gap_s,
+        watermark_delay,
+        max_files_per_trigger,
     )

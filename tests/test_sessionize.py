@@ -305,3 +305,32 @@ def test_round6_arms_bit_identical():
     got = [r["y"] for r in df.select(_round6_col(F.col("x")).alias("y")).collect()]
     want = [_round6_py(v) for v in vals]
     assert got == want  # exact ==, no tolerance: bit-identity is the claim
+
+
+def test_runner_carries_taxis_across_arrow_batches(spark, sf_dir):
+    """``run_per_taxi`` carries a partition's trailing taxi over to the next
+    Arrow batch. That branch fires only when a partition holds more than
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (10,000 by
+    default), which test data never reaches; 7-row batches force it, so
+    every taxi spans several batches. Output must not move."""
+    from mapreduce_hadoop_spark.operators import gps
+    from mapreduce_hadoop_spark.streaming.trips import airport_trips_timeout_batch
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    kw = {"airport_radius_km": gps.DEMO_AIRPORT_RADIUS_KM}
+    pos = gps.positions(spark, sf_dir)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    parity = rows(sessionize_parity(pos, **kw))
+    timeout = rows(airport_trips_timeout_batch(spark, sf_dir))
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        assert rows(sessionize_parity(pos, **kw)) == parity
+        assert rows(airport_trips_timeout_batch(spark, sf_dir)) == timeout
+    finally:
+        spark.conf.set(conf, old)
+    assert len(parity) > 0 and len(timeout) > 0
+    assert rows(sessionize_parity_sql(pos, **kw)) == parity

@@ -7,6 +7,10 @@ randomized inputs with an *independent* declarative implementation: split
 the M-run into gap-bounded sessions, sum segment distances — no carried
 state, no transition arms.
 
+A second property pins the carrier: cutting a sequence anywhere and
+replaying the pieces with the carried carrier emits the same trips as one
+pass, and every carrier is a ``STATE_SCHEMA`` row.
+
 Pure Python on purpose: hypothesis drives hundreds of cases; the Spark
 twins of both formulations are covered by fixture tests and the oracle.
 """
@@ -19,7 +23,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mapreduce_hadoop_spark import constants as C
-from mapreduce_hadoop_spark.operators.sessionize import fresh_carrier, replay_core
+from mapreduce_hadoop_spark.operators.sessionize import (
+    STATE_SCHEMA,
+    fresh_carrier,
+    replay_core,
+)
 
 GAP = C.MAX_SEGMENT_DELTA_TIME_S
 AIRPORT = (C.SFO_LAT, C.SFO_LONG)
@@ -98,3 +106,41 @@ def test_replay_equals_declarative_without_speed_violations(rows):
     got, _ = replay_core(1, iter(rows), fresh_carrier())
     want = declarative_trips(rows)
     assert [(g[1], g[4], g[7]) for g in got] == want
+
+
+@st.composite
+def rough_sequences(draw):
+    """Unrestricted sequences: speed violations, zero and negative time
+    deltas, gaps over 210 s, E/M interleavings, and cut points."""
+    n = draw(st.integers(min_value=0, max_value=40))
+    t = 0.0
+    lat, lon = C.SFO_LAT, C.SFO_LONG
+    rows = []
+    for _ in range(n):
+        t += draw(st.sampled_from([0.0, -50.0, 10.0, 100.0, 209.0, 210.0, 211.0, 900.0]))
+        # Up to ~1.1 km a step: > 180 km/h at short deltas.
+        lat += draw(st.floats(min_value=-0.01, max_value=0.01))
+        lon += draw(st.floats(min_value=-0.01, max_value=0.01))
+        status = draw(st.sampled_from(["M", "M", "E"]))
+        rows.append((t, lat, lon, status, f"2024-01-{1 + int(t // 3600) % 28:02d}"))
+    cuts = draw(st.lists(st.integers(min_value=0, max_value=n), max_size=4))
+    return rows, sorted(cuts)
+
+
+_PY_TYPES = {"string": str, "double": float, "boolean": bool}
+_STATE_TYPES = [_PY_TYPES[f.split()[1]] for f in STATE_SCHEMA.split(", ")]
+
+
+@settings(max_examples=300, deadline=None)
+@given(rough_sequences())
+def test_split_replay_with_carried_carrier_equals_one_pass(seq):
+    rows, cuts = seq
+    kw = {"airport_radius_km": 2.0}
+    want, final = replay_core(1, iter(rows), fresh_carrier(), **kw)
+    got, carrier = [], fresh_carrier()
+    for a, b in zip([0, *cuts], [*cuts, len(rows)]):
+        out, carrier = replay_core(1, iter(rows[a:b]), carrier, **kw)
+        got.extend(out)
+        assert [type(v) for v in carrier] == _STATE_TYPES
+    assert got == want
+    assert carrier == final

@@ -2,9 +2,10 @@
 
 from __future__ import annotations
 
+import pytest
+
 from mapreduce_hadoop_spark.operators.sessionize import airport_trips_parity_query
 from mapreduce_hadoop_spark.streaming.trips import (
-    airport_trips_microbatch,
     airport_trips_stream,
     airport_trips_stream_timeout,
     airport_trips_timeout_batch,
@@ -103,34 +104,14 @@ def test_timeout_batch_twin_flushes_idle_only(spark):
     assert got.iloc[0]["stop_t"] == t0 + 20
 
 
-def test_microbatch_twin_matches_parity(spark, sf_dir):
-    # The batch twin chunks each taxi's stream into event-time buckets and
-    # carries the reducer state across them; any carry bug (lost open trip,
-    # re-consumed position, reset previous fix) breaks bit-identity with
-    # the single-pass parity replay.
-    key = ["taxi", "start_t"]
-    got = (
-        airport_trips_microbatch(spark, sf_dir, n_batches=4)
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    want = (
-        airport_trips_parity_query(spark, sf_dir)
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want) > 0
-    for c in want.columns:
-        assert (got[c].values == want[c].values).all(), c
-
-
-def test_trip_state_survives_checkpoint_restart(spark, tmp_path):
-    """Stop the trip stream mid-corpus, deliver the rest, restart on the
-    same checkpoint: the per-taxi carriers (incl. open trips straddling
-    the stop) must round-trip the state store so the union of both runs'
-    emissions equals the single-pass batch parity on the full data."""
+@pytest.mark.parametrize("deliveries", [2, 4])
+def test_trip_state_survives_checkpoint_restart(spark, tmp_path, deliveries):
+    """Deliver the time-ordered corpus in ``deliveries`` slices, restarting
+    the trip stream on the same checkpoint after each: the per-taxi
+    carriers (incl. open trips straddling a stop) must round-trip the state
+    store so the union of all runs' emissions equals the single-pass batch
+    parity on the full data. Any carry bug (lost open trip, re-consumed
+    position, reset previous fix) breaks bit-identity."""
     import os
 
     import pyarrow.compute as pc
@@ -138,11 +119,9 @@ def test_trip_state_survives_checkpoint_restart(spark, tmp_path):
 
     t = pq.read_table("/root/testdata/sf0.001/events.parquet")
     t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
-    half = t.num_rows // 2
     src, full = str(tmp_path / "src"), str(tmp_path / "full")
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     os.makedirs(src), os.makedirs(full)
-    pq.write_table(t.slice(0, half), f"{src}/events.parquet")
     pq.write_table(t, f"{full}/events.parquet")
 
     def run_stream():
@@ -160,9 +139,11 @@ def test_trip_state_survives_checkpoint_restart(spark, tmp_path):
         finally:
             q.stop()
 
-    run_stream()
-    pq.write_table(t.slice(half), f"{src}/events2.parquet")
-    run_stream()
+    cuts = [t.num_rows * i // deliveries for i in range(deliveries + 1)]
+    for i, (a, b) in enumerate(zip(cuts, cuts[1:])):
+        name = "events.parquet" if i == 0 else f"events{i + 1}.parquet"
+        pq.write_table(t.slice(a, b - a), f"{src}/{name}")
+        run_stream()
 
     key = ["taxi", "start_t"]
     got = (

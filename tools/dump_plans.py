@@ -4,6 +4,9 @@ Usage: python tools/dump_plans.py <tag> <suffix> [query ...]
   e.g. python tools/dump_plans.py r18 before
        python tools/dump_plans.py r18 after corpus_clean_stats
 
+Tag and suffix are both required and the tag may not start with "-";
+otherwise this text is printed and the exit status is 2.
+
 Runs at $SPARK_GRAFT_SF_DIR (default sf0.1). Captures the static plan
 (AdaptiveSparkPlan isFinalPlan=false) — the shape the optimizer committed
 to before AQE runtime re-optimization; Exchange counts / join strategies /
@@ -19,8 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r18"
-    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    if len(sys.argv) < 3 or sys.argv[1].startswith("-"):
+        print(__doc__, file=sys.stderr)
+        sys.exit(2)
+    tag, suffix = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
