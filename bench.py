@@ -295,7 +295,7 @@ def main() -> None:
     # substitutes it into LATER queries' plans, flattering their numbers
     # (r2: simhash benched 7.3s vs 153s standalone). Clearing between
     # queries makes each number reproduce standalone.
-    from mapreduce_hadoop_spark.operators import dedup, similarity
+    from mapreduce_hadoop_spark.session import unpersist_intermediates
 
     # Two timed executions per query, report the min. Single-shot numbers
     # on this shared VM swing +-40% run-to-run (measured: 21.8s / 30.4s /
@@ -310,8 +310,7 @@ def main() -> None:
         best = float("inf")
         for _ in range(2):
             spark.catalog.clearCache()
-            dedup.unpersist_intermediates()
-            similarity.unpersist_intermediates()
+            unpersist_intermediates()
             t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()

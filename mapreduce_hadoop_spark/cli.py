@@ -33,7 +33,11 @@ from mapreduce_hadoop_spark.operators.histogram import trip_length_histogram
 from mapreduce_hadoop_spark.operators.revenue import daily_revenue, total_revenue
 from mapreduce_hadoop_spark.operators.segments import clean_positions
 from mapreduce_hadoop_spark.operators.sessionize import sessionize_parity_sql
-from mapreduce_hadoop_spark.session import get_spark
+from mapreduce_hadoop_spark.session import (
+    get_spark,
+    persisted,
+    unpersist_intermediates,
+)
 from mapreduce_hadoop_spark.sources.segments_csv import read_segments
 from mapreduce_hadoop_spark.sources.trips_text import (
     read_trips,
@@ -79,18 +83,17 @@ def run_corpus_clean(inp: str, out: str) -> None:
     """Training-data pipeline as a job: clean the documents table under
     ``inp`` (quality gate -> exact dedup -> MinHash-LSH near-dup removal),
     write the surviving docs to <out>/clean_docs (parquet) and the
-    per-source stats to <out>/stats (TSV), print the corpus totals."""
-    from mapreduce_hadoop_spark.operators.corpus import (
-        clean_docs,
-        corpus_clean_stats,
-    )
+    per-source stats to <out>/stats (TSV), print the corpus totals. The
+    clean relation is built and cached once; the stats aggregate it."""
+    from mapreduce_hadoop_spark.operators.corpus import clean_docs, clean_stats
 
     spark = get_spark("corpus-clean")
-    clean = clean_docs(spark, inp).cache()
+    clean = persisted(clean_docs(spark, inp))
     clean.write.mode("overwrite").parquet(f"{out}/clean_docs")
-    write_tsv(corpus_clean_stats(spark, inp), f"{out}/stats")
+    write_tsv(clean_stats(clean), f"{out}/stats")
     kept = clean.count()
     toks = clean.agg(F.sum("n_tokens").alias("t")).first()["t"]
+    unpersist_intermediates()
     print(f"CLEAN DOCS : {kept}  TOKENS : {toks}")
 
 

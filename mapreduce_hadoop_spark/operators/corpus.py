@@ -16,42 +16,15 @@ a partial-agg groupBy. No driver-side loops anywhere.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_hadoop_spark.functions import hashing
 from mapreduce_hadoop_spark.functions.hashing import md5_long, md5_long_sql
 from mapreduce_hadoop_spark.operators import dedup, textops
+from mapreduce_hadoop_spark.session import persisted
 from mapreduce_hadoop_spark.sources.tables import load_table
 
 QUALITY_MIN = 0.5
-
-# clean_docs' near-dup anti-join is COST-BASED on the materialized
-# near-dup count (known at plan time — the persisted relation is counted
-# before the main query plans):
-#  - below CORPUS_BLOOM_MIN_NDS, the id set fits a broadcast hash
-#    relation, so the plain anti-join plans as BroadcastHashJoin LeftAnti
-#    from the cache's REAL stats — the corpus side streams, no exchange,
-#    and no Bloom machinery is paid (it measured +0.7-1.2 s of pure
-#    stage latency at sf0.1 for an exchange the broadcast removes anyway);
-#  - at or above it (the 100 TB regime where a billion near-dup ids can
-#    NEITHER broadcast as a hash relation NOR be allowed to force the
-#    corpus through an SMJ exchange), the Bloom-negative bypass routes
-#    the corpus around the join: ~10 bits/key of bitmap where the hash
-#    relation needs ~100+ B/key, an ~80x wider broadcastable window.
-# Both branches are value-identical by construction (the bypass was
-# hash-verified at 3 scales while it was the unconditional form), the
-# split is a pure function of the data, and the threshold is a deploy
-# dial. 4M ids ~ 64 MB of hash relation = the session's
-# autoBroadcastJoinThreshold.
-CORPUS_BLOOM_MIN_NDS = int(
-    os.environ.get("SPARK_GRAFT_BLOOM_MIN_NDS", str(4_000_000))
-)
-# Bloom bitmap width FLOOR (bits); when the bypass branch fires the width
-# is sized from the actual count (10 bits/key, FP < 1%), never below this.
-CORPUS_BLOOM_BITS = int(os.environ.get("SPARK_GRAFT_BLOOM_BITS", str(1 << 20)))
 
 
 def clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,23 +33,21 @@ def clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives. The pipeline's document-level output — ``corpus_clean_stats``
     aggregates it, the CLI ``corpus-clean`` job writes it.
 
-    Plan shape (rewritten round 18, guide §2.4 — output bit-identical,
-    oracle unchanged): ONE scan of ``documents`` computes source, the
-    quality signals (``textops.quality_exprs`` — the exact Columns the
-    standalone quality query serves), and the 60-bit text hash together;
-    exact-dedup keep status is a ``min(doc_id) over (partition by h)``
-    window on that same relation. The previous formulation scanned
-    ``documents`` three times and re-attached quality and exact-keep to
-    the doc relation through two doc_id-keyed joins — both sides of each
-    being projections of the same scan, i.e. pure self-joins: broadcast
-    locally but two full-corpus sort-merge exchanges at 100 TB.
+    Plan shape: ONE scan of ``documents`` computes source, the quality
+    signals (``textops.quality_exprs`` — the exact Columns the standalone
+    quality query serves) and the 60-bit text hash together; exact-dedup
+    keep status is ``dedup.keeper_id`` on that same relation. The near-dup
+    ids are persisted and counted before the main query plans, so the
+    planner sees the cache's real size: the anti-join plans statically as
+    BroadcastHashJoin LeftAnti, and the corpus side streams through it with
+    no exchange. The only corpus-wide movement is the keeper's hash-keyed
+    window exchange.
 
-    Round 19: the near-dup anti-join is cost-based on the MATERIALIZED
-    near-dup count (see CORPUS_BLOOM_MIN_NDS) — broadcast anti-join when
-    the id set fits (statically, from the cache's real stats; the corpus
-    side streams with no exchange), Bloom-negative bypass above that.
-    The only corpus-wide movement left in either branch is the one
-    hash-keyed window exchange the old groupBy(h) paid anyway.
+    Ceiling: the broadcast holds while the near-dup id set is under the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` (64 MB in
+    ``session.DEFAULT_CONF``, about 4M ids). Above it the same anti-join
+    plans as SortMergeJoin — still correct, but the corpus then crosses a
+    doc_id exchange.
     """
     exprs = textops.quality_exprs()
     base = load_table(spark, sf_dir, "documents").select(
@@ -86,85 +57,25 @@ def clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         exprs["n_tokens"].alias("n_tokens"),
         md5_long(F.col("text")).alias("h"),
     )
-    # First occurrence per text hash: the window sees ALL docs (the
-    # quality gate must not hide a smaller-doc_id duplicate), exactly as
-    # the old groupBy over the unfiltered texth relation did.
-    keep = base.select(
-        "*", F.min("doc_id").over(Window.partitionBy("h")).alias("keep_id")
-    )
-    # Persisted and MATERIALIZED up front (the count below): the planner
-    # then sees the relation's true near-dup-sized stats instead of
-    # guessing, and the cost-based branch is a function of real data, not
-    # an estimate. Released by dedup.unpersist_intermediates.
-    near_dups = dedup._persisted(
+    # The keeper window sees ALL docs: the quality gate must not hide a
+    # smaller-doc_id duplicate.
+    keep = base.select("*", dedup.keeper_id().alias("keep_id"))
+    near_dups = persisted(
         dedup.minhash_lsh_pairs(spark, sf_dir).select(F.col("doc_b").alias("doc_id"))
     )
-    n_nd = near_dups.count()
+    # Materialized before the main query plans: the anti-join is then
+    # planned from the cache's real size, not an estimate.
+    near_dups.count()
     survivors = keep.filter(
         (F.col("quality") >= F.lit(QUALITY_MIN))
         & (F.col("doc_id") == F.col("keep_id"))
     ).select("doc_id", "source", "quality", "n_tokens")
-    # Near-dup removal, cost-based (round 19, guide §3.1/3.2; VERDICT
-    # r18 order 2). The old plan fed the FULL corpus into the anti-join's
-    # doc_id exchange — a corpus-wide shuffle write paid before AQE
-    # converted the join to broadcast at runtime.
-    if n_nd < CORPUS_BLOOM_MIN_NDS:
-        # The id set fits a broadcast hash relation, and because the
-        # cached relation's size is KNOWN, the plain anti-join plans as
-        # BroadcastHashJoin LeftAnti statically — the corpus side
-        # streams through with no exchange at all. This is not the
-        # OOM-fragile blind F.broadcast hint: past the threshold the
-        # branch below takes over.
-        return survivors.join(near_dups, "doc_id", "left_anti")
-    # Bloom-negative BYPASS: the id set is too big to broadcast as a
-    # hash relation, but a Bloom bitmap of it (~10 bits/key vs ~100+
-    # B/key) still fits, so it routes almost every corpus row AROUND the
-    # join: bloom-negative rows are provably not in `near_dups` (no
-    # false negatives) and pass through join-free; only bloom-positive
-    # rows (true near-dups + FPs at rate (k*n/bits)^k) reach the real
-    # anti-join, whose exchange is near-dup-sized. False positives only
-    # move rows from the bypass into the join — the kept set is
-    # identical by construction (this branch was hash-verified at three
-    # scales as the unconditional form before the cost split landed).
-    # NULL keys read bloom-false and take the bypass, exactly the
-    # row-keeping behavior a NULL anti-join key has.
-    # The bitmap is DRIVER-BUILT (one bounded aggregation job, collect
-    # <= n_bits/8 bytes) and rides as a one-row LocalTableScan
-    # broadcast; see hashing.bloom_build for the measured in-plan
-    # alternatives this replaces. The probe lands in a 1-byte boolean
-    # and the bitmap column is DROPPED before the join — a raw `bloom`
-    # reference in the join condition would drag the whole array through
-    # the exchange. The condition references `bloom_hit` so the
-    # optimizer cannot push the join below the probe
-    # (PushDownLeftSemiAntiJoin happily reorders `filter(hit)` past a
-    # LeftAnti, putting the full corpus back into the join's exchange);
-    # for a hit row the extra conjunct is always true, so the join is
-    # plain `doc_id IN near_dups`.
-    n_bits = max(CORPUS_BLOOM_BITS, ((10 * n_nd + 63) // 64) * 64)
-    bloom = hashing.bloom_build(near_dups, "doc_id", n_bits)
-    cols = ["doc_id", "source", "quality", "n_tokens"]
-    probed = survivors.crossJoin(F.broadcast(bloom)).select(
-        *cols,
-        hashing.bloom_might_contain(F.col("bloom"), "doc_id", n_bits).alias(
-            "bloom_hit"
-        ),
-    )
-    bypass = probed.filter(~F.col("bloom_hit")).select(*cols)
-    nd2 = near_dups.select(F.col("doc_id").alias("nd_id"))
-    residual = (
-        probed.join(
-            nd2, (F.col("doc_id") == F.col("nd_id")) & F.col("bloom_hit"), "left_anti"
-        )
-        .filter("bloom_hit")
-        .select(*cols)
-    )
-    return bypass.unionByName(residual)
+    return survivors.join(near_dups, "doc_id", "left_anti")
 
 
-def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source stats of the cleaned corpus (quality >= 0.5, exact dups
-    and near-dups removed, smaller doc_id survives)."""
-    clean = clean_docs(spark, sf_dir)
+def clean_stats(clean: DataFrame) -> DataFrame:
+    """Per-source (n_docs, total_tokens, avg_quality) of a ``clean_docs``
+    relation, ordered by source."""
     # Fixed-point average: quality is quantized to nano BIGINTs and summed
     # as integers (order-independent, exact), then 6-dp HALF_UP is pure
     # integer arithmetic — round(p/q) = (p + q/2) div q on non-negative
@@ -188,6 +99,12 @@ def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
+
+
+def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source stats of the cleaned corpus (quality >= 0.5, exact dups
+    and near-dups removed, smaller doc_id survives)."""
+    return clean_stats(clean_docs(spark, sf_dir))
 
 
 CORPUS_CLEAN_ORACLE = f"""

@@ -1,27 +1,29 @@
 """Deduplication operators for training-data pipelines (north-star extension).
 
-Four families over `documents`, each SQL-expressible for the DuckDB oracle:
+Nine registered queries over `documents`, each with a DuckDB oracle:
 
-- ``exact_dedup``: hash-groupBy on text, keep the minimum doc_id. The
-  driver corpus has no exact dups, so a deterministic duplicated view
-  (every 10th doc re-inserted under doc_id+1_000_000) feeds the query.
-- ``minhash_lsh``: 3-token shingles -> 16 universal-hash minima -> 8 bands
-  x 2 rows -> banded bucket join for candidates -> exact-Jaccard verify.
-  The classic MinHash-LSH pipeline: candidate generation is equality joins
-  on band signatures (shuffle on the band key, never all-pairs).
-- ``simhash``: 60-bit simhash from full-width shingle hashes; candidate
-  pairs via multi-index Hamming search (4 x 15-bit blocks, 1-bit-flip
-  probe join — pigeonhole-COMPLETE for hamming <= 7), emitted with
-  hamming <= 7.
-- ``ngram_jaccard``: Jaccard over the shingle inverted index — shingles
-  hashed to 60-bit longs, bucketed in one shuffle, pairs generated in-row
-  per bucket, with a document-frequency cap to bound fan-out at scale.
+- ``dedup_exact`` / ``dedup_exact_normalized``: 60-bit text hash (raw or
+  normalized text), keep the minimum doc_id per hash. The test corpus
+  has no exact dups, so deterministic duplicated / variant views feed them.
+- ``dedup_minhash_lsh``: 3-token shingles -> 16 universal-hash minima -> 8
+  bands x 2 rows -> band buckets -> in-row candidate pairs -> exact-Jaccard
+  verify (shuffle on the band key, never all-pairs).
+- ``dedup_simhash``: 60-bit simhash; ALL pairs with hamming <= 7 via
+  multi-index Hamming search (4 x 15-bit blocks, 1-bit-flip probe join).
+- ``dedup_ngram_jaccard``: exact Jaccard over the shingle inverted index —
+  shingle buckets, in-row pairs, a document-frequency cap on fan-out.
+- ``contamination_check``: corpus docs sharing shingles with a held-out
+  benchmark set (broadcast semi-join).
+- ``text_span_dedup``: C4-style cross-document span duplication stats.
+- ``dedup_clusters`` / ``dedup_keep_best``: connected components of the
+  MinHash-LSH pair graph, and the best-quality keeper per component.
 
-Scale notes (100 TB): every family is shuffle-on-key (shingle, band
-signature, hash block) — none is O(n^2) in documents. Hot keys are bounded
-by the DF cap (ngram) or band width (LSH). All hashing is the portable
-md5-based 60-bit hash (functions/hashing.py); swap ``portable=False`` for
-xxhash64 when oracle parity is not needed.
+The near-dup families share one shape — signature buckets, in-row
+candidate pairs (``in_row_pairs``), exact verify — and the exact families
+one keeper (``keeper_id``). Every family is shuffle-on-key (shingle, band
+signature, hash block); none is O(n^2) in documents. Hot keys are bounded
+by the DF cap (ngram) or the bucket cap (LSH). All hashing is the portable
+md5-based 60-bit hash of functions/hashing.py, identical in DuckDB.
 """
 
 from __future__ import annotations
@@ -35,6 +37,12 @@ from mapreduce_hadoop_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
     minhash_params,
+)
+from mapreduce_hadoop_spark.session import (
+    persisted,
+    register_intermediate,
+    release,
+    unpersist_intermediates,  # noqa: F401 — re-exported
 )
 from mapreduce_hadoop_spark.sources.tables import load_table
 
@@ -81,28 +89,26 @@ LSH_BUCKET_CAP = 200
 
 _PERMS = minhash_params(NUM_PERMS)
 
-# Intermediates the pair builders persist (shingle hashes, simhash
-# signatures). A persist with no matching unpersist is fine inside one
-# query but leaks executor storage when the module is used as a library —
-# callers (bench.py between queries, long-lived pipelines after consuming
-# a result) release them via ``unpersist_intermediates``.
-_PERSISTED: list[DataFrame] = []
+
+def in_row_pairs(ds: Column, pair) -> Column:
+    """``pair(x, y)`` for every x before y in the in-row array ``ds`` —
+    its strict upper triangle, as one flat array to explode. Over a
+    sorted bucket of unique ids that is exactly the x < y pairs a
+    bucket self-join would emit, without the join."""
+    return F.flatten(
+        F.transform(
+            ds,
+            lambda x, i: F.transform(
+                F.slice(ds, i + F.lit(2), F.size(ds)), lambda y: pair(x, y)
+            ),
+        )
+    )
 
 
-def _persisted(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def unpersist_intermediates() -> None:
-    """Release every cached intermediate pinned by the pair builders.
-
-    Safe to call while a returned DataFrame is still unconsumed — Spark
-    just recomputes the lineage on the next action.
-    """
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
+def keeper_id() -> Column:
+    """The doc a text-hash group keeps: ``min(doc_id)`` over the rows
+    sharing ``h`` — one exchange on h, no join back."""
+    return F.min("doc_id").over(Window.partitionBy("h"))
 
 
 # --- exact dedup -----------------------------------------------------------
@@ -123,32 +129,36 @@ def docs_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(dup_doc_id, keep_doc_id) for every doc whose text also appears under
-    a smaller doc_id. ONE shuffle on the 60-bit text hash: the keeper is a
-    ``min(doc_id) over (partition by h)`` window (round 18, guide §2.4 —
-    the old groupBy(h) + join-back-on-h paid a second exchange of the
-    (doc_id, h) relation for the same answer; output bit-identical)."""
-    docs = docs_with_dups(spark, sf_dir).select(
-        "doc_id", md5_long(F.col("text")).alias("h")
-    )
-    keep = docs.select(
-        "doc_id",
-        F.min("doc_id").over(Window.partitionBy("h")).alias("keep_doc_id"),
+def _exact_dups(docs: DataFrame, text: Column) -> DataFrame:
+    """(dup_doc_id, keep_doc_id) for every (doc_id, text) row whose
+    ``text`` hashes like a smaller doc_id's: ONE shuffle on the 60-bit
+    hash, the keeper from ``keeper_id``."""
+    keep = docs.select("doc_id", md5_long(text).alias("h")).select(
+        "doc_id", keeper_id().alias("keep_doc_id")
     )
     return keep.filter(F.col("doc_id") != F.col("keep_doc_id")).select(
         F.col("doc_id").alias("dup_doc_id"), "keep_doc_id"
     )
 
 
-EXACT_DEDUP_ORACLE = f"""
-WITH d AS ({DOCS_WITH_DUPS_SQL}),
-h AS (SELECT doc_id, {md5_long_sql("text")} AS h FROM d),
-keep AS (SELECT h, min(doc_id) AS keep_doc_id FROM h GROUP BY h)
+# The oracles' keeper: the minimum doc_id per hash of their `h` relation.
+_EXACT_KEEP_SQL = """keep AS (SELECT h, min(doc_id) AS keep_doc_id FROM h GROUP BY h)
 SELECT doc_id AS dup_doc_id, keep_doc_id
 FROM h JOIN keep USING (h)
 WHERE doc_id <> keep_doc_id
 """
+
+
+def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(dup_doc_id, keep_doc_id) for every doc whose text also appears under
+    a smaller doc_id."""
+    return _exact_dups(docs_with_dups(spark, sf_dir), F.col("text"))
+
+
+EXACT_DEDUP_ORACLE = f"""
+WITH d AS ({DOCS_WITH_DUPS_SQL}),
+h AS (SELECT doc_id, {md5_long_sql("text")} AS h FROM d),
+{_EXACT_KEEP_SQL}"""
 
 
 # --- normalized exact dedup (C4/CCNet normalize-then-hash) -------------------
@@ -191,19 +201,11 @@ def exact_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape identical to ``exact_dedup`` — the normalization is
     map-only codegen'd expression work fused into the scan, then ONE
-    shuffle on the 60-bit hash of the normalized text (keeper via the
-    same single-exchange window as ``exact_dedup`` since round 18). At
-    100 TB the only data crossing the wire is (doc_id, hash) pairs,
-    never text.
+    shuffle on the 60-bit hash of the normalized text. At 100 TB the only
+    data crossing the wire is (doc_id, hash) pairs, never text.
     """
-    norm = normalize_text_col(F.col("text"))
-    docs = _variant_docs(spark, sf_dir).select("doc_id", md5_long(norm).alias("h"))
-    keep = docs.select(
-        "doc_id",
-        F.min("doc_id").over(Window.partitionBy("h")).alias("keep_doc_id"),
-    )
-    return keep.filter(F.col("doc_id") != F.col("keep_doc_id")).select(
-        F.col("doc_id").alias("dup_doc_id"), "keep_doc_id"
+    return _exact_dups(
+        _variant_docs(spark, sf_dir), normalize_text_col(F.col("text"))
     )
 
 
@@ -217,11 +219,7 @@ h AS (
            )} AS h
     FROM d
 ),
-keep AS (SELECT h, min(doc_id) AS keep_doc_id FROM h GROUP BY h)
-SELECT doc_id AS dup_doc_id, keep_doc_id
-FROM h JOIN keep USING (h)
-WHERE doc_id <> keep_doc_id
-"""
+{_EXACT_KEEP_SQL}"""
 
 
 # --- shared shingle views --------------------------------------------------
@@ -371,9 +369,7 @@ def _band_keys(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", "bk.band", "bk.sig")
 
 
-def lsh_dropped_buckets(
-    hs: DataFrame, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
+def lsh_dropped_buckets(hs: DataFrame) -> DataFrame:
     """(band, sig, bucket_n) for every band bucket the cap drops — the
     observability side of LSH_BUCKET_CAP (run it alongside the dedup to
     quantify what boilerplate the cap excluded)."""
@@ -381,13 +377,11 @@ def lsh_dropped_buckets(
         _band_keys(_minhash_from(hs))
         .groupBy("band", "sig")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > F.lit(bucket_cap))
+        .filter(F.col("bucket_n") > F.lit(LSH_BUCKET_CAP))
     )
 
 
-def minhash_lsh_pairs_from(
-    hs: DataFrame, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
+def minhash_lsh_pairs_from(hs: DataFrame) -> DataFrame:
     """Near-duplicate pairs: LSH banding for candidates, exact Jaccard verify.
 
     Returns (doc_a, doc_b, jaccard) with jaccard >= 0.5, doc_a < doc_b.
@@ -398,45 +392,30 @@ def minhash_lsh_pairs_from(
     verify runs on the hash arrays — set-identical to string shingles up to
     2^-31 collisions, and far cheaper to shuffle than the strings.
 
-    Candidate generation is ONE shuffle of the band relation (round 18,
-    guide §2.4 — the ``ngram_jaccard_pairs`` bucket pattern, output
-    identical): groupBy (band, sig) collects each bucket's doc_ids
-    sorted, the cap filters the bucket itself, and pairs are generated
-    in-row with array expressions. The pre-r18 form self-joined the band
-    relation (computing the 16-permutation signature fold TWICE — once
-    per join side) with a bucket-count window in front: two exchanges +
-    a window sort of the corpus x BANDS rows where one groupBy now
-    suffices. Band buckets above ``bucket_cap`` are excluded as before
-    (quadratic-blowup guard; see LSH_BUCKET_CAP); a bucket's doc list is
-    materialized in-row, bounded by the same cap that bounded the old
-    window partition.
+    Candidate generation is ONE shuffle of the band relation (the
+    ``ngram_jaccard_pairs`` bucket pattern): groupBy (band, sig) collects
+    each bucket's doc_ids sorted, the cap filters the bucket itself, and
+    ``in_row_pairs`` generates the pairs with array expressions — no band
+    self-join, so the signature fold runs once. Band buckets above
+    ``LSH_BUCKET_CAP`` are excluded (quadratic-blowup guard); a bucket's
+    doc list is materialized in-row, bounded by the same cap.
     """
-    hs = _persisted(hs)
+    hs = persisted(hs)
     bands = _band_keys(_minhash_from(hs))
     # sort_array canonicalizes collect_list's nondeterministic order, and
     # doc_id is unique within a bucket (one row per (doc, band)), so the
-    # strict upper-triangle generation below emits exactly the a < b
-    # pairs the old self-join's (a.doc_id < b.doc_id) predicate kept.
+    # strict upper triangle is exactly the doc_a < doc_b pairs.
     buckets = (
         bands.groupBy("band", "sig")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds").between(2, bucket_cap))
+        .filter(F.size("ds").between(2, LSH_BUCKET_CAP))
     )
     cand = (
         buckets.select(
             F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ds"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ds"), i + F.lit(2), F.size(F.col("ds"))
-                            ),
-                            lambda y: F.struct(
-                                x.alias("doc_a"), y.alias("doc_b")
-                            ),
-                        ),
-                    )
+                in_row_pairs(
+                    F.col("ds"),
+                    lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
                 )
             ).alias("p")
         )
@@ -505,17 +484,14 @@ MINHASH_LSH_ORACLE = f"WITH {_minhash_lsh_ctes()} {_MINHASH_LSH_SELECT}"
 def _shingle_hashes60(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hs: array<long>) — FULL 60-bit md5 hash per shingle.
 
-    SimHash's own relation (round 10): the minhash pipeline's mod-P
-    domain is 31-bit, which left bits 31+ of a wider signature dead —
-    the 60-bit signature needs the full hash. Separate from
-    ``_shingle_hashes`` so the minhash/jaccard relation (and everything
-    persisted against it) is untouched.
+    SimHash's own relation: the minhash pipeline's mod-P domain is
+    31-bit, which would leave bits 31+ of the 60-bit signature dead.
+    Separate from ``_shingle_hashes`` so the minhash/jaccard relation
+    (and everything persisted against it) is untouched.
 
     Zero-shingle docs are dropped at the SOURCE (``nonempty=True``: the
-    equivalent cheap token-count test on the raw text) so the simhash
-    consumer needs no ``size(hs) > 0`` filter — which, pushed below the
-    Arrow eval, re-ran the whole shingle+md5 chain a second time per row
-    (round 18; output bit-identical, same rows dropped)."""
+    equivalent cheap token-count test on the raw text), as
+    ``_simhash_from_hs`` requires."""
     return _doc_shingles(spark, sf_dir, nonempty=True).select(
         "doc_id",
         F.transform(F.col("sh"), lambda s: md5_long(s)).alias("hs"),
@@ -538,9 +514,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-list_filter-per-bit formulation, whose plan/codegen latency
     dominated cold runs.
     """
-    return _simhash_from_hs(
-        _shingle_hashes60(spark, sf_dir), assume_nonempty=True
-    )
+    return _simhash_from_hs(_shingle_hashes60(spark, sf_dir))
 
 
 def simhash_signatures_from(docs: DataFrame) -> DataFrame:
@@ -550,7 +524,7 @@ def simhash_signatures_from(docs: DataFrame) -> DataFrame:
         docs.select(
             "doc_id",
             F.transform(T.shingles("text"), lambda s: md5_long(s)).alias("hs"),
-        )
+        ).filter(F.size("hs") > 0)
     )
 
 
@@ -582,32 +556,25 @@ def _simhash60_np(hs_list: "list") -> "object":
     return sim
 
 
-def _simhash_from_hs(
-    hs_rel: DataFrame, assume_nonempty: bool = False
-) -> DataFrame:
-    """60-bit simhash per doc, Arrow-vectorized (round 13).
+def _simhash_from_hs(hs: DataFrame) -> DataFrame:
+    """60-bit simhash per doc of a (doc_id, hs) relation with no empty
+    ``hs`` (``_simhash60_np`` needs non-empty rows), Arrow-vectorized.
 
-    The r12 JVM formulation (kept below as ``_simhash_from_hs_jvm``)
-    folded a 60-counter array accumulator over each doc's hash array —
-    ~60 interpreted lambda ops per shingle hash, measured as ~5-6 s of
-    ``dedup_simhash``'s 11.1 s sf1 wall (signature stage 7.2 s, of which
-    shingle+md5 is ~2 s). The fold is pure integer arithmetic, so unlike
-    float paths it vectorizes with ZERO output-identity risk; the
+    The JVM formulation (kept below as ``_simhash_from_hs_jvm``) folded a
+    60-counter array accumulator over each doc's hash array — ~60
+    interpreted lambda ops per shingle hash, measured as ~5-6 s of
+    ``dedup_simhash``'s 11.1 s sf1 wall. The fold is pure integer
+    arithmetic, so it vectorizes with ZERO output-identity risk; the
     pandas_udf batch runs ``np.add.reduceat`` per bit over the
-    concatenated batch. Map-only either way — the 100 TB shape (one scan,
-    no shuffle until the band join) is unchanged.
+    concatenated batch. Map-only either way.
 
-    ``assume_nonempty=True`` (round 18): callers whose relation already
-    excludes empty hash arrays at the source (``_shingle_hashes60``) skip
-    the ``size(hs) > 0`` filter here — pushed below the ArrowEvalPython,
-    it re-evaluated the entire shingle+md5 input expression once for the
-    Filter and again for the UDF input (the plan's Filter node carried
-    the full transform/md5 tree). Same rows either way.
+    Callers drop empty arrays themselves: ``_shingle_hashes60`` at the
+    source as a token-count test (a ``size(hs) > 0`` filter pushed below
+    the ArrowEvalPython re-evaluates the whole shingle+md5 input once for
+    the Filter and again for the UDF input).
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
-
-    hs = hs_rel if assume_nonempty else hs_rel.filter(F.size("hs") > 0)
 
     def sim60(col):
         return pd.Series(_simhash60_np(list(col)))
@@ -681,7 +648,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     block" is a pure bit expression on the two signatures riding the
     join, and the hamming filter runs straight at the join output.
     """
-    return simhash_pairs_from(_persisted(simhash_signatures(spark, sf_dir)))
+    return simhash_pairs_from(persisted(simhash_signatures(spark, sf_dir)))
 
 
 def simhash_pairs_from(sigs: DataFrame) -> DataFrame:
@@ -695,41 +662,30 @@ def simhash_pairs_from(sigs: DataFrame) -> DataFrame:
             F.lit((1 << block_size) - 1)
         )
 
+    def _block_rows(flips: list) -> DataFrame:
+        """(doc_id, simhash, blk, val): one row per block and flip, val
+        the block value XOR the flip (``None``: the block value itself)."""
+        def val(i: int, f) -> Column:
+            v = _blk(F.col("simhash"), i)
+            return v if f is None else v.bitwiseXOR(F.lit(f))
+
+        return sigs.select(
+            "doc_id",
+            "simhash",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(i).alias("blk"), val(i, f).alias("val"))
+                        for i in range(SIMHASH_BLOCKS)
+                        for f in flips
+                    ]
+                )
+            ).alias("bk"),
+        ).select("doc_id", "simhash", "bk.blk", "bk.val")
+
     # Probe side: each block value plus its 1-bit-flip neighborhood.
-    flips = [0] + [1 << t for t in range(block_size)]
-    probes = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        _blk(F.col("simhash"), i)
-                        .bitwiseXOR(F.lit(f))
-                        .alias("val"),
-                    )
-                    for i in range(SIMHASH_BLOCKS)
-                    for f in flips
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.blk", "bk.val")
-    exact = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        _blk(F.col("simhash"), i).alias("val"),
-                    )
-                    for i in range(SIMHASH_BLOCKS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.blk", "bk.val")
+    probes = _block_rows([0] + [1 << t for t in range(block_size)])
+    exact = _block_rows([None])
     a, b = probes.alias("a"), exact.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     # A (pair, block) match exists iff that block has <= 1 differing bit
@@ -834,19 +790,14 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = buckets.select(
         F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ds"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ds"), i + F.lit(2), F.size(F.col("ds"))),
-                        lambda y: F.struct(
-                            x["doc_id"].alias("doc_a"),
-                            y["doc_id"].alias("doc_b"),
-                            x["n_sh"].alias("na"),
-                            y["n_sh"].alias("nb"),
-                        ),
-                    ),
-                )
+            in_row_pairs(
+                F.col("ds"),
+                lambda x, y: F.struct(
+                    x["doc_id"].alias("doc_a"),
+                    y["doc_id"].alias("doc_b"),
+                    x["n_sh"].alias("na"),
+                    y["n_sh"].alias("nb"),
+                ),
             )
         ).alias("p")
     ).select("p.*")
@@ -1055,8 +1006,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 
     The driver only coordinates the fixpoint check (a count, never row
     data); ``localCheckpoint`` cuts per-round lineage so plan depth stays
-    O(1) per round rather than O(rounds). Exhausting max_iter raises —
-    non-fixpoint labels would be silently wrong.
+    O(1) per round rather than O(rounds). Each superseded round's
+    checkpoint is released once its count is taken, and the returned
+    labels are registered for ``unpersist_intermediates``. Exhausting
+    max_iter raises — non-fixpoint labels would be silently wrong.
     """
     edges = edges.select("a", "b").union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -1100,19 +1053,21 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
             .filter(F.col("n.lbl") != F.col("o.lbl"))
             .count()
         )
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
     else:
+        release(labels)
         raise RuntimeError(
             f"connected_components: no fixpoint in {max_iter} rounds "
             f"({changed} labels still changing); raise max_iter (rounds "
             f"needed ~ log2(component diameter))"
         )
-    return labels
+    return register_intermediate(labels)
 
 
-def dedup_clusters(spark: SparkSession, sf_dir: str, max_iter: int = 20) -> DataFrame:
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) for every doc in a near-dup component: the
     connected components of the MinHash-LSH pair graph, labeled by the
     component's minimum doc_id (the canonical "keep" doc).
@@ -1124,19 +1079,17 @@ def dedup_clusters(spark: SparkSession, sf_dir: str, max_iter: int = 20) -> Data
     doc near-dup only of its neighbors) converge within the default
     budget at any corpus size.
     """
-    pairs = (
+    pairs = persisted(
         minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b").toDF("a", "b")
-    ).persist()
-    _PERSISTED.append(pairs)
-    labels = connected_components(pairs, max_iter)
+    )
+    labels = connected_components(pairs)
     return labels.select(F.col("doc").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
-def _dedup_clusters_oracle() -> str:
-    # Transitive closure via recursive CTE, then min reachable id per node.
-    # Fine for the oracle (components are small); the Spark side never
-    # materializes the closure.
-    return f"""
+# The cluster oracles: transitive closure of the LSH pair graph via
+# recursive CTE, then each node's min reachable id. Fine for the oracle
+# (components are small); the Spark side never materializes the closure.
+_REACH_SQL = f"""
 WITH RECURSIVE {_minhash_lsh_ctes()},
 pairs AS ({_MINHASH_LSH_SELECT}),
 edges AS (
@@ -1148,12 +1101,14 @@ reach AS (
     SELECT a, b FROM edges
     UNION
     SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+)"""
+_CLUSTER_OF_SQL = (
+    "SELECT a AS doc_id, least(a, min(b)) AS cluster_id FROM reach GROUP BY a"
 )
-SELECT a AS doc_id, least(a, min(b)) AS cluster_id FROM reach GROUP BY a
+
+DEDUP_CLUSTERS_ORACLE = f"""{_REACH_SQL}
+{_CLUSTER_OF_SQL}
 """
-
-
-DEDUP_CLUSTERS_ORACLE = _dedup_clusters_oracle()
 
 
 NGRAM_JACCARD_ORACLE = f"""
@@ -1219,21 +1174,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_keep_best_oracle() -> str:
     from mapreduce_hadoop_spark.operators.textops import QUALITY_ORACLE
 
-    return f"""
-WITH RECURSIVE {_minhash_lsh_ctes()},
-pairs AS ({_MINHASH_LSH_SELECT}),
-edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs
-    UNION
-    SELECT doc_b, doc_a FROM pairs
-),
-reach AS (
-    SELECT a, b FROM edges
-    UNION
-    SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
+    return f"""{_REACH_SQL},
 clusters AS (
-    SELECT a AS doc_id, least(a, min(b)) AS cluster_id FROM reach GROUP BY a
+    {_CLUSTER_OF_SQL}
 ),
 q AS ({QUALITY_ORACLE}),
 ranked AS (

@@ -52,6 +52,11 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduce_hadoop_spark.operators.dedup import in_row_pairs
+from mapreduce_hadoop_spark.session import (
+    persisted,
+    unpersist_intermediates,  # noqa: F401 — re-exported
+)
 from mapreduce_hadoop_spark.sources.tables import load_table
 
 N_QUERIES = 10  # vec_id < 10 are the demo query vectors
@@ -790,14 +795,8 @@ def near_dup_lsh_from(
         small_buckets.select(
             "band",
             F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ds"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ds"), i + F.lit(2), F.size(F.col("ds"))),
-                            lambda y: F.struct(x.alias("a"), y.alias("b")),
-                        ),
-                    )
+                in_row_pairs(
+                    F.col("ds"), lambda x, y: F.struct(x.alias("a"), y.alias("b"))
                 )
             ).alias("p"),
         )
@@ -1750,25 +1749,6 @@ def _emb_count(emb: DataFrame, sf_dir: str) -> int:
 
     return ann_index.corpus_count(emb, sf_dir)
 
-# PQ intermediates cached for the life of one query — today the in-plan
-# codes relation of ``topk_pq`` (``_adc_rank(persist_codes=True)``). Same
-# contract as dedup._PERSISTED: callers release via
-# ``unpersist_intermediates`` (bench.py does, between queries); the PQ
-# cache-lifecycle test pins that nothing survives it.
-_PERSISTED: "list[DataFrame]" = []
-
-
-def _persisted(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def unpersist_intermediates() -> None:
-    """Release cached PQ intermediates (safe mid-lineage — Spark recomputes)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-
 
 def _pq_code(nv: Column, m: int) -> Column:
     """8-bit sign-pattern code of subspace ``m`` (bit j = sign of dim j)."""
@@ -2033,7 +2013,7 @@ def _adc_rank(
         *[f"c{m}" for m in range(m_subspaces)],
     )
     if persist_codes:
-        codes = _persisted(codes)
+        codes = persisted(codes)
     if keyed:
         sc = codes.join(F.broadcast(qarr), "cent_id")
     else:

@@ -478,11 +478,11 @@ REWRITTEN_HASH_IDENTICAL: tuple[str, ...] = (
     # vs the committed r17 gate hashes at sf0.001/0.01/0.1 (pins in
     # tests/test_registry_rotation.py against the regenerated r18 log):
     "corpus_clean_stats",        # fused scan + window exact-dedup + LSH rewrite
-                                 # (r18); r19: Bloom-negative bypass around the
-                                 # near-dup anti-join (corpus-side doc_id
-                                 # exchange gone; driver-built bitmap, VERDICT
-                                 # r18 order 2) — hashes re-verified vs the
-                                 # committed r18 logs at 3 scales.
+                                 # (r18); r19: static broadcast near-dup
+                                 # anti-join (corpus-side doc_id exchange
+                                 # gone, VERDICT r18 order 2) — hashes
+                                 # re-verified vs the committed r18 logs at
+                                 # 3 scales.
     "similarity_topk_ivf_adaptive",  # lists via the map-side _assign
     "dedup_clusters",            # LSH candidate rewrite (pair graph unchanged)
     "dedup_keep_best",           # same, plus the untouched quality join

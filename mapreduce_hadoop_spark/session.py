@@ -8,13 +8,17 @@ Pins the configuration the engine depends on:
   split-size / reducer-count tuning (``src/AirportTripsRevenue.java:525-560``).
 - Arrow enabled — every Python-side kernel in this engine is Arrow-batched
   (``applyInPandas`` / pandas UDF), never row-at-a-time.
+
+It also holds the one registry of intermediates that query builders cache
+for the life of a query (``persisted`` / ``register_intermediate``);
+``unpersist_intermediates`` releases them all.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONF = {
     "spark.sql.session.timeZone": "UTC",
@@ -79,3 +83,44 @@ def get_spark(
     # Timezone must hold even when we inherit an existing session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+# Intermediates a builder caches or locally checkpoints for the life of one
+# query. A cache with no matching release leaks executor storage when the
+# engine is used as a library, so callers (bench.py and the tools between
+# queries, long-lived pipelines after consuming a result) release them via
+# ``unpersist_intermediates``.
+_PERSISTED: list[DataFrame] = []
+
+
+def register_intermediate(df: DataFrame) -> DataFrame:
+    """Register an already cached or locally checkpointed ``df`` for
+    ``unpersist_intermediates``; returns ``df``."""
+    _PERSISTED.append(df)
+    return df
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """``df.persist()``, registered for ``unpersist_intermediates``."""
+    return register_intermediate(df.persist())
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist ``df``: its cache entry, or the RDD a ``localCheckpoint``
+    pinned — that RDD is not in the CacheManager, so ``clearCache`` never
+    frees it."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+def unpersist_intermediates() -> None:
+    """Release every registered intermediate.
+
+    Call it once the results are consumed: a released cache is recomputed
+    from its lineage on the next action, but a released local checkpoint
+    (``dedup.connected_components``' labels) has no lineage left.
+    """
+    while _PERSISTED:
+        release(_PERSISTED.pop())

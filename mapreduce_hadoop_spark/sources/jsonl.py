@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from mapreduce_hadoop_spark.session import persisted
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -47,8 +49,9 @@ def corrupt_rows(df: DataFrame) -> DataFrame:
     JSON scan (the parser would never materialize the data columns it
     needs to classify rows); the supported pattern is querying a
     *materialized* cache of the parsed relation, so this caches and
-    forces materialization before filtering."""
-    df = df.cache()
+    forces materialization before filtering. The cache is registered
+    for ``session.unpersist_intermediates``."""
+    df = persisted(df)
     df.count()
     return df.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
 

@@ -72,7 +72,7 @@ def test_simhash_covers_true_pairs(spark, sf_dir):
     assert len(sim & exact) / len(exact) >= 0.8
 
 
-def test_lsh_bucket_cap_bounds_boilerplate_blowup(spark):
+def test_lsh_bucket_cap_bounds_boilerplate_blowup(spark, monkeypatch):
     # 300 identical docs collapse onto one band signature per band; without
     # the cap the candidate self-join is 300*299/2 pairs. With the cap the
     # hot buckets are dropped entirely and the stat reports them.
@@ -94,7 +94,8 @@ def test_lsh_bucket_cap_bounds_boilerplate_blowup(spark):
     assert len(dropped) == dedup.BANDS
     assert all(r["bucket_n"] == 300 for r in dropped)
     # An uncapped run on the same input explodes into the quadratic pairs.
-    uncapped = dedup.minhash_lsh_pairs_from(hs, bucket_cap=10**9)
+    monkeypatch.setattr(dedup, "LSH_BUCKET_CAP", 10**9)
+    uncapped = dedup.minhash_lsh_pairs_from(hs)
     assert uncapped.count() == 300 * 299 // 2
 
 

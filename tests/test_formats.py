@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from mapreduce_hadoop_spark.session import unpersist_intermediates
 from mapreduce_hadoop_spark.sources.jsonl import (
     corrupt_rows,
     read_jsonl,
@@ -21,6 +22,8 @@ def test_jsonl_roundtrip_and_corrupt_channel(spark, tmp_path):
         "not json at all\n"
         '{"event_id": "also-bad", "user_id": 9, "event_type": "x", "value": 3.0}\n'
     )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     df = read_jsonl(spark, str(p), SCHEMA)
     ok = valid_rows(df)
     bad = corrupt_rows(df)
@@ -34,6 +37,9 @@ def test_jsonl_roundtrip_and_corrupt_channel(spark, tmp_path):
     # collect (not count): a bare count over a filtered raw-JSON scan prunes
     # every data column and trips QUERY_ONLY_CORRUPT_RECORD_COLUMN.
     assert {r["event_id"] for r in back.collect()} == {1, 2}
+    # corrupt_rows' cache is released through the persist registry.
+    unpersist_intermediates()
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):

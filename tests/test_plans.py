@@ -641,33 +641,3 @@ def test_clean_docs_anti_join_never_exchanges_the_corpus(spark, sf_dir):
     dedup.unpersist_intermediates()
     assert "BroadcastHashJoin LeftAnti" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan, plan[:1500]
-
-
-def test_clean_docs_bloom_branch_shape_and_equivalence(spark, sf_dir, monkeypatch):
-    """The over-threshold branch (Bloom-negative bypass): forced via the
-    threshold, its plan must be the Union of a join-free bypass and a
-    residual anti-join whose doc_id exchanges carry ONLY bloom-positive
-    rows (probe column in the exchange input), and its OUTPUT must equal
-    the broadcast branch row-for-row — the two branches are the same
-    query at different data sizes."""
-    import re
-
-    from mapreduce_hadoop_spark.operators import corpus, dedup
-    from mapreduce_hadoop_spark.plans.checks import formatted_plan
-
-    dedup.unpersist_intermediates()
-    expected = {tuple(r) for r in corpus.corpus_clean_stats(spark, sf_dir).collect()}
-    dedup.unpersist_intermediates()
-    monkeypatch.setattr(corpus, "CORPUS_BLOOM_MIN_NDS", 0)
-    df = corpus.corpus_clean_stats(spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "Union" in plan, plan[:1500]
-    assert "LeftAnti" in plan, plan[:1500]
-    for m in re.finditer(
-        r"\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]\s*\nArguments: hashpartitioning\(doc_id",
-        plan,
-    ):
-        assert "bloom_hit" in m.group(1), m.group(1)
-    got = {tuple(r) for r in df.collect()}
-    dedup.unpersist_intermediates()
-    assert got == expected

@@ -951,22 +951,39 @@ TOPK_REGISTRY_QUERIES = [
     "similarity_topk_ivfpq_trained",
 ]
 
+# The near-duplicate / corpus-curation queries: their builders persist
+# shingle hashes, signatures and near-dup ids, and the two cluster
+# queries locally checkpoint each connected-components round.
+DEDUP_REGISTRY_QUERIES = [
+    "dedup_exact",
+    "dedup_exact_normalized",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_ngram_jaccard",
+    "dedup_clusters",
+    "dedup_keep_best",
+    "contamination_check",
+    "text_span_dedup",
+    "corpus_clean_stats",
+]
 
-@pytest.mark.parametrize("name", TOPK_REGISTRY_QUERIES)
+
+@pytest.mark.parametrize("name", TOPK_REGISTRY_QUERIES + DEDUP_REGISTRY_QUERIES)
 def test_pq_serve_releases_every_cached_intermediate(
     spark, sf_dir, tmp_path, monkeypatch, name
 ):
-    """Cache lifecycle of every registered top-K serve: after the query
-    is built and collected, ``unpersist_intermediates`` must leave NO
-    persisted RDD behind — whichever ranker path, books source, codes
-    layout, or cost branch the query took."""
+    """Cache lifecycle of every registered top-K serve and near-dup
+    query: after the query is built and collected,
+    ``unpersist_intermediates`` (the one persist registry) must leave NO
+    persisted RDD behind — neither a cache nor a local checkpoint,
+    whichever ranker path, books source, codes layout, or cost branch the
+    query took."""
     from mapreduce_hadoop_spark import registry
-    from mapreduce_hadoop_spark.operators import ann_index, dedup
+    from mapreduce_hadoop_spark.operators import ann_index
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     ann_index.clear_memos()
     spark.catalog.clearCache()
-    dedup.unpersist_intermediates()
     unpersist_intermediates()
     jsc = spark.sparkContext._jsc
     # Start from an empty cache: an RDD another test left persisted is not

@@ -127,7 +127,7 @@ def batch1(factors: "list[int]") -> None:
     worth implementing."""
     from mapreduce_hadoop_spark import registry
     from mapreduce_hadoop_spark.operators import similarity
-    from mapreduce_hadoop_spark.session import get_spark
+    from mapreduce_hadoop_spark.session import get_spark, unpersist_intermediates
 
     spark = get_spark("ann-batch1", extra_conf={"spark.ui.enabled": "true"})
     spark.range(1).count()
@@ -144,7 +144,7 @@ def batch1(factors: "list[int]") -> None:
                 try:
                     # warm (artifacts + plan), untimed
                     spark.catalog.clearCache()
-                    similarity.unpersist_intermediates()
+                    unpersist_intermediates()
                     queries[name](spark, sf_dir).write.format("noop").mode(
                         "overwrite"
                     ).save()
@@ -152,7 +152,7 @@ def batch1(factors: "list[int]") -> None:
                     cursor = _scan_bytes_since(spark, -1)[1]
                     for _ in range(2):
                         spark.catalog.clearCache()
-                        similarity.unpersist_intermediates()
+                        unpersist_intermediates()
                         t0 = time.time()
                         queries[name](spark, sf_dir).write.format("noop").mode(
                             "overwrite"
@@ -180,7 +180,7 @@ def main() -> None:
     factors = [int(a) for a in sys.argv[1:]] or [10, 100]
     from mapreduce_hadoop_spark import registry
     from mapreduce_hadoop_spark.operators import similarity
-    from mapreduce_hadoop_spark.session import get_spark
+    from mapreduce_hadoop_spark.session import get_spark, unpersist_intermediates
 
     spark = get_spark("ann-crossover", extra_conf={"spark.ui.enabled": "true"})
     spark.range(1).count()
@@ -200,7 +200,7 @@ def main() -> None:
         exact: dict[int, set] = {}
         for name in QUERIES:
             spark.catalog.clearCache()
-            similarity.unpersist_intermediates()
+            unpersist_intermediates()
             rows = queries[name](spark, sf_dir).collect()
             got: dict[int, set] = {}
             for r in rows:
@@ -218,7 +218,7 @@ def main() -> None:
             bytes_read = -1
             for _ in range(2):
                 spark.catalog.clearCache()
-                similarity.unpersist_intermediates()
+                unpersist_intermediates()
                 t0 = time.time()
                 queries[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"

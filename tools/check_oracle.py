@@ -79,15 +79,13 @@ def main() -> int:
     only = set(sys.argv[1:])
 
     import __spark_entry__ as entry_mod
-    from mapreduce_hadoop_spark.session import get_spark
+    from mapreduce_hadoop_spark.session import get_spark, unpersist_intermediates
 
     print(f"# SRCHASH {src_hash()}")
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    from mapreduce_hadoop_spark.operators import dedup
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -100,7 +98,7 @@ def main() -> int:
         # query's cached subtree into a later plan — every gate row must
         # verify the standalone plan.
         spark.catalog.clearCache()
-        dedup.unpersist_intermediates()
+        unpersist_intermediates()
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()

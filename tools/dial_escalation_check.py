@@ -45,8 +45,7 @@ def committed_hash(scale: str, query: str) -> "str | None":
 
 def main() -> int:
     from mapreduce_hadoop_spark import registry
-    from mapreduce_hadoop_spark.operators import dedup
-    from mapreduce_hadoop_spark.session import get_spark
+    from mapreduce_hadoop_spark.session import get_spark, unpersist_intermediates
 
     spark = get_spark("dial-escalation-check")
     q = registry.queries()
@@ -54,7 +53,7 @@ def main() -> int:
     for scale, sf_dir in SCALES.items():
         for name in QUERIES:
             spark.catalog.clearCache()
-            dedup.unpersist_intermediates()
+            unpersist_intermediates()
             got = value_hash(q[name](spark, sf_dir).toPandas())
             want = committed_hash(scale, name)
             ok = got == want

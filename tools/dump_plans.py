@@ -35,8 +35,7 @@ def main() -> None:
 
     import bench
     from mapreduce_hadoop_spark import registry
-    from mapreduce_hadoop_spark.operators import dedup, similarity
-    from mapreduce_hadoop_spark.session import get_spark
+    from mapreduce_hadoop_spark.session import get_spark, unpersist_intermediates
 
     spark = get_spark("dump-plans")
     queries = registry.queries()
@@ -47,8 +46,7 @@ def main() -> None:
         )
     for name in names:
         spark.catalog.clearCache()
-        dedup.unpersist_intermediates()
-        similarity.unpersist_intermediates()
+        unpersist_intermediates()
         try:
             df = queries[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(

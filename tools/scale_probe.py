@@ -43,7 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreduce_hadoop_spark import registry  # noqa: E402
 from mapreduce_hadoop_spark.operators import dedup  # noqa: E402
-from mapreduce_hadoop_spark.session import get_spark  # noqa: E402
+from mapreduce_hadoop_spark.session import get_spark, unpersist_intermediates  # noqa: E402
 
 LINEAR_PATH_QUERIES = [
     "trip_length_histogram", "segments_clean_positions", "trips_sessionize_window",
@@ -117,12 +117,12 @@ def main() -> None:
                 # (count() cannot prune here: every pair row survives the
                 # jaccard/cosine/hamming filter, which forces the plan.)
                 row[f"rows_{label}"] = df.count()
-                dedup.unpersist_intermediates()
+                unpersist_intermediates()
                 spark.catalog.clearCache()
                 df = fn(spark, d)
                 t = time.time()
             df.write.format("noop").mode("overwrite").save()
-            dedup.unpersist_intermediates()
+            unpersist_intermediates()
             spark.catalog.clearCache()
             row[label] = round(time.time() - t, 2)
         row["ratio"] = round(row["b"] / max(row["a"], 0.01), 1)
