@@ -66,7 +66,7 @@ def run_airport_revenue(inp: str, out: str) -> None:
         }
     )
     # JVM parity path (bit-identical to the Pandas replay, no Python workers).
-    trips = sessionize_parity_sql(pos).cache()
+    trips = persisted(sessionize_parity_sql(pos))
     write_trip_lines(trips, f"{out}/trips")
     # The reference materializes job-1 output as text with %.2f revenue and
     # job 2 re-parses it (AirportTripsRevenue.java:351-356,422-426); summing
@@ -76,6 +76,7 @@ def run_airport_revenue(inp: str, out: str) -> None:
     daily = daily_revenue(rounded)
     write_tsv(daily, f"{out}/daily")
     total = total_revenue(rounded).first()["total_revenue"]
+    unpersist_intermediates()
     print(f"TOTAL AIRPORT TRIPS REVENUE : {total:.2f}")
 
 
@@ -104,14 +105,14 @@ def run_pii_scrub(inp: str, out: str) -> None:
     from mapreduce_hadoop_spark.operators.textops import pii_scrub
 
     spark = get_spark("pii-scrub")
-    scrubbed = pii_scrub(spark, inp).cache()
+    scrubbed = persisted(pii_scrub(spark, inp))
     scrubbed.write.mode("overwrite").parquet(f"{out}/scrubbed_docs")
     tot = scrubbed.agg(
         F.coalesce(F.sum("n_emails"), F.lit(0)).alias("e"),
         F.coalesce(F.sum("n_phones"), F.lit(0)).alias("p"),
     ).first()
+    unpersist_intermediates()
     print(f"EMAILS REDACTED : {tot['e']}  PHONES REDACTED : {tot['p']}")
-    scrubbed.unpersist()
 
 
 def run_train_split(inp: str, out: str) -> None:
@@ -183,7 +184,7 @@ def run_quality_filter(inp: str, out: str) -> None:
         .otherwise(F.lit("kept"))
         .alias("drop_reason"),
     )
-    audit = audit.cache()
+    audit = persisted(audit)
     audit.write.mode("overwrite").parquet(f"{out}/audit")
     docs = load_table(spark, inp, "documents")
     kept = docs.join(
@@ -196,7 +197,7 @@ def run_quality_filter(inp: str, out: str) -> None:
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    audit.unpersist()
+    unpersist_intermediates()
     total = sum(breakdown.values())
     kept_n = breakdown.get("kept", 0)
     parts = " ".join(

@@ -1,40 +1,34 @@
 """Persisted ANN index artifacts — the FAISS train/add split.
 
-A deployed vector index is trained ONCE (k-means coarse quantizer, PQ
-subspace codebooks) and then serves forever; retraining per session is
-how a 13-second k-means fit sneaks into every cold gate run and a
-``count()`` job into every PQ query. This module gives every trained
-model parameter a durable home:
+A deployed vector index is trained once (k-means coarse quantizer, PQ
+subspace codebooks) and then serves; this module gives every trained or
+derived model a durable home so a warm session plans no training job:
 
 - artifacts live under ``$SPARK_GRAFT_INDEX_DIR`` (default
   ``<repo>/.ann_index``, gitignored), one subdirectory per corpus
-  snapshot;
-- the snapshot key is a fingerprint of the embeddings source (realpath
-  + file size + mtime), so a dataset dir regenerated in place gets a
-  NEW key and stale artifacts are never served (they just orphan);
-- artifacts are parquet (model-sized: K x dim doubles for centroids,
-  M x 2^bits x sub doubles for codebooks) written with pyarrow — no
-  Spark job needed to load a model;
-- an in-session memo sits in front of the disk artifact, and
-  ``clear_memos()`` (wired into ``similarity.clear_stats_cache``) drops
-  it after an in-place dataset mutation.
+  snapshot. The snapshot key is a fingerprint of the embeddings source
+  (``_fingerprint``), so a corpus regenerated in place gets a new key and
+  its stale artifacts orphan instead of serving;
+- driver-sized models (coarse centroids, PQ books, fixed books, code
+  histograms, query vectors) are parquet files written with pyarrow, so
+  loading one needs no Spark job. Every one resolves through
+  ``fixed_model`` in one order: in-session memo, then the artifact under
+  the corpus' own key, then the frozen artifact of a declared append
+  base (``_base_info``; skipped with ``frozen_base=False``), else
+  ``compute()``, saved under the corpus' own key;
+- data-sized relations (encoded codes, by-list serving copies) are
+  committed Spark parquet directories behind ``cached_relation``, served
+  as base + delta under an append lineage;
+- a corpus whose bytes cannot be fingerprinted (volatile) keeps its
+  models in the session memo only; ``clear_memos()`` (wired into
+  ``similarity.clear_stats_cache``) drops the memos.
 
-On a 1000-executor cluster the same layout holds with the index root on
-shared storage: training is a one-time distributed job whose driver-
-sized result every later session broadcasts from the artifact — the
-FAISS ``train``/``add`` split, with Spark ML KMeans as the trainer.
-
-Fitting still happens through Spark (`pyspark.ml.clustering.KMeans`,
-fixed seed) on a deterministically bounded sample (`TRAIN_SAMPLE_CAP`):
-at 100 TB nobody trains a coarse quantizer on every row — FAISS trains
-on an in-RAM sample and so do we, with the cap making the fit cost a
-constant while assignment/encode stay full-corpus and distributed.
-Since round 15 the capped sample is CANONICALIZED (one partition,
-sorted by vec_id — ``_canonical_sample``) before every fit, so the
-fitted model is a pure function of the corpus' logical content: the
-round-14 diagnosis (SCALE_ann_r14.md §2) proved k-means|| seeds by
-physical row position, making un-canonicalized fits track the training
-file's layout across regenerations.
+k-means fits (Spark ML, fixed seed) train on a deterministic sample
+capped at ``TRAIN_SAMPLE_CAP`` rows, canonicalized to one vec_id-sorted
+partition (``_train_sample``): k-means|| seeds by physical row position,
+so the canonical order makes every fitted model a pure function of the
+corpus' logical content, and the cap makes the fit cost a constant while
+assignment and encode stay full-corpus and distributed.
 """
 
 from __future__ import annotations
@@ -64,17 +58,8 @@ KMEANS_SEED = 42
 COARSE_MAXITER = 10
 PQ_MAXITER = 20
 
-# Round 15: every KMeans fit canonicalizes its capped sample to ONE
-# partition sorted by vec_id before .fit(). k-means|| seeds by PHYSICAL
-# ROW POSITION, so without this the fitted model tracks the training
-# file's row layout — the named round-14 cross-session hash variable
-# (SCALE_ann_r14.md §2: a same-rows shuffled rewrite moved 1999/2000 pq
-# book cells; SCALE_ann_r15.md §1 records that the sorted
-# single-partition sample restores bit-identical books across layouts).
-# One sorted partition of a TRAIN_SAMPLE_CAP-bounded sample is the FAISS
-# train-on-a-RAM-sample shape, not a scalability cost. ``o1`` in the
-# recipe string orphans every pre-canonicalization artifact (books,
-# codes, histograms — all key the recipe).
+# Sample-order canonicalization version, part of every recipe: ``o1``
+# orphans every artifact fitted before the sample was canonicalized.
 _SAMPLE_ORDER_VERSION = "o1"
 
 
@@ -90,6 +75,20 @@ def _canonical_sample(df: DataFrame) -> DataFrame:
     Makes every downstream ``KMeans.fit`` a pure function of the sample's
     LOGICAL content rather than of (content, physical row order)."""
     return df.repartition(1).sortWithinPartitions("vec_id")
+
+
+def _train_sample(df: DataFrame, sf_dir: str) -> DataFrame:
+    """The k-means training input: ``df`` itself up to TRAIN_SAMPLE_CAP
+    corpus rows, else a deterministic xxhash64(vec_id) sample of about
+    that many rows; canonicalized either way."""
+    n = corpus_count(df, sf_dir)
+    if n > TRAIN_SAMPLE_CAP:
+        frac_num = TRAIN_SAMPLE_CAP * (1 << 16) // n
+        df = df.filter(
+            F.abs(F.xxhash64(F.col("vec_id"))) % F.lit(1 << 16) < F.lit(frac_num)
+        )
+    return _canonical_sample(df)
+
 
 _META_MEMO: dict[str, dict] = {}
 _MODEL_MEMO: dict[tuple, list] = {}
@@ -133,10 +132,8 @@ def _fingerprint(sf_dir: str) -> str:
     comes from the LARGEST ``*.parquet`` member (ties by name), whose
     footer carries that build's row-group offsets and statistics — a
     regeneration cannot keep them — and the member path joins the key so
-    a re-shuffled directory re-keys. Before round 13 a directory source
-    hit ``IsADirectoryError`` and silently degraded to volatile,
-    disabling artifact persistence exactly where the append-serving path
-    needs it.
+    a re-shuffled directory re-keys (durable, so the append-serving path
+    keeps its artifacts).
 
     Memoized by (path, footer-source, size, mtime_ns): the 64 KiB read +
     sha256 runs once per stat-identical snapshot per session instead of
@@ -254,17 +251,6 @@ def model_corpus_count(emb: DataFrame, sf_dir: str) -> int:
     return corpus_count(emb, sf_dir)
 
 
-def _load_base_model(
-    sf_dir: str, fname: str, columns: "list[str]"
-) -> "list[tuple] | None":
-    """A frozen model from the declared base snapshot, if both the
-    declaration and the base artifact exist."""
-    base = _base_info(sf_dir)
-    if base is None:
-        return None
-    return _load_model(os.path.join(_corpus_dir(base["base"]), fname), columns)
-
-
 # --- corpus metadata (row count) -------------------------------------------
 
 
@@ -313,169 +299,75 @@ def _save_model(path: str, columns: dict[str, list]) -> None:
     os.replace(tmp, path)
 
 
-# Cap on how many leading vec_ids the fit-env sidecar hashes IN FILE
-# ORDER (8 B each -> 8 MB ceiling). The order hash exists because the
-# round-14 diagnosis of the cross-session kmeans hash shifts
-# (SCALE_ann_r14.md) demonstrated the fit is a function of the training
-# input's PHYSICAL ROW ORDER: k-means|| seeding samples by position, so
-# a regenerated corpus file with identical logical rows but a different
-# layout perturbs every fitted cell (measured: 1999/2000 pq book cells
-# moved under a same-rows shuffle). Two artifacts fitted from the same
-# logical corpus can now be attributed: same order_sha -> the fit path
-# itself drifted (a real bug); different order_sha -> the input layout
-# changed (the known, named variable).
-_FIT_ENV_ORDER_CAP = 1 << 20
+def fixed_model(
+    sf_dir: str,
+    fname: str,
+    columns: "list[str]",
+    compute: "Callable[[], list[tuple]]",
+    frozen_base: bool = True,
+) -> "list[tuple]":
+    """Load-or-compute the driver-sized model artifact ``fname`` (rows of
+    ``columns``) — the one resolver behind every model in this module.
+    Order: in-session memo, the artifact under the corpus fingerprint,
+    the FROZEN artifact of a declared append base (``_base_info``), else
+    ``compute()``, saved under the corpus fingerprint unless the corpus
+    is volatile. Loaded and computed rows are the same Python values.
 
+    The frozen-base load is the FAISS ``add`` contract for fitted models
+    (an appended corpus serves the base's quantizer and books, never a
+    refit); for deterministic models whose ``compute`` derives from the
+    base rows (``similarity.topk_pq_fixed``'s sign-orthant centroid
+    means) it is a pure cache, which is what lets the driver hash-verify
+    the base+delta union.
 
-def _fit_env(sf_dir: str) -> dict:
-    """Environment + fit-input provenance recorded NEXT TO every fitted
-    model artifact (``<artifact>.fit_env.json``) — diagnostic metadata
-    only, never an input to any query, so writing it changes no output
-    byte. Failures are swallowed field-by-field: provenance must never
-    make a fit fail."""
-    import platform
-    import sys as _sys
-
-    env: dict = {"python": _sys.version.split()[0], "platform": platform.platform()}
-    try:
-        import numpy as _np
-        import pyarrow as _pa
-        import pyspark as _ps
-
-        env.update(
-            pyspark=_ps.__version__, numpy=_np.__version__, pyarrow=_pa.__version__
-        )
-    except Exception:
-        pass
-    try:
-        with open("/proc/cpuinfo") as f:
-            info = f.read()
-        model = next(
-            (l.split(":", 1)[1].strip() for l in info.splitlines() if "model name" in l),
-            "",
-        )
-        flags = next(
-            (l.split(":", 1)[1] for l in info.splitlines() if l.startswith("flags")), ""
-        )
-        env["cpu_model"] = model
-        env["cpu_flags_sha"] = hashlib.sha256(
-            " ".join(sorted(flags.split())).encode()
-        ).hexdigest()[:16]
-        env["nproc"] = os.cpu_count()
-    except Exception:
-        pass
-    env["corpus_fingerprint"] = _fingerprint(sf_dir)
-    try:
-        # The named variable: physical row order of the training input.
-        # vec_id column only, capped — one cheap driver-side read.
-        import pyarrow.parquet as pq
-
-        src = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
-        if os.path.isdir(src):
-            members = sorted(
-                os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")
+    ``frozen_base=False`` skips the base artifact: for statistics of the
+    SERVED relation (the code histogram behind the adaptive-shortlist
+    bulk estimate, the query vectors) the base snapshot's copy is wrong
+    by design on an appended corpus, so the live corpus computes and
+    persists its own."""
+    key = _fingerprint(sf_dir)
+    memo_key = (key, fname)
+    rows = _MODEL_MEMO.get(memo_key)
+    if rows is not None:
+        return rows
+    if _durable(key):
+        rows = _load_model(os.path.join(_corpus_dir(sf_dir), fname), columns)
+    base = _base_info(sf_dir) if rows is None and frozen_base else None
+    if base is not None:
+        rows = _load_model(os.path.join(_corpus_dir(base["base"]), fname), columns)
+    if rows is None:
+        rows = compute()
+        if _durable(key):
+            _save_model(
+                os.path.join(_corpus_dir(sf_dir, create=True), fname),
+                {c: [r[i] for r in rows] for i, c in enumerate(columns)},
             )
-        else:
-            members = [src]
-        h = hashlib.sha256()
-        seen = 0
-        for m in members:
-            if seen >= _FIT_ENV_ORDER_CAP:
-                break
-            # Row-group-at-a-time (ADVICE r14): a 20M-row member must not
-            # materialize its whole vec_id column to hash the first 1M.
-            for batch in pq.ParquetFile(m).iter_batches(columns=["vec_id"]):
-                ids = batch.column("vec_id").to_numpy(zero_copy_only=False)[
-                    : _FIT_ENV_ORDER_CAP - seen
-                ]
-                h.update(ids.astype("<i8").tobytes())
-                seen += len(ids)
-                if seen >= _FIT_ENV_ORDER_CAP:
-                    break
-        env["vec_id_order_sha"] = h.hexdigest()[:16]
-        env["vec_id_order_rows"] = seen
-    except Exception as e:
-        env["vec_id_order_sha"] = f"unavailable:{type(e).__name__}"
-    return env
-
-
-def _write_fit_env(path: str, sf_dir: str, extra: "dict | None" = None) -> None:
-    try:
-        env = _fit_env(sf_dir)
-        if extra:
-            env.update(extra)
-        tmp = path + ".fit_env.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(env, f, indent=1, sort_keys=True)
-        os.replace(tmp, path + ".fit_env.json")
-    except Exception:
-        pass  # provenance must never fail a fit
+    _MODEL_MEMO[memo_key] = rows
+    return rows
 
 
 def coarse_centroids(
     spark: SparkSession, emb: DataFrame, sf_dir: str, k: int
 ) -> list[tuple[int, list[float]]]:
-    """K-means coarse quantizer centroids, load-or-fit.
+    """K-means coarse quantizer centroids, ``[(cent_id, cv)]`` — K x dim
+    doubles. Fit: Spark ML KMeans (KMEANS_SEED, COARSE_MAXITER) over
+    ``_train_sample`` (the FAISS recipe: train on a sample, assign the
+    full corpus). The artifact name carries the full training recipe, so
+    changing seed/maxIter/cap orphans the old model instead of serving
+    it."""
 
-    Returns ``[(cent_id, cv)]`` — model parameters, K x dim doubles.
-    Fit: Spark ML KMeans (KMEANS_SEED, COARSE_MAXITER) over a
-    deterministic sample capped at TRAIN_SAMPLE_CAP rows (the FAISS
-    recipe: train on a sample, assign the full corpus). The artifact
-    name carries the full training recipe, so changing seed/maxIter/cap
-    orphans the old model instead of silently serving it.
-    """
-    key = _fingerprint(sf_dir)
-    fname = f"coarse_k{k}_{_recipe(COARSE_MAXITER)}.parquet"
-    memo_key = (key, fname)
-    rows = _MODEL_MEMO.get(memo_key)
-    if rows is not None:
-        return rows
-
-    path = os.path.join(_corpus_dir(sf_dir), fname)
-    loaded = _load_model(path, ["cent_id", "cv"]) if _durable(key) else None
-    if loaded is None:
-        # Declared append lineage: serve the BASE snapshot's frozen
-        # quantizer instead of refitting (the FAISS add contract).
-        loaded = _load_base_model(sf_dir, fname, ["cent_id", "cv"])
-    if loaded is not None:
-        rows = [(int(c), list(v)) for c, v in loaded]
-    else:
+    def fit() -> "list[tuple]":
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        n = corpus_count(emb, sf_dir)
-        feats = emb
-        if n > TRAIN_SAMPLE_CAP:
-            frac_num = TRAIN_SAMPLE_CAP * (1 << 16) // n
-            feats = emb.filter(
-                F.abs(F.xxhash64(F.col("vec_id"))) % F.lit(1 << 16) < F.lit(frac_num)
-            )
-        feats = _canonical_sample(feats).select(
+        feats = _train_sample(emb, sf_dir).select(
             "vec_id", array_to_vector(F.col("v")).alias("features")
         )
         km = KMeans(k=k, seed=KMEANS_SEED, maxIter=COARSE_MAXITER).fit(feats)
-        rows = [
-            (i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())
-        ]
-        if _durable(key):
-            d = _corpus_dir(sf_dir, create=True)
-            _save_model(
-                os.path.join(d, fname),
-                {"cent_id": [r[0] for r in rows], "cv": [r[1] for r in rows]},
-            )
-            _write_fit_env(
-                os.path.join(d, fname),
-                sf_dir,
-                {
-                    "model": "coarse",
-                    "k": k,
-                    "n": n,
-                    "sampled": n > TRAIN_SAMPLE_CAP,
-                    "sample_order": _SAMPLE_ORDER_VERSION,
-                },
-            )
-    _MODEL_MEMO[memo_key] = rows
-    return rows
+        return [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())]
+
+    fname = f"coarse_k{k}_{_recipe(COARSE_MAXITER)}.parquet"
+    return fixed_model(sf_dir, fname, ["cent_id", "cv"], fit)
 
 
 def pq_codebooks(
@@ -488,55 +380,30 @@ def pq_codebooks(
     tag: str = "nv",
     coarse_k: "int | None" = None,
 ) -> list[tuple[int, int, list[float]]]:
-    """Lloyd-TRAINED product-quantization codebooks, load-or-fit.
-
-    ``nvt`` must carry the (normalized or residual) vector column whose
-    name is ``tag``; one KMeans(k, seed) fit per subspace over that
-    column's sub_dim-wide slices, each on the deterministic capped
-    sample. Returns ``[(m, code, cd)]`` with ``cd`` the sub_dim-dim cell
-    centroid — M x 2^bits x sub_dim doubles, model-sized.
+    """Lloyd-TRAINED product-quantization codebooks, ``[(m, code, cd)]``
+    with ``cd`` the sub_dim-dim cell centroid — M x 2^bits x sub_dim
+    doubles. ``nvt`` carries the (normalized or residual) vector column
+    named ``tag``; one KMeans(k, KMEANS_SEED + m, PQ_MAXITER) fit per
+    subspace over that column's sub_dim-wide slices of ``_train_sample``.
 
     ``coarse_k`` MUST be passed for residual books: the residual cloud
     is shaped by the coarse quantizer that produced it, so the artifact
-    name keys the coarse K (next to the seed/maxIter/sample-cap recipe)
-    — bumping the IVF list count can never serve books trained against
-    the old quantizer's residuals.
+    name keys the coarse K (next to the recipe) — bumping the IVF list
+    count can never serve books trained against the old quantizer's
+    residuals.
 
-    This is the judge-named lever against the one-step sign-orthant
-    books: trained cells track the subvector distribution, so ADC
-    distortion FALLS as data grows instead of staying a constant of the
-    coding scheme — which is what lets the exact re-rank shortlist drop
-    from n/10 to a near-constant (see similarity.topk_pq_trained).
+    Trained cells track the subvector distribution, so ADC distortion
+    falls as data grows instead of staying a constant of the coding
+    scheme — which is what lets the exact re-rank shortlist drop from
+    n/10 to a near-constant (see similarity.topk_pq_trained).
     """
-    key = _fingerprint(sf_dir)
-    ck = "" if coarse_k is None else f"_K{coarse_k}"
-    fname = f"pq_{tag}_m{m_subspaces}_k{k}{ck}_{_recipe(PQ_MAXITER)}.parquet"
-    memo_key = (key, fname)
-    rows = _MODEL_MEMO.get(memo_key)
-    if rows is not None:
-        return rows
 
-    path = os.path.join(_corpus_dir(sf_dir), fname)
-    loaded = _load_model(path, ["m", "code", "cd"]) if _durable(key) else None
-    if loaded is None:
-        # Declared append lineage: frozen base books, never refit.
-        loaded = _load_base_model(sf_dir, fname, ["m", "code", "cd"])
-    if loaded is not None:
-        rows = [(int(m), int(c), list(v)) for m, c, v in loaded]
-    else:
+    def fit() -> "list[tuple]":
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        n = corpus_count(nvt, sf_dir)
-        sample = nvt
-        if n > TRAIN_SAMPLE_CAP:
-            frac_num = TRAIN_SAMPLE_CAP * (1 << 16) // n
-            sample = nvt.filter(
-                F.abs(F.xxhash64(F.col("vec_id"))) % F.lit(1 << 16) < F.lit(frac_num)
-            )
-        # One cached materialization feeds all M fits (KMeans iterates);
-        # canonicalized order makes every fit layout-independent.
-        sample = _canonical_sample(sample).select(
+        # One cached materialization feeds all M fits (KMeans iterates).
+        sample = _train_sample(nvt, sf_dir).select(
             *[
                 array_to_vector(
                     F.slice(F.col(tag), m * sub_dim + 1, sub_dim)
@@ -560,82 +427,11 @@ def pq_codebooks(
                     rows.append((m, code, [float(x) for x in c]))
         finally:
             sample.unpersist()
-        if _durable(key):
-            d = _corpus_dir(sf_dir, create=True)
-            _save_model(
-                os.path.join(d, fname),
-                {
-                    "m": [r[0] for r in rows],
-                    "code": [r[1] for r in rows],
-                    "cd": [r[2] for r in rows],
-                },
-            )
-            _write_fit_env(
-                os.path.join(d, fname),
-                sf_dir,
-                {
-                    "model": "pq",
-                    "m_subspaces": m_subspaces,
-                    "k": k,
-                    "n": n,
-                    "coarse_k": coarse_k,
-                    "sampled": n > TRAIN_SAMPLE_CAP,
-                    "sample_order": _SAMPLE_ORDER_VERSION,
-                },
-            )
-    _MODEL_MEMO[memo_key] = rows
-    return rows
-
-
-def fixed_model(
-    sf_dir: str,
-    fname: str,
-    columns: "list[str]",
-    compute: "Callable[[], list[tuple]]",
-    frozen_base: bool = True,
-) -> "list[tuple]":
-    """Load-or-compute a DETERMINISTIC (non-fitted) model artifact with
-    frozen-base resolution — the fixed-books analogue of
-    ``pq_codebooks`` for models that are a pure function of the corpus
-    (e.g. the sign-orthant PQ centroid means of
-    ``similarity.topk_pq_fixed``: one exact fixed-point aggregation, no
-    k-means). Resolution order mirrors the fitted path: in-session memo,
-    disk artifact under the corpus fingerprint, FROZEN artifact from a
-    declared append base (``_base_info``), else ``compute()`` + persist.
-
-    Because the model is deterministic, the frozen-base load is a pure
-    cache: a caller whose ``compute`` closure derives from the MODEL
-    corpus (base rows when a lineage is declared) gets bit-identical
-    rows either way — which is what makes the whole append-serving path
-    SQL-expressible and lets the driver hash-verify the base+delta union
-    that the k-means twins can only rows-check.
-
-    ``frozen_base=False`` skips the base-artifact resolution: for
-    statistics of the SERVED relation (e.g. the code histogram behind
-    the adaptive-shortlist bulk estimate) the base snapshot's copy is
-    wrong BY DESIGN on an appended corpus — the live corpus must compute
-    (and persist under its own fingerprint) its own."""
-    key = _fingerprint(sf_dir)
-    memo_key = (key, fname)
-    rows = _MODEL_MEMO.get(memo_key)
-    if rows is not None:
         return rows
-    path = os.path.join(_corpus_dir(sf_dir), fname)
-    loaded = _load_model(path, columns) if _durable(key) else None
-    if loaded is None and frozen_base:
-        loaded = _load_base_model(sf_dir, fname, columns)
-    if loaded is not None:
-        rows = [tuple(r) for r in loaded]
-    else:
-        rows = compute()
-        if _durable(key):
-            d = _corpus_dir(sf_dir, create=True)
-            _save_model(
-                os.path.join(d, fname),
-                {c: [r[i] for r in rows] for i, c in enumerate(columns)},
-            )
-    _MODEL_MEMO[memo_key] = rows
-    return rows
+
+    ck = "" if coarse_k is None else f"_K{coarse_k}"
+    fname = f"pq_{tag}_m{m_subspaces}_k{k}{ck}_{_recipe(PQ_MAXITER)}.parquet"
+    return fixed_model(sf_dir, fname, ["m", "code", "cd"], fit)
 
 
 def codes_artifact_name(tag: str, m_subspaces: int, k: int, coarse_k: "int | None" = None) -> str:
@@ -739,7 +535,7 @@ def cached_relation(
     rmtree each other's staging dir, and whichever rename lands last
     wins with a complete build.
 
-    INCREMENTAL ADD (round 12): when the corpus declares an append
+    INCREMENTAL ADD: when the corpus declares an append
     lineage (``ann_base.json`` — see ``_base_info``) and ``delta_build``
     is supplied, the base snapshot's codes artifact is served AS IS
     (never rewritten, never re-encoded) unioned with a DELTA artifact
@@ -749,7 +545,7 @@ def cached_relation(
     costs O(delta) encode work; the base artifact's bytes are pinned
     untouched by tests/test_ann_index.py.
 
-    BY-LIST LAYOUT (round 15): ``partition_by`` hive-partitions the
+    BY-LIST LAYOUT: ``partition_by`` hive-partitions the
     artifact (and its delta) by that column — the FAISS layout where
     the serving copy lives inside the index clustered by coarse list,
     so a reader filtering on a driver-known probe set prunes whole
@@ -809,9 +605,20 @@ def _lineage_paths(sf_dir: str, name: str) -> "tuple[str, str, int] | None":
     if base is None:
         return None
     base_path = os.path.join(_corpus_dir(base["base"]), name)
-    dname = f"{name}.delta.{_fingerprint(base['base'])}.w{base['watermark']}"
-    dpath = os.path.join(_corpus_dir(sf_dir), dname)
+    dpath = os.path.join(_corpus_dir(sf_dir), f"{name}.delta{lineage_suffix(sf_dir)}")
     return base_path, dpath, base["watermark"]
+
+
+def lineage_suffix(sf_dir: str) -> str:
+    """``.<base fingerprint>.w<watermark>`` under a declared append
+    lineage, else ``""``: the key every artifact derived from the served
+    base+delta union carries (the delta relations, the code histogram),
+    so an in-place ``ann_base.json`` edit — new base or new watermark,
+    same embeddings bytes — orphans them instead of serving them stale."""
+    base = _base_info(sf_dir)
+    if base is None:
+        return ""
+    return f".{_fingerprint(base['base'])}.w{base['watermark']}"
 
 
 def relation_paths(sf_dir: str, name: str) -> "list[str] | None":
@@ -932,36 +739,23 @@ def query_vectors(
     out of the corpus per query.
 
     Returns ``[(vec_id, v)]`` sorted by vec_id — request-sized
-    (n_queries x dim doubles), the one legitimately driver-resident
-    relation in the ANN family. Cold path: one BOUNDED collect
-    (n_queries rows, filter pushed to the parquet scan), then written
-    down; warm sessions (any process) load the artifact with zero Spark
-    jobs, which is what lets the fused PQ paths build their ADC lookup
-    arrays without a single query-side Spark stage.
+    (n_queries x dim doubles). Cold path: one BOUNDED collect (n_queries
+    rows, filter pushed to the parquet scan), then written down; warm
+    sessions (any process) load the artifact with zero Spark jobs, which
+    is what lets the fused PQ paths build their ADC lookup arrays without
+    a single query-side Spark stage. Never read from an append base: the
+    queries come from the live corpus.
     """
-    key = _fingerprint(sf_dir)
-    fname = f"queries_n{n_queries}.parquet"
-    memo_key = (key, fname)
-    rows = _MODEL_MEMO.get(memo_key)
-    if rows is not None:
-        return rows
 
-    path = os.path.join(_corpus_dir(sf_dir), fname)
-    loaded = _load_model(path, ["vec_id", "v"]) if _durable(key) else None
-    if loaded is not None:
-        rows = [(int(i), list(v)) for i, v in loaded]
-    else:
-        rows = sorted(
+    def collect() -> "list[tuple]":
+        return sorted(
             (int(r["vec_id"]), [float(x) for x in r["v"]])
             for r in emb.filter(F.col("vec_id") < n_queries)
             .select("vec_id", "v")
             .collect()
         )
-        if _durable(key):
-            d = _corpus_dir(sf_dir, create=True)
-            _save_model(
-                os.path.join(d, fname),
-                {"vec_id": [r[0] for r in rows], "v": [r[1] for r in rows]},
-            )
-    _MODEL_MEMO[memo_key] = rows
-    return rows
+
+    return fixed_model(
+        sf_dir, f"queries_n{n_queries}.parquet", ["vec_id", "v"], collect,
+        frozen_base=False,
+    )

@@ -2282,18 +2282,15 @@ def _codes_histogram(
     the codes artifact (same recipe key, so a retrain orphans both);
     warm sessions load it with zero Spark jobs. ``frozen_base=False``:
     on an appended corpus the histogram must describe base+delta, not
-    the base snapshot. On a LINEAGE corpus the name additionally keys
-    the base fingerprint + watermark, mirroring the delta artifact's key
-    (ADVICE r14): an in-place ``ann_base.json`` edit with unchanged
-    embeddings bytes changes the served base+delta union and must
-    orphan the histogram with it, or a stale bulk estimate would perturb
-    the adaptive fire signal silently."""
+    the base snapshot. On a LINEAGE corpus the name additionally carries
+    ``ann_index.lineage_suffix``, the delta artifact's key: an in-place
+    ``ann_base.json`` edit with unchanged embeddings bytes changes the
+    served base+delta union and must orphan the histogram with it, or a
+    stale bulk estimate would perturb the adaptive fire signal silently."""
     from mapreduce_hadoop_spark.operators import ann_index
 
     fname = "hist_" + ann_index.codes_artifact_name(tag, m_subspaces, k)
-    base = ann_index._base_info(sf_dir)
-    if base is not None:
-        fname += f".{ann_index._fingerprint(base['base'])}.w{base['watermark']}"
+    fname += ann_index.lineage_suffix(sf_dir)
 
     def compute() -> "list[tuple[int, int, int]]":
         agg = (

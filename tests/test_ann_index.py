@@ -16,7 +16,7 @@ import shutil
 import pytest
 
 from mapreduce_hadoop_spark.operators import ann_index
-from mapreduce_hadoop_spark.operators.similarity import _with_norm
+from mapreduce_hadoop_spark.operators.similarity import _codes_histogram, _with_norm
 from mapreduce_hadoop_spark.sources.tables import load_table
 
 
@@ -86,19 +86,61 @@ def test_corpus_count_persists(spark, sf_dir, index_dir, monkeypatch):
     assert ann_index.corpus_count(emb, sf_dir) == n
 
 
-def test_pq_codebooks_shape_and_warm_identity(spark, sf_dir, index_dir, monkeypatch):
+def _kinds(spark, sf_dir):
+    """The four model artifacts ``fixed_model`` resolves, as zero-arg
+    loaders: coarse centroids, PQ books, a code histogram and the query
+    vectors."""
     import pyspark.sql.functions as F
 
     emb = _emb(spark, sf_dir)
     nvt = emb.select(
         "vec_id", F.transform(F.col("v"), lambda x: x / F.col("norm")).alias("nv")
     )
-    m_sub, sub, k = 4, 16, 8
-    rows = ann_index.pq_codebooks(spark, nvt, sf_dir, m_sub, sub, k, tag="nv")
-    assert len(rows) == m_sub * k
-    assert all(len(cd) == sub for _, _, cd in rows)
-    assert {m for m, _, _ in rows} == set(range(m_sub))
-    assert {c for _, c, _ in rows} == set(range(k))
+    codes = emb.select(
+        "vec_id", *[((F.col("vec_id") + m) % 8).cast("int").alias(f"c{m}") for m in range(2)]
+    )
+    return {
+        "coarse": lambda: ann_index.coarse_centroids(spark, emb, sf_dir, k=4),
+        "pq_books": lambda: ann_index.pq_codebooks(
+            spark, nvt, sf_dir, 4, 16, 8, tag="nv"
+        ),
+        "histogram": lambda: _codes_histogram(spark, codes, sf_dir, 2, 8, "probe"),
+        "queries": lambda: ann_index.query_vectors(emb, sf_dir, 5),
+    }
+
+
+def _py_types(v):
+    """The nested Python types of a model's rows."""
+    if isinstance(v, (list, tuple)):
+        return (type(v), tuple(_py_types(x) for x in v))
+    return type(v)
+
+
+def _jobs_in(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("kind", ["coarse", "pq_books", "histogram", "queries"])
+def test_pq_codebooks_shape_and_warm_identity(spark, sf_dir, index_dir, monkeypatch, kind):
+    """Every model kind resolves through the one load-or-compute path:
+    the warm call (memos cleared, so it must come from the disk
+    artifact) launches no Spark job, never re-fits, and returns rows
+    equal to the cold rows with the same Python types."""
+    load = _kinds(spark, sf_dir)[kind]
+    cold, cold_jobs = _jobs_in(spark, f"cold_{kind}", load)
+    assert cold and cold_jobs > 0
+    if kind == "pq_books":
+        m_sub, sub, k = 4, 16, 8
+        assert len(cold) == m_sub * k
+        assert all(len(cd) == sub for _, _, cd in cold)
+        assert {m for m, _, _ in cold} == set(range(m_sub))
+        assert {c for _, c, _ in cold} == set(range(k))
 
     ann_index.clear_memos()
     import pyspark.ml.clustering as mlc
@@ -106,7 +148,38 @@ def test_pq_codebooks_shape_and_warm_identity(spark, sf_dir, index_dir, monkeypa
     monkeypatch.setattr(
         mlc, "KMeans", lambda *a, **kw: (_ for _ in ()).throw(AssertionError("refit"))
     )
-    assert ann_index.pq_codebooks(spark, nvt, sf_dir, m_sub, sub, k, tag="nv") == rows
+    warm, warm_jobs = _jobs_in(spark, f"warm_{kind}", load)
+    assert warm_jobs == 0
+    assert warm == cold
+    assert _py_types(warm) == _py_types(cold)
+
+
+def test_query_vectors_never_read_the_append_base(spark, sf_dir, index_dir, tmp_path):
+    """On a declared lineage the query vectors come from the live corpus:
+    the base snapshot's ``queries_n*.parquet`` is never loaded, even
+    when it exists."""
+    import json
+
+    base = tmp_path / "base"
+    base.mkdir()
+    shutil.copy(
+        os.path.join(sf_dir, "embeddings.parquet"), base / "embeddings.parquet"
+    )
+    live = ann_index.query_vectors(_emb(spark, str(base)), str(base), 5)
+    # Doctor the base artifact: any read of it would now serve zeros.
+    ann_index._save_model(
+        os.path.join(ann_index._corpus_dir(str(base)), "queries_n5.parquet"),
+        {"vec_id": [i for i, _ in live], "v": [[0.0] * len(v) for _, v in live]},
+    )
+    app = tmp_path / "app"
+    app.mkdir()
+    shutil.copy(
+        os.path.join(sf_dir, "embeddings.parquet"), app / "embeddings.parquet"
+    )
+    with open(app / "ann_base.json", "w") as f:
+        json.dump({"base": str(base), "watermark": 10}, f)
+    ann_index.clear_memos()
+    assert ann_index.query_vectors(_emb(spark, str(app)), str(app), 5) == live
 
 
 def test_volatile_corpus_gets_no_disk_artifact(spark, sf_dir, index_dir, tmp_path):
@@ -396,51 +469,9 @@ def test_write_committed_post_swap_recheck(spark, index_dir, tmp_path):
     assert not leftovers, leftovers
 
 
-def test_fit_env_sidecar_records_input_order(spark, sf_dir, index_dir, tmp_path):
-    """Every fitted artifact gets a ``.fit_env.json`` sidecar whose
-    ``vec_id_order_sha`` hashes the training input's PHYSICAL row order —
-    the variable the round-14 diagnosis named for the cross-session
-    kmeans hash shifts (same logical rows, shuffled layout -> 1999/2000
-    pq book cells move). Two corpora with identical logical rows but
-    different order must be attributable by sidecar diff alone."""
-    import json
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    emb = _emb(spark, sf_dir)
-    ann_index.coarse_centroids(spark, emb, sf_dir, k=4)
-    sidecar = os.path.join(
-        ann_index._corpus_dir(sf_dir),
-        f"coarse_k4_{ann_index._recipe(ann_index.COARSE_MAXITER)}.parquet.fit_env.json",
-    )
-    assert os.path.isfile(sidecar)
-    with open(sidecar) as f:
-        env = json.load(f)
-    assert env["model"] == "coarse" and env["k"] == 4
-    assert len(env["vec_id_order_sha"]) == 16
-
-    # Same logical rows, reversed order -> different order hash.
-    src = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
-    rev = src.take(pa.array(range(src.num_rows - 1, -1, -1)))
-    alt = tmp_path / "alt_corpus"
-    alt.mkdir()
-    pq.write_table(rev, str(alt / "embeddings.parquet"))
-    alt_emb = _emb(spark, str(alt))
-    ann_index.coarse_centroids(spark, alt_emb, str(alt), k=4)
-    alt_sidecar = os.path.join(
-        ann_index._corpus_dir(str(alt)),
-        f"coarse_k4_{ann_index._recipe(ann_index.COARSE_MAXITER)}.parquet.fit_env.json",
-    )
-    with open(alt_sidecar) as f:
-        alt_env = json.load(f)
-    assert alt_env["vec_id_order_sha"] != env["vec_id_order_sha"]
-    assert alt_env["vec_id_order_rows"] == env["vec_id_order_rows"]
-
-
 def test_fit_is_layout_independent(spark, sf_dir, index_dir, tmp_path):
-    """Round 15: the canonicalized training sample (one partition,
-    vec_id-sorted — ``_canonical_sample``) makes every KMeans fit a pure
+    """The canonicalized training sample (one partition, vec_id-sorted —
+    ``_train_sample``) makes every KMeans fit a pure
     function of LOGICAL corpus content. Same rows written in a shuffled
     physical order must yield bit-identical coarse centroids AND PQ
     books — the property whose absence caused the round-13/14

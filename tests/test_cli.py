@@ -5,6 +5,10 @@ from __future__ import annotations
 import glob
 import subprocess
 import sys
+from pathlib import Path
+
+# The checkout this test file belongs to: CLI subprocesses run its code.
+ROOT = Path(__file__).resolve().parents[1]
 
 # The SegmentReducer docstring walk-through (AirportTripsRevenue.java:128-134,
 # 270-274): five segments of taxi 450 -> exactly one airport trip line.
@@ -30,7 +34,7 @@ def _run(args):
         capture_output=True,
         text=True,
         env=env,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=240,
     )
 
@@ -50,6 +54,22 @@ def test_airport_revenue_cli_matches_reference_example(tmp_path):
     assert "TOTAL AIRPORT TRIPS REVENUE : 4.06" in r.stdout
     assert _read_parts(out / "trips") == [GOLDEN_TRIP]
     assert _read_parts(out / "daily") == ["2008-05-25\t4.06"]
+
+
+def test_airport_revenue_releases_its_cache(spark, tmp_path, monkeypatch, capsys):
+    """Called as a library function, the job leaves no RDD persisted:
+    its cached trip relation is released once the outputs are written."""
+    from mapreduce_hadoop_spark import cli
+
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    seg = tmp_path / "fixture.segments"
+    seg.write_text(SEGMENTS)
+    cli.run_airport_revenue(str(seg), str(tmp_path / "out"))
+    assert "TOTAL AIRPORT TRIPS REVENUE : 4.06" in capsys.readouterr().out
+    leaked = set(jsc.getPersistentRDDs().keySet()) - before
+    assert not leaked, leaked
 
 
 def test_histogram_cli_bins_reference_example(tmp_path):

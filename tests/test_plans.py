@@ -627,9 +627,8 @@ def test_near_dup_lsh_band_exchanges_carry_no_vectors(spark, sf_dir):
 
 
 def test_clean_docs_anti_join_never_exchanges_the_corpus(spark, sf_dir):
-    """Round 19 (VERDICT r18 order 2): the near-dup anti-join is
-    cost-based on the MATERIALIZED near-dup count. Below the threshold
-    (every test scale) the plain anti-join plans as a STATIC
+    """``clean_docs`` persists and counts the near-dup id set before the
+    main query plans, so the one anti-join plans as a STATIC
     BroadcastHashJoin LeftAnti from the cache's real stats — no SMJ, no
     corpus-side doc_id exchange at all."""
     from mapreduce_hadoop_spark.operators import dedup

@@ -1,30 +1,35 @@
 #!/bin/bash
-# Round-17 gate matrix: the FULL registry (92 queries) at all five
-# scales, zero exclusions. Runs against the WARM shared index root
-# (deterministic kmeans fits since r15: warm artifacts and fresh fits
-# are interchangeable by construction).
+# Oracle gate matrix: the full registry on every given scale, one
+# GATE_<scale>_r<round>.log per scale in the checkout root.
+#
+# Usage: tools/run_gate_matrix.sh ROUND NOTE SF_DIR...
+#   ROUND   round number, written into each log's name and header
+#   NOTE    one line describing the tree under test, copied into headers
+#   SF_DIR  a scale's table directory; its basename names the scale
+#           (sf0.01, sf1, ...). Relative paths resolve against the
+#           checkout, e.g. .scale_data/sf1 from tools/make_scale_data.py.
+#
+# The index root is SPARK_GRAFT_INDEX_DIR (default <checkout>/.ann_index);
+# point it at an empty directory for a cold run. Each scale's stderr goes
+# to ${TMPDIR:-/tmp}/gate_err_<scale>.log.
 set -u
+if [ $# -lt 3 ]; then
+  sed -n 2,14p "$0"
+  exit 2
+fi
 cd "$(dirname "$0")/.."
-R=17
-HDR_TREE="final round-17 tree: SPANN replication rule hash-verified via the fixed-centroid window twin similarity_topk_ivf_spann_fixed (nearest-always-kept guard, RMAX tie cut pinned by equi-gap fixture); similarity_topk_filtered retired (plan-identity + pushdown + oracle parity pinned in tests/test_plans.py); lazy flat-codes re-layout (builds on first wide-union cost flip; floor-width lineages commit no flat artifact — rule-1a pins on both by-list codes consumers); ordinary widen 4x->8x on the second-family calibration point (GMM family, covered 0.369 reads 0.8 at 4x / 1.0 at 8x; output-neutral at all five scales vs r16 logs); paths-first single-day partitioned reads"
+R="$1"
+NOTE="$2"
+shift 2
+NQ=$(python -c "from mapreduce_hadoop_spark import registry; print(len(registry.queries()))")
 
-ALLQ=$(python - <<'EOF'
-from mapreduce_hadoop_spark import registry
-print(" ".join(registry.queries()))
-EOF
-)
-
-run_gate() {
-  local sfdir="$1" log="$2" label="$3" queries="$4" note="$5"
-  echo "# ${label} gate, round ${R} (${note}; ${HDR_TREE})." > "$log"
-  SPARK_GRAFT_SF_DIR="$sfdir" python tools/check_oracle.py $queries >> "$log" 2>/tmp/gate_err_${label}.log
-  local rc=$?
+for d in "$@"; do
+  sfdir=$(realpath "$d")
+  label=$(basename "$sfdir")
+  log="GATE_${label}_r${R}.log"
+  echo "# ${label} gate, round ${R} (full registry, ${NQ} queries; ${NOTE})." > "$log"
+  SPARK_GRAFT_SF_DIR="$sfdir" python tools/check_oracle.py >> "$log" 2>"${TMPDIR:-/tmp}/gate_err_${label}.log"
+  rc=$?
   tail -2 "$log"
   echo "== ${label} exit ${rc}"
-}
-
-run_gate /root/testdata/sf0.001     GATE_sf0.001_r17.log sf0.001 "$ALLQ" "full registry, 92 queries"
-run_gate /root/testdata/sf0.01      GATE_sf0.01_r17.log  sf0.01  "$ALLQ" "full registry, 92 queries"
-run_gate /root/testdata/sf0.1       GATE_sf0.1_r17.log   sf0.1   "$ALLQ" "full registry, 92 queries"
-run_gate /root/repo/.scale_data/sf1     GATE_sf1_r17.log     sf1     "$ALLQ" "full registry, 92 queries; derived 10x via tools/make_scale_data.py"
-run_gate /root/repo/.scale_data/sf1skew GATE_sf1skew_r17.log sf1skew "$ALLQ" "full registry, 92 queries, hot-key derivation (--skew: one taxi ~10% of positions, one source ~50% of documents)"
+done
