@@ -92,137 +92,6 @@ ROUND_NOTES = {
         "Pools vs r17 tree: sf0.1 29.7 vs 31.5 s, sf1 70.4 vs 84.9 s. "
         "zstd codec measured worse, rejected. See OPTIMIZATION_r18.md."
     ),
-    16: (
-        "r16: by-list + cost-rule serving is now driver-HASH-verified "
-        "(similarity_topk_ivfpq_fixed: deterministic books through the "
-        "real artifacts; both forced branches bit-identical). Adaptive "
-        "probe rule hash-verified (similarity_topk_ivf_adaptive). Codes "
-        "side cost-based too: flat vec_id-sorted re-layout copy, "
-        "paths-first lazy open -> synthetic batch-10 back to 163.4 MB, "
-        "incompressible floor win 2.95x. Escalating widen (deep fires "
-        "16x): f20 recall 0.86->1.00, organic hashes unchanged at all 5 "
-        "scales (rule-1a pins). calibration_shuffle_sec = second probe. "
-        "Details: SCALE_ann_r16.md."
-    ),
-    15: (
-        "r15: deterministic kmeans fit SHIPPED (canonicalized sample, "
-        "recipe o1): books/serving now bit-identical across physical "
-        "row layouts (probe: 0/2000 cells move; was 1999/2000). By-list "
-        "raw-in-index layout for ivfpq_trained: codes + raw serving "
-        "copy hive-partitioned by coarse list, both scans prune to the "
-        "driver-known probe union; re-rank source is cost-based (exact "
-        "stat bytes) so the measured batch-1 bytes are never worse than "
-        "flat (164 vs 163 MB synthetic / wins ~1/f incompressible). "
-        "ann_append_serving adopts the adaptive dial; append demos "
-        "share one derivation. value_calibrated normalizes VM drift. "
-        "Details: SCALE_ann_r15.md."
-    ),
-    14: (
-        "r14: append union semantics HASH-verified (new "
-        "ann_append_serving_fixed: fixed-books twin, DuckDB-green x5). "
-        "Flat PQ serving now per-query ADAPTIVE: covered-gap signal "
-        "widens the re-rank 4x only where recall is lost (sf0.1 "
-        "0.80->1.00, mutated n20k 0.82->1.00, ~0% organic wall). "
-        "Cross-session kmeans shifts DIAGNOSED: fits track the training "
-        "input's physical row order (same-rows shuffle moves 1999/2000 "
-        "book cells); fit_env sidecars record it; deterministic fit "
-        "staged r15. NEW calibration key self-normalizes VM drift; "
-        "stream timing now min-of-2. Details: SCALE_ann_r14.md."
-    ),
-    13: (
-        "r13: ANN exact re-rank folds its normalize ABOVE the broadcast "
-        "join (was per-corpus-row below) — bit-identical, n=1M warm "
-        "pq_trained 26.7->17.0s, ivfpq_trained 36.0->23.1s (-36%); found "
-        "via the new measured bytes column (r12 '64x bytes' corrected: "
-        "codes ~12x, one full re-rank scan dominates). Adaptive ivfpq "
-        "dials: mutated recall 0.54->0.92 at +7% organic wall. Near-dup "
-        "triangle-blocked: sf1 109->9.3s hash-equal, the sf1 gate "
-        "exclusion RETIRED (92 queries x 5 scales, zero exclusions). "
-        "Simhash fold Arrow-vectorized (3.2x warm, integer-identical). "
-        "topk_ivfpq retired -> NEW ann_append_serving + near_dup_cosine "
-        "bench lines. Details: SCALE_ann_r13.md."
-    ),
-    12: (
-        "r12: the r11 'stage-latency floor' on trained PQ was a Catalyst "
-        "CollapseProject O(d^2) blowup (projected norm fold re-inlined "
-        "into per-element lambdas; 9.4s of the 13.2s sf1 wall) — fixed "
-        "via _div_by + driver-built query side from persisted artifacts: "
-        "pq_trained sf1 warm 13.0->1.45s, UNDER bruteforce's 1.54s; "
-        "ivfpq_trained 14.5->1.98s; outputs rule-1a pinned bit-identical "
-        "at 5 scales (fresh-fit pre-logs). Crossover MEASURED to n=1M: "
-        "bruteforce 101s vs pq_trained 29s at recall 1.0 "
-        "(SCALE_ann_r12.md). SPANN first driver row + fetch-count "
-        "table. JPEG DRI/RSTn in profile. Incremental append: frozen "
-        "models, delta-only encode."
-    ),
-    11: (
-        "r11: first driver rows for the five round-10 staged queries "
-        "(pq/ivfpq/ivfpq_trained + wav/avi); metric line now hard-capped "
-        "at 1800 chars (r10's 2.4k note pushed the JSON out of the "
-        "driver's 2000-char tail: parsed:null); streaming timeout "
-        "eviction measured (see 'stream' key). NEW "
-        "similarity_topk_pq_trained (Lloyd codebooks, near-constant "
-        "max(50,n/100) re-rank, recall 1.0/1.0/0.8/1.0) + persisted ANN "
-        "index artifacts (warm sessions plan zero training jobs) + "
-        "array-ADC scan + Arrow coarse assign (ivfpq_trained sf1 "
-        "44->17.7s, global trained residual book replaces the per-list "
-        "8GB-at-scale caveat; codes persisted as the FAISS add half + "
-        "adaptive one-window shortlist: pq_trained sf1 27.7->13.9s "
-        "cold). NEW multimodal_real_jpeg_color (YCbCr at 4:2:0/4:2:2/"
-        "4:4:4 cycled by doc_id, closed-form RGB-sum oracle). STAGED "
-        "similarity_topk_ivf_spann (boundary replication: recall "
-        "0.98/0.94 vs 0.80/0.88 at 2.3x/2.8x index). fn_epoch + "
-        "fn_width_bucket + multimodal_frame_sample retired "
-        "(unit-pinned). Narrative in SCALE_ann_r11.md and README."
-    ),
-    10: (
-        "r10: parquet_scan_width reports unknown (never narrow) on "
-        "remote/unlistable paths so widen consumers cannot full-table-"
-        "exchange at 100 TB; measured_sign_bits probe memoized per "
-        "(session, plan); sf10mut candidate evidence committed "
-        "(SCALE_sf10_r10.md: 30.3M candidates, ~152/vector, 10x data -> "
-        "7.8x candidates); GIF decoder hardened (min_code_size/palette/"
-        "dict-freeze fuzz fixtures) and the LZW loops vectorized "
-        "bit-identical (encode+decode 2.2x each, PNG unfilter 1.7x, real "
-        "pixel path 1.8x end-to-end, golden-stream-pinned); NEW "
-        "multimodal_real_jpeg: baseline-sequential grayscale JPEG decode "
-        "(Huffman+DPCM+IDCT) with a closed-form block-constant oracle, "
-        "replacing the retired multimodal_resize_stub slot; dedup_simhash "
-        "rebuilt as 60-bit multi-index Hamming search (4x15-bit blocks, "
-        "1-flip probes, COMPLETE for hamming<=7 — was equality-join "
-        "complete only to 3): sf10mut output now grows 10.0x for 10x "
-        "data vs the old scheme's 98x quadratic noise. NEW staged "
-        "(rule 1b): similarity_topk_pq — product-quantization ANN, 4x8-bit "
-        "sign-pattern codebooks built in one exact fixed-point "
-        "aggregation, broadcast ADC lookup scan over 4-byte codes, "
-        "two-phase shortlist, 50-deep exact re-rank (recall@5 0.86 at "
-        "sf0.01); multimodal_real_wav — real RIFF/WAVE PCM chunk-walk "
-        "parse, 8/16-bit decode, floor-index resample, integer energy "
-        "features, closed-form oracle; similarity_topk_ivfpq — now the FULL "
-        "FAISS IVFPQ (residual encoding x per-list codebooks, recall@5 0.78 "
-        "at sf0.001 = the nprobe=8 pruning ceiling exactly; a global "
-        "residual book measured 0.56 and was rejected); "
-        "similarity_topk_ivfpq_trained — k-means coarse quantizer in the "
-        "identical plan; recall@5 0.80 at both small scales under the "
-        "original fixed K=16 (as-shipped K=sqrt(n): 0.76/0.74/0.84 at "
-        "sf0.001/0.01/0.1) = the trained "
-        "ceiling, rows-only. ADC-via-broadcast-maps was measured and "
-        "REJECTED (46% slower on the ivfpq scan: Spark map element_at "
-        "linear-scans vs O(1) hash-join probes). Late round 10: the nprobe "
-        "sweep exposed a FLAT recall curve at sf0.1 - the fixed 50-deep ADC "
-        "shortlist was the bottleneck, not pruning - so the shortlist is "
-        "now scale-adaptive max(50, n/10), oracle-derived from count(*) "
-        "(sf0.1: pq 0.36 -> 0.82, ivfpq back to its 0.72 ceiling; the "
-        "linear law is the honest cost of one-step codebooks); "
-        "similarity_topk_ivfpq_trained now fits K=sqrt(n) lists with "
-        "nprobe=K/3 (sf0.1: recall 0.84 at 36% of the corpus vs 0.72 at "
-        "51% for fixed K=16); NEW "
-        "multimodal_real_avi (real RIFF/AVI container parse: stream "
-        "enumeration, palette, foreign-stream skipping, idx1 cross-check, "
-        "bottom-up stride-padded DIB decode, quadrant-sum oracle) replaces "
-        "the retired text_language_id (dominated by the ngram variant, "
-        "scoring pinned in tests)."
-    ),
 }
 
 

@@ -54,18 +54,21 @@ def sum_micro_sql(expr: str) -> str:
     return f"CAST(sum({micro_sql(expr)}) AS BIGINT)"
 
 
-def round_micro(name: str, dp: int = 4) -> Column:
-    """Half-away-from-zero rounding of a micro-unit BIGINT column to ``dp``
-    decimals, as double."""
-    q = 10 ** (6 - dp)
+# Output precision of every rounded fixed-point sum.
+ROUND_DP = 4
+_Q = 10 ** (6 - ROUND_DP)
+
+
+def round_micro(name: str) -> Column:
+    """Half-away-from-zero rounding of a micro-unit BIGINT column to
+    ``ROUND_DP`` decimals, as double."""
     return F.expr(
-        f"sign({name}) * ((abs({name}) + {q // 2}) div {q}) / {10**dp}.0"
+        f"sign({name}) * ((abs({name}) + {_Q // 2}) div {_Q}) / {10**ROUND_DP}.0"
     )
 
 
-def round_micro_sql(name: str, dp: int = 4) -> str:
-    q = 10 ** (6 - dp)
-    return f"sign({name}) * ((abs({name}) + {q // 2}) // {q}) / {10**dp}.0"
+def round_micro_sql(name: str) -> str:
+    return f"sign({name}) * ((abs({name}) + {_Q // 2}) // {_Q}) / {10**ROUND_DP}.0"
 
 
 def avg_micro(sum_name: str, n_name: str) -> Column:

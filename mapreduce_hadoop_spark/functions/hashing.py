@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 # Modulus for the MinHash universal-hash family: largest prime < 2^31.
 # Kept small enough that a*h+b stays far inside int64 for h < 2^31.
 MINHASH_PRIME = 2147483647
+MINHASH_SEED = 42
 
 
 def md5_long(c: Column | str) -> Column:
@@ -36,15 +37,15 @@ def md5_long_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS UBIGINT)::BIGINT"
 
 
-def minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     """(a, b) pairs for the universal hash family h_i(x) = (a*x + b) mod p.
 
-    Deterministic in ``seed`` via a splitmix-style integer recurrence (no RNG
-    library, so the exact same values are trivially re-derivable in SQL or any
-    other engine).
+    Deterministic in ``MINHASH_SEED`` via a splitmix-style integer
+    recurrence (no RNG library, so the exact same values are trivially
+    re-derivable in SQL or any other engine).
     """
     params = []
-    state = seed & 0xFFFFFFFFFFFFFFFF
+    state = MINHASH_SEED & 0xFFFFFFFFFFFFFFFF
     for _ in range(num_hashes):
         state = (state * 6364136223846793005 + 1442695040888963407) & 0xFFFFFFFFFFFFFFFF
         a = (state >> 16) % (MINHASH_PRIME - 1) + 1

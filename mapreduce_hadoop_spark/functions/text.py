@@ -46,15 +46,17 @@ def _shingle_strings(toks: Column, n: Column, k: int) -> Column:
     return acc
 
 
-# Default shingle width, shared by shingles()/shingles_sql() AND by any
-# prefilter that restates their emptiness guard on the raw token count
+# Shingle width, shared by shingles()/shingles_sql() AND by any prefilter
+# that restates their emptiness guard on the raw token count
 # (dedup._doc_shingles' `size(tokens) >= SHINGLE_K` — ADVICE r18: a
-# hardcoded 3 there would silently desync if this default ever moved).
+# hardcoded 3 there would silently desync if this width ever moved).
 SHINGLE_K = 3
 
 
-def shingles(text: Column | str, k: int = SHINGLE_K) -> Column:
-    """Distinct k-token shingles as an array<string> (empty when < k tokens)."""
+def shingles(text: Column | str) -> Column:
+    """Distinct SHINGLE_K-token shingles as an array<string> (empty when
+    < SHINGLE_K tokens)."""
+    k = SHINGLE_K
     toks = tokens(text)
     n = F.size(toks)
     sh = _shingle_strings(toks, n, k)
@@ -65,7 +67,8 @@ def shingles(text: Column | str, k: int = SHINGLE_K) -> Column:
     )
 
 
-def shingles_sql(expr: str, k: int = SHINGLE_K) -> str:
+def shingles_sql(expr: str) -> str:
+    k = SHINGLE_K
     toks = tokens_sql(expr)
     return (
         f"CASE WHEN len({toks}) >= {k} THEN "
@@ -95,10 +98,11 @@ def contains_letter(tok: Column) -> Column:
     return F.translate(tok, _ASCII_LETTERS, "") != tok
 
 
-def distinct_shingle_count(text: Column | str, k: int = SHINGLE_K) -> Column:
-    """len(distinct k-shingles) — value-identical to ``size(shingles(...))``
-    but skips the canonical ``array_sort`` (a count does not need order;
-    measured ~20% of the shingle pipeline's cost)."""
+def distinct_shingle_count(text: Column | str) -> Column:
+    """len(distinct SHINGLE_K-shingles) — value-identical to
+    ``size(shingles(...))`` but skips the canonical ``array_sort`` (a count
+    does not need order; measured ~20% of the shingle pipeline's cost)."""
+    k = SHINGLE_K
     toks = tokens(text)
     n = F.size(toks)
     sh = _shingle_strings(toks, n, k)

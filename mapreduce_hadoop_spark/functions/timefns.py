@@ -23,7 +23,7 @@ def ts_to_epoch(ts: Column | str) -> Column:
     return c.cast("double")
 
 
-def str_to_epoch(s: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
+def str_to_epoch(s: Column | str) -> Column:
     """UTC string timestamp -> double epoch seconds; literal 'NULL' -> 0.0.
 
     Mirrors ``strTimeToSystemTime`` (``AirportTripsRevenue.java:106-126``).
@@ -31,5 +31,5 @@ def str_to_epoch(s: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
     """
     c = F.col(s) if isinstance(s, str) else s
     return F.when(c == F.lit("NULL"), F.lit(0.0)).otherwise(
-        F.unix_timestamp(F.to_timestamp(c, fmt)).cast("double")
+        F.unix_timestamp(F.to_timestamp(c, "yyyy-MM-dd HH:mm:ss")).cast("double")
     )

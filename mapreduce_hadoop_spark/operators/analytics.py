@@ -276,44 +276,6 @@ LIMIT 100
 """
 
 
-def events_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped daily event rollup (date x type counts + value sums)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd").alias("day"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            FP.sum_micro("value").alias("value_u"),
-        )
-        .select(
-            "day",
-            "event_type",
-            "n",
-            FP.round_micro("value_u").alias("value_sum"),
-        )
-        .orderBy("day", "event_type")
-    )
-
-
-EVENTS_DAILY_ORACLE = f"""
-WITH g AS (
-    SELECT
-        strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-        event_type,
-        count(*)                        AS n,
-        {FP.sum_micro_sql('"value"')}   AS value_u
-    FROM events
-    GROUP BY 1, 2
-)
-SELECT day, event_type, n, {FP.round_micro_sql("value_u")} AS value_sum
-FROM g
-ORDER BY 1, 2
-"""
-
-
 def market_segment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast-join + grouped avg: customer account balance by segment/nation."""
     customer = load_table(spark, sf_dir, "customer")

@@ -163,11 +163,11 @@ h AS (SELECT doc_id, {md5_long_sql("text")} AS h FROM d),
 
 # --- normalized exact dedup (C4/CCNet normalize-then-hash) -------------------
 
-# Normalization IS textops.normalize_text_col (one shared expression —
-# round 16, backing text_normalize's registry retirement): strip URLs,
-# lowercase, collapse whitespace runs, trim — then hash. Catches the
-# near-trivial variants (case, spacing, tracking URLs appended) that raw
-# exact dedup misses but that dominate real crawl duplication.
+# Normalization IS textops.normalize_text_col (one shared expression,
+# oracle-verified through this query): strip URLs, lowercase, collapse
+# whitespace runs, trim — then hash. Catches the near-trivial variants
+# (case, spacing, tracking URLs appended) that raw exact dedup misses but
+# that dominate real crawl duplication.
 from mapreduce_hadoop_spark.operators.textops import _URL_RE as _NORM_URL_RE
 from mapreduce_hadoop_spark.operators.textops import _WS_RE as _NORM_WS_RE
 from mapreduce_hadoop_spark.operators.textops import normalize_text_col
@@ -515,17 +515,6 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominated cold runs.
     """
     return _simhash_from_hs(_shingle_hashes60(spark, sf_dir))
-
-
-def simhash_signatures_from(docs: DataFrame) -> DataFrame:
-    """Signatures from any (doc_id, text) relation; see
-    ``simhash_signatures``."""
-    return _simhash_from_hs(
-        docs.select(
-            "doc_id",
-            F.transform(T.shingles("text"), lambda s: md5_long(s)).alias("hs"),
-        ).filter(F.size("hs") > 0)
-    )
 
 
 def _simhash60_np(hs_list: "list") -> "object":

@@ -21,16 +21,13 @@ from mapreduce_hadoop_spark.functions.geo import spherical_earth_distance
 from mapreduce_hadoop_spark.operators import gps
 
 
-def width_bucket_label(
-    dist: Column,
-    interval: int = C.HISTOGRAM_BIN_KM,
-    max_dist: int = C.HISTOGRAM_MAX_KM,
-) -> Column:
+def width_bucket_label(dist: Column) -> Column:
     """Zero-padded even-km bin label with outlier clamp.
 
     ``bin = int(dist/interval)``; label ``%02d`` of ``bin*interval`` when
     below ``max_dist``, else ``">=80"`` (``SparkTripLength.java:51-61``).
     """
+    interval, max_dist = C.HISTOGRAM_BIN_KM, C.HISTOGRAM_MAX_KM
     bin_idx = F.floor(dist / F.lit(float(interval)))
     return F.when(
         bin_idx < F.lit(max_dist // interval),

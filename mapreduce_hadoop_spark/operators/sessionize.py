@@ -86,11 +86,7 @@ def _round6_col(c):
 
 
 def sessionize_window(
-    pos: DataFrame,
-    gap_s: float = C.MAX_SEGMENT_DELTA_TIME_S,
-    airport_lat: float = C.SFO_LAT,
-    airport_lon: float = C.SFO_LONG,
-    airport_radius_km: float = C.SFO_MAX_DISTANCE_KM,
+    pos: DataFrame, airport_radius_km: float = C.SFO_MAX_DISTANCE_KM
 ) -> DataFrame:
     """Window-function sessionization over (taxi, t, lat, lon, status, event_date).
 
@@ -122,7 +118,7 @@ def sessionize_window(
     is_m = F.col("status") == "M"
     cont = (
         (F.col("prev_status") == "M")
-        & ((F.col("t") - F.col("prev_t")) <= F.lit(gap_s))
+        & ((F.col("t") - F.col("prev_t")) <= F.lit(C.MAX_SEGMENT_DELTA_TIME_S))
     )
     lagged = lagged.select(
         "*",
@@ -136,9 +132,7 @@ def sessionize_window(
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("seg_nano"),
-        is_airport_position(
-            "lat", "lon", airport_lat, airport_lon, airport_radius_km
-        )
+        is_airport_position("lat", "lon", C.SFO_LAT, C.SFO_LONG, airport_radius_km)
         .cast("int")
         .alias("at_airport"),
     )

@@ -6,8 +6,7 @@ decimals and keeps each query's TOP_K rows by (cosine desc, vec_id) —
 the single operator of exact top-K similarity search. What differs
 between the builders is only how the candidate pairs are produced:
 
-- ``topk_bruteforce`` / ``topk_filtered``: every corpus row (or every
-  row passing a metadata pre-filter) against the broadcast query set —
+- ``topk_bruteforce``: every corpus row against the broadcast query set —
   k_q x n candidate rows, never n^2. The exact baseline any ANN variant
   is judged against.
 - ``near_dup_cosine``: exact all-pairs cosine >= threshold. O(n^2) by
@@ -151,17 +150,11 @@ def _rank(
     )
 
 
-def _exact_topk(emb: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact top-K of every ``cand`` row against the broadcast query set
-    (vec_id < N_QUERIES of ``emb``)."""
-    q = _as_query(emb.filter(F.col("vec_id") < N_QUERIES))
-    return _rank(cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")))
-
-
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for query vectors (vec_id < N_QUERIES)."""
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    return _exact_topk(emb, emb)
+    q = _as_query(emb.filter(F.col("vec_id") < N_QUERIES))
+    return _rank(emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")))
 
 
 # SQL twin of ``_rank``'s window (over the `scored` CTE), the tail of
@@ -178,20 +171,15 @@ def _cos_sql(q: str, x: str) -> str:
     return f"round({DOT_SQL.format(a=f'{q}.qv', b=f'{x}.v')} / ({q}.qn * {x}.norm), 6)"
 
 
-def _exact_topk_sql(cand: str) -> str:
-    """SQL twin of ``_exact_topk`` over the ``cand`` CTE."""
-    return f"""q AS (SELECT vec_id AS query_id, v AS qv, norm AS qn FROM e WHERE vec_id < {N_QUERIES}),
-scored AS (
-    SELECT q.query_id, {cand}.vec_id,
-           {_cos_sql("q", cand)} AS cosine
-    FROM {cand} JOIN q ON {cand}.vec_id <> q.query_id
-)
-{RANK_SQL}"""
-
-
 TOPK_BRUTEFORCE_ORACLE = f"""
 WITH e AS ({EMB_NORM_SQL}),
-{_exact_topk_sql("e")}"""
+q AS (SELECT vec_id AS query_id, v AS qv, norm AS qn FROM e WHERE vec_id < {N_QUERIES}),
+scored AS (
+    SELECT q.query_id, e.vec_id,
+           {_cos_sql("q", "e")} AS cosine
+    FROM e JOIN q ON e.vec_id <> q.query_id
+)
+{RANK_SQL}"""
 
 
 def _near_dup_blocks(n: int, parallelism: int) -> int:
@@ -463,7 +451,7 @@ def auto_sign_bits(n: int) -> int:
 # Probe memo: repeated LSH queries over an UNCHANGED corpus in one
 # session (bench loops, the topk+near_dup twins sharing one embeddings
 # relation) pay the count+probe once. Keyed on (applicationId, analyzed-
-# plan semanticHash, explicit-n-or-auto): the semantic hash covers the
+# plan semanticHash): the semantic hash covers the
 # scan path and every transformation, so a different sf_dir or a
 # different projection never aliases; a same-plan re-read of a corpus
 # mutated IN PLACE mid-session would reuse the stale width — no engine
@@ -475,7 +463,7 @@ _SIGN_BITS_MEMO_CAP = 64
 PROBE_RUNS = 0
 
 
-def measured_sign_bits(emb: DataFrame, n: "int | None" = None) -> int:
+def measured_sign_bits(emb: DataFrame) -> int:
     """Entropy-aware bit width: smallest b in [auto_sign_bits(n), MAX_BITS]
     whose MEASURED per-vector candidate mass is <= TARGET_BUCKET.
     Memoized per (session, plan) — see ``_SIGN_BITS_MEMO`` above.
@@ -508,11 +496,7 @@ def measured_sign_bits(emb: DataFrame, n: "int | None" = None) -> int:
     """
     global PROBE_RUNS
     try:
-        key = (
-            emb.sparkSession.sparkContext.applicationId,
-            emb.semanticHash(),
-            "auto" if n is None else n,
-        )
+        key = (emb.sparkSession.sparkContext.applicationId, emb.semanticHash())
     except Exception:
         key = None  # unhashable plan (never seen): just run the probe
     if key is not None and key in _SIGN_BITS_MEMO:
@@ -526,8 +510,7 @@ def measured_sign_bits(emb: DataFrame, n: "int | None" = None) -> int:
             _SIGN_BITS_MEMO[key] = bits
         return bits
 
-    if n is None:
-        n = emb.count()
+    n = emb.count()
     if n <= 0:
         return _memo(EMB_LSH_MIN_BITS)
     floor_bits = auto_sign_bits(n)
@@ -594,13 +577,12 @@ def _srp_sign(band: int, bit: int, dim: int) -> float:
     )
 
 
-def srp_signs(bands: int, bits: int, dim: int = EMB_DIM) -> list[list[list[float]]]:
-    """signs[band][bit] = dim-length +/-1 hyperplane (the default family).
-
-    ``dim`` must match the vector length — zip_with against a longer sign
-    row would NULL-poison the projection."""
+def srp_signs(bands: int, bits: int) -> list[list[list[float]]]:
+    """signs[band][bit] = EMB_DIM-length +/-1 hyperplane (the default
+    family); the length matches the vectors — zip_with against a longer
+    sign row would NULL-poison the projection."""
     return [
-        [[_srp_sign(j, i, d) for d in range(dim)] for i in range(bits)]
+        [[_srp_sign(j, i, d) for d in range(EMB_DIM)] for i in range(bits)]
         for j in range(bands)
     ]
 
@@ -660,26 +642,22 @@ def near_dup_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     moderate-cosine pair count necessarily drops as the corpus grows —
     measured 159,100 -> 102,600 pairs at sf1 when bits grew 4 -> 11
     (SCALE_sf10_r7.md). Recovery routes for moderate-threshold mining:
-    raise ``bands`` (cost linear in bands) or use the IVF family.
+    raise ``NEAR_DUP_BANDS`` (cost linear in bands) or use the IVF family.
     """
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     return near_dup_lsh_from(emb)
 
 
 def near_dup_lsh_from(
-    emb: DataFrame,
-    bands: int = NEAR_DUP_BANDS,
-    bits: "int | None" = None,
-    signs: "list[list[list[float]]] | None" = None,
+    emb: DataFrame, signs: "list[list[list[float]]] | None" = None
 ) -> DataFrame:
-    """Banded-LSH near-dup pairs from a normed (vec_id, v, norm) relation;
-    see ``near_dup_cosine_lsh``. ``bands`` moves along the recall-vs-
-    candidates curve; ``bits`` defaults to measured_sign_bits(emb) — the
-    entropy-aware width (bounded probe; auto_sign_bits(n) as the count-
-    based floor), the price of the scale-adaptive key. ``signs``
-    overrides the hash family (tests use ``axis_signs`` to place vectors
-    in engineered buckets). Buckets over max(EMB_BUCKET_CAP_MIN, n/2) are
-    dropped (degenerate-skew guard).
+    """Banded-LSH near-dup pairs from a normed (vec_id, v, norm) relation
+    over NEAR_DUP_BANDS bands; see ``near_dup_cosine_lsh``. The band width
+    is measured_sign_bits(emb) — the entropy-aware width (bounded probe;
+    auto_sign_bits(n) as the count-based floor), the price of the
+    scale-adaptive key. ``signs`` overrides the hash family (tests use
+    ``axis_signs`` to place vectors in engineered buckets). Buckets over
+    max(EMB_BUCKET_CAP_MIN, n/2) are dropped (degenerate-skew guard).
 
     Dedup is in-row, not a shuffle: every band relation carries the
     vector's full per-band bucket array (NULL where the cap dropped the
@@ -709,9 +687,7 @@ def near_dup_lsh_from(
     candidate-pair-sized on the pair side), not corpus x bands x 2.
     """
     if signs is None:
-        if bits is None:
-            bits = measured_sign_bits(emb)
-        signs = srp_signs(bands, bits)
+        signs = srp_signs(NEAR_DUP_BANDS, measured_sign_bits(emb))
     banded_ex = emb.select(
         "vec_id",
         F.explode(
@@ -721,14 +697,15 @@ def near_dup_lsh_from(
                         F.lit(j).alias("band"),
                         _band_bucket(F.col("v"), signs[j]).alias("bucket"),
                     )
-                    for j in range(bands)
+                    for j in range(NEAR_DUP_BANDS)
                 ]
             )
         ).alias("bk"),
     ).select("vec_id", "bk.band", "bk.bucket")
     tot = emb.agg(F.count(F.lit(1)).alias("n_total"))
-    # <= bands * 2^bits rows: aggregate instead of a window, then broadcast
-    # the surviving keys back — the band relation is never windowed.
+    # <= NEAR_DUP_BANDS * 2^bits rows: aggregate instead of a window, then
+    # broadcast the surviving keys back — the band relation is never
+    # windowed.
     counts = banded_ex.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("bucket_n")
     )
@@ -761,7 +738,7 @@ def near_dup_lsh_from(
         .select(
             "vec_id",
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(NEAR_DUP_BANDS - 1)),
                 lambda j: F.element_at(F.col("m"), j),
             ).alias("mb"),
         )
@@ -1576,37 +1553,6 @@ WITH e AS ({EMB_NORM_SQL}),
                 SPANN_EPS, 1, SPANN_RMAX)},
 {PROBES_SQL},
 {_probe_rank_sql("lists", "l", "DISTINCT ")}"""
-
-
-# --- metadata-filtered search ---------------------------------------------
-
-
-def topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-5 restricted to English documents — filtered vector
-    search, the retrieval pattern production corpora actually need
-    (metadata predicate + similarity, not similarity alone).
-
-    Pre-filter strategy: the candidate set shrinks BEFORE any scoring
-    (embeddings semi-joined to the filtered documents on vec_id = doc_id),
-    so top-k is computed over exactly the rows that satisfy the predicate —
-    no post-filter recall loss. At scale the filter is a key-partitioned
-    semi join (or a pushed-down predicate when the metadata is embedded in
-    the vector table) and the scoring cost drops by the filter selectivity.
-    """
-    en = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("lang") == "en")
-        .select(F.col("doc_id").alias("vec_id"))
-    )
-    emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    return _exact_topk(emb, emb.join(en, "vec_id", "left_semi"))
-
-
-TOPK_FILTERED_ORACLE = f"""
-WITH e AS ({EMB_NORM_SQL}),
-en AS (SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'),
-c AS (SELECT e.* FROM e WHERE vec_id IN (SELECT vec_id FROM en)),
-{_exact_topk_sql("c")}"""
 
 
 # --- int8 scalar quantization ----------------------------------------------

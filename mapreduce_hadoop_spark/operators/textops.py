@@ -4,7 +4,7 @@ Four operator families over `documents`, all pure built-in expressions
 (split/transform/filter/md5 — no UDFs, fully codegen'd), each with a DuckDB
 oracle twin:
 
-- language ID: stopword-count heuristic with a deterministic argmax
+- language ID: character-trigram profile scoring with a deterministic argmax
 - quality scoring: length/diversity/stopword signals -> [0,1] score
 - token counting: whitespace tokens, a GPT-2-style pre-tokenizer regex
   count, and a chars/4 BPE-style estimate
@@ -25,41 +25,7 @@ from mapreduce_hadoop_spark.functions import text as T
 from mapreduce_hadoop_spark.functions.hashing import md5_long, md5_long_sql
 from mapreduce_hadoop_spark.sources.tables import load_table
 
-LANG_STOPWORDS: dict[str, list[str]] = {
-    "en": ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"],
-    "de": ["der", "die", "das", "und", "ist", "ein", "mit", "von", "zu", "auf"],
-    "fr": ["le", "la", "les", "et", "est", "un", "une", "des", "du", "dans"],
-    "es": ["el", "los", "las", "y", "es", "un", "una", "por", "con", "para"],
-}
 LANG_ORDER = ["en", "de", "fr", "es"]  # deterministic tie-break priority
-
-
-def _lang_counts(toks: Column) -> dict[str, Column]:
-    return {lang: T.occurrence_count(toks, words) for lang, words in LANG_STOPWORDS.items()}
-
-
-def language_id_from(docs: DataFrame) -> DataFrame:
-    """Stopword-count language ID: argmax over per-language hit counts
-    (pinned by tests/test_corpus_filters.py::test_language_id_scoring)."""
-    toks = T.tokens("text")
-    counts = _lang_counts(toks)
-    pred = F.lit("unknown")
-    # Build the CASE chain highest-priority-first; a language wins when its
-    # count is > 0 and >= every later-priority language's count.
-    expr = None
-    for i, lang in enumerate(LANG_ORDER):
-        cond = counts[lang] > 0
-        for other in LANG_ORDER[i + 1 :]:
-            cond = cond & (counts[lang] >= counts[other])
-        for other in LANG_ORDER[:i]:
-            cond = cond & (counts[lang] > counts[other])
-        expr = F.when(cond, F.lit(lang)) if expr is None else expr.when(cond, F.lit(lang))
-    pred = expr.otherwise(F.lit("unknown"))
-    return docs.select(
-        "doc_id",
-        *[counts[lang].alias(f"hits_{lang}") for lang in LANG_ORDER],
-        pred.alias("pred_lang"),
-    )
 
 
 # Characteristic character trigrams per language (space-padded word edges
@@ -420,49 +386,15 @@ _WS_RE = r"\s+"
 
 def normalize_text_col(c) -> "F.Column":
     """THE normalization expression — strip URLs, lowercase, collapse
-    whitespace runs, trim — shared by ``text_normalize`` and
-    ``dedup.exact_dedup_normalized``. One definition so the registry can
-    retire the standalone projection (round 16, size policy's ninth
-    exercise) while the expression itself stays driver-verified through
-    the dedup consumer on the rotation cadence; the identity is pinned
-    by tests/test_textops.py::test_normalize_expression_shared_with_dedup.
+    whitespace runs, trim — the normalization ``dedup.exact_dedup_normalized``
+    hashes, oracle-verified through that query; pinned by
+    tests/test_textops.py::test_normalize_expression_shared_with_dedup.
+    The regexes use only constructs Java regex and DuckDB's RE2 interpret
+    identically.
     """
     return F.trim(
         F.regexp_replace(F.lower(F.regexp_replace(c, _URL_RE, "")), _WS_RE, " ")
     )
-
-
-def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan-time text normalization — the first stage of a cleaning
-    pipeline: strip URLs, lowercase, collapse whitespace runs, trim.
-    Map-only (regexp_replace/lower/trim are codegen'd JVM expressions); at
-    100 TB this runs at storage bandwidth with zero shuffle. The regexes
-    use only constructs Java regex and DuckDB's RE2 interpret identically.
-
-    Registry-RETIRED round 16 (size policy, candidate #1 since round 14;
-    its slot funding the round's two new hash-verified ANN serving
-    twins): the expression is consumed — and therefore driver-verified —
-    by ``dedup_exact_normalized`` on the rotation cadence via the shared
-    ``normalize_text_col``; the operator and this oracle remain in the
-    tree and tests/test_textops.py keeps checking them locally.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    cleaned = normalize_text_col(F.col("text"))
-    return docs.select(
-        "doc_id",
-        cleaned.alias("norm_text"),
-        F.length(cleaned).alias("norm_chars"),
-    )
-
-
-TEXT_NORMALIZE_ORACLE = f"""
-SELECT doc_id,
-       trim(regexp_replace(lower(regexp_replace(text, '{_URL_RE}', '', 'g')),
-                           '{_WS_RE}', ' ', 'g')) AS norm_text,
-       length(trim(regexp_replace(lower(regexp_replace(text, '{_URL_RE}', '', 'g')),
-                                  '{_WS_RE}', ' ', 'g'))) AS norm_chars
-FROM documents
-"""
 
 
 def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:

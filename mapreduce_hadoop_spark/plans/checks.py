@@ -43,33 +43,3 @@ def plan_counts(df: DataFrame) -> dict[str, int]:
         "nested_loop_join": plan.count("BroadcastNestedLoopJoin"),
         "expand": plan.count("Expand"),
     }
-
-
-def formatted_plan(df: DataFrame) -> str:
-    """``explain('formatted')`` output as a string, via the PUBLIC
-    DataFrame.explain API (stdout capture) — not PythonSQLUtils or other
-    private JVM entry points (ADVICE r18: tests that reach into
-    ``_jvm`` internals break across engine versions)."""
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def filter_conditions(df: DataFrame) -> list[str]:
-    """Every ``Condition :`` line of the formatted (static) plan — one
-    entry per Filter operator."""
-    return re.findall(r"Condition : .*", formatted_plan(df))
-
-
-def pushed_filters(df: DataFrame) -> str:
-    m = re.search(r"PushedFilters: \[([^\]]*)\]", executed_plan(df))
-    return m.group(1) if m else ""
-
-
-def read_schema(df: DataFrame) -> str:
-    m = re.search(r"ReadSchema: struct<([^>]*)", executed_plan(df))
-    return m.group(1) if m else ""

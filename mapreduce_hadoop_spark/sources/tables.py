@@ -21,9 +21,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-# Dimensions small enough to broadcast at any realistic scale factor.
-BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}
-
 
 def ensure_confs(spark: SparkSession) -> None:
     """Runtime confs the engine needs even on externally created sessions
@@ -233,9 +230,3 @@ def load_table_widened(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() can address them."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

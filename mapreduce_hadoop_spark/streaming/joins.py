@@ -1,15 +1,9 @@
-"""Stream-stream join with watermarks — the streaming range join.
+"""Dimension enrich: events joined to their customer's market segment.
 
-Streaming twin of ``operators/temporal.py::views_before_purchase_range_join``:
-view and purchase events arrive as two streams; each purchase joins the
-same user's views from the preceding 24 h. Both sides carry watermarks and
-the join condition bounds event-time distance, so the state store can
-expire a buffered view once the purchase-side watermark has passed
-``view.ts + 24 h`` (no unbounded buffering — the requirement for
-stream-stream joins to run indefinitely).
-
-State sizing at scale: buffered rows ~= arrival rate x (watermark + range)
-per side; the join key (user_id) partitions state across executors.
+The batch projection of a stream-static enrich (each event joined to a
+static dimension). No broadcast hint: customer grows with the corpus, and
+the size-based (AQE) strategy broadcasts it while small and sort-merges
+beyond (same rationale as revenue_by_nation's dim).
 """
 
 from __future__ import annotations
@@ -17,89 +11,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_hadoop_spark.operators.temporal import RANGE_H
-from mapreduce_hadoop_spark.streaming.sessions import _events_stream
-
-
-def views_before_purchase_stream(
-    spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming (purchase_id, view_id, value) pairs: views in the 24 h
-    before each purchase, same user. Aggregate downstream as needed."""
-    views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("vts"),
-            F.col("event_id").alias("view_id"),
-            "value",
-        )
-        .withWatermark("vts", watermark)
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("pts"),
-        )
-        .withWatermark("pts", watermark)
-    )
-    cond = F.expr(
-        f"p_user = v_user AND vts >= pts - INTERVAL {RANGE_H} HOURS AND vts < pts"
-    )
-    return purchases.join(views, cond, "inner").select(
-        "purchase_id", "view_id", "value"
-    )
-
-
-def enriched_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static dimension enrich: each micro-batch of events joins the
-    static customer table broadcast to every executor — the stream side
-    never shuffles and no join state accrues (the canonical third join
-    pattern beside stream-stream and batch-batch).
-
-    The static side is re-planned per micro-batch, so a dimension refresh
-    (e.g. an updated parquet snapshot) is picked up without restarting the
-    query; at 100 TB/day stream rates the only scaling knob is the
-    dimension's broadcast size.
-    """
-    from mapreduce_hadoop_spark.sources.tables import load_table
-
-    ev = _events_stream(spark, sf_dir)
-    return _enrich(spark, sf_dir, ev, True)
-
-
-def _enrich(
-    spark: SparkSession, sf_dir: str, ev: DataFrame, hint_broadcast: bool
-) -> DataFrame:
-    from mapreduce_hadoop_spark.sources.tables import load_table
-
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    # The forced broadcast is a STREAM-side decision: a micro-batch plan has
-    # no AQE runtime statistics, and per-batch dim refresh is the point of
-    # the pattern. The batch twin takes no hint — customer grows with the
-    # corpus, and the size-based (AQE) strategy broadcasts it while small
-    # and sort-merges beyond (same rationale as revenue_by_nation's dim).
-    if hint_broadcast:
-        cust = F.broadcast(cust)
-    return ev.join(cust, "user_id").select(
-        "event_id", "user_id", "c_mktsegment", "value"
-    )
+from mapreduce_hadoop_spark.sources.tables import load_table
 
 
 def enriched_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of ``enriched_events_stream`` (same ``_enrich`` join shape
-    over the batch events table), driver-checkable — the stream side only
-    swaps the source and pins the broadcast, so a green row here verifies
-    the enrich join both surfaces share."""
-    from mapreduce_hadoop_spark.sources.tables import load_table
-
-    return _enrich(spark, sf_dir, load_table(spark, sf_dir, "events"), False)
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("user_id"), "c_mktsegment"
+    )
+    return (
+        load_table(spark, sf_dir, "events")
+        .join(cust, "user_id")
+        .select("event_id", "user_id", "c_mktsegment", "value")
+    )
 
 
 ENRICHED_EVENTS_ORACLE = """

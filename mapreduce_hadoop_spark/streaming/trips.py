@@ -58,7 +58,26 @@ from mapreduce_hadoop_spark.operators.sessionize import (
     replay_frame,
     run_per_taxi,
 )
-from mapreduce_hadoop_spark.streaming.sessions import _events_stream
+from mapreduce_hadoop_spark.sources.tables import ensure_confs, normalize_events
+
+
+def _events_stream(
+    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    ensure_confs(spark)
+    path = f"{sf_dir}/events.parquet"
+    # Raw on-disk schema (ts as nanos-long under the nanosAsLong conf, which
+    # load_table sets); the stream converts to TimestampType in-flight.
+    raw_schema = spark.read.parquet(path).schema
+    # The file stream source requires a directory; select the table file(s)
+    # with a glob filter ("events*" also admits redelivered copies and
+    # continuation files such as events2.parquet).
+    reader = spark.readStream.schema(raw_schema).option(
+        "pathGlobFilter", "events*.parquet"
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return normalize_events(reader.parquet(sf_dir))
 
 
 def _drop_late(pdf: pd.DataFrame, carrier: Carrier, dropped_acc) -> pd.DataFrame:

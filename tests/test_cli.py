@@ -85,9 +85,9 @@ def test_histogram_cli_bins_reference_example(tmp_path):
     assert _read_parts(out) == ["00\t1", "46\t1"]
 
 
-def test_corpus_clean_cli_writes_docs_and_stats(tmp_path):
+def test_corpus_clean_cli_writes_docs_and_stats(sf_dir, tmp_path):
     out = tmp_path / "out"
-    r = _run(["corpus-clean", "/root/testdata/sf0.001", str(out)])
+    r = _run(["corpus-clean", sf_dir, str(out)])
     assert r.returncode == 0, r.stderr[-2000:]
     assert "CLEAN DOCS : " in r.stdout and "TOKENS : " in r.stdout
     assert glob.glob(f"{out}/clean_docs/part-*.parquet")
@@ -96,9 +96,9 @@ def test_corpus_clean_cli_writes_docs_and_stats(tmp_path):
     assert all(len(line.split("\t")) == 4 for line in stats)
 
 
-def test_pii_scrub_cli_writes_scrubbed_corpus(tmp_path):
+def test_pii_scrub_cli_writes_scrubbed_corpus(sf_dir, tmp_path):
     out = tmp_path / "out"
-    r = _run(["pii-scrub", "/root/testdata/sf0.001", str(out)])
+    r = _run(["pii-scrub", sf_dir, str(out)])
     assert r.returncode == 0, r.stderr[-2000:]
     # Driver corpus carries no PII: totals are zero, corpus passes through.
     assert "EMAILS REDACTED : 0  PHONES REDACTED : 0" in r.stdout
@@ -113,32 +113,30 @@ def test_pii_scrub_cli_writes_scrubbed_corpus(tmp_path):
     )
 
 
-def test_train_split_cli_writes_partitioned_manifest(tmp_path):
+def test_train_split_cli_writes_partitioned_manifest(sf_dir, tmp_path):
     out = tmp_path / "out"
-    r = _run(["train-split", "/root/testdata/sf0.001", str(out)])
+    r = _run(["train-split", sf_dir, str(out)])
     assert r.returncode == 0, r.stderr[-2000:]
     assert "SPLIT train=" in r.stdout
     import pyarrow.parquet as pq
 
     t = pq.read_table(f"{out}/manifest")
-    assert t.num_rows == pq.read_metadata(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).num_rows
+    assert t.num_rows == pq.read_metadata(f"{sf_dir}/documents.parquet").num_rows
     # Partitioned layout: a trainer prunes to its split by directory.
     assert glob.glob(f"{out}/manifest/split=train/part-*.parquet")
     counts = _read_parts(f"{out}/counts")
     assert counts and all(len(line.split("\t")) == 4 for line in counts)
 
 
-def test_quality_filter_cli_partitions_corpus_by_drop_reason(tmp_path):
+def test_quality_filter_cli_partitions_corpus_by_drop_reason(sf_dir, tmp_path):
     out = tmp_path / "out"
-    r = _run(["quality-filter", "/root/testdata/sf0.001", str(out)])
+    r = _run(["quality-filter", sf_dir, str(out)])
     assert r.returncode == 0, r.stderr[-2000:]
     assert "KEPT : " in r.stdout
     import pyarrow.parquet as pq
 
     audit = pq.read_table(f"{out}/audit")
-    n_docs = pq.read_metadata("/root/testdata/sf0.001/documents.parquet").num_rows
+    n_docs = pq.read_metadata(f"{sf_dir}/documents.parquet").num_rows
     assert audit.num_rows == n_docs  # breakdown is a partition of the corpus
     kept = pq.read_table(f"{out}/kept_docs")
     n_kept = sum(

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mapreduce_hadoop_spark.functions import text as T
+from mapreduce_hadoop_spark.functions.hashing import md5_long
 from mapreduce_hadoop_spark.operators import dedup, similarity, textops
 
 
@@ -159,7 +161,10 @@ def test_simhash_multi_block_collision_emitted_once(spark):
     # first-match filter must emit exactly one row for the pair.
     rows = [(1, "alpha beta gamma delta epsilon zeta eta theta"),
             (2, "alpha beta gamma delta epsilon zeta eta theta")]
-    sigs = dedup.simhash_signatures_from(_docs(spark, rows))
+    hs = _docs(spark, rows).select(
+        "doc_id", F.transform(T.shingles("text"), lambda s: md5_long(s)).alias("hs")
+    )
+    sigs = dedup._simhash_from_hs(hs)
     out = dedup.simhash_pairs_from(sigs).collect()
     dedup.unpersist_intermediates()
     assert len(out) == 1
@@ -400,29 +405,3 @@ def test_cohort_retention_semantics(spark):
     assert out[(0, 2)] == 1  # u2's second signup is week-2 activity
     assert out[(0, 3)] == 1  # u1
     assert (0, -2) not in out and all(k[1] >= 0 for k in out)
-
-
-# --- retired-query pin: stopword-argmax language ID ---------------------------
-
-
-def test_language_id_scoring(spark):
-    """Pins the retired registry query text_language_id (late round 10 —
-    strictly dominated by text_language_id_ngram): per-language stopword
-    hit counts and the priority-ordered argmax, including the en-first
-    tie-break and the all-zero 'unknown' fallback."""
-    rows = [
-        (1, "the cat and the dog is on a mat near the door"),   # en
-        (2, "der hund und die katze ist ein tier von hier"),    # de
-        (3, "le chat est dans la maison et les jardins"),       # fr
-        (4, "el perro y el gato es un animal con hambre"),      # es
-        (5, "zzz qqq xxx"),                                     # unknown
-        (6, "the der"),  # en/de tie at 1 hit each -> en (priority order)
-    ]
-    out = {r["doc_id"]: r for r in textops.language_id_from(_docs(spark, rows)).collect()}
-    assert out[1]["pred_lang"] == "en" and out[1]["hits_en"] >= 3
-    assert out[2]["pred_lang"] == "de"
-    assert out[3]["pred_lang"] == "fr"
-    assert out[4]["pred_lang"] == "es"
-    assert out[5]["pred_lang"] == "unknown"
-    assert all(out[5][f"hits_{lang}"] == 0 for lang in ("en", "de", "fr", "es"))
-    assert out[6]["pred_lang"] == "en" and out[6]["hits_en"] == out[6]["hits_de"] == 1

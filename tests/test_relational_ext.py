@@ -66,27 +66,6 @@ def test_approx_percentile_within_error_bound(spark, sf_dir):
         assert abs(approx[flag] - p50) <= 0.02 * abs(p50) + 1e-6, (flag, p50, approx[flag])
 
 
-def test_daily_by_type_is_cube_finest_cells(spark, sf_dir):
-    """Retirement pin (size policy, round 14): ``events_daily_by_type``
-    left the registry because its rows are exactly the finest grouping
-    set of ``events_cube`` — this fixture is what makes the cube's
-    driver row keep verifying the retired query's semantics."""
-    from mapreduce_hadoop_spark.operators.analytics import events_daily_by_type
-    from mapreduce_hadoop_spark.operators.relational_ext import events_cube
-
-    daily = {
-        (r["day"], r["event_type"]): (r["n"], r["value_sum"])
-        for r in events_daily_by_type(spark, sf_dir).collect()
-    }
-    finest = {
-        (r["day"], r["event_type"]): (r["n"], r["value_sum"])
-        for r in events_cube(spark, sf_dir).collect()
-        if r["day"] is not None and r["event_type"] is not None
-    }
-    assert daily == finest
-    assert len(daily) > 0
-
-
 def test_approx_percentile_error_bound_holds_at_sf1():
     """Scale-spanning sketch-error evidence (round 17, VERDICT r16 order
     6): the GK-sketch p50 stays within the documented bound at the

@@ -1,25 +1,8 @@
-"""Salted join: result-equivalence with the plain join."""
+"""AQE skew-join handling fires on a hot-key sort-merge join."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from mapreduce_hadoop_spark.operators.skew import salted_join
-from mapreduce_hadoop_spark.sources.tables import load_table
-
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    dim = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("user_events"))
-    )
-    plain = ev.join(dim, "user_id")
-    salted = salted_join(ev, dim, "user_id", "event_id", n_salts=8)
-    assert salted.count() == plain.count() > 0
-    assert salted.select(*plain.columns).exceptAll(plain).count() == 0
-    assert plain.exceptAll(salted.select(*plain.columns)).count() == 0
 
 
 def test_aqe_skew_join_triggers(spark):

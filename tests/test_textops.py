@@ -2,7 +2,7 @@
 
 def test_normalize_expression_shared_with_dedup(spark):
     """Round-16 retirement fixture (size policy's ninth exercise):
-    ``text_normalize`` leaves the registry because its normalization
+    the standalone normalization query left the registry because its
     expression is consumed — and therefore driver-verified — by
     ``dedup_exact_normalized`` on the rotation cadence. This pins the
     identity STRUCTURALLY (dedup binds the very same function object)

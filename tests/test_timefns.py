@@ -1,6 +1,6 @@
 """Epoch-conversion unit fixtures (O13, `AirportTripsRevenue.java:106-126`).
 
-`fn_epoch` retired from the registry in round 11 (size policy — its slot
+The epoch query retired from the registry in round 11 (size policy — its slot
 went to `similarity_topk_pq_trained`); these fixtures are the surviving
 pin for the conversion semantics the sessionize family consumes every
 round: UTC string parse, the literal-"NULL" -> 0.0 sentinel, sub-second
@@ -54,7 +54,7 @@ def test_ts_to_epoch_subsecond(spark):
 
 
 def test_epoch_roundtrip_matches_date_format(spark):
-    """The fn_epoch query's construction: format a timestamp, parse it
+    """The retired epoch query's construction: format a timestamp, parse it
     back — must land on the second-truncated epoch."""
     df = spark.sql("SELECT timestamp'2001-02-03 04:05:06.789' AS ts").select(
         ts_to_epoch("ts").alias("micro"),

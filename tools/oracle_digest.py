@@ -2,10 +2,9 @@
 
 Usage: python tools/oracle_digest.py
 
-For each registry entry that has an oracle (plus the unregistered
-``TOPK_FILTERED_ORACLE``), prints ``<sha256>  <name>``, where the hash
-is taken over the oracle text after every whitespace run is collapsed to
-one space and the ends are stripped. Then prints the count. Two trees
+For each registry entry that has an oracle, prints ``<sha256>  <name>``,
+where the hash is taken over the oracle text after every whitespace run
+is collapsed to one space and the ends are stripped. Then prints the count. Two trees
 whose output is identical differ, at most, in oracle whitespace, so a
 refactor that recomposes oracle SQL from shared fragments can diff this
 output against its parent's to show that no SQL token moved.
@@ -27,10 +26,8 @@ def digest(sql: str) -> str:
 
 def main() -> None:
     from mapreduce_hadoop_spark import registry
-    from mapreduce_hadoop_spark.operators import similarity
 
     oracles = dict(registry.oracle_sql())
-    oracles["TOPK_FILTERED_ORACLE"] = similarity.TOPK_FILTERED_ORACLE
     for name in sorted(oracles):
         print(f"{digest(oracles[name])}  {name}")
     print(f"{len(oracles)} oracles")
