@@ -10,12 +10,10 @@ from mapreduce_hadoop_spark.functions.geo import (
     spherical_earth_distance,
 )
 from mapreduce_hadoop_spark.functions.hashing import md5_long
-from mapreduce_hadoop_spark.functions.timefns import ts_to_epoch
 
 __all__ = [
     "spherical_earth_distance",
     "is_valid_position",
     "is_airport_position",
-    "ts_to_epoch",
     "md5_long",
 ]

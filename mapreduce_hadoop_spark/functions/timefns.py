@@ -12,17 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def ts_to_epoch(ts: Column | str) -> Column:
-    """TimestampType -> double unix seconds (sub-second precision kept).
-
-    A plain cast: Spark timestamps are micros-since-epoch, so
-    ``cast(ts as double)`` is micros/1e6 — the same arithmetic DuckDB's
-    ``epoch(ts)`` performs, which keeps the oracle comparison exact.
-    """
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return c.cast("double")
-
-
 def str_to_epoch(s: Column | str) -> Column:
     """UTC string timestamp -> double epoch seconds; literal 'NULL' -> 0.0.
 

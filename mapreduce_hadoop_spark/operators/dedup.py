@@ -646,30 +646,25 @@ def simhash_pairs_from(sigs: DataFrame) -> DataFrame:
     """
     block_size = SIMHASH_BITS // SIMHASH_BLOCKS
 
-    def _blk(sig: Column, i: int) -> Column:
-        return F.shiftright(sig, i * block_size).bitwiseAND(
-            F.lit((1 << block_size) - 1)
-        )
+    # Each side is one SQL expression string: built from Column calls, the
+    # 68 structs below cost ~6,800 py4j round trips on the driver.
+    def _blk(sig: str, i: int) -> str:
+        return f"(shiftright({sig}, {i * block_size}) & {(1 << block_size) - 1})"
 
     def _block_rows(flips: list) -> DataFrame:
         """(doc_id, simhash, blk, val): one row per block and flip, val
         the block value XOR the flip (``None``: the block value itself)."""
-        def val(i: int, f) -> Column:
-            v = _blk(F.col("simhash"), i)
-            return v if f is None else v.bitwiseXOR(F.lit(f))
+        def val(i: int, f) -> str:
+            v = _blk("simhash", i)
+            return v if f is None else f"({v} ^ {f})"
 
+        structs = ", ".join(
+            f"struct({i} AS blk, {val(i, f)} AS val)"
+            for i in range(SIMHASH_BLOCKS)
+            for f in flips
+        )
         return sigs.select(
-            "doc_id",
-            "simhash",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(i).alias("blk"), val(i, f).alias("val"))
-                        for i in range(SIMHASH_BLOCKS)
-                        for f in flips
-                    ]
-                )
-            ).alias("bk"),
+            "doc_id", "simhash", F.explode(F.expr(f"array({structs})")).alias("bk")
         ).select("doc_id", "simhash", "bk.blk", "bk.val")
 
     # Probe side: each block value plus its 1-bit-flip neighborhood.
@@ -680,19 +675,13 @@ def simhash_pairs_from(sigs: DataFrame) -> DataFrame:
     # A (pair, block) match exists iff that block has <= 1 differing bit
     # (and then for exactly one flip), so first-match dedup reduces to
     # "this is the first block whose hamming is <= 1".
-    first_match = F.array_position(
-        F.array(
-            *[
-                F.bit_count(
-                    _blk(F.col("a.simhash"), i).bitwiseXOR(
-                        _blk(F.col("b.simhash"), i)
-                    )
-                )
-                <= F.lit(1)
-                for i in range(SIMHASH_BLOCKS)
-            ]
-        ),
-        F.lit(True),
+    first_match = F.expr(
+        "array_position(array("
+        + ", ".join(
+            f"bit_count({_blk('a.simhash', i)} ^ {_blk('b.simhash', i)}) <= 1"
+            for i in range(SIMHASH_BLOCKS)
+        )
+        + "), true)"
     )
     return (
         a.join(

@@ -8,6 +8,13 @@ Pins the configuration the engine depends on:
   split-size / reducer-count tuning (``src/AirportTripsRevenue.java:525-560``).
 - Arrow enabled — every Python-side kernel in this engine is Arrow-batched
   (``applyInPandas`` / pandas UDF), never row-at-a-time.
+- Python workers forked from ``pyworker`` instead of ``pyspark.daemon``:
+  the stock daemon's workers re-read all of ``pyspark.zip``'s directory
+  (once per cached zip finder, 16-18 of them) at the start of every task,
+  which cost more than most Python kernels themselves; ``pyworker`` keeps
+  an unchanged archive's directory and runs the same daemon. The conf is
+  read when the JVM starts, so a session the caller built keeps
+  ``pyspark.daemon``.
 
 It also holds the one registry of intermediates that query builders cache
 for the life of a query (``persisted`` / ``register_intermediate``);
@@ -51,6 +58,9 @@ DEFAULT_CONF = {
     # get in the oracle.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.ui.enabled": "false",
+    # Python workers skip re-reading unchanged zip archives per task; see
+    # the module docstring and pyworker.py.
+    "spark.python.daemon.module": "mapreduce_hadoop_spark.pyworker",
 }
 
 

@@ -1,5 +1,5 @@
 """Sources: parquet table loader plus the reference's native text formats."""
 
-from mapreduce_hadoop_spark.sources.tables import TABLE_NAMES, load_table, load_tables
+from mapreduce_hadoop_spark.sources.tables import TABLE_NAMES, load_table
 
-__all__ = ["TABLE_NAMES", "load_table", "load_tables"]
+__all__ = ["TABLE_NAMES", "load_table"]

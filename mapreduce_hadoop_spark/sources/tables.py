@@ -226,7 +226,3 @@ def load_table_widened(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     return widen_to_cores(
         load_table(spark, sf_dir, name), path=f"{sf_dir}/{name}.parquet"
     )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}

@@ -8,6 +8,8 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+# Tests pinned to sf0.01 goldens read the sf0.01 sibling of SF_DIR.
+SF001_DIR = os.path.join(os.path.dirname(os.path.abspath(SF_DIR)), "sf0.01")
 
 
 @pytest.fixture(scope="session")
@@ -21,6 +23,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def sf001_dir():
+    return SF001_DIR
 
 
 @pytest.fixture(scope="session")

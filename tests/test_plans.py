@@ -15,7 +15,37 @@ import pytest
 from pyspark.sql import DataFrame
 
 from mapreduce_hadoop_spark.operators import analytics, histogram, sessionize
-from mapreduce_hadoop_spark.plans.checks import executed_plan, plan_counts
+
+
+def executed_plan(df: DataFrame) -> str:
+    """String form of the executed (post-AQE-planning) physical plan.
+
+    Once AQE finalizes (after an action), ``AdaptiveSparkPlan.toString``
+    prints BOTH the ``== Final Plan ==`` and the ``== Initial Plan ==``
+    sections — naive substring counting then sees every node twice and
+    reports phantom duplicate subtrees. Only the final section executes,
+    so the initial-plan echo is stripped before any counting.
+    """
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==", 1)[0]
+
+
+def plan_counts(df: DataFrame) -> dict[str, int]:
+    plan = executed_plan(df)
+    return {
+        # \bExchange\b does not match inside "BroadcastExchange" (no word
+        # boundary between 't' and 'E'), so this counts shuffles only.
+        "exchange": len(re.findall(r"\bExchange\b|\bShuffleExchange", plan)),
+        "broadcast_exchange": plan.count("BroadcastExchange"),
+        "broadcast_hash_join": plan.count("BroadcastHashJoin"),
+        "sort_merge_join": plan.count("SortMergeJoin"),
+        "sort": plan.count("+- Sort") + plan.count(":- Sort"),
+        "window": plan.count("Window"),
+        "hash_aggregate": plan.count("HashAggregate"),
+        "cartesian": plan.count("CartesianProduct"),
+        "nested_loop_join": plan.count("BroadcastNestedLoopJoin"),
+        "expand": plan.count("Expand"),
+    }
 
 
 def formatted_plan(df: DataFrame) -> str:

@@ -28,7 +28,6 @@ MODULE_SCOPE = "<module>"
 ALLOWED = {
     f"{PKG}.__version__": "package metadata, read by no code",
     f"{PKG}.functions.__all__": "public-API declaration",
-    f"{PKG}.plans.__all__": "public-API declaration",
     f"{PKG}.sources.__all__": "public-API declaration",
     f"{PKG}.operators.dedup._simhash_from_hs_jvm": (
         "reference twin: tests pin the Arrow simhash fold equal to it"

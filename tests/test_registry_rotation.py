@@ -62,33 +62,33 @@ PINNED_REWRITE_HASHES: dict[str, tuple[str, str]] = {
     # carried forward through the round-18 optimization rewrites: the
     # pre-rewrite hashes are still the committed GATE_sf0.01_r16.log /
     # r17 rows; the post log is regenerated at the current operator tree.
-    "similarity_topk_ivfpq_fixed": ("GATE_sf0.01_r26.log", "6a1948aaeb5952e9"),
-    "similarity_topk_ivfpq_trained": ("GATE_sf0.01_r26.log", "301db5bb25ca2186"),
+    "similarity_topk_ivfpq_fixed": ("GATE_sf0.01_r27.log", "6a1948aaeb5952e9"),
+    "similarity_topk_ivfpq_trained": ("GATE_sf0.01_r27.log", "301db5bb25ca2186"),
     # Round 18 (optimization round): tail queries whose PLANS were
     # rewritten (guide-§2.4 shuffle removals — fused corpus scan,
     # map-side IVF assignment, one-shuffle LSH candidates, shared
     # quality_exprs) with outputs verified bit-identical. Pre-rewrite
     # hashes = the committed GATE_sf0.01_r17.log rows.
-    "corpus_clean_stats": ("GATE_sf0.01_r26.log", "1c8da89924dfdcf7"),
-    "similarity_topk_ivf_adaptive": ("GATE_sf0.01_r26.log", "ca0d1a60e6a9b222"),
-    "dedup_clusters": ("GATE_sf0.01_r26.log", "9a946014010f31c1"),
-    "dedup_keep_best": ("GATE_sf0.01_r26.log", "e739163b2c22caaf"),
-    "text_quality_score": ("GATE_sf0.01_r26.log", "d7227a8ffa987e13"),
-    "dedup_exact": ("GATE_sf0.01_r26.log", "7ab7bc08b2572bb0"),
-    "dedup_exact_normalized": ("GATE_sf0.01_r26.log", "ea26fcaddcc61a85"),
+    "corpus_clean_stats": ("GATE_sf0.01_r27.log", "1c8da89924dfdcf7"),
+    "similarity_topk_ivf_adaptive": ("GATE_sf0.01_r27.log", "ca0d1a60e6a9b222"),
+    "dedup_clusters": ("GATE_sf0.01_r27.log", "9a946014010f31c1"),
+    "dedup_keep_best": ("GATE_sf0.01_r27.log", "e739163b2c22caaf"),
+    "text_quality_score": ("GATE_sf0.01_r27.log", "d7227a8ffa987e13"),
+    "dedup_exact": ("GATE_sf0.01_r27.log", "7ab7bc08b2572bb0"),
+    "dedup_exact_normalized": ("GATE_sf0.01_r27.log", "ea26fcaddcc61a85"),
     # Second r18 batch (candidate-side exchange fold in topk_lsh; the
     # simhash zero-shingle filter moved to a token-count test at the
     # scan). Pre-rewrite hashes = the committed GATE_sf0.01_r17.log rows.
-    "similarity_topk_lsh": ("GATE_sf0.01_r26.log", "0e7f2f0d8d7a2cfb"),
-    "dedup_simhash": ("GATE_sf0.01_r26.log", "15ca8f177d42b079"),
-    "segment_customer_setops": ("GATE_sf0.01_r26.log", "e75cc4483c2d5a2f"),
-    "text_tfidf_top_terms": ("GATE_sf0.01_r26.log", "233a4fef595713c6"),
+    "similarity_topk_lsh": ("GATE_sf0.01_r27.log", "0e7f2f0d8d7a2cfb"),
+    "dedup_simhash": ("GATE_sf0.01_r27.log", "15ca8f177d42b079"),
+    "segment_customer_setops": ("GATE_sf0.01_r27.log", "e75cc4483c2d5a2f"),
+    "text_tfidf_top_terms": ("GATE_sf0.01_r27.log", "233a4fef595713c6"),
     # Round 19 (optimization round 2): the banded-LSH near-dup pass was
     # de-payloaded (id-only bucket pairs + vector re-attach joins, VERDICT
     # r18 order 1); corpus_clean_stats' r19 broadcast anti-join rides its
     # existing pin above. Pre-rewrite hash = the committed
     # GATE_sf0.01_r18.log row; the post log is the regenerated r19 tree's.
-    "similarity_near_dup_lsh": ("GATE_sf0.01_r26.log", "8c65978035fd9679"),
+    "similarity_near_dup_lsh": ("GATE_sf0.01_r27.log", "8c65978035fd9679"),
 }
 
 

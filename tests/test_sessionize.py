@@ -236,7 +236,7 @@ def test_window_session_count_structure(spark):
 # --- golden fixture + independent replay (sf0.01) ---------------------------
 
 
-def test_parity_golden_fixture_sf001():
+def test_parity_golden_fixture_sf001(sf001_dir):
     """Pin the full parity output at sf0.01 against a committed fixture, and
     cross-check the distributed mapInPandas plumbing (hash partitioning,
     batch carry-over, within-partition sort) against a single-threaded
@@ -248,7 +248,6 @@ def test_parity_golden_fixture_sf001():
     from mapreduce_hadoop_spark.operators import gps, sessionize
     from mapreduce_hadoop_spark.session import get_spark
 
-    sf01 = "/root/testdata/sf0.01"
     spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
     fixture_path = os.path.join(
         os.path.dirname(__file__), "fixtures", "airport_trips_parity_sf0.01.json"
@@ -256,14 +255,14 @@ def test_parity_golden_fixture_sf001():
     with open(fixture_path) as f:
         golden = json.load(f)
 
-    out = sessionize.airport_trips_parity_query(spark, sf01)
+    out = sessionize.airport_trips_parity_query(spark, sf001_dir)
     got = sorted(([*r] for r in out.collect()), key=lambda r: (r[0], r[1]))
     assert out.columns == golden["columns"]
     assert got == golden["rows"]
 
     # Independent single-threaded replay: no Spark in the loop beyond
     # fetching the input positions.
-    pos = gps.positions(spark, sf01).collect()
+    pos = gps.positions(spark, sf001_dir).collect()
     by_taxi = {}
     for r in sorted(pos, key=lambda r: (r["taxi"], r["t"], r["event_id"])):
         by_taxi.setdefault(r["taxi"], []).append(

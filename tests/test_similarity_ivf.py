@@ -66,7 +66,7 @@ def test_topk_lsh_recall(spark, sf_dir):
     assert r >= 0.5, f"recall@5={r:.2f}"
 
 
-def test_recall_at_stated_budgets_sf001(spark):
+def test_recall_at_stated_budgets_sf001(spark, sf001_dir):
     """The recall contract behind the documented curve (similarity.py):
     at sf0.01, the 12-band SRP topk default reaches recall@5 >= 0.8 at a
     ~55% candidate budget (measured 0.86; SRP tracks the data-independent
@@ -76,13 +76,12 @@ def test_recall_at_stated_budgets_sf001(spark):
     monotone in nprobe."""
     from mapreduce_hadoop_spark.operators.similarity import topk_ivf, topk_lsh
 
-    sf01 = "/root/testdata/sf0.01"
-    exact = topk_bruteforce(spark, sf01).collect()
-    r_lsh = _recall_at_5(exact, topk_lsh(spark, sf01).collect())
+    exact = topk_bruteforce(spark, sf001_dir).collect()
+    r_lsh = _recall_at_5(exact, topk_lsh(spark, sf001_dir).collect())
     assert r_lsh >= 0.8, f"LSH default recall@5={r_lsh:.2f}"
-    r_ivf4 = _recall_at_5(exact, topk_ivf(spark, sf01, nprobe=4).collect())
-    r_ivf8 = _recall_at_5(exact, topk_ivf(spark, sf01).collect())
-    r_ivf10 = _recall_at_5(exact, topk_ivf(spark, sf01, nprobe=10).collect())
+    r_ivf4 = _recall_at_5(exact, topk_ivf(spark, sf001_dir, nprobe=4).collect())
+    r_ivf8 = _recall_at_5(exact, topk_ivf(spark, sf001_dir).collect())
+    r_ivf10 = _recall_at_5(exact, topk_ivf(spark, sf001_dir, nprobe=10).collect())
     assert r_ivf8 >= 0.70, f"IVF default recall@5={r_ivf8:.2f}"
     assert r_ivf10 >= 0.8, f"IVF nprobe=10 recall@5={r_ivf10:.2f}"
     assert r_ivf4 <= r_ivf8 <= r_ivf10, (r_ivf4, r_ivf8, r_ivf10)

@@ -105,7 +105,7 @@ def test_timeout_batch_twin_flushes_idle_only(spark):
 
 
 @pytest.mark.parametrize("deliveries", [2, 4])
-def test_trip_state_survives_checkpoint_restart(spark, tmp_path, deliveries):
+def test_trip_state_survives_checkpoint_restart(spark, sf_dir, tmp_path, deliveries):
     """Deliver the time-ordered corpus in ``deliveries`` slices, restarting
     the trip stream on the same checkpoint after each: the per-taxi
     carriers (incl. open trips straddling a stop) must round-trip the state
@@ -117,7 +117,7 @@ def test_trip_state_survives_checkpoint_restart(spark, tmp_path, deliveries):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    t = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    t = pq.read_table(f"{sf_dir}/events.parquet")
     t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
     src, full = str(tmp_path / "src"), str(tmp_path / "full")
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
@@ -160,7 +160,7 @@ def test_trip_state_survives_checkpoint_restart(spark, tmp_path, deliveries):
         assert (got[c].values == want[c].values).all(), c
 
 
-def test_late_positions_are_counted(spark, tmp_path):
+def test_late_positions_are_counted(spark, sf_dir, tmp_path):
     """Out-of-order replay: deliver the LATER half of the corpus first,
     then the earlier half. Every earlier-half position of a taxi already
     advanced by the first run is older than its carrier and must be
@@ -170,7 +170,7 @@ def test_late_positions_are_counted(spark, tmp_path):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    t = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    t = pq.read_table(f"{sf_dir}/events.parquet")
     t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
     half = t.num_rows // 2
     early, late = t.slice(0, half), t.slice(half)

@@ -3,15 +3,15 @@
 The epoch query retired from the registry in round 11 (size policy — its slot
 went to `similarity_topk_pq_trained`); these fixtures are the surviving
 pin for the conversion semantics the sessionize family consumes every
-round: UTC string parse, the literal-"NULL" -> 0.0 sentinel, sub-second
-timestamp precision, and unparseable-input behavior.
+round: UTC string parse, the literal-"NULL" -> 0.0 sentinel, and
+unparseable-input behavior.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from mapreduce_hadoop_spark.functions.timefns import str_to_epoch, ts_to_epoch
+from mapreduce_hadoop_spark.functions.timefns import str_to_epoch
 
 
 def test_str_to_epoch_fixtures(spark):
@@ -46,18 +46,11 @@ def test_str_to_epoch_unparseable_throws(spark):
         df.collect()
 
 
-def test_ts_to_epoch_subsecond(spark):
-    df = spark.sql(
-        "SELECT timestamp'2013-01-10 12:30:45.25' AS ts"
-    ).select(ts_to_epoch("ts").alias("e"))
-    assert df.collect()[0]["e"] == 1357821045.25
-
-
 def test_epoch_roundtrip_matches_date_format(spark):
     """The retired epoch query's construction: format a timestamp, parse it
     back — must land on the second-truncated epoch."""
     df = spark.sql("SELECT timestamp'2001-02-03 04:05:06.789' AS ts").select(
-        ts_to_epoch("ts").alias("micro"),
+        F.col("ts").cast("double").alias("micro"),
         str_to_epoch(F.date_format("ts", "yyyy-MM-dd HH:mm:ss")).alias("parsed"),
     )
     row = df.collect()[0]
