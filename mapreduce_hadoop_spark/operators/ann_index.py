@@ -16,12 +16,12 @@ derived model a durable home so a warm session plans no training job:
   the corpus' own key, then the frozen artifact of a declared append
   base (``_base_info``; skipped with ``frozen_base=False``), else
   ``compute()``, saved under the corpus' own key;
-- data-sized relations (encoded codes, by-list serving copies) are
-  committed Spark parquet directories behind ``cached_relation``, served
-  as base + delta under an append lineage;
+- data-sized relations (the encoded PQ codes) are flat, committed Spark
+  parquet directories behind ``cached_relation``, served as base + delta
+  under an append lineage;
 - a corpus whose bytes cannot be fingerprinted (volatile) keeps its
-  models in the session memo only; ``clear_memos()`` (wired into
-  ``similarity.clear_stats_cache``) drops the memos.
+  models in the session memo only; ``clear_memos()`` drops the memos
+  (call it after mutating a dataset dir in place).
 
 k-means fits (Spark ML, fixed seed) train on a deterministic sample
 capped at ``TRAIN_SAMPLE_CAP`` rows, canonicalized to one vec_id-sorted
@@ -446,17 +446,9 @@ def codes_artifact_name(tag: str, m_subspaces: int, k: int, coarse_k: "int | Non
 # --- persisted relations (the FAISS ``add`` half) ----------------------------
 
 
-def _write_committed(
-    df: DataFrame, path: str, partition_by: "str | None" = None
-) -> None:
+def _write_committed(df: DataFrame, path: str) -> None:
     """Stage a Spark parquet build per-pid and rename into place only
     after it committed (_SUCCESS) — shared by full and delta artifacts.
-
-    ``partition_by``: hive-partition the artifact by that column (one
-    directory per value, rows shuffled so each value lands in one file)
-    — the FAISS by-list layout, where a reader whose probe set is known
-    driver-side prunes whole directories instead of scanning the flat
-    artifact (see cached_relation).
 
     Swap protocol (ADVICE r12 hardened the old rmtree+replace, whose
     window let a racing session recreate the destination mid-swap and
@@ -480,15 +472,7 @@ def _write_committed(
     tmp = f"{path}.tmp.{os.getpid()}"
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
-    # One writer, built once (ADVICE r15: the unconditional writer was
-    # dead when partition_by was set). The repartition puts each
-    # partition value in ONE file (a directory-per-list layout written
-    # task-striped would fragment into tasks x lists files).
-    src = df.repartition(F.col(partition_by)) if partition_by is not None else df
-    writer = src.write.mode("overwrite")
-    if partition_by is not None:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     if not os.path.isfile(os.path.join(tmp, "_SUCCESS")):
         raise RuntimeError(f"index artifact build did not commit: {tmp}")
     aside = f"{path}.old.{os.getpid()}"
@@ -515,14 +499,13 @@ def cached_relation(
     name: str,
     build: "Callable[[], DataFrame]",
     delta_build: "Callable[[int], DataFrame] | None" = None,
-    partition_by: "str | None" = None,
 ) -> DataFrame:
     """Load a DATA-sized index relation (e.g. the encoded PQ codes) from
-    a parquet artifact under the corpus snapshot dir, or build + persist
-    it — the FAISS ``add`` half next to the ``train`` half above. A warm
-    session's ADC scan then starts from a plain parquet scan (column
-    pruning and all) instead of re-running the encode UDF over the
-    corpus every query.
+    a flat parquet artifact under the corpus snapshot dir, or build +
+    persist it — the FAISS ``add`` half next to the ``train`` half above.
+    A warm session's ADC scan then starts from a plain parquet scan
+    (column pruning and pushed filters) instead of re-running the encode
+    UDF over the corpus every query.
 
     Safe because encoding is DETERMINISTIC given the persisted books
     (np.argmin ties break to the lowest code) and the artifact lives
@@ -543,70 +526,37 @@ def cached_relation(
     ``delta_build(watermark)`` against the frozen base books and
     persisted under the CURRENT corpus fingerprint. An append therefore
     costs O(delta) encode work; the base artifact's bytes are pinned
-    untouched by tests/test_ann_index.py.
-
-    BY-LIST LAYOUT: ``partition_by`` hive-partitions the
-    artifact (and its delta) by that column — the FAISS layout where
-    the serving copy lives inside the index clustered by coarse list,
-    so a reader filtering on a driver-known probe set prunes whole
-    list directories instead of scanning the flat artifact (partition
-    pruning is the mechanism that matches FAISS's contiguous-list
-    reads; row-group pruning does NOT work here because probe sets
-    scatter across list ids — measured in SCALE_ann_r14.md §5).
+    untouched by tests/test_ann_index.py. The delta name keys the BASE
+    fingerprint and the watermark (``lineage_suffix``): editing
+    ann_base.json in place — new base or new watermark, same embeddings
+    bytes — orphans the delta instead of serving a stale union. A
+    zero-row delta (watermark above every appended vec_id) commits one
+    empty data file and reads back as 0 rows, so the union is the base.
     """
     key = _fingerprint(sf_dir)
     if not _durable(key):
         return build()
-    lin = _lineage_paths(sf_dir, name)
-    if lin is not None and delta_build is not None:
-        base_path, dpath, watermark = lin
+    base = _base_info(sf_dir)
+    if base is not None and delta_build is not None:
+        base_path = os.path.join(_corpus_dir(base["base"]), name)
         if _committed(base_path):
+            dpath = os.path.join(
+                _corpus_dir(sf_dir), f"{name}.delta{lineage_suffix(sf_dir)}"
+            )
             if not _committed(dpath):
                 os.makedirs(os.path.dirname(dpath), exist_ok=True)
-                _write_committed(delta_build(watermark), dpath, partition_by)
-            # A ZERO-ROW delta (watermark above every appended vec_id —
-            # a legal degenerate declaration) commits _SUCCESS with no
-            # data files; spark.read would fail schema inference on it
-            # (ADVICE r15). The base alone IS the correct union then.
-            if not _has_data_files(dpath):
-                return spark.read.parquet(base_path)
+                _write_committed(delta_build(base["watermark"]), dpath)
             return spark.read.parquet(base_path).unionByName(
                 spark.read.parquet(dpath)
             )
     path = os.path.join(_corpus_dir(sf_dir, create=True), name)
     if not _committed(path):
-        _write_committed(build(), path, partition_by)
+        _write_committed(build(), path)
     return spark.read.parquet(path)
 
 
 def _committed(path: str) -> bool:
     return os.path.isfile(os.path.join(path, "_SUCCESS"))
-
-
-def _has_data_files(path: str) -> bool:
-    """True iff a committed artifact holds at least one parquet data
-    file — a zero-row partitionBy write commits _SUCCESS alone."""
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
-def _lineage_paths(sf_dir: str, name: str) -> "tuple[str, str, int] | None":
-    """THE resolver both ``cached_relation`` and ``relation_paths``
-    share (ADVICE r15: the duplication meant any edit to one had to be
-    mirrored by hand): under a declared append lineage, the base
-    artifact path, the delta artifact path, and the watermark. The
-    delta name keys the BASE fingerprint and the watermark next to the
-    current corpus fingerprint (ADVICE r12): editing ann_base.json in
-    place — new base or new watermark, same embeddings bytes — must
-    orphan the delta, or a stale base+delta union serves silently."""
-    base = _base_info(sf_dir)
-    if base is None:
-        return None
-    base_path = os.path.join(_corpus_dir(base["base"]), name)
-    dpath = os.path.join(_corpus_dir(sf_dir), f"{name}.delta{lineage_suffix(sf_dir)}")
-    return base_path, dpath, base["watermark"]
 
 
 def lineage_suffix(sf_dir: str) -> str:
@@ -619,112 +569,6 @@ def lineage_suffix(sf_dir: str) -> str:
     if base is None:
         return ""
     return f".{_fingerprint(base['base'])}.w{base['watermark']}"
-
-
-def relation_paths(sf_dir: str, name: str) -> "list[str] | None":
-    """The committed artifact directories ``cached_relation(sf_dir,
-    name)`` serves — ``[base, delta]`` under an append lineage (``[base]``
-    alone when the committed delta holds zero rows), else ``[path]``;
-    None while nothing is committed (or the corpus is volatile). Shares
-    ``_lineage_paths`` with cached_relation so a caller can do
-    driver-side BYTE ACCOUNTING over the same files the plan will open
-    (the serving cost rule in similarity._bylist_raw_source). Under a
-    lineage whose base is committed but whose delta is NOT yet, returns
-    None rather than falling through to a stale full artifact (ADVICE
-    r15): cached_relation would build+serve base+delta there, so no
-    committed path set describes the coming scan — and None makes the
-    cost rule take the flat branch, the safe direction."""
-    key = _fingerprint(sf_dir)
-    if not _durable(key):
-        return None
-    lin = _lineage_paths(sf_dir, name)
-    if lin is not None:
-        base_path, dpath, _wm = lin
-        if _committed(base_path):
-            if not _committed(dpath):
-                return None
-            if not _has_data_files(dpath):
-                return [base_path]
-            return [base_path, dpath]
-    path = os.path.join(_corpus_dir(sf_dir), name)
-    if _committed(path):
-        return [path]
-    return None
-
-
-def tree_bytes(path: str) -> int:
-    """Total bytes under a file or directory — the driver-side cost of a
-    full scan of that source (what Spark's 'size of files read' counts)."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            try:
-                total += os.path.getsize(os.path.join(root, fn))
-            except OSError:
-                pass
-    return total
-
-
-def pruned_bytes(paths: "list[str]", partition_by: str, values: "list[int]") -> int:
-    """Exact bytes a partition-pruned scan of the hive-partitioned
-    artifacts would open: the file sizes under ``{partition_by}={v}``
-    for the probed values only. Driver-side stat calls over a
-    K-directory artifact — the same arithmetic a cost-based optimizer
-    runs against file-source statistics."""
-    total = 0
-    for root in paths:
-        for v in values:
-            d = os.path.join(root, f"{partition_by}={v}")
-            if not os.path.isdir(d):
-                continue
-            for fn in os.listdir(d):
-                try:
-                    total += os.path.getsize(os.path.join(d, fn))
-                except OSError:
-                    pass
-    return total
-
-
-def column_bytes(path: str, columns: "list[str]") -> int:
-    """Exact bytes a COLUMN-PRUNED scan of ``path`` opens: the
-    compressed column-chunk sizes of the named top-level columns across
-    every row group of every parquet file under the path (plus nothing
-    else — footers are metadata reads, not data bytes). ADVICE r15: the
-    serving cost rule compared the pruned by-list copy (which holds
-    only the columns the re-rank reads) against ``tree_bytes`` of the
-    FULL flat source, overpricing the flat branch on any corpus whose
-    source file carries extra columns; this is the flat side's honest
-    price. Nested columns (``v.list.element``) roll up to their root
-    name. Falls back to ``tree_bytes`` (the whole-file upper bound) if
-    the parquet metadata cannot be read — overpricing the flat side
-    only ever flips the rule toward the pruned copy, whose own cost is
-    stat()-exact, so the fallback stays measurement-honest."""
-    import pyarrow.parquet as pq
-
-    files = []
-    if os.path.isfile(path):
-        files.append(path)
-    else:
-        for root, _dirs, fns in os.walk(path):
-            files.extend(
-                os.path.join(root, fn) for fn in fns if fn.endswith(".parquet")
-            )
-    total = 0
-    want = set(columns)
-    try:
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    if col.path_in_schema.split(".")[0] in want:
-                        total += col.total_compressed_size
-    except (OSError, ValueError, KeyError):
-        return tree_bytes(path)
-    return total
 
 
 # --- the query-side relation --------------------------------------------------

@@ -495,19 +495,15 @@ def measured_sign_bits(emb: DataFrame) -> int:
     and the floor keeps the documented log2(n) growth contract exact.
     """
     global PROBE_RUNS
-    try:
-        key = (emb.sparkSession.sparkContext.applicationId, emb.semanticHash())
-    except Exception:
-        key = None  # unhashable plan (never seen): just run the probe
-    if key is not None and key in _SIGN_BITS_MEMO:
+    key = (emb.sparkSession.sparkContext.applicationId, emb.semanticHash())
+    if key in _SIGN_BITS_MEMO:
         return _SIGN_BITS_MEMO[key]
     PROBE_RUNS += 1
 
     def _memo(bits: int) -> int:
-        if key is not None:
-            if len(_SIGN_BITS_MEMO) >= _SIGN_BITS_MEMO_CAP:
-                _SIGN_BITS_MEMO.pop(next(iter(_SIGN_BITS_MEMO)))
-            _SIGN_BITS_MEMO[key] = bits
+        if len(_SIGN_BITS_MEMO) >= _SIGN_BITS_MEMO_CAP:
+            _SIGN_BITS_MEMO.pop(next(iter(_SIGN_BITS_MEMO)))
+        _SIGN_BITS_MEMO[key] = bits
         return bits
 
     n = emb.count()
@@ -1015,20 +1011,6 @@ IVF_CENT_LO, IVF_CENT_HI = 100, 100 + IVF_K
 # recall@5 fixed / 0.80 trained at sf0.01); below it recall falls off a
 # cliff (nprobe=4 -> 0.44), above it cost grows faster than recall.
 IVF_NPROBE = 8
-
-# Fitted model parameters (centroids, PQ codebooks, corpus counts) now
-# live in the persisted index-artifact layer (operators/ann_index.py):
-# in-session memo in front of a parquet artifact keyed by corpus
-# FINGERPRINT (realpath + size + mtime), so an in-place dataset rewrite
-# auto-invalidates on disk; clear_stats_cache() drops the in-session
-# memos (tools/make_scale_data.py calls it after mutating a dir).
-def clear_stats_cache() -> None:
-    """Drop in-session fitted-model/count memos (call after mutating a
-    dataset dir). Disk index artifacts need no clearing — they are keyed
-    by corpus fingerprint (ann_index)."""
-    from mapreduce_hadoop_spark.operators import ann_index
-
-    ann_index.clear_memos()
 
 
 def _cents_relation(
@@ -2007,69 +1989,70 @@ def _adc_rank(
     return _rank(rer, cos, carry=("adc",))
 
 
-def _topk_pq_oracle(base_only: bool = False) -> str:
-    """``topk_pq`` in DuckDB SQL. ``base_only`` restricts the MODEL rows
-    (the codebook aggregation) to the append demo's derived base,
-    ``vec_id < greatest(10, n*9//10)``: the fixed-books append serve
-    restated over the original corpus. Candidates whose codes are unseen
-    in the base drop out of the inner ADC join, mirroring the +inf
-    exclusion (see the parity bound in ``topk_pq_fixed``)."""
-    wm_cte = (
-        f"wm AS (SELECT greatest({N_QUERIES}, (count(*) * 9) // 10) AS w FROM e),\n"
-        if base_only
-        else ""
-    )
-    model_where = (
-        "\n         WHERE codes.vec_id < (SELECT w FROM wm)" if base_only else ""
-    )
-
-    def code_sql(m: int) -> str:
-        return " + ".join(
-            f"CASE WHEN nv[{m * PQ_SUB + j + 1}] >= 0.0 THEN {1 << j} ELSE 0 END"
+def _pq_books_sql(vec: str, src: str, key: str = "", model_where: str = "") -> str:
+    """The ``codes``, ``subs``, ``cb`` and ``cent`` CTEs of a sign-orthant
+    PQ oracle: each row of ``src`` coded on its ``vec`` array, then the
+    exact fixed-point cell means per (``key``, m, code). ``key`` is the
+    list key (``"cent_id"`` for per-list IVF-PQ books, ``""`` for one
+    global book); ``model_where`` restricts the rows the books see."""
+    k = f"{key}, " if key else ""
+    codes = ", ".join(
+        " + ".join(
+            f"CASE WHEN {vec}[{m * PQ_SUB + j + 1}] >= 0.0 THEN {1 << j} ELSE 0 END"
             for j in range(PQ_CODE_BITS)
         )
-
-    sums = ",\n         ".join(
-        f"sum(CAST(floor(nv[m*{PQ_SUB}+{d}] * 1e9 + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS s{d}"
-        for d in range(1, PQ_SUB + 1)
-    )
-    cents = ", ".join(
-        f"CAST(s{d} AS DOUBLE)/n/1e9 AS cd{d}" for d in range(1, PQ_SUB + 1)
-    )
-    adc_terms = " + ".join(
-        f"(q.qnv[c.m*{PQ_SUB}+{d}] - c.cd{d}) * (q.qnv[c.m*{PQ_SUB}+{d}] - c.cd{d})"
-        for d in range(1, PQ_SUB + 1)
-    )
-    joins = "\n  ".join(
-        f"JOIN adc a{m} ON a{m}.m = {m} AND a{m}.code = cd.c{m}"
-        + ("" if m == 0 else f" AND a{m}.query_id = a0.query_id")
+        + f" AS c{m}"
         for m in range(PQ_M)
     )
     case_code = "CASE ms.m " + " ".join(
         f"WHEN {m} THEN c{m}" for m in range(PQ_M - 1)
     ) + f" ELSE c{PQ_M - 1} END"
-    return f"""
-WITH e AS ({EMB_NORM_SQL}),
-nvt AS (SELECT vec_id, [v[i]/norm for i in range(1, {EMB_DIM + 1})] AS nv FROM e),
-{wm_cte}codes AS (SELECT vec_id, nv,
-          {", ".join(f"{code_sql(m)} AS c{m}" for m in range(PQ_M))}
-          FROM nvt),
-subs AS (SELECT ms.m AS m, {case_code} AS code, nv
+    sums = ",\n         ".join(
+        f"sum(CAST(floor({vec}[m*{PQ_SUB}+{d}] * 1e9 + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS s{d}"
+        for d in range(1, PQ_SUB + 1)
+    )
+    cents = ", ".join(
+        f"CAST(s{d} AS DOUBLE)/n/1e9 AS cd{d}" for d in range(1, PQ_SUB + 1)
+    )
+    return f"""codes AS (SELECT vec_id, {k}{vec},
+          {codes}
+          FROM {src}),
+subs AS (SELECT {k}ms.m AS m, {case_code} AS code, {vec}
          FROM codes, (SELECT unnest(range({PQ_M})) AS m) ms{model_where}),
-cb AS (SELECT m, code, count(*) AS n,
+cb AS (SELECT {k}m, code, count(*) AS n,
          {sums}
-       FROM subs GROUP BY m, code),
-cent AS (SELECT m, code, {cents} FROM cb),
-q AS (SELECT vec_id AS query_id, nv AS qnv FROM nvt WHERE vec_id < {N_QUERIES}),
-adc AS (SELECT q.query_id, c.m, c.code,
-          CAST(0 AS DOUBLE) + {adc_terms} AS t
-        FROM q, cent c),
-scored AS (
-  SELECT a0.query_id, cd.vec_id,
+       FROM subs GROUP BY {k}m, code),
+cent AS (SELECT {k}m, code, {cents} FROM cb)"""
+
+
+def _pq_adc_terms_sql(qvec: str) -> str:
+    """Squared distance of query array ``qvec`` to cell ``c`` in its
+    subspace ``c.m``, as one left-to-right sum over the PQ_SUB dims."""
+    return " + ".join(
+        f"({qvec}[c.m*{PQ_SUB}+{d}] - c.cd{d}) * ({qvec}[c.m*{PQ_SUB}+{d}] - c.cd{d})"
+        for d in range(1, PQ_SUB + 1)
+    )
+
+
+def _pq_rank_sql(codes: str, alias: str, key: str = "") -> str:
+    """The tail every PQ oracle shares: ADC-score each row of ``codes``
+    (aliased ``alias``) against the ``adc`` table, joined per subspace on
+    the code (and on the list ``key`` when given), then the two-phase
+    shortlist (``local`` -> ``short``), the exact re-rank ``rer`` and
+    the final top-K. Needs the ``e``, ``nvt``, ``q`` and ``adc`` CTEs."""
+    joins = "\n  ".join(
+        "JOIN adc a{m} ON {on}a{m}.m = {m} AND a{m}.code = {alias}.c{m}".format(
+            m=m, alias=alias, on=f"a{m}.{key} = {alias}.{key} AND " if key else ""
+        )
+        + ("" if m == 0 else f" AND a{m}.query_id = a0.query_id")
+        for m in range(PQ_M)
+    )
+    return f"""scored AS (
+  SELECT a0.query_id, {alias}.vec_id,
          round(CAST(0 AS DOUBLE) + {" + ".join(f"a{m}.t" for m in range(PQ_M))}, 6) AS adc
-  FROM codes cd
+  FROM {codes}
   {joins}
-  WHERE cd.vec_id <> a0.query_id
+  WHERE {alias}.vec_id <> a0.query_id
 ),
 local AS (SELECT query_id, vec_id, adc FROM (
     SELECT *, row_number() OVER (
@@ -2092,6 +2075,32 @@ SELECT query_id, vec_id, cosine, adc, rank FROM (
   FROM rer)
 WHERE rank <= {TOP_K}
 """
+
+
+def _topk_pq_oracle(base_only: bool = False) -> str:
+    """``topk_pq`` in DuckDB SQL. ``base_only`` restricts the MODEL rows
+    (the codebook aggregation) to the append demo's derived base,
+    ``vec_id < greatest(10, n*9//10)``: the fixed-books append serve
+    restated over the original corpus. Candidates whose codes are unseen
+    in the base drop out of the inner ADC join, mirroring the +inf
+    exclusion (see the parity bound in ``topk_pq_fixed``)."""
+    wm_cte = (
+        f"wm AS (SELECT greatest({N_QUERIES}, (count(*) * 9) // 10) AS w FROM e),\n"
+        if base_only
+        else ""
+    )
+    model_where = (
+        "\n         WHERE codes.vec_id < (SELECT w FROM wm)" if base_only else ""
+    )
+    return f"""
+WITH e AS ({EMB_NORM_SQL}),
+nvt AS (SELECT vec_id, [v[i]/norm for i in range(1, {EMB_DIM + 1})] AS nv FROM e),
+{wm_cte}{_pq_books_sql("nv", "nvt", model_where=model_where)},
+q AS (SELECT vec_id AS query_id, nv AS qnv FROM nvt WHERE vec_id < {N_QUERIES}),
+adc AS (SELECT q.query_id, c.m, c.code,
+          CAST(0 AS DOUBLE) + {_pq_adc_terms_sql("q.qnv")} AS t
+        FROM q, cent c),
+{_pq_rank_sql("codes cd", "cd")}"""
 
 
 TOPK_PQ_ORACLE = _topk_pq_oracle()
@@ -2803,263 +2812,39 @@ ANN_APPEND_FIXED_ORACLE = _topk_pq_oracle(base_only=True)
 # --- IVF-PQ composition ------------------------------------------------------
 
 
-def _bylist_raw_source(
-    emb: DataFrame,
-    open_raw: "Callable[[], DataFrame]",
-    sf_dir: "str | None",
-    raw_name: str,
-    probed: "list[int]",
-) -> DataFrame:
-    """Exact-re-rank source, COST-BASED (the one file-source decision
-    Catalyst cannot make for us because only the driver knows the probe
-    set): serve the raw vectors from the pruned by-list copy iff the
-    bytes its probed directories actually hold undercut a COLUMN-PRUNED
-    flat scan of the source corpus — the by-list side is exact stat()
-    arithmetic over the probed ``cent_id=`` directories (it holds only
-    the columns the re-rank reads), the flat side is the compressed
-    column-chunk bytes of (vec_id, embedding) in the source file
-    (ADVICE r15: whole-file accounting overpriced the flat branch on
-    corpora whose source carries extra columns). The two regimes are
-    real (measured, SCALE_ann_r15.md): on production-shaped
-    (incompressible) embeddings the pruned copy wins ~1/f; on the
-    synthetic gate corpora the flat source file enjoys cross-replica
-    dictionary compression the clustered copy cannot keep, and an
-    adaptive probe set near K would read most of a bigger artifact. The
-    rule makes the layout NEVER-WORSE in the measured currency. Shared
-    by the trained path (``topk_ivfpq_trained``) and its deterministic-books
-    driver-hash twin (``topk_ivfpq_fixed``) — both branches are
-    output-identical by construction (shortlist candidates all come
-    from probed lists), pinned by tests/test_similarity_pq.py."""
-    from mapreduce_hadoop_spark.operators import ann_index
-
-    # PATHS-FIRST (round 16): the branch is decided from driver-side
-    # stat()/footer arithmetic alone, and only the WINNING side is ever
-    # opened — opening a K-directory hive artifact costs a K-path file
-    # listing at plan time (Spark runs it as a distributed job past 32
-    # paths), which the same-day sf1 control measured as real wall on
-    # every query that then served flat anyway.
-    raw_paths = ann_index.relation_paths(sf_dir, raw_name)
-    if raw_paths is None:
-        # Cold (or volatile) corpus: build the by-list copy — the FAISS
-        # add — then re-resolve; a volatile corpus stays unresolvable
-        # and serves the flat source below.
-        open_raw()
-        raw_paths = ann_index.relation_paths(sf_dir, raw_name)
-    src_path = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
-    if raw_paths is None or ann_index.pruned_bytes(
-        raw_paths, "cent_id", probed
-    ) >= ann_index.column_bytes(src_path, ["vec_id", "embedding"]):
-        return emb.select("vec_id", "v")
-    return open_raw().filter(F.col("cent_id").isin(probed)).select("vec_id", "v")
-
-
-# Lazy flat-codes gate (round 17): build the flat re-layout only when
-# the probe union's pruned by-list bytes reach this fraction of the
-# whole by-list artifact — below it, the by-list side wins the exact
-# cost rule against any flat layout inside the measured compression
-# band (flat total ~1.05x under by-list total on codes; 0.5 leaves ~2x
-# margin), so the ~2x codes-storage cost of the copy is never paid.
-CODES_FLAT_LAZY_FRACTION = 0.5
-
-
-def _bylist_codes_source(
-    spark: SparkSession,
-    sf_dir: "str | None",
-    open_bylist: "Callable[[], DataFrame]",
-    codes_name: str,
-    flat_name: str,
-    probed: "list[int]",
-    m_subspaces: int,
-) -> DataFrame:
-    """ADC-scan source, COST-BASED (round 16 — the codes-side branch the
-    round-15 layout left unpriced): serve the PQ codes from the pruned
-    by-list artifact iff the bytes its probed directories hold undercut
-    a flat scan of the SAME codes laid out contiguously. Round 15
-    measured the penalty of always serving by-list: at a full-union
-    probe set the hive scan reads every list directory — per-directory
-    overhead plus the cross-list compression the clustered layout cannot
-    keep (synthetic n=1M batch-10: 171.0 vs 163.1 MB), and the same-day
-    three-tree wall control at organic sf1 (K=141, probe union = all
-    lists) read the r14 flat-codes plan ~20% faster (SCALE_ann_r16.md).
-
-    The flat copy is built FROM the committed by-list relation — a pure
-    re-layout (one parquet read + write, NO second encode pass), so the
-    add-time cost is one extra write of the ~8-byte-per-vector codes,
-    not a second UDF scan of the corpus. Under an append lineage the
-    flat delta derives from the served base+delta union filtered to the
-    watermark — the same rows the by-list delta holds. Both branches
-    carry the probe filter (as a partition filter on the by-list side,
-    a pushed row-group filter on the flat side) and feed the identical
-    cent_id broadcast join, so they are output-identical by
-    construction — forced both ways in tests/test_similarity_pq.py."""
-    from mapreduce_hadoop_spark.operators import ann_index
-
-    # PATHS-FIRST, like _bylist_raw_source: resolve both sides from
-    # committed paths, build what is missing (by-list first — the add —
-    # then the flat re-layout FROM it), and only OPEN the winner, so a
-    # full-union query never pays the K-directory listing of the
-    # by-list artifact it will not read.
-    bl_paths = ann_index.relation_paths(sf_dir, codes_name)
-    rel = None
-    if bl_paths is None:
-        rel = open_bylist()
-        bl_paths = ann_index.relation_paths(sf_dir, codes_name)
-    pruned = (
-        ann_index.pruned_bytes(bl_paths, "cent_id", probed)
-        if bl_paths is not None
-        else None
-    )
-    cols = ["vec_id", "cent_id"] + [f"c{m}" for m in range(m_subspaces)]
-    flat_paths = ann_index.relation_paths(sf_dir, flat_name)
-    if flat_paths is None:
-        # LAZY build (round 17, VERDICT r16 order 4): the flat copy
-        # doubles codes storage, and a floor-width probe set can never
-        # flip the cost rule toward it — the by-list side wins the exact
-        # comparison whenever its probed directories undercut the whole
-        # artifact by more than the cross-list compression a flat layout
-        # can recover (measured band: flat total within ~1.05x of the
-        # by-list total on codes, SCALE_ann_r16.md §2-3; the 0.5 gate
-        # leaves a ~2x margin). So the re-layout is built on the FIRST
-        # probe union wide enough that flat could plausibly win, not
-        # unconditionally at add time; a corpus that only ever serves
-        # narrow unions commits no flat artifact at all (suite-pinned by
-        # tests/test_similarity_pq.py::
-        # test_floor_probe_lineage_commits_no_flat_codes).
-        # Gate in the SAME units as the exact rule below (ADVICE r17):
-        # the hypothetical flat side is estimated as the by-list
-        # relation's column-chunk bytes for exactly the served columns
-        # (the measured flat/by-list band is ~1.05x on codes), not the
-        # whole-artifact tree bytes — so an artifact that ever grows
-        # extra columns cannot inflate the threshold and mis-skip the
-        # flat build. cent_id is a partition column on the by-list side
-        # (0 column-chunk bytes), which only UNDERSTATES the estimate:
-        # the gate then errs toward building flat and the exact rule —
-        # never-worse by construction — still picks the served side.
-        if pruned is not None and pruned < CODES_FLAT_LAZY_FRACTION * sum(
-            ann_index.column_bytes(p, cols) for p in bl_paths
-        ):
-            return (rel if rel is not None else open_bylist()).filter(
-                F.col("cent_id").isin(probed)
-            )
-        src = rel if rel is not None else open_bylist()
-        # vec_id-sorted re-layout: the by-list relation arrives
-        # clustered by cent_id, and writing it as-is scatters vec_id
-        # runs across files — measured 2.2x the bytes of an
-        # order-preserving encode at sf1 (281.6 vs 128.9 KB). One sort
-        # of the ~10-byte code rows at add time restores the
-        # sequential-vec_id encoding the flat layout exists for
-        # (range-partitioned, no single-task bottleneck).
-        flat_rel = ann_index.cached_relation(
-            spark,
-            sf_dir,
-            flat_name,
-            lambda: src.sort("vec_id"),
-            delta_build=lambda wm: src.filter(F.col("vec_id") >= wm).sort(
-                "vec_id"
-            ),
-        )
-        flat_paths = ann_index.relation_paths(sf_dir, flat_name)
-        if flat_paths is None:  # volatile corpus: no artifacts at all
-            return flat_rel.filter(F.col("cent_id").isin(probed))
-    if bl_paths is None:
-        return (rel if rel is not None else open_bylist()).filter(
-            F.col("cent_id").isin(probed)
-        )
-    if pruned >= sum(ann_index.column_bytes(p, cols) for p in flat_paths):
-        return spark.read.parquet(*flat_paths).filter(
-            F.col("cent_id").isin(probed)
-        )
-    return (rel if rel is not None else open_bylist()).filter(
-        F.col("cent_id").isin(probed)
-    )
-
-
-def _bylist_sources(
+def _ivfpq_codes(
     spark: SparkSession,
     sf_dir: str,
-    emb: DataFrame,
     lists: DataFrame,
     probed: "list[int]",
-    m_subspaces: int,
-    names: "tuple[str, str, str]",
+    name: str,
     codes_of: "Callable[[DataFrame], DataFrame]",
-    delta: bool = False,
-) -> "tuple[DataFrame, DataFrame]":
-    """The IVF-PQ ``add`` half, BY-LIST: the (codes, raw) serving
-    relations of both IVF-PQ builders, pruned to the ``probed`` lists.
+) -> DataFrame:
+    """The IVF-PQ ``add`` half of both IVF-PQ builders: the codes of
+    ``lists`` (the assigned corpus: vec_id, v, norm, cent_id), encoded by
+    ``codes_of`` and persisted as one vec_id-sorted flat artifact through
+    ``ann_index.cached_relation`` (an O(delta) encode under an append
+    lineage), filtered to the ``probed`` lists. The probe union reaches
+    the scan as a pushed row-group filter; the ``cent_id`` broadcast join
+    in ``_adc_rank`` then pairs each code with its own query residual.
 
-    ``lists`` is the assigned corpus (vec_id, v, norm, cent_id); the
-    codes (``codes_of(lists)``) and a raw (vec_id, v) serving copy each
-    persist hive-partitioned by cent_id (``names`` = by-list codes, flat
-    codes, by-list raw artifact names) through
-    ``ann_index.cached_relation``. TWO co-partitioned artifacts rather
-    than one: the ADC scan reads code columns and the exact re-rank reads
-    vector columns, and a shared artifact would make every scan open the
-    other side's bytes. ``delta`` lets an append lineage assign + encode
-    only the rows past the watermark against the frozen models. Which
-    copy each side serves is the cost rule of ``_bylist_codes_source`` /
-    ``_bylist_raw_source``."""
+    The sort restores sequential vec_id runs: the assigned corpus arrives
+    clustered by list, and writing it as is scatters vec_id across files
+    (measured 2.2x the bytes of a vec_id-ordered encode at sf1)."""
     from mapreduce_hadoop_spark.operators import ann_index
 
-    codes_name, flat_name, raw_name = names
-
-    def opener(name: str, build: "Callable[[DataFrame], DataFrame]"):
-        def open_() -> DataFrame:
-            return ann_index.cached_relation(
-                spark,
-                sf_dir,
-                name,
-                lambda: build(lists),
-                delta_build=(
-                    (lambda wm: build(lists.filter(F.col("vec_id") >= wm)))
-                    if delta
-                    else None
-                ),
-                partition_by="cent_id",
-            )
-
-        return open_
-
-    codes = _bylist_codes_source(
+    return ann_index.cached_relation(
         spark,
         sf_dir,
-        opener(codes_name, codes_of),
-        codes_name,
-        flat_name,
-        probed,
-        m_subspaces,
-    )
-    raw_of = opener(raw_name, lambda src: src.select("vec_id", "v", "cent_id"))
-    return codes, _bylist_raw_source(emb, raw_of, sf_dir, raw_name, probed)
+        name,
+        lambda: codes_of(lists).sort("vec_id"),
+        delta_build=lambda wm: codes_of(lists.filter(F.col("vec_id") >= wm)).sort(
+            "vec_id"
+        ),
+    ).filter(F.col("cent_id").isin(probed))
 
 
 def _topk_ivfpq_oracle() -> str:
-    def code_sql(m: int) -> str:
-        return " + ".join(
-            f"CASE WHEN r[{m * PQ_SUB + j + 1}] >= 0.0 THEN {1 << j} ELSE 0 END"
-            for j in range(PQ_CODE_BITS)
-        )
-
-    sums = ",\n         ".join(
-        f"sum(CAST(floor(r[m*{PQ_SUB}+{d}] * 1e9 + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS s{d}"
-        for d in range(1, PQ_SUB + 1)
-    )
-    cents = ", ".join(
-        f"CAST(s{d} AS DOUBLE)/n/1e9 AS cd{d}" for d in range(1, PQ_SUB + 1)
-    )
-    adc_terms = " + ".join(
-        f"(p.qr[c.m*{PQ_SUB}+{d}] - c.cd{d}) * (p.qr[c.m*{PQ_SUB}+{d}] - c.cd{d})"
-        for d in range(1, PQ_SUB + 1)
-    )
-    joins = "\n  ".join(
-        f"JOIN adc a{m} ON a{m}.cent_id = b.cent_id AND a{m}.m = {m} "
-        f"AND a{m}.code = b.c{m}"
-        + ("" if m == 0 else f" AND a{m}.query_id = a0.query_id")
-        for m in range(PQ_M)
-    )
-    case_code = "CASE ms.m " + " ".join(
-        f"WHEN {m} THEN c{m}" for m in range(PQ_M - 1)
-    ) + f" ELSE c{PQ_M - 1} END"
     return f"""
 WITH e AS ({EMB_NORM_SQL}),
 {IVF_CENTS_SQL},
@@ -3068,15 +2853,7 @@ nc AS (SELECT cent_id, [cv[i]/cn for i in range(1, {EMB_DIM + 1})] AS ncv FROM c
 base AS (SELECT a.vec_id, a.cent_id,
            [a.v[i]/a.norm - nc.ncv[i] for i in range(1, {EMB_DIM + 1})] AS r
          FROM assigned a JOIN nc ON nc.cent_id = a.cent_id),
-codes AS (SELECT vec_id, cent_id, r,
-          {", ".join(f"{code_sql(m)} AS c{m}" for m in range(PQ_M))}
-          FROM base),
-subs AS (SELECT cent_id, ms.m AS m, {case_code} AS code, r
-         FROM codes, (SELECT unnest(range({PQ_M})) AS m) ms),
-cb AS (SELECT cent_id, m, code, count(*) AS n,
-         {sums}
-       FROM subs GROUP BY cent_id, m, code),
-cent AS (SELECT cent_id, m, code, {cents} FROM cb),
+{_pq_books_sql("r", "base", key="cent_id")},
 nvt AS (SELECT vec_id, [v[i]/norm for i in range(1, {EMB_DIM + 1})] AS nv FROM e),
 q AS (SELECT vec_id AS query_id, nv AS qnv FROM nvt WHERE vec_id < {N_QUERIES}),
 qres AS (
@@ -3087,37 +2864,10 @@ qres AS (
     ) p JOIN nc ON nc.cent_id = p.cent_id
 ),
 adc AS MATERIALIZED (SELECT p.query_id, p.cent_id, c.m, c.code,
-          CAST(0 AS DOUBLE) + {adc_terms} AS t
+          CAST(0 AS DOUBLE) + {_pq_adc_terms_sql("p.qr")} AS t
         FROM qres p JOIN cent c ON c.cent_id = p.cent_id),
 b AS MATERIALIZED (SELECT vec_id, cent_id, c0, c1, c2, c3 FROM codes),
-scored AS (
-  SELECT a0.query_id, b.vec_id,
-         round(CAST(0 AS DOUBLE) + {" + ".join(f"a{m}.t" for m in range(PQ_M))}, 6) AS adc
-  FROM b
-  {joins}
-  WHERE b.vec_id <> a0.query_id
-),
-local AS (SELECT query_id, vec_id, adc FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id, vec_id % {PQ_TOPK_BUCKETS}
-        ORDER BY adc, vec_id) AS lr
-    FROM scored) WHERE lr <= {PQ_SHORTLIST_SQL}),
-short AS (SELECT query_id, vec_id, adc FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc, vec_id) AS sr
-    FROM local) WHERE sr <= {PQ_SHORTLIST_SQL}),
-rer AS (SELECT s.query_id, s.vec_id,
-          round({DOT_SQL.format(a="qq.qnv", b="nvt.nv")}, 6) AS cosine,
-          s.adc
-        FROM short s
-        JOIN nvt ON nvt.vec_id = s.vec_id
-        JOIN q qq ON qq.query_id = s.query_id)
-SELECT query_id, vec_id, cosine, adc, rank FROM (
-  SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM rer)
-WHERE rank <= {TOP_K}
-"""
+{_pq_rank_sql("b", "b", key="cent_id")}"""
 
 
 TOPK_IVFPQ_ORACLE = _topk_ivfpq_oracle()
@@ -3125,15 +2875,12 @@ TOPK_IVFPQ_ORACLE = _topk_ivfpq_oracle()
 
 FIXED_IVFPQ_BOOKS_FNAME = f"ivfpqfix_res_m{PQ_M}_K{IVF_K}.parquet"
 FIXED_IVFPQ_CENTS_FNAME = f"ivfpqfix_cents_K{IVF_K}.parquet"
-FIXED_IVFPQ_CODES_FNAME = f"bylist_codes_ivfpqfix_m{PQ_M}_K{IVF_K}.parquet"
 FIXED_IVFPQ_FLAT_CODES_FNAME = f"codes_ivfpqfix_m{PQ_M}_K{IVF_K}.parquet"
-FIXED_IVFPQ_RAW_FNAME = f"bylist_raw_ivfpqfix_K{IVF_K}.parquet"
 
 
 def topk_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residual IVF-PQ under deterministic books, served through the
-    BY-LIST ARTIFACT + COST-RULE machinery — the hash-verifiable
-    twin of ``topk_ivfpq_trained``'s serving layer.
+    """Residual IVF-PQ under deterministic books: the hash-verifiable
+    twin of ``topk_ivfpq_trained``'s serving plan.
 
     Arithmetic: fixed K=16 coarse centroids (corpus rows [100,116)), each
     vector coded on its residual r = nv - nc_list against its list's own
@@ -3145,18 +2892,15 @@ def topk_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     as K x M x 2^bits x 16 doubles, which is why the trained path uses
     one global Lloyd-trained book instead.
 
-    Serving plan: the trained path's — hive-partitioned codes + raw
-    artifacts (``_bylist_sources``), driver-known probe-union directory
-    pruning, the cost-based ``_bylist_codes_source`` /
-    ``_bylist_raw_source`` branches, and the driver-built per-(query,
-    probed list) query side. Every artifact and driver-side decision is a
-    pure function of the corpus, so the whole by-list machinery —
-    partition layout, pruned scans, byte arithmetic, branch flip — lands
-    under the value hash of ``TOPK_IVFPQ_ORACLE``; both cost branches are
-    forced output-invariant by tests/test_similarity_pq.py.
+    Serving plan: the trained path's — the persisted flat codes artifact
+    filtered to the probe union (``_ivfpq_codes``), the driver-built
+    per-(query, probed list) query side, and the exact re-rank over the
+    corpus. Every artifact and driver-side decision is a pure function of
+    the corpus, so the whole serving path lands under the value hash of
+    ``TOPK_IVFPQ_ORACLE``.
 
-    Append lineages are NOT modeled here (books/codes derive from the
-    live corpus): the append contract's hash coverage lives in
+    Append lineages are NOT modeled here (books derive from the live
+    corpus): the append contract's hash coverage lives in
     ``ann_append_serving_fixed``; one contract per twin."""
     import math
 
@@ -3212,21 +2956,26 @@ def topk_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     probed = sorted({int(c) for pl in probe_lists for c in pl})
-    codes, raw = _bylist_sources(
+    codes = _ivfpq_codes(
         spark,
         sf_dir,
-        emb,
         lists,
         probed,
-        PQ_M,
-        (FIXED_IVFPQ_CODES_FNAME, FIXED_IVFPQ_FLAT_CODES_FNAME, FIXED_IVFPQ_RAW_FNAME),
+        FIXED_IVFPQ_FLAT_CODES_FNAME,
         lambda src: residuals(src).select(
             "vec_id",
             *[_pq_code(F.col("r"), m).alias(f"c{m}") for m in range(PQ_M)],
-            "cent_id",
+            F.col("cent_id").cast("int").alias("cent_id"),
         ),
     )
-    return _adc_rank(codes, qarr, raw, q, _pq_shortlist(n), candidates_per_query=n)
+    return _adc_rank(
+        codes,
+        qarr,
+        emb.select("vec_id", "v"),
+        q,
+        _pq_shortlist(n),
+        candidates_per_query=n,
+    )
 
 
 def topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3247,10 +2996,12 @@ def topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sign-orthant book does, and it is M x 2^bits x 16 doubles
     FLAT IN K. Its distortion falls as data fills the cells, so the exact
     re-rank shortlist stays near-constant (``_pq_trained_ivf_shortlist``).
-    Books, centroids, codes and the by-list raw copy persist as index
-    artifacts (the FAISS train/add split — a warm session plans zero
-    training jobs). ADC tables stay per-(query, probed list) because the
-    query residual differs per list.
+    Books, centroids and codes persist as index artifacts (the FAISS
+    train/add split — a warm session plans zero training jobs); the codes
+    serve from one flat artifact filtered to the probe union
+    (``_ivfpq_codes``) and the exact re-rank reads the corpus. ADC tables
+    stay per-(query, probed list) because the query residual differs per
+    list.
 
     Corpus-side list assignment is an Arrow-batched matmul-argmax UDF
     (``_assign_arrow_udf``): at K=sqrt(n) the crossJoin + window form
@@ -3339,38 +3090,23 @@ def topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # The codes name keys the residual book, the coarse quantizer and the
-    # training recipe; the raw copy depends only on the assignment, so it
-    # keys the coarse recipe alone. The literal probe-union isin() is
-    # what lets the parquet source skip unprobed list directories at
-    # planning time (the cent_id broadcast join prunes rows, not
-    # partitions); shortlist candidates all come from probed lists, so
-    # serving the re-rank from the same pruned relation is exact.
-    flat_codes_name = ann_index.codes_artifact_name(
-        "res", PQ_TRAINED_M, book_k, coarse_k=coarse_k
-    )
-    raw_name = (
-        f"bylist_raw_K{coarse_k}_"
-        f"{ann_index._recipe(ann_index.COARSE_MAXITER)}.parquet"
-    )
+    # training recipe.
     probed = sorted({int(c) for pl in probe_lists for c in pl})
-    pruned, raw = _bylist_sources(
+    codes = _ivfpq_codes(
         spark,
         sf_dir,
-        emb,
         lists,
         probed,
-        PQ_TRAINED_M,
-        ("bylist_" + flat_codes_name, flat_codes_name, raw_name),
+        ann_index.codes_artifact_name("res", PQ_TRAINED_M, book_k, coarse_k=coarse_k),
         codes_src,
-        delta=True,
     )
     q, qarr = _query_side(
         spark, emb, sf_dir, rows, PQ_TRAINED_M, PQ_TRAINED_SUB, probe_lists, cents_rows
     )
     return _adc_rank(
-        pruned,
+        codes,
         qarr,
-        raw,
+        emb.select("vec_id", "v"),
         q,
         shortlist,
         m_subspaces=PQ_TRAINED_M,

@@ -459,17 +459,10 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
 
 # Rule 1a: plan rewrites whose output value-hash is unchanged at every
 # gate scale, pinned against regenerated SRCHASH-bound gate logs.
-# Round 17 at rotation: the r16 pins (similarity_topk_pq_trained,
-# ann_append_serving) retired — both are in the forced-rotation head
-# and take fresh driver rows. Two pins this round: the LAZY flat-codes
-# re-layout (VERDICT r16 order 4 — the flat copy builds on the first
-# wide-union cost flip instead of unconditionally at add time) rewrites
-# both by-list codes consumers' serving with output identical by
-# construction (both branches feed the same cent_id broadcast join;
-# forced both ways in tests/test_similarity_pq.py): served at sf0.01 on
-# the post-change tree and hash-compared against the committed r16 log
-# before the pin landed — identical — and the regenerated r17 sf0.01
-# log pins the same hashes at the final tree.
+# The two IVF-PQ builders serve codes from one flat artifact filtered to
+# the probe union and re-rank from the corpus, a rewrite of their r16
+# serving plan with output identical: their pins keep the committed r16
+# hashes, and the regenerated sf0.01 log pins them at the current tree.
 REWRITTEN_HASH_IDENTICAL: tuple[str, ...] = (
     "similarity_topk_ivfpq_fixed",
     "similarity_topk_ivfpq_trained",
@@ -1016,12 +1009,12 @@ def _specs() -> dict[str, QuerySpec]:
         # any further addition requires retiring from the ranked list in
         # the module docstring.
         "similarity_topk_ivfpq_trained": (similarity.topk_ivfpq_trained, None),
-        # NEW round 16 (VERDICT r15 order 1): the round-15 by-list
-        # artifact + cost-rule serving machinery (hive-partitioned
-        # codes/raw, probe-union directory pruning, cost-based re-rank
-        # source) under deterministic per-list sign-orthant books, so
-        # TOPK_IVFPQ_ORACLE hash-verifies the whole pruning layer the
-        # trained path can only rows-check.
+        # NEW round 16 (VERDICT r15 order 1): the trained IVF-PQ serving
+        # plan (persisted flat codes filtered to the probe union, the
+        # driver-built per-(query, probed list) query side, the exact
+        # re-rank over the corpus) under deterministic per-list
+        # sign-orthant books, so TOPK_IVFPQ_ORACLE hash-verifies the
+        # serving layer the trained path can only rows-check.
         "similarity_topk_ivfpq_fixed": (
             similarity.topk_ivfpq_fixed,
             similarity.TOPK_IVFPQ_ORACLE,

@@ -24,10 +24,8 @@ def index_dir(tmp_path, monkeypatch):
     d = str(tmp_path / "annidx")
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", d)
     ann_index.clear_memos()
-    similarity.clear_stats_cache()
     yield d
     ann_index.clear_memos()
-    similarity.clear_stats_cache()
 
 
 def _demo_dirs(sf_dir: str) -> tuple[str, str]:
@@ -83,7 +81,6 @@ def test_delta_path_builds_once_and_leaves_base_untouched(spark, sf_dir, index_d
     assert os.path.isfile(os.path.join(dpath, "_SUCCESS")), dpath
 
     ann_index.clear_memos()
-    similarity.clear_stats_cache()
     second = similarity.ann_append_serving_fixed(spark, sf_dir).collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
     assert _artifact_files(base_codes) == before, "base codes artifact rewritten"

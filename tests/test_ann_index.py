@@ -311,12 +311,9 @@ def test_incremental_append_serves_without_refit(spark, sf_dir, index_dir, tmp_p
     assert after == snapshot
     app_dir = os.path.join(index_dir, ann_index._fingerprint(str(app)))
     deltas = [d for d in os.listdir(app_dir) if ".delta." in d]
-    # Flat-PQ codes + by-list residual codes + by-list raw serving copy
-    # (the round-15 split: codes and raw are separate co-partitioned
-    # artifacts so each scan opens only its own bytes) + the FLAT
-    # re-layout of the residual codes (round 16: the codes-side cost
-    # branch serves whichever copy reads fewer bytes at the probe set).
-    assert len(deltas) == 4, deltas
+    # Flat-PQ codes + IVF-PQ residual codes; both builders re-rank from
+    # the corpus itself, so no raw-vector copy is committed.
+    assert len(deltas) == 2, deltas
     for d in deltas:
         # The delta name keys the base fingerprint AND the watermark
         # (ADVICE r12): an in-place ann_base.json edit must orphan it.
@@ -507,10 +504,9 @@ def test_fit_is_layout_independent(spark, sf_dir, index_dir, tmp_path):
 
 def test_zero_row_delta_serves_base_alone(spark, sf_dir, index_dir, tmp_path):
     """A degenerate append declaration (watermark above every vec_id —
-    a legal zero-row delta) must serve the base artifact alone instead
-    of failing schema inference on a data-file-less delta commit
-    (ADVICE r15), for flat AND by-list layouts; relation_paths mirrors
-    the same resolution (base only)."""
+    a legal zero-row delta) must serve the base artifact alone: the
+    zero-row delta commits an empty data file that reads back as 0
+    rows, so the base+delta union equals the base (ADVICE r15)."""
     import json
 
     base = tmp_path / "base"
@@ -529,109 +525,31 @@ def test_zero_row_delta_serves_base_alone(spark, sf_dir, index_dir, tmp_path):
 
     import pyspark.sql.functions as F
 
-    for name, part in (("zrd_flat.parquet", None), ("zrd_bylist.parquet", "cent_id")):
-        build = lambda: emb_base.select(
-            "vec_id", (F.col("vec_id") % 4).cast("int").alias("cent_id")
-        )
-        got = ann_index.cached_relation(
-            spark, str(base), name, build, delta_build=None, partition_by=part
-        )
-        n_base = got.count()
-        emb_app = _emb(spark, str(app))
-        served = ann_index.cached_relation(
-            spark,
-            str(app),
-            name,
-            lambda: emb_app.select(
-                "vec_id", (F.col("vec_id") % 4).cast("int").alias("cent_id")
-            ),
-            delta_build=lambda wm: emb_app.filter(F.col("vec_id") >= wm).select(
-                "vec_id", (F.col("vec_id") % 4).cast("int").alias("cent_id")
-            ),
-            partition_by=part,
-        )
-        assert served.count() == n_base
-        paths = ann_index.relation_paths(str(app), name)
-        assert paths is not None
-        assert paths[0] == os.path.join(ann_index._corpus_dir(str(base)), name)
-        if part is not None:
-            # partitionBy writes NO data files for zero rows — the read
-            # and the byte accounting must both resolve to base alone.
-            assert paths == [os.path.join(ann_index._corpus_dir(str(base)), name)]
-
-
-def test_relation_paths_is_none_before_delta_commits(spark, sf_dir, index_dir, tmp_path):
-    """ADVICE r15: with a lineage declared and the base committed but
-    the delta NOT yet built, relation_paths must return None (the cost
-    rule then takes the safe flat branch) instead of silently resolving
-    to a stale full artifact."""
-    import json
-
-    import pyspark.sql.functions as F
-
-    base = tmp_path / "base"
-    base.mkdir()
-    shutil.copy(
-        os.path.join(sf_dir, "embeddings.parquet"), base / "embeddings.parquet"
-    )
-    app = tmp_path / "app"
-    app.mkdir()
-    shutil.copy(
-        os.path.join(sf_dir, "embeddings.parquet"), app / "embeddings.parquet"
-    )
-
-    name = "rp_probe.parquet"
-    emb_base = _emb(spark, str(base))
-    ann_index.cached_relation(
+    name = "zrd_flat.parquet"
+    got = ann_index.cached_relation(
         spark,
         str(base),
         name,
-        lambda: emb_base.select("vec_id"),
+        lambda: emb_base.select(
+            "vec_id", (F.col("vec_id") % 4).cast("int").alias("cent_id")
+        ),
+        delta_build=None,
     )
-    # A stale FULL artifact exists under the appended corpus' own key
-    # (e.g. built before the lineage was declared)...
-    emb_app_pre = _emb(spark, str(app))
-    ann_index.cached_relation(
-        spark, str(app), name, lambda: emb_app_pre.select("vec_id")
+    n_base = got.count()
+    emb_app = _emb(spark, str(app))
+    served = ann_index.cached_relation(
+        spark,
+        str(app),
+        name,
+        lambda: emb_app.select(
+            "vec_id", (F.col("vec_id") % 4).cast("int").alias("cent_id")
+        ),
+        delta_build=lambda wm: emb_app.filter(F.col("vec_id") >= wm).select(
+            "vec_id", (F.col("vec_id") % 4).cast("int").alias("cent_id")
+        ),
     )
-    # ...then the lineage lands.
-    with open(app / "ann_base.json", "w") as f:
-        json.dump({"base": str(base), "watermark": 50}, f)
-    ann_index.clear_memos()
-    assert ann_index.relation_paths(str(app), name) is None
-
-
-def test_column_bytes_prices_only_named_columns(sf_dir, tmp_path):
-    """ADVICE r15: the cost rule's flat side must price only the columns
-    the re-rank scan reads. On a file with an extra fat column,
-    column_bytes(vec_id, embedding) must exclude it; on the gate corpus
-    (exactly those columns) it is bounded by the whole-file size and
-    accounts for nearly all of it."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    want = ann_index.column_bytes(src, ["vec_id", "embedding"])
-    whole = ann_index.tree_bytes(src)
-    assert 0 < want < whole
-    assert want > whole * 0.8, "2-column file: column bytes ~= file bytes"
-
-    import numpy as np
-
-    t = pq.read_table(src)
-    rng = np.random.default_rng(5)
-    pad = pa.array(
-        [rng.integers(0, 256, 4096, dtype=np.uint8).tobytes() for _ in range(t.num_rows)],
-        pa.binary(),
+    dpath = os.path.join(
+        ann_index._corpus_dir(str(app)), name + ".delta" + ann_index.lineage_suffix(str(app))
     )
-    fat = t.append_column("pad", pad)
-    fat_path = tmp_path / "fat.parquet"
-    pq.write_table(fat, fat_path)
-    pruned = ann_index.column_bytes(str(fat_path), ["vec_id", "embedding"])
-    assert pruned < ann_index.tree_bytes(str(fat_path)) * 0.5
-    # Unreadable metadata falls back to the whole-file upper bound.
-    bogus = tmp_path / "bogus.parquet"
-    bogus.write_bytes(b"not parquet")
-    assert ann_index.column_bytes(str(bogus), ["x"]) == ann_index.tree_bytes(
-        str(bogus)
-    )
+    assert os.path.isfile(os.path.join(dpath, "_SUCCESS")), dpath
+    assert served.count() == n_base

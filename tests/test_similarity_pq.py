@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
@@ -482,75 +484,23 @@ def test_ivfpq_trained_warm_plan_is_fused(spark, sf_dir, tmp_path, monkeypatch):
     assert "ArrowEvalPython" not in plan, "warm plan must not assign/encode"
     assert "BatchEvalPython" not in plan
     assert "Scan ExistingRDD" in plan, "query side must be driver-built"
-    # Round 16: BOTH artifact sides are cost-based. At this fixture's
-    # scale the probe union covers every list, so the codes scan serves
-    # the FLAT re-layout copy (codes_res_...) — the by-list branch is
-    # forced and output-pinned by the invariance tests below.
+    # The codes scan reads the flat codes artifact (codes_res_...); the
+    # other parquet scan is the exact re-rank's corpus pass.
     assert "codes_res" in plan, "scan must read a codes artifact"
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
     assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 2
-    # Round 16: both artifact sides are cost-based, and at this scale
-    # the full-union probe set makes BOTH serve flat — so the probe
-    # union reaches the codes scan as a PUSHED row filter instead of a
-    # partition filter (the by-list directory-pruning shape stays
-    # pinned by the forced-branch invariance tests, which assert two
-    # PartitionFilters under a forced by-list win).
+    # The probe union reaches the codes scan as a pushed row filter.
     assert re.search(r"PushedFilters: \[.*cent_id", plan), plan[:2000]
-
-
-def test_ivfpq_bylist_raw_source_is_output_invariant(spark, sf_dir, tmp_path, monkeypatch):
-    """The round-15 cost rule picks the exact-re-rank's raw source
-    (pruned by-list copy vs flat corpus scan) from driver-side byte
-    arithmetic — a pure I/O decision, so BOTH branches must produce
-    bit-identical rows. Force each branch by monkeypatching the flat
-    side's cost and compare; also pin that the forced by-list branch
-    actually plans TWO partition-pruned scans."""
-    from mapreduce_hadoop_spark.operators import ann_index
-    from mapreduce_hadoop_spark.operators.similarity import (
-        topk_ivfpq_trained,
-        unpersist_intermediates,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    ann_index.clear_memos()
-    try:
-        # Warm the artifacts once, then serve under each forced branch.
-        topk_ivfpq_trained(spark, sf_dir).collect()
-        unpersist_intermediates()
-
-        real_column_bytes = ann_index.column_bytes
-        monkeypatch.setattr(ann_index, "column_bytes", lambda p, c: 0)  # flat wins
-        flat = sorted(map(tuple, topk_ivfpq_trained(spark, sf_dir).collect()))
-        unpersist_intermediates()
-
-        monkeypatch.setattr(
-            ann_index, "column_bytes", lambda p, c: 1 << 60
-        )  # by-list wins
-        df = topk_ivfpq_trained(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert plan.count("PartitionFilters: [cent_id") == 2
-        bylist = sorted(map(tuple, df.collect()))
-        unpersist_intermediates()
-        monkeypatch.setattr(ann_index, "column_bytes", real_column_bytes)
-
-        assert flat == bylist and len(flat) > 0
-    finally:
-        unpersist_intermediates()
-        ann_index.clear_memos()
 
 
 def test_ivfpq_fixed_twin_is_bit_identical_and_branch_invariant(
     spark, sf_dir, duck, tmp_path, monkeypatch
 ):
-    """``topk_ivfpq_fixed``: the by-list artifact + cost-rule serving plan
-    under deterministic books must produce rows BIT-IDENTICAL to the
-    DuckDB ``TOPK_IVFPQ_ORACLE`` — cold (artifact build) and warm
-    (artifact load) — and under BOTH forced cost branches, so the
-    driver's value hash on the twin pins the whole pruning layer."""
+    """``topk_ivfpq_fixed``: the artifact-backed serving plan under
+    deterministic books must produce rows BIT-IDENTICAL to the DuckDB
+    ``TOPK_IVFPQ_ORACLE`` — cold (artifact build) and warm (artifact
+    load) — so the driver's value hash on the twin pins the persisted
+    codes and the probe filter."""
     from mapreduce_hadoop_spark.operators import ann_index
     from mapreduce_hadoop_spark.operators.similarity import (
         TOPK_IVFPQ_ORACLE,
@@ -571,52 +521,11 @@ def test_ivfpq_fixed_twin_is_bit_identical_and_branch_invariant(
         warm = sorted(map(tuple, topk_ivfpq_fixed(spark, sf_dir).collect()))
         unpersist_intermediates()
 
-        monkeypatch.setattr(ann_index, "column_bytes", lambda p, c: 0)  # flat wins
-        flat = sorted(map(tuple, topk_ivfpq_fixed(spark, sf_dir).collect()))
-        unpersist_intermediates()
-        monkeypatch.setattr(
-            ann_index, "column_bytes", lambda p, c: 1 << 60
-        )  # by-list wins
-        df = topk_ivfpq_fixed(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        # Both the codes scan and the forced by-list raw scan carry the
-        # probe union as a PARTITION filter (directory pruning).
-        assert plan.count("PartitionFilters: [cent_id") == 2
-        bylist = sorted(map(tuple, df.collect()))
-        unpersist_intermediates()
-
         assert len(ref) > 0
-        assert cold == ref and warm == ref and flat == ref and bylist == ref
+        assert cold == ref and warm == ref
     finally:
         unpersist_intermediates()
         ann_index.clear_memos()
-
-
-def test_pruned_bytes_counts_probed_directories_only(tmp_path):
-    """relation_paths + pruned_bytes: the serving cost rule's byte
-    arithmetic must count exactly the probed ``cent_id=`` directories
-    of the committed artifact."""
-    from mapreduce_hadoop_spark.operators import ann_index
-
-    art = tmp_path / "art.parquet"
-    sizes = {}
-    for c in range(4):
-        d = art / f"cent_id={c}"
-        d.mkdir(parents=True)
-        payload = b"x" * (100 * (c + 1))
-        (d / "part-0.parquet").write_bytes(payload)
-        sizes[c] = len(payload)
-    (art / "_SUCCESS").write_text("")
-
-    got = ann_index.pruned_bytes([str(art)], "cent_id", [1, 3])
-    assert got == sizes[1] + sizes[3]
-    # Unprobed or missing directories contribute nothing.
-    assert ann_index.pruned_bytes([str(art)], "cent_id", [99]) == 0
-    assert ann_index.tree_bytes(str(art)) == sum(sizes.values())
 
 
 def test_ivfpq_matches_oracle_post_retirement(
@@ -838,26 +747,40 @@ def test_escalating_widen_keep_depths(spark):
 def test_warm_full_union_serve_opens_no_bylist_artifact(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Paths-first cost rules (round 16): on a warm corpus whose probe
-    union covers every list (this fixture's scale), BOTH rules serve the
-    flat side — and must not even OPEN the by-list artifacts, because
-    opening a K-directory hive artifact costs a K-path file listing at
-    plan time (a distributed job past 32 paths; the sf1 control measured
-    it as real wall). Pin by recording every cached_relation open during
-    the warm serve."""
+    """Both IVF-PQ builders serve their codes from one flat artifact and
+    re-rank from the corpus itself: a cold build under an empty index
+    root must commit no ``bylist_*`` artifact and no hive-partitioned
+    ``cent_id=`` directory, and the warm serve must open nothing but the
+    flat codes artifact."""
     from mapreduce_hadoop_spark.operators import ann_index
     from mapreduce_hadoop_spark.operators.similarity import (
+        topk_ivfpq_fixed,
         topk_ivfpq_trained,
         unpersist_intermediates,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    root = tmp_path / "idx"
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(root))
     ann_index.clear_memos()
+    builders = (topk_ivfpq_fixed, topk_ivfpq_trained)
     try:
-        topk_ivfpq_trained(spark, sf_dir).collect()  # cold: builds all
-        unpersist_intermediates()
-        ann_index.clear_memos()
+        for fn in builders:  # cold: builds every artifact
+            assert len(fn(spark, sf_dir).collect()) > 0
+            unpersist_intermediates()
+        committed = [
+            os.path.relpath(os.path.join(r, d), root)
+            for r, dirs, _ in os.walk(root)
+            for d in dirs
+        ]
+        assert any(os.path.basename(d).startswith("codes_") for d in committed)
+        assert not [
+            d
+            for d in committed
+            if os.path.basename(d).startswith("bylist_")
+            or os.path.basename(d).startswith("cent_id=")
+        ], committed
 
+        ann_index.clear_memos()
         opened: list = []
         real = ann_index.cached_relation
 
@@ -866,72 +789,12 @@ def test_warm_full_union_serve_opens_no_bylist_artifact(
             return real(spark_, sf_dir_, name, *a, **kw)
 
         monkeypatch.setattr(ann_index, "cached_relation", recording)
-        df = topk_ivfpq_trained(spark, sf_dir)
-        assert not [n for n in opened if n.startswith("bylist_")], opened
-        assert len(df.collect()) > 0
+        for fn in builders:
+            assert len(fn(spark, sf_dir).collect()) > 0
+            unpersist_intermediates()
+        assert len(opened) == 2 and all(n.startswith("codes_") for n in opened), opened
     finally:
         unpersist_intermediates()
-        ann_index.clear_memos()
-
-
-def test_floor_probe_lineage_commits_no_flat_codes(spark, sf_dir, tmp_path, monkeypatch):
-    """LAZY flat-codes build (round 17, VERDICT r16 order 4): the flat
-    re-layout doubles codes storage and a floor-width probe union can
-    never flip the cost rule toward it, so ``_bylist_codes_source`` must
-    (a) commit NO flat artifact while every probe union stays under the
-    lazy fraction of the by-list bytes — serving the by-list side
-    directly — and (b) build it on the FIRST wide union, after which the
-    exact cost rule runs as before. Rows must be identical on both
-    sides of the gate (the branch is a pure I/O decision)."""
-    from mapreduce_hadoop_spark.operators import ann_index
-    from mapreduce_hadoop_spark.operators.similarity import (
-        _bylist_codes_source,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    ann_index.clear_memos()
-    try:
-        rows = [(i, i % 8, (3 * i) % 251) for i in range(400)]
-        bl = spark.createDataFrame(rows, "vec_id long, cent_id int, c0 int")
-        codes_name, flat_name = "lazygate_codes.parquet", "lazygate_flat.parquet"
-
-        def open_bylist():
-            return ann_index.cached_relation(
-                spark, sf_dir, codes_name, lambda: bl, partition_by="cent_id"
-            )
-
-        # Floor-width union: 1 of 8 lists (~12.5% of the by-list bytes,
-        # far under the 0.5 gate) -> serve by-list, commit NO flat copy.
-        narrow = _bylist_codes_source(
-            spark, sf_dir, open_bylist, codes_name, flat_name, [3], 1
-        )
-        got = sorted(map(tuple, narrow.select("vec_id", "cent_id", "c0").collect()))
-        assert got == sorted(t for t in rows if t[1] == 3)
-        assert ann_index.relation_paths(sf_dir, codes_name) is not None
-        assert ann_index.relation_paths(sf_dir, flat_name) is None, (
-            "floor-width probe union committed a flat codes artifact"
-        )
-
-        # First wide union (all 8 lists = 100% of the by-list bytes):
-        # the gate opens, the re-layout is built once, and the exact
-        # cost rule decides the branch from committed paths.
-        wide = _bylist_codes_source(
-            spark, sf_dir, open_bylist, codes_name, flat_name, list(range(8)), 1
-        )
-        assert sorted(
-            map(tuple, wide.select("vec_id", "cent_id", "c0").collect())
-        ) == sorted(rows)
-        assert ann_index.relation_paths(sf_dir, flat_name) is not None
-
-        # Post-build, a narrow union prices both committed sides and
-        # still serves identical rows.
-        narrow2 = _bylist_codes_source(
-            spark, sf_dir, open_bylist, codes_name, flat_name, [3], 1
-        )
-        assert sorted(
-            map(tuple, narrow2.select("vec_id", "cent_id", "c0").collect())
-        ) == got
-    finally:
         ann_index.clear_memos()
 
 

@@ -203,10 +203,10 @@ def replicate(
     # per-dataset statistics cached in this process (hot-key probe
     # decisions, fitted IVF centroids) so queries re-probe the new data.
     try:
-        from mapreduce_hadoop_spark.operators import similarity, temporal
+        from mapreduce_hadoop_spark.operators import ann_index, temporal
 
         temporal.clear_stats_cache()
-        similarity.clear_stats_cache()
+        ann_index.clear_memos()
     except ImportError:
         pass  # standalone use outside the repo: nothing cached to clear
 
