@@ -38,17 +38,11 @@ HEADLINE = [
     "text_token_counts",
     "dedup_minhash_lsh",
     "dedup_simhash",
-    # NEW round 13: the exact all-pairs baseline joined the headline set
-    # when its triangle-blocked rewrite made it benchable (sf1 109 -> 9.3 s
-    # warm, bit-identical; the first round it runs at every gate scale).
     "similarity_near_dup_cosine",
     "similarity_topk_bruteforce",
     "similarity_topk_ivf",
     "similarity_topk_pq",
     "similarity_topk_pq_trained",
-    # similarity_topk_ivfpq retired from the registry round 13 (trained
-    # twin carries the rows at 4.1x the wall); the bench slot goes to the
-    # new append-lineage serving path.
     "ann_append_serving",
     "similarity_topk_ivfpq_trained",
     "multimodal_real_jpeg_color",
@@ -57,7 +51,7 @@ HEADLINE = [
     "corpus_clean_stats",
 ]
 
-# Subtotal split (VERDICT r11 order 6): the ANN+media family was 56% of
+# Subtotal split: the ANN+media family was 56% of
 # the sf1 total, diluting every regression signal in the other queries.
 # Both subtotals print inside the same capped metric line, so drift in
 # either is visible in driver records without reading 26 per-query keys.
@@ -66,19 +60,16 @@ ANN_MEDIA = {
 }
 
 # The driver records only the LAST 2000 characters of bench output and
-# parses the metric JSON out of that tail. Round 10's ~2,400-char note
+# parses the metric JSON out of that tail. A ~2,400-char note once
 # pushed the head of the JSON line out of the capture window and the
-# driver recorded `parsed: null` — the round's headline number simply
-# does not exist in driver records. Two defenses now: the metric line is
-# hard-capped (note auto-truncated to fit MAX_METRIC_LINE, asserted
-# below) and round narrative belongs in SCALE_*/SKEW_*/README, not here.
+# driver recorded `parsed: null`. So the metric line is hard-capped
+# (note auto-truncated to fit MAX_METRIC_LINE, asserted below).
 MAX_METRIC_LINE = 1800
 
 # One line per build round, keyed on registry.ROUND so BENCH_rN.json can
 # never ship describing a stale build: a round that forgets to add its
 # line emits an explicit "note missing" marker instead of last round's
-# text (the r8/r9 failure mode — BENCH_r09.json carried the verbatim
-# round-7 note).
+# text.
 ROUND_NOTES = {
     # registry.ROUND stays 17 through the round-18 OPTIMIZATION round
     # (no rotation), so the r18 note lives under key 17.
@@ -162,7 +153,7 @@ def main() -> None:
     # Cache honesty: some builders persist an intermediate (LSH shingle
     # hashes, simhash signatures). Left cached, the CacheManager silently
     # substitutes it into LATER queries' plans, flattering their numbers
-    # (r2: simhash benched 7.3s vs 153s standalone). Clearing between
+    # (simhash once benched 7.3s vs 153s standalone). Clearing between
     # queries makes each number reproduce standalone.
     from mapreduce_hadoop_spark.session import unpersist_intermediates
 
@@ -186,13 +177,12 @@ def main() -> None:
             best = min(best, time.time() - t0)
         timings[name] = round(best, 3)
 
-    # The reference's Exercise-2 lifecycle as ONE bench line (VERDICT r12
-    # order 8): cleanse -> sessionize -> airport filter computed once and
-    # CACHED, then all three reference outputs (airport trips, daily
-    # revenue, grand total) materialized off the shared DAG — the direct
-    # engine analogue of the reference's 230 s EP2+EP3 number
-    # (src/AirportTripsRevenue.java: job 1 + job 2 + driver total), minus
-    # the two HDFS round-trips between them.
+    # The reference's Exercise-2 lifecycle as ONE bench line: cleanse ->
+    # sessionize -> airport filter computed once and CACHED, then all three
+    # reference outputs (airport trips, daily revenue, grand total)
+    # materialized off the shared DAG — the direct engine analogue of the
+    # reference's 230 s EP2+EP3 number (src/AirportTripsRevenue.java: job 1
+    # + job 2 + driver total), minus the two HDFS round-trips between them.
     best = float("inf")
     for _ in range(2):
         spark.catalog.clearCache()
@@ -213,16 +203,14 @@ def main() -> None:
         # shuffle -> agg; touches no repo operator and no data file), so
         # BENCH files self-normalize across VM-drift days: if this key
         # moves between rounds, the SHARED VM moved — divide it out
-        # before reading per-query deltas (VERDICT r13 order 3).
+        # before reading per-query deltas.
         "calibration_sec": calibration,
         "calibration_shuffle_sec": calibration_shuffle,
-        # The normalization APPLIED (VERDICT r14 wrong item 1 / order 5):
-        # the total rescaled to the reference machine speed
-        # (CALIBRATION_REF anchors to the r14 committed sf0.1 run), so
-        # committed BENCH files compare directly without reader-side
-        # arithmetic. The r14 sf1 afternoon scattered -18% same-tree in
-        # twenty minutes; this key is what makes that visible in the
-        # artifact itself.
+        # The normalization APPLIED: the total rescaled to the reference
+        # machine speed (CALIBRATION_REF), so committed BENCH files
+        # compare directly without reader-side arithmetic. Same-tree sf1
+        # runs have scattered -18% in twenty minutes; this key is what
+        # makes that visible in the artifact itself.
         "value_calibrated": round(total * CALIBRATION_REF / calibration, 3),
         "unit": "sec",
         "reference_relational_sec": round(
@@ -239,7 +227,7 @@ def main() -> None:
     line = json.dumps(payload)
     if len(line) > MAX_METRIC_LINE:
         # Truncate ONLY the note until the line fits — data never yields
-        # to prose again (the r10 parsed:null lesson).
+        # to prose.
         overshoot = len(line) - MAX_METRIC_LINE
         note = payload["note"]
         payload["note"] = note[: max(0, len(note) - overshoot - 16)] + "...[capped]"
@@ -248,10 +236,10 @@ def main() -> None:
     print(line)
 
 
-# The calibration anchor: the committed BENCH_r14.json sf0.1 run's
-# calibration_sec. value_calibrated = value * CALIBRATION_REF /
-# calibration_sec expresses every committed total in "r14 reference
-# machine seconds", so cross-round deltas read code, not VM.
+# The calibration anchor: the calibration_sec of the sf0.1 run in
+# 48705ef:BENCH_r14.json. value_calibrated = value * CALIBRATION_REF /
+# calibration_sec expresses every total in that machine's seconds, so
+# cross-round deltas read code, not VM.
 CALIBRATION_REF = 1.911
 
 
@@ -278,16 +266,15 @@ def _calibration_bench(spark) -> float:
 
 
 def _calibration_shuffle_bench(spark) -> float:
-    """Shuffle-bound twin of _calibration_bench (VERDICT r15 order 6,
-    min-of-2): 2x10^7 rows carrying a 48-byte deterministic payload
-    through ONE full exchange (hash repartition), then a post-exchange
-    fold. Exchange serialization + transfer dominates; codegen CPU is
-    negligible. The two probes bound the machine band's two axes —
-    calibration workloads scale differently with machine state than
-    query workloads (the committed-vs-driver r15 discrepancy), so a
-    cross-round reader compares BOTH ratios: if they disagree, the
-    drift is state-shaped and per-query deltas need a same-day
-    two-tree control; if they agree, dividing either out is sound."""
+    """Shuffle-bound twin of _calibration_bench (min-of-2): 2x10^7 rows
+    carrying a 48-byte deterministic payload through ONE full exchange (hash
+    repartition), then a post-exchange fold. Exchange serialization +
+    transfer dominates; codegen CPU is negligible. The two probes bound the
+    machine band's two axes — calibration workloads scale differently with
+    machine state than query workloads, so a cross-round reader compares
+    BOTH ratios: if they disagree, the drift is state-shaped and per-query
+    deltas need a same-day two-tree control; if they agree, dividing either
+    out is sound."""
     from pyspark.sql import functions as F
 
     best = float("inf")
@@ -372,13 +359,12 @@ def _stream_timeout_bench(spark, sf_dir: str) -> dict:
             with open(marker, "w") as f:
                 f.write(src_mtime)
 
-        # Min-of-2 like every batch number (VERDICT r13 order 8: the
-        # single-shot stream timing swung +-34% on flat sf1 twins — VM
-        # noise, not code). Each run replays the full staged file
-        # sequence from scratch. Per-run (sec, finished, progress)
-        # tracking (ADVICE r14): the timing min is taken over FINISHED
-        # runs only and the batch/state counts come from the same run
-        # that produced it — a run-2 timeout can no longer discard a
+        # Min-of-2 like every batch number (the single-shot stream timing
+        # swung +-34% on flat sf1 twins — VM noise, not code). Each run
+        # replays the full staged file sequence from scratch. Per-run (sec,
+        # finished, progress) tracking: the timing min is taken over
+        # FINISHED runs only and the batch/state counts come from the same
+        # run that produced it — a run-2 timeout can no longer discard a
         # valid run-1 measurement or mix counts across runs.
         runs: "list[tuple[float, list]]" = []
         for _ in range(2):

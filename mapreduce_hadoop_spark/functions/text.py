@@ -48,7 +48,7 @@ def _shingle_strings(toks: Column, n: Column, k: int) -> Column:
 
 # Shingle width, shared by shingles()/shingles_sql() AND by any prefilter
 # that restates their emptiness guard on the raw token count
-# (dedup._doc_shingles' `size(tokens) >= SHINGLE_K` — ADVICE r18: a
+# (dedup._doc_shingles' `size(tokens) >= SHINGLE_K` — a
 # hardcoded 3 there would silently desync if this width ever moved).
 SHINGLE_K = 3
 

@@ -137,7 +137,7 @@ def _fingerprint(sf_dir: str) -> str:
 
     Memoized by (path, footer-source, size, mtime_ns): the 64 KiB read +
     sha256 runs once per stat-identical snapshot per session instead of
-    several times per query build (ADVICE r12); any size/mtime change
+    several times per query build; any size/mtime change
     self-invalidates the memo.
 
     Remote/unlistable corpus (``os.stat`` fails): the key gets a
@@ -158,7 +158,7 @@ def _fingerprint(sf_dir: str) -> str:
                 raise OSError(f"no parquet members under {path}")
             src = max(members, key=lambda p: (os.path.getsize(p), p))
         st = os.stat(src)
-        # File-shaped sources keep the exact pre-r13 key string (src ==
+        # File-shaped sources keep the exact bare-path key string (src ==
         # path contributes nothing new), so existing artifacts stay valid.
         ident = path if src == path else f"{path}|{src}"
         memo_key = (ident, st.st_size, st.st_mtime_ns)
@@ -235,9 +235,9 @@ def model_corpus_count(emb: DataFrame, sf_dir: str) -> int:
         # meta.json) cannot resolve the frozen geometry: k then derives
         # from the LIVE count, every frozen-artifact name misses, and the
         # "append" silently pays a full retrain + re-encode — the exact
-        # cost the lineage exists to avoid. Warn instead of raising
-        # (ADVICE r12): the fallback is CORRECT, just expensive, and the
-        # fix is one-time (index the base once).
+        # cost the lineage exists to avoid. Warn instead of raising:
+        # the fallback is CORRECT, just expensive, and the fix is
+        # one-time (index the base once).
         import warnings
 
         warnings.warn(
@@ -450,9 +450,9 @@ def _write_committed(df: DataFrame, path: str) -> None:
     """Stage a Spark parquet build per-pid and rename into place only
     after it committed (_SUCCESS) — shared by full and delta artifacts.
 
-    Swap protocol (ADVICE r12 hardened the old rmtree+replace, whose
-    window let a racing session recreate the destination mid-swap and
-    fail ``os.replace`` with ENOTEMPTY, or rmtree a just-committed build):
+    Swap protocol (a plain rmtree+replace leaves a window in which a
+    racing session recreates the destination mid-swap and fails
+    ``os.replace`` with ENOTEMPTY, or rmtrees a just-committed build):
 
     1. stage into ``<path>.tmp.<pid>`` (per-pid: concurrent builders
        never touch each other's staging dir);

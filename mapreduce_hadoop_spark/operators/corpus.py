@@ -227,9 +227,8 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 6-dp cosine rounding in similarity.py).
 
     100 TB shape: the weight is computed IN the scan (it used to arrive
-    through a doc_id self-join of the same table — removed round 18,
-    guide §2.4; values bit-identical via the shared
-    ``textops.quality_exprs``) and the global top-K plans as
+    through a doc_id self-join of the same table; values bit-identical
+    via the shared ``textops.quality_exprs``) and the global top-K plans as
     TakeOrderedAndProject — per-partition heaps of K rows, then a
     K-row merge on the driver side of the exchange; no global sort, no
     single-partition window. K is model-sample-sized, not data-sized.
@@ -289,9 +288,9 @@ def corpus_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived artifact (a doc can never drift from test into train between
     pipeline versions). Map-only assignment plus one partial-aggregated
     shuffle on (source, split); output is |sources| x 3 rows. The token
-    count is computed IN the scan (was a doc_id self-join of the same
-    table — removed round 18, guide §2.4; values bit-identical via the
-    shared ``textops.quality_exprs``).
+    count is computed IN the scan (no doc_id self-join of the same
+    table; values bit-identical via the shared
+    ``textops.quality_exprs``).
     """
     from mapreduce_hadoop_spark.operators.textops import quality_exprs
 
@@ -353,9 +352,8 @@ def corpus_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     which at 100 TB is bounded by the largest single domain (the same
     partition the rate twin also has to scan) — not by corpus size.
     Deterministic tie-break on doc_id. The quality weight is computed IN
-    the scan (was a doc_id self-join of the same table — removed round
-    18, guide §2.4; values bit-identical via the shared
-    ``textops.quality_exprs``).
+    the scan (no doc_id self-join of the same table; values
+    bit-identical via the shared ``textops.quality_exprs``).
     """
     from mapreduce_hadoop_spark.operators.textops import quality_exprs
 

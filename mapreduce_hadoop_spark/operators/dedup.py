@@ -60,11 +60,11 @@ NUM_PERMS = 16
 BANDS = 8
 ROWS_PER_BAND = 2
 JACCARD_THRESHOLD = 0.5
-# Round 10: 60-bit simhash (the full md5_long hash, not the 31-bit
+# 60-bit simhash (the full md5_long hash, not the 31-bit
 # mod-P minhash domain) in 4 x 15-bit blocks with 1-bit-flip probe
 # enumeration — multi-index Hamming search. The 32-bit/4x8 scheme
 # saturated at scale: 2^8 block values over 500k docs put ~2k docs in
-# every bucket (173 s at sf10, candidate-bound — README round-8 lever 2),
+# every bucket (173 s at sf10, candidate-bound),
 # and block-EQUALITY join was only pigeonhole-complete for hamming <= 3
 # despite filtering at <= 6. Now each side's blocks join against the
 # probe side's <=1-bit-flip neighborhood, which by pigeonhole is
@@ -282,7 +282,7 @@ def _doc_shingles(
     if nonempty:
         # T.SHINGLE_K, not a literal: the prefilter must restate
         # shingles()'s own n >= k guard, and a hardcoded width would
-        # silently desync if the shared default ever moved (ADVICE r18).
+        # silently desync if the shared default ever moved.
         docs = docs.filter(F.size(T.tokens("text")) >= T.SHINGLE_K)
     return docs.select("doc_id", T.shingles("text").alias("sh"))
 
@@ -574,7 +574,7 @@ def _simhash_from_hs(hs: DataFrame) -> DataFrame:
 
 
 def _simhash_from_hs_jvm(hs_rel: DataFrame) -> DataFrame:
-    """The pre-r13 JVM array-accumulator formulation — kept UNREGISTERED
+    """The JVM array-accumulator formulation — kept UNREGISTERED
     as the parity reference for the Arrow rewrite above."""
     hs = hs_rel.filter(F.size("hs") > 0)
     n = F.size("hs")
@@ -619,7 +619,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     joining its <=1-bit-flip block neighborhood (16 probes/block) against
     the exact side. Pigeonhole: 7 errors over 4 blocks leave some block
     with <= 1, so the search is COMPLETE at the stated threshold — unlike
-    the round-4..9 equality-join scheme, which filtered at hamming <= 6
+    a block-equality join scheme, which filtered at hamming <= 6
     but could only guarantee pairs up to hamming 3.
 
     The signature relation is persisted before the self-join: without it,

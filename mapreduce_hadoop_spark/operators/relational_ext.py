@@ -285,7 +285,7 @@ def purchase_asof_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing the latest eligible timestamp — resolve to the MAX view_id;
     an as-of without a pinned tie rule is nondeterministic exactly when
     the data gets interesting (the sf1-skew gate caught DuckDB's native
-    ASOF picking an arbitrary tied row, GATE_sf1skew_r4.log).
+    ASOF picking an arbitrary tied row, 48705ef:GATE_sf1skew_r4.log).
 
     Scalable formulation: union the two streams tagged, one window pass per
     key carries the last-seen view forward (``last(..., ignorenulls)``
@@ -501,7 +501,7 @@ def segment_customer_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION / INTERSECT / EXCEPT over customer key sets of two segments
     (per-nation membership sets), emitted as one labeled relation.
 
-    Evaluated as ONE membership aggregate (round 18, guide §2.4): the
+    Evaluated as ONE membership aggregate: the
     set-operator formulation planned SIX c_nationkey exchanges over THREE
     scans of customer (each branch re-distincted its inputs; Catalyst
     reuses none of them because every branch filter differs). Grouping

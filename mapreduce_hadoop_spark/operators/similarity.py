@@ -16,7 +16,7 @@ between the builders is only how the candidate pairs are produced:
   the oracle) with ENTROPY-AWARE bit width — ``measured_sign_bits``
   picks the width from the corpus's measured sign-pattern collision
   mass (count-based ``auto_sign_bits`` as the floor) so candidate
-  volume stays linear even on low-entropy corpora (SCALE_sf10_r7.md).
+  volume stays linear even on low-entropy corpora (48705ef:SCALE_sf10_r7.md).
   Recall is 1-(1-p^bits)^bands (measured at sf0.01: topk 0.86 at 12
   bands, near-dup pair recall 0.82 at 8 bands). (band, bucket) is the
   shuffle/join key; neither the band count nor the bit width changes
@@ -85,8 +85,8 @@ def _div_by(vec: "Column | str", scalar: "Column | str") -> Column:
     a projected scalar (e.g. the O(d)-fold ``norm`` column) INTO the
     per-element lambda, re-evaluating the fold for EVERY element —
     O(d^2) interpreted ops per row, measured as 9.4 s of
-    topk_pq_trained's 13.2 s sf1 wall (round 11 misattributed this to
-    scheduler stage latency). Binding the scalar as the element of a
+    topk_pq_trained's 13.2 s sf1 wall (not scheduler stage latency, as
+    it first looked). Binding the scalar as the element of a
     1-element outer transform turns it into a lambda VARIABLE, which the
     inner lambda references for free. The arithmetic (and therefore every
     output bit) is unchanged; only the evaluation count drops."""
@@ -197,7 +197,7 @@ def near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs near-duplicates: cosine >= 0.4, vec_a < vec_b.
 
     Exact O(n^2) COMPUTE is the semantics (``near_dup_cosine_lsh`` is the
-    approximate scale path) — but the round-12 shape, a
+    approximate scale path) — but a
     BroadcastNestedLoopJoin evaluating a 64-term ``aggregate`` fold per
     pair in the JVM expression interpreter, pays that n^2 at
     interpreted-expression speed and broadcasts one whole side.  This
@@ -206,8 +206,7 @@ def near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``applyInPandas`` group, and each group evaluates its dense tile as a
     numpy outer-product ACCUMULATE whose summation order is the exact
     left fold of ``_dot`` / the DuckDB oracle's ``list_reduce`` — so
-    every output bit (hash-pinned vs the r12 BNLJ plan at three gate
-    scales, and vs ``near_dup_cosine_bnlj`` in
+    every output bit (pinned vs ``near_dup_cosine_bnlj`` in
     tests/test_similarity_ivf.py) is unchanged while the arithmetic runs
     vectorized.
 
@@ -231,7 +230,7 @@ def near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pmod, not %: Spark's % is sign-preserving, so a NEGATIVE vec_id
     # would land in a (neg, k) group that no bid==k row joins and its
     # cross-block pairs would silently vanish — violating the exact
-    # all-pairs contract (ADVICE r13). Every current corpus has
+    # all-pairs contract. Every current corpus has
     # non-negative ids (pmod == % there, output bits unchanged — rule-1a
     # pinned), but exactness must not ride an undocumented id-sign
     # assumption.
@@ -322,11 +321,10 @@ def near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def near_dup_cosine_bnlj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r13 BroadcastNestedLoopJoin formulation of
-    ``near_dup_cosine`` — kept UNREGISTERED as the JVM-fold parity
-    reference: tests/test_similarity_ivf.py asserts the blocked plan's
-    output is row- and bit-identical to this one, which is the shape the
-    committed r12 gate hashes were produced by."""
+    """The BroadcastNestedLoopJoin formulation of ``near_dup_cosine``
+    — kept UNREGISTERED as the JVM-fold parity reference:
+    tests/test_similarity_ivf.py asserts the blocked plan's output is
+    row- and bit-identical to this one."""
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     a = emb.select(
         F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na")
@@ -352,8 +350,8 @@ WHERE round({DOT_SQL.format(a="a.v", b="b.v")} / (a.norm * b.norm), 6) >= {NEAR_
 
 
 # Banded signed-random-projection (SRP / Charikar) LSH with SCALE-ADAPTIVE
-# bit width. Round 6 measured the fixed-4-bit config's candidate ceiling
-# Theta(n^2 * bands / 2^bits) biting at sf10mut exactly as the formula
+# bit width. A fixed-4-bit config hit its candidate ceiling
+# Theta(n^2 * bands / 2^bits) at sf10mut exactly as the formula
 # predicts; the mitigation is bits growing with log2(n) so the expected
 # bucket size n/2^bits stays flat (~EMB_LSH_TARGET_BUCKET) and candidate
 # volume stays LINEAR: ~bands * TARGET * n / 2 pairs regardless of corpus
@@ -373,9 +371,9 @@ WHERE round({DOT_SQL.format(a="a.v", b="b.v")} / (a.norm * b.norm), 6) >= {NEAR_
 # like 1/p^bits, i.e. exponentially). For moderate-threshold mining at
 # scale, raise ``bands`` (cost is linear in bands) or use the IVF route.
 #
-# Round 8: bit selection is ENTROPY-AWARE (``measured_sign_bits``). The
-# round-7 probe showed the count-based formula under-provisions when the
-# corpus's sign-pattern entropy is below ``bits`` bits (correlated
+# Bit selection is ENTROPY-AWARE (``measured_sign_bits``). The
+# count-based formula under-provisions when the corpus's sign-pattern
+# entropy is below ``bits`` bits (correlated
 # embeddings -> collision mass ~1.7x the uniform 2^-bits model; p99
 # bucket 166 vs 49 expected at sf10mut), leaving candidate volume
 # ~n^1.17 instead of flat. The fix measures the collision mass directly:
@@ -423,7 +421,7 @@ EMB_LSH_SAMPLE_TARGET = 1 << 16
 # pathological skew; it is relative (not a fixed count) because bucket size
 # may legitimately approach n/2 on tiny corpora at MIN_BITS.
 EMB_BUCKET_CAP_MIN = 200
-# In-row pair-generation bound (round 19): buckets up to this size emit
+# In-row pair-generation bound: buckets up to this size emit
 # their candidate pairs from ONE collected row (the minhash bucket
 # pattern — worst case CHUNK*(CHUNK-1)/2 id pairs ~ 0.5 MB in-row);
 # larger surviving buckets (legal up to the n/2 cap above, reachable
@@ -470,7 +468,7 @@ def measured_sign_bits(emb: DataFrame) -> int:
 
     ``auto_sign_bits`` assumes uniform buckets (collision mass 2^-bits);
     real embedding corpora have sign-pattern entropy below ``bits`` bits,
-    so buckets are heavier than the count predicts (round-7 probe: ~1.7x
+    so buckets are heavier than the count predicts (measured ~1.7x
     at sf10mut) and candidate volume creeps super-linear. This probe
     measures the mass instead of modeling it:
 
@@ -585,7 +583,7 @@ def srp_signs(bands: int, bits: int) -> list[list[list[float]]]:
 
 def axis_signs(bands: int, bits: int, dim: int = EMB_DIM) -> list[list[list[float]]]:
     """Axis-aligned hyperplanes (bit i of band j = sign of dim j*bits+i) —
-    the pre-round-7 family, kept for engineered-fixture tests that need to
+    kept for engineered-fixture tests that need to
     place vectors in specific buckets by construction."""
     return [
         [
@@ -627,17 +625,17 @@ def near_dup_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     width (``measured_sign_bits``: bits chosen from the measured mass,
     count-based growth as the floor) pins that at ~TARGET_BUCKET * n —
     LINEAR in the corpus even when sign-pattern entropy is below the bit
-    width (the round-7 probe's residual ~n^1.17 creep). Recall at cosine
+    width (a count-based width left a residual ~n^1.17 creep). Recall at cosine
     c is 1-(1-p^bits)^bands with p = 1 - arccos(c)/pi; see the constants
     block for the scale/recall contract. No false positives by
     construction (candidates still pass the exact threshold).
 
     Recall trade at scale (documented, measured): adaptive bits keep
     candidates linear and leave HIGH-similarity output unchanged (sf1
-    pair set byte-identical under the round-7 widening), but
+    pair set byte-identical under the adaptive widening), but
     moderate-cosine pair count necessarily drops as the corpus grows —
     measured 159,100 -> 102,600 pairs at sf1 when bits grew 4 -> 11
-    (SCALE_sf10_r7.md). Recovery routes for moderate-threshold mining:
+    (48705ef:SCALE_sf10_r7.md). Recovery routes for moderate-threshold mining:
     raise ``NEAR_DUP_BANDS`` (cost linear in bands) or use the IVF family.
     """
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
@@ -664,22 +662,19 @@ def near_dup_lsh_from(
     (band, bucket) entry can be neither the first match nor any match
     (NULL = NULL is NULL, never true).
 
-    Round 19 (VERDICT r18 order 1 — output bit-identical): candidate
-    generation is DE-PAYLOADED. The pre-r19 form self-joined the band
-    relation with ``v[64] + norm`` riding on BOTH sides (~600 B/row x
-    corpus x bands x 2 — the last corpus-payload-carrying shuffle in the
-    engine); candidates are now id-only. Healthy buckets (size <=
+    Candidate generation is DE-PAYLOADED: candidates are id-only, so no
+    self-join carries ``v[64] + norm`` on both sides (~600 B/row x
+    corpus x bands x 2). Healthy buckets (size <=
     EMB_BUCKET_CHUNK) emit their pairs IN-ROW from one
-    ``groupBy(band, bucket)`` collect — the r18 minhash bucket pattern,
+    ``groupBy(band, bucket)`` collect — the minhash bucket pattern,
     one exchange of (vec_id, mb) rows; buckets between CHUNK and the
-    n/2 cap (pathological skew only; zero at every gate scale) keep the
-    old streaming self-join shape, ids-only. Both routes apply the same
+    n/2 cap (pathological skew only; zero at every gate scale) stream
+    through an ids-only self-join. Both routes apply the same
     first-match test, and a (band, bucket) group takes exactly one
-    route, so each surviving pair is emitted exactly once — the same
-    set the payload-carrying join produced. Vectors re-attach to the
-    surviving id pairs through the minhash-style pair joins for the
-    exact-cosine verify: the only exchanges that now move v[64] are the
-    two corpus-keyed re-attach exchanges (ReusedExchange-able, and
+    route, so each surviving pair is emitted exactly once. Vectors
+    re-attach to the surviving id pairs through the minhash-style pair
+    joins for the exact-cosine verify: the only exchanges that move
+    v[64] are the two corpus-keyed re-attach exchanges (ReusedExchange-able, and
     candidate-pair-sized on the pair side), not corpus x bands x 2.
     """
     if signs is None:
@@ -1255,7 +1250,7 @@ def _closeness_sql(
 # corpora — mutated queries widen to mean 104/141 lists while organic
 # sf1 queries stay near the floor (mean 73) — and is the knee: eps=0.4
 # saturates every mutated query at ~K for no recall gain at equal
-# shortlist (0.76 vs 0.78 at sl=450). Full grid in SCALE_ann_r13.md.
+# shortlist (0.76 vs 0.78 at sl=450). Full grid in 48705ef:SCALE_ann_r13.md.
 IVFPQ_PROBE_EPS = 0.3
 # The oracle-checked twin's floor sits below the fixed nprobe=8 so the
 # rule — not the floor — decides most widths.
@@ -1336,21 +1331,21 @@ WITH e AS ({EMB_NORM_SQL}),
 # files into its nearest list AND any list whose centroid is eps-close
 # to the nearest — boundary vectors appear in every list they straddle,
 # so a query probing either side finds them. Shipped criterion, stated
-# precisely (ADVICE r11): a COSINE-GAP bound,
+# precisely: a COSINE-GAP bound,
 #   (1 - cos_i) <= (1 + eps)^2 * (1 - cos_1),
 # where cos is taken against the UNNORMALIZED k-means centroids — the
 # ||x-c||^2 = 2 - 2cos identity behind the paper's L2 rule holds only
 # for normalized centroids, so this is an angular approximation of
 # SPANN's distance rule, internally consistent with the cosine-based
 # list assignment and swept empirically below (and instrumented in
-# SCALE_ann_r12.md §3).
+# 48705ef:SCALE_ann_r12.md §3).
 # eps sweep (K=16 trained, nprobe=8, vs topk_ivf_trained's 0.80 at
 # sf0.01 / 0.88 at sf0.1) — recall @ replication factor:
 #   eps=0.05: 0.88 @ 1.55x / 0.92 @ 1.71x
 #   eps=0.10: 0.98 @ 2.31x / 0.94 @ 2.79x   <- shipped (the knee)
 #   eps=0.15: 1.00 @ 2.97x / 0.96 @ 3.46x
 #   eps=0.25: 1.00 @ 3.66x / 0.98 @ 3.91x (RMAX-saturated)
-# Full table in SCALE_ann_r11.md §6. SPANN_RMAX bounds worst-case
+# Full table in 48705ef:SCALE_ann_r11.md §6. SPANN_RMAX bounds worst-case
 # fan-out so a vector equidistant from many centroids cannot blow the
 # index up; at larger K the factor falls (boundary shells shrink
 # relative to cell volume).
@@ -1439,7 +1434,7 @@ def topk_ivf_spann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the failure mode of IVF pruning — the true neighbor sitting just
     across a Voronoi boundary the query didn't probe — disappears for
     eps-close boundaries. Measured at sf0.01/K=16/nprobe=8 vs
-    ``topk_ivf_trained``: see SCALE_ann_r11.md §6 (recall and the
+    ``topk_ivf_trained``: see 48705ef:SCALE_ann_r11.md §6 (recall and the
     replication factor — the honest cost — are both recorded).
 
     Plan shape: assignment is one Arrow matmul pass emitting a
@@ -1670,8 +1665,8 @@ def _pq_shortlist(n: int) -> int:
 
 # Embedding-corpus row count: persisted with the ANN index artifacts
 # (ann_index.corpus_count), so a warm session derives scale-adaptive
-# parameters (shortlist depth, K) with ZERO Spark jobs — the round-10
-# per-session count() job is now a cold-corpus-only cost.
+# parameters (shortlist depth, K) with ZERO Spark jobs — a per-session
+# count() job is a cold-corpus-only cost.
 def _emb_count(emb: DataFrame, sf_dir: str) -> int:
     from mapreduce_hadoop_spark.operators import ann_index
 
@@ -2128,11 +2123,12 @@ PQ_TRAINED_SUB = EMB_DIM // PQ_TRAINED_M
 # vs the sign-orthant n/10. The difference is the whole point: one-step
 # sign-orthant books have CONSTANT ADC distortion (a property of the
 # scheme, not the data), so the true neighbor's expected ADC rank grows
-# linearly in n and recall needs shortlist ~ n/10 (the honest round-10
+# linearly in n and recall needs shortlist ~ n/10 (the sign-orthant
 # stopgap). Lloyd-trained cells shrink as data fills them (distortion
 # ~ n^{-2/d} per cell in the fixed-K regime), so the neighbor's ADC rank
 # stays near the top and a near-constant re-rank suffices — measured in
-# SCALE_ann_r11.md; recall floors pinned in tests/test_similarity_pq.py.
+# 48705ef:SCALE_ann_r11.md; recall floors pinned in
+# tests/test_similarity_pq.py.
 PQ_TRAINED_SHORTLIST_DIV = 100
 
 # Residual IVF-PQ re-ranks 2x deeper (still near-constant): residual ADC
@@ -2157,7 +2153,7 @@ PQ_TRAINED_IVF_SHORTLIST_MIN = 100
 # re-rank deeper than the stopgap it replaced.
 
 
-# Per-query adaptive shortlist (VERDICT r13 order 4): the flat trained
+# Per-query adaptive shortlist: the flat trained
 # path widens a query's exact-re-rank shortlist by PQ_ADAPT_WIDEN iff
 # the ADC gap covered between rank TOP_K and rank `shortlist` is less
 # than PQ_ADAPT_COVER of the gap to the corpus BULK (the mean ADC of a
@@ -2168,11 +2164,10 @@ PQ_TRAINED_IVF_SHORTLIST_MIN = 100
 # buried among near-equal ADC values (quantization noise >= local gaps)
 # and the re-rank needs more candidates; when the boundary has traveled
 # well toward the bulk, the top ranks are already separated and the
-# floor suffices. Calibration: round 14 measured five corpora with a
-# clean gap (losses <= 0.333, lossless >= 0.367) and set 0.35 in it;
-# round 15 MEASURED the gap itself (SCALE_ann_r15.md §3 —
-# intermediate mutation factors 20/30/50, n=40k/60k/100k, VERDICT r14
-# order 6) and found it is not clean: 1-2-neighbor losses occur up to
+# floor suffices. Calibration: five corpora first showed a clean gap
+# (losses <= 0.333, lossless >= 0.367); measuring the gap itself
+# (48705ef:SCALE_ann_r15.md §3 — intermediate mutation factors 20/30/50,
+# n=40k/60k/100k) found it is not clean: 1-2-neighbor losses occur up to
 # covered = 0.372, and 4x widening RECOVERS every one of them
 # (recall_widened 1.0 at 0.354/0.358/0.359/0.372), while the measured
 # no-benefit cluster starts at 0.386 (the n=200k case whose 0.96 stays
@@ -2188,8 +2183,8 @@ PQ_TRAINED_IVF_SHORTLIST_MIN = 100
 # the signal spends re-rank budget only where recall is lost:
 # per-query arithmetic over the already-shuffled ranked relation,
 # request-sized extra join rows, zero new distributed passes.
-# Round 17 (VERDICT r16 order 3): 4 -> 8. The second corpus family
-# (SCALE_ann_r17.md §2 — seeded Gaussian mixtures, cluster
+# The widen is 8x, not 4x: the second corpus family
+# (48705ef:SCALE_ann_r17.md §2 — seeded Gaussian mixtures, cluster
 # count/overlap as the axes instead of the replica recipe) produced the
 # first measured ordinary fire 4x does NOT recover: covered = 0.369
 # (c4_wide, 4 broad clusters) reads recall 0.8 at 4x and 1.0 at 8x.
@@ -2199,14 +2194,14 @@ PQ_TRAINED_IVF_SHORTLIST_MIN = 100
 # 8 x a near-constant shortlist through the same window exchange), and
 # the change is output-neutral on every organic gate corpus (fires
 # there are lossless at 4x, so the wider re-rank keeps an already-true
-# top-k — verified hash-identical at all five scales against the
-# committed r16 logs before landing, tools/dial_escalation_check.py).
+# top-k — verified hash-identical at all five gate scales by
+# 48705ef:tools/dial_escalation_check.py).
 PQ_ADAPT_WIDEN = 8
 PQ_ADAPT_COVER = 0.38
-# ESCALATING widen (round 16, VERDICT r15 order 2): the widen factor
+# ESCALATING widen: the widen factor
 # keys to the covered magnitude — a deeper-buried query (smaller
 # covered gap) gets a bigger exact-re-rank superset. Calibration is the
-# committed f20 per-query table (SCALE_ann_r15.md §3/§7): every
+# f20 per-query table (48705ef:SCALE_ann_r15.md §3/§7): every
 # measured lossy query with covered >= 0.354 fully recovers at 4x,
 # while the one below (f20's covered = 0.333) reads 0.8 at 4x AND 8x
 # and needs 16x (6400 of 40k candidates — 16% of that corpus for that
@@ -2216,9 +2211,9 @@ PQ_ADAPT_COVER = 0.38
 # but a lossless superset keeps an already-true top-k, so over-widening
 # costs request-sized wall, never output. Same neutrality argument for
 # the organic gate corpora: sf0.1 fires read recall 1.0 at 4x
-# (SCALE_ann_r14.md), so any deep fire there re-ranks a superset of an
+# (48705ef:SCALE_ann_r14.md), so any deep fire there re-ranks a superset of an
 # already-complete top-k — verified hash-identical at every gate scale
-# before the change landed (tools/dial_escalation_check.py, r16).
+# by 48705ef:tools/dial_escalation_check.py.
 PQ_ADAPT_WIDEN_DEEP = 16
 PQ_ADAPT_DEEP_COVER = 0.34
 
@@ -2404,7 +2399,7 @@ def _probe_lists_adaptive(
     eps bound — it keeps the floor), a boundary query sits between
     near-equidistant lists (many pass — it widens its own probe set).
     Recall is bought exactly where it is lost. Measured in
-    SCALE_ann_r13.md; ties break by cent_id (``_gap_order``), and the
+    48705ef:SCALE_ann_r13.md; ties break by cent_id (``_gap_order``), and the
     rule is hash-verified through its window twin ``topk_ivf_adaptive``.
 
     Driver-side only (runs over the request-sized query matrix against
@@ -2478,7 +2473,7 @@ def topk_pq_trained(
       (max(50, n/100), ``_pq_trained_shortlist``) instead of the
       sign-orthant stopgap's n/10 — the re-rank no longer reads ~10% of
       the corpus, which is what un-caps PQ's scan savings at scale
-      (measured against brute force in SCALE_ann_r11.md; recall floor
+      (measured against brute force in 48705ef:SCALE_ann_r11.md; recall floor
       pinned in tests/test_similarity_pq.py).
 
     Encoding is an Arrow-batched matmul-argmin UDF (``_pq_encode_udf``,
@@ -2575,9 +2570,7 @@ def _derive_append_demo(
     rewrites history below the watermark. ``tag`` namespaces the two
     demos' roots (``append_demo`` / ``append_demo_fixed``) so their
     artifacts can never interfere. Shared by ``ann_append_serving`` and
-    ``ann_append_serving_fixed`` since round 15 (VERDICT r14 wrong item
-    3 — the blocks were duplicated line for line while the kmeans twin's
-    bytes were frozen for a rule-1a pin)."""
+    ``ann_append_serving_fixed``."""
     import json
 
     from mapreduce_hadoop_spark.operators import ann_index
@@ -2607,8 +2600,8 @@ def _derive_append_demo(
 def ann_append_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flat trained-PQ top-k served through a DECLARED APPEND LINEAGE,
     end to end — the driver-visible face of the incremental-add contract
-    (VERDICT r12 order 2; the FAISS ``train`` once / ``add`` forever
-    split, ``ann_index._base_info``).
+    (the FAISS ``train`` once / ``add`` forever split,
+    ``ann_index._base_info``).
 
     From the gate corpus the query derives ONCE (cached under the index
     root, keyed by the source corpus' fingerprint) an append-lineage
@@ -2636,11 +2629,10 @@ def ann_append_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     searchability and frozen-model contracts are pinned in
     tests/test_ann_index.py and tests/test_similarity_pq.py.
 
-    Round 15: serves at the DEFAULT (per-query adaptive) shortlist —
-    the r14 ``adaptive=False`` pin expired at this round's head
-    rotation as planned, so an appended-corpus user now gets the same
-    covered-gap recall recovery as the primary flat path (the histogram
-    behind the bulk estimate is lineage-keyed, see _codes_histogram).
+    Serves at the DEFAULT (per-query adaptive) shortlist, so an
+    appended-corpus user gets the same covered-gap recall recovery as
+    the primary flat path (the histogram behind the bulk estimate is
+    lineage-keyed, see _codes_histogram).
     """
     base_dir, full_dir = _derive_append_demo(spark, sf_dir, "append_demo")
     # Index the base snapshot (train + add persist eagerly during plan
@@ -2720,7 +2712,7 @@ def topk_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     loads (books, codes, base+delta union, frozen-base resolution) is a
     pure function of the corpus, so the FULL incremental-append
     machinery becomes SQL-expressible and driver-hash-verifiable, where
-    the k-means twins can only rows-check (VERDICT r13 order 1).
+    the k-means twins can only rows-check.
 
     Append lineage (``ann_base.json``): the model corpus is the BASE
     snapshot (rows below the watermark) — resolved from the base's
@@ -2788,13 +2780,12 @@ def ann_append_serving_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     union — but under the deterministic sign-orthant books of
     ``topk_pq_fixed``, so DuckDB reproduces the entire path bit-for-bit
     (the ``topk_pq`` <-> ``topk_pq_trained`` twinning pattern applied to
-    the append contract; VERDICT r13 order 1). A wrong watermark cut, a
+    the append contract). A wrong watermark cut, a
     double-counted boundary vector, or a delta encoded against refit
     books would all hash-mismatch here, where the k-means twin's
     rows-only check is blind.
 
-    The derivation is the SHARED ``_derive_append_demo`` helper (round
-    15 fold — the r14 byte-freeze reason expired at rotation) under its
+    The derivation is the SHARED ``_derive_append_demo`` helper under its
     own ``append_demo_fixed`` root, so the two demos' artifacts can
     never interfere.
     """

@@ -109,17 +109,16 @@ LANGUAGE_ID_NGRAM_ORACLE = _language_id_ngram_oracle()
 
 
 def quality_exprs() -> "dict[str, Column]":
-    """THE quality-signal expressions over a ``text`` column, by output
-    name — one definition shared by ``quality_score`` and every consumer
-    that used to JOIN the quality relation back onto ``documents`` on
-    doc_id (corpus.py). Both sides of such a join are map-only
-    projections of the SAME scan, so the join was a pure self-join:
-    projecting these expressions directly onto the consumer's scan
-    computes identical values with one scan and zero join (guide-§2.4
-    shuffle removal; the r18 optimization round). Expression identity —
-    not just value identity — is what this helper pins: consumers inline
-    the exact Columns ``quality_score`` serves, so the driver-hashed
-    bytes cannot drift between the standalone query and the fused ones.
+    """THE quality-signal expressions over a ``text`` column, by output name —
+    one definition shared by ``quality_score`` and every consumer that used
+    to JOIN the quality relation back onto ``documents`` on doc_id
+    (corpus.py). Both sides of such a join are map-only projections of the
+    SAME scan, so the join was a pure self-join: projecting these
+    expressions directly onto the consumer's scan computes identical values
+    with one scan and zero join. Expression identity — not just value
+    identity — is what this helper pins: consumers inline the exact Columns
+    ``quality_score`` serves, so the driver-hashed bytes cannot drift
+    between the standalone query and the fused ones.
     """
     toks = T.tokens("text")
     n_tok = F.size(toks).cast("double")
@@ -243,16 +242,16 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines).
 
     tf = in-document term count; idf = ln((N+1)/(df+1)) + 1 (smoothed);
-    score rounded once at the edge. Plan shape at scale (round 18, guide
-    §2.4): one explode -> shuffle on (doc_id, term) with map-side partial
-    counts for tf, then df as ``count() OVER (PARTITION BY term)`` on
-    that SAME relation — the previous ``tf.join(dfreq, "term")``
-    re-planned the whole tokenize+tf subtree under the dfreq aggregate
-    (two full corpus explode passes, visible as two identical
-    hashpartitioning(doc_id, term) exchanges with no ReusedExchange) and
-    needed the vocabulary broadcast besides. The scalar N is broadcast;
-    top-k is a per-doc window over the scored relation — no driver-side
-    collects. Output identical: the window count per term IS df.
+    score rounded once at the edge. Plan shape at scale: one explode ->
+    shuffle on (doc_id, term) with map-side partial counts for tf, then df
+    as ``count() OVER (PARTITION BY term)`` on that SAME relation — the
+    previous ``tf.join(dfreq, "term")`` re-planned the whole tokenize+tf
+    subtree under the dfreq aggregate (two full corpus explode passes,
+    visible as two identical hashpartitioning(doc_id, term) exchanges with
+    no ReusedExchange) and needed the vocabulary broadcast besides. The
+    scalar N is broadcast; top-k is a per-doc window over the scored
+    relation — no driver-side collects. Output identical: the window count
+    per term IS df.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     terms = docs.select(

@@ -116,9 +116,8 @@ def parquet_scan_width(spark: SparkSession, path: str) -> "int | None":
     listing), in which case the caller must fall back to a width source
     that CAN see the files (``widen_to_cores`` uses
     ``df.rdd.getNumPartitions()``). Returning a fake "narrow" answer
-    here was the round-9 latent scale-killer: on a remote filesystem
-    every widen consumer would have round-robin-exchanged its full
-    input.
+    here would be a latent scale-killer: on a remote filesystem every
+    widen consumer would round-robin-exchange its full input.
 
     Two bounds, both needed:
     - byte-range splits, via Spark's own FilePartition arithmetic
@@ -126,10 +125,9 @@ def parquet_scan_width(spark: SparkSession, path: str) -> "int | None":
       total/minPartitionNum)); small files pack with openCost padding);
     - ROW GROUPS: a parquet row group is read entirely by the one split
       containing its midpoint, so non-empty splits never exceed total
-      row groups — the round-7 widen used `.rdd.getNumPartitions()`,
-      which reports byte splits and OVERSTATES width on few-row-group
-      files (measured: a 57 MB single-row-group file reports 14 splits,
-      13 of them empty).
+      row groups — `.rdd.getNumPartitions()` reports byte splits and
+      OVERSTATES width on few-row-group files (measured: a 57 MB
+      single-row-group file reports 14 splits, 13 of them empty).
 
     Footer reads are bounded: only taken when byte splits alone look
     wide (est >= cores) and there are < _FOOTER_READ_CAP files; past the

@@ -471,10 +471,9 @@ def test_fit_is_layout_independent(spark, sf_dir, index_dir, tmp_path):
     ``_train_sample``) makes every KMeans fit a pure
     function of LOGICAL corpus content. Same rows written in a shuffled
     physical order must yield bit-identical coarse centroids AND PQ
-    books — the property whose absence caused the round-13/14
-    cross-session hash shifts (k-means|| seeds by row position;
-    SCALE_ann_r15.md §1 records 1999/2000 book cells
-    moving without the canonicalization)."""
+    books — the property whose absence shifted hashes across sessions
+    (k-means|| seeds by row position; 48705ef:SCALE_ann_r15.md §1
+    records 1999/2000 book cells moving without the canonicalization)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq

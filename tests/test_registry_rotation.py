@@ -34,9 +34,7 @@ def _correctness_rounds() -> dict[int, str]:
 def test_head_window_size_and_total():
     names = _names()
     assert len(names) >= registry.DRIVER_WINDOW, len(names)
-    # Update alongside registering/retiring queries. Round 17: 92 - 1
-    # retirement + 1 new (similarity_topk_ivf_spann_fixed) = 92 — at the
-    # cap.
+    # Update alongside registering/retiring queries; 92 is the cap.
     assert len(names) == 92, len(names)
     # Size policy: past MAX_REGISTRY the 2-round rotation cadence cannot
     # cover every entry — adding a query then requires retiring one.
@@ -51,44 +49,27 @@ def test_head_window_size_and_total():
 
 
 # Rule 1a pins: {query: (gate_log_filename, pre_rewrite_hash)} where the
-# hash is read from the gate log as committed BEFORE the rewrite landed
-# (round 8: GATE_sf0.01_r7.log at commit c9dc989) and the filename is the
-# REGENERATED post-rewrite log whose SRCHASH must match the current tree.
-# Must cover exactly registry.REWRITTEN_HASH_IDENTICAL — and MUST be
-# updated in the SAME commit that edits that tuple (rounds 8 and 9 both
-# shipped a red handoff by moving only one side).
+# hash is the query's value hash as committed BEFORE its rewrite landed
+# (every one equals its row in 48705ef:GATE_sf0.01_r16.log, the last log
+# before any of these rewrites) and the filename is the REGENERATED
+# post-rewrite log whose SRCHASH must match the current tree. Must cover
+# exactly registry.REWRITTEN_HASH_IDENTICAL — and MUST be updated in the
+# SAME commit that edits that tuple, or the suite goes red.
 PINNED_REWRITE_HASHES: dict[str, tuple[str, str]] = {
-    # Round 17 pins (the lazy flat-codes re-layout's two consumers),
-    # carried forward through the round-18 optimization rewrites: the
-    # pre-rewrite hashes are still the committed GATE_sf0.01_r16.log /
-    # r17 rows; the post log is regenerated at the current operator tree.
-    "similarity_topk_ivfpq_fixed": ("GATE_sf0.01_r28.log", "6a1948aaeb5952e9"),
-    "similarity_topk_ivfpq_trained": ("GATE_sf0.01_r28.log", "301db5bb25ca2186"),
-    # Round 18 (optimization round): tail queries whose PLANS were
-    # rewritten (guide-§2.4 shuffle removals — fused corpus scan,
-    # map-side IVF assignment, one-shuffle LSH candidates, shared
-    # quality_exprs) with outputs verified bit-identical. Pre-rewrite
-    # hashes = the committed GATE_sf0.01_r17.log rows.
-    "corpus_clean_stats": ("GATE_sf0.01_r28.log", "1c8da89924dfdcf7"),
-    "similarity_topk_ivf_adaptive": ("GATE_sf0.01_r28.log", "ca0d1a60e6a9b222"),
-    "dedup_clusters": ("GATE_sf0.01_r28.log", "9a946014010f31c1"),
-    "dedup_keep_best": ("GATE_sf0.01_r28.log", "e739163b2c22caaf"),
-    "text_quality_score": ("GATE_sf0.01_r28.log", "d7227a8ffa987e13"),
-    "dedup_exact": ("GATE_sf0.01_r28.log", "7ab7bc08b2572bb0"),
-    "dedup_exact_normalized": ("GATE_sf0.01_r28.log", "ea26fcaddcc61a85"),
-    # Second r18 batch (candidate-side exchange fold in topk_lsh; the
-    # simhash zero-shingle filter moved to a token-count test at the
-    # scan). Pre-rewrite hashes = the committed GATE_sf0.01_r17.log rows.
-    "similarity_topk_lsh": ("GATE_sf0.01_r28.log", "0e7f2f0d8d7a2cfb"),
-    "dedup_simhash": ("GATE_sf0.01_r28.log", "15ca8f177d42b079"),
-    "segment_customer_setops": ("GATE_sf0.01_r28.log", "e75cc4483c2d5a2f"),
-    "text_tfidf_top_terms": ("GATE_sf0.01_r28.log", "233a4fef595713c6"),
-    # Round 19 (optimization round 2): the banded-LSH near-dup pass was
-    # de-payloaded (id-only bucket pairs + vector re-attach joins, VERDICT
-    # r18 order 1); corpus_clean_stats' r19 broadcast anti-join rides its
-    # existing pin above. Pre-rewrite hash = the committed
-    # GATE_sf0.01_r18.log row; the post log is the regenerated r19 tree's.
-    "similarity_near_dup_lsh": ("GATE_sf0.01_r28.log", "8c65978035fd9679"),
+    "similarity_topk_ivfpq_fixed": ("GATE_sf0.01_r29.log", "6a1948aaeb5952e9"),
+    "similarity_topk_ivfpq_trained": ("GATE_sf0.01_r29.log", "301db5bb25ca2186"),
+    "corpus_clean_stats": ("GATE_sf0.01_r29.log", "1c8da89924dfdcf7"),
+    "similarity_topk_ivf_adaptive": ("GATE_sf0.01_r29.log", "ca0d1a60e6a9b222"),
+    "dedup_clusters": ("GATE_sf0.01_r29.log", "9a946014010f31c1"),
+    "dedup_keep_best": ("GATE_sf0.01_r29.log", "e739163b2c22caaf"),
+    "text_quality_score": ("GATE_sf0.01_r29.log", "d7227a8ffa987e13"),
+    "dedup_exact": ("GATE_sf0.01_r29.log", "7ab7bc08b2572bb0"),
+    "dedup_exact_normalized": ("GATE_sf0.01_r29.log", "ea26fcaddcc61a85"),
+    "similarity_topk_lsh": ("GATE_sf0.01_r29.log", "0e7f2f0d8d7a2cfb"),
+    "dedup_simhash": ("GATE_sf0.01_r29.log", "15ca8f177d42b079"),
+    "segment_customer_setops": ("GATE_sf0.01_r29.log", "e75cc4483c2d5a2f"),
+    "text_tfidf_top_terms": ("GATE_sf0.01_r29.log", "233a4fef595713c6"),
+    "similarity_near_dup_lsh": ("GATE_sf0.01_r29.log", "8c65978035fd9679"),
 }
 
 
@@ -117,8 +98,8 @@ def test_hash_identical_rewrites_pinned():
                 "commit the refreshed log"
             )
             logs_checked.add(log_name)
-        # PASS lines (hash-verified queries) and ok? lines (rows-only —
-        # hashed since round 12) both carry the same value hash.
+        # PASS lines (hash-verified queries) and ok? lines (rows-only)
+        # both carry the same value hash.
         m = re.search(rf"(?:PASS|ok\?)\s+{q}:.*?rows=\d+ hash=([0-9a-f]+)", log)
         assert m, f"{q} missing from {log_name}"
         assert m.group(1) == h, f"{q}: output changed ({m.group(1)} != {h})"
@@ -179,12 +160,10 @@ def test_tail_entries_have_preceding_round_rows():
 # The five k-means-trained queries' sf0.001 output hashes, as committed in
 # the round-15, round-16 AND round-17 gate logs — three independent
 # sessions, two driver testdata regenerations apart, all bit-identical:
-# round 15 shipped the deterministic fit (canonicalized
-# training sample), so these hashes are pure functions of logical corpus
-# content, and two independent sessions a round apart must (and do)
-# produce them bit-identically. Before r15 this was impossible: k-means||
-# seeds by physical row position and a relayouted corpus moved 1999/2000
-# book cells (SCALE_ann_r15.md §1). If the testdata is regenerated
+# the fit runs on a canonicalized training sample, so these hashes are
+# pure functions of logical corpus content. Without it k-means|| seeds
+# by physical row position and a relayouted corpus moved 1999/2000 book
+# cells (48705ef:SCALE_ann_r15.md §1). If the testdata is regenerated
 # with DIFFERENT logical content, re-derive both sides from the
 # new round's logs in the rotation commit — a layout-only regeneration
 # must NOT move them.

@@ -155,7 +155,7 @@ def test_ivfpq_trained_recall(spark, sf_dir):
     plan; measured recall@5 0.76/0.74/0.80/1.00 at sf0.001/0.01/0.1/sf1
     vs the fixed-K sign-orthant twin's 0.78/0.72/0.72 — at/near the
     nprobe pruning ceiling everywhere, now with a NEAR-CONSTANT re-rank
-    (max(100, n/100)) instead of n/10. Curve in SCALE_ann_r11.md."""
+    (max(100, n/100)) instead of n/10. Curve in 48705ef:SCALE_ann_r11.md."""
     from mapreduce_hadoop_spark.operators.similarity import topk_ivfpq_trained
 
     exact = topk_bruteforce(spark, sf_dir).collect()
@@ -194,7 +194,7 @@ def test_pq_trained_recall_vs_bruteforce(spark, sf_dir):
     LINEAR n/10 depth: 0.76 / 0.86 / 0.82) — trained-cell ADC distortion
     falls as data fills the cells, the sign-orthant scheme's is a
     constant of the coding, so only the trained books hold recall as the
-    re-rank depth stops growing with n. Curve in SCALE_ann_r11.md."""
+    re-rank depth stops growing with n. Curve in 48705ef:SCALE_ann_r11.md."""
     from mapreduce_hadoop_spark.operators.similarity import topk_pq_trained
 
     exact = topk_bruteforce(spark, sf_dir).collect()

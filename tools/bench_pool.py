@@ -1,19 +1,24 @@
 """Interleaved bench pool at ANY scale dir.
 
 Same-window machine noise is the dominant term of single-shot bench
-numbers on the shared VM (r17: a same-tree sf0.1 re-run moved 35%; the
-r18 builder measured 4.8-85 s for the IDENTICAL warm query back to
-back). This tool makes any committed number a POOL: N alternating
-fresh-process ``bench.py`` runs of the current tree and (optionally) a
-reference tree from a git worktree, same window, shared warm index
-root. The cross-tree comparison cancels the window — both trees see the
-same machine state — and the emitted JSON carries every sample so a
-reader sees the spread, not one draw.
+numbers on a shared VM (a same-tree sf0.1 re-run has moved 35%, and the
+IDENTICAL warm query has measured 4.8-85 s back to back). This tool
+makes any committed number a POOL: N fresh-process ``bench.py`` runs of
+the current tree and (optionally) of a reference tree, interleaved in
+pairs whose order alternates (cur first, then prev first, ...) so
+neither tree always runs on the warmer page cache. Both share one warm
+index root. The cross-tree comparison cancels the window — both trees
+see the same machine state — and the emitted JSON carries every sample
+so a reader sees the spread, not one draw.
+
+Each run inherits the caller's environment, ``SPARK_GRAFT_CPUS``
+included, so the pool measures at the core count the caller sets.
 
 Usage:
   python tools/bench_pool.py [sf_dir] [samples_per_tree] [prev_tree_dir]
-  # e.g. git worktree add /tmp/r17tree <r17-final-sha>
-  #      python tools/bench_pool.py /root/testdata/sf0.1 3 /tmp/r17tree
+  # prev_tree_dir is any directory holding the reference checkout, e.g.
+  #   mkdir /tmp/ref && git archive <sha> | tar -x -C /tmp/ref
+  #   SPARK_GRAFT_CPUS=4 python tools/bench_pool.py /root/testdata/sf0.1 3 /tmp/ref
 
 Emits ONE JSON object: headline = the current tree's min-pool total
 (min is the right statistic: within-process JIT keeps improving runs,
@@ -37,7 +42,6 @@ def run_bench(tree: str, sf_dir: str) -> dict:
         SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_INDEX_DIR=os.path.join(REPO, ".ann_index"),
     )
-    env.pop("SPARK_GRAFT_CPUS", None)  # committed numbers are local[32]
     out = subprocess.run(
         [sys.executable, "bench.py"],
         cwd=tree,
@@ -46,21 +50,30 @@ def run_bench(tree: str, sf_dir: str) -> dict:
         text=True,
         timeout=3600,
     )
-    line = out.stdout.strip().splitlines()[-1]
-    return json.loads(line)
+    lines = out.stdout.strip().splitlines()
+    if out.returncode == 0 and lines:
+        try:
+            return json.loads(lines[-1])
+        except json.JSONDecodeError:
+            pass
+    tail = "\n".join(out.stderr.strip().splitlines()[-20:])
+    raise RuntimeError(
+        f"bench.py in {tree} exited {out.returncode} without a JSON result "
+        f"line; stderr tail:\n{tail}"
+    )
 
 
 def pool(sf_dir: str, k: int, prev: "str | None") -> dict:
     pools: dict[str, list[dict]] = {"cur": [], "prev": []}
+    trees = {"cur": REPO, "prev": prev}
     for i in range(k):
-        pools["cur"].append(run_bench(REPO, sf_dir))
-        print(
-            f"# cur run {i + 1}/{k}: {pools['cur'][-1]['value']}", file=sys.stderr
-        )
-        if prev:
-            pools["prev"].append(run_bench(prev, sf_dir))
+        order = ["cur", "prev"] if i % 2 == 0 else ["prev", "cur"]
+        for side in order:
+            if trees[side] is None:
+                continue
+            pools[side].append(run_bench(trees[side], sf_dir))
             print(
-                f"# prev run {i + 1}/{k}: {pools['prev'][-1]['value']}",
+                f"# {side} run {i + 1}/{k}: {pools[side][-1]['value']}",
                 file=sys.stderr,
             )
     cur = pools["cur"]

@@ -1,5 +1,8 @@
 """Dump .explain('formatted') for headline queries to plans/<tag>/<query>_<suffix>.txt.
 
+The dumps are local scratch for diffing two trees by hand: ``plans/`` is
+gitignored, so cite a plan in a commit message or report by quoting it.
+
 Usage: python tools/dump_plans.py <tag> <suffix> [query ...]
   e.g. python tools/dump_plans.py r18 before
        python tools/dump_plans.py r18 after corpus_clean_stats

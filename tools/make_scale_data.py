@@ -43,8 +43,8 @@ do — one hot taxi absorbs ~10% of all positions (events.user_id) and one
 hot source ~50% of all documents (documents.source) — while keys stay
 valid FKs (the hot values are existing ones). This is the stress shape for
 the sessionize window (one giant partition key), the per-source corpus
-ops, and AQE's skew-join handling; SKEW_r4.md records the measured bench
-deltas vs the uniform derivation.
+ops, and AQE's skew-join handling; 48705ef:SKEW_r4.md records the measured
+bench deltas vs the uniform derivation.
 
 Usage: python tools/make_scale_data.py [factor=10] [src=/root/testdata/sf0.1]
        [dst=<repo>/.scale_data/sf1] [--skew]
