@@ -60,41 +60,9 @@ ANN_MEDIA = {
 }
 
 # The driver records only the LAST 2000 characters of bench output and
-# parses the metric JSON out of that tail. A ~2,400-char note once
-# pushed the head of the JSON line out of the capture window and the
-# driver recorded `parsed: null`. So the metric line is hard-capped
-# (note auto-truncated to fit MAX_METRIC_LINE, asserted below).
+# parses the metric JSON out of that tail, so the metric line is
+# hard-capped (asserted below).
 MAX_METRIC_LINE = 1800
-
-# One line per build round, keyed on registry.ROUND so BENCH_rN.json can
-# never ship describing a stale build: a round that forgets to add its
-# line emits an explicit "note missing" marker instead of last round's
-# text.
-ROUND_NOTES = {
-    # registry.ROUND stays 17 through the round-18 OPTIMIZATION round
-    # (no rotation), so the r18 note lives under key 17.
-    17: (
-        "r18 (optimization round, r17 registry): gate 92 queries x 5 "
-        "scales, all hashes == r17. Map-side IVF/SPANN assignment (was "
-        "full-corpus window exchange), one-shuffle LSH candidates, "
-        "corpus quality in the scan, SPANN/LSH dedup+rank share one "
-        "exchange, simhash md5 chain evaluated once (was twice via "
-        "pushed filter), setops 6 exchanges->1, tfidf tokenize 2->1. "
-        "Pools vs r17 tree: sf0.1 29.7 vs 31.5 s, sf1 70.4 vs 84.9 s. "
-        "zstd codec measured worse, rejected. See OPTIMIZATION_r18.md."
-    ),
-}
-
-
-def _round_note() -> str:
-    from mapreduce_hadoop_spark import registry
-
-    return ROUND_NOTES.get(
-        registry.ROUND,
-        f"round {registry.ROUND}: note missing — add it to ROUND_NOTES "
-        "in bench.py (this marker exists so a stale note can never be "
-        "misattributed to the build it did not describe)",
-    )
 
 
 def main() -> None:
@@ -222,16 +190,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "stream": stream,
-        "note": _round_note(),
     }
     line = json.dumps(payload)
-    if len(line) > MAX_METRIC_LINE:
-        # Truncate ONLY the note until the line fits — data never yields
-        # to prose.
-        overshoot = len(line) - MAX_METRIC_LINE
-        note = payload["note"]
-        payload["note"] = note[: max(0, len(note) - overshoot - 16)] + "...[capped]"
-        line = json.dumps(payload)
     assert len(line) <= MAX_METRIC_LINE, len(line)
     print(line)
 

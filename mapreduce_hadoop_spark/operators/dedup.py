@@ -44,7 +44,7 @@ from mapreduce_hadoop_spark.session import (
     release,
     unpersist_intermediates,  # noqa: F401 — re-exported
 )
-from mapreduce_hadoop_spark.sources.tables import load_table
+from mapreduce_hadoop_spark.sources.tables import load_table, load_table_widened
 
 # 16 permutations as 8 bands x 2 rows (was 32/16x2): halves the signature
 # fold and the band fan-out for a measured 1.7x on the pair build (sf1:
@@ -233,8 +233,9 @@ def _doc_shingles(
     Everything downstream (shingling, per-shingle md5, minhash/simhash) is
     CPU-bound per row, so the scan's partitioning caps the whole family's
     parallelism. A small corpus arrives as one parquet split; spread it
-    across the cores before the expensive projection. At cluster scale the
-    scan already yields >= defaultParallelism splits and this is a no-op.
+    across the cores before the expensive projection
+    (``load_table_widened``). At cluster scale the scan already yields >=
+    defaultParallelism splits and this is a no-op.
 
     ``nonempty=True`` drops zero-shingle docs HERE, as a token-count test
     on the raw text (``size(tokens) >= 3`` is exactly ``shingles()``'s
@@ -248,37 +249,7 @@ def _doc_shingles(
     the full transform/md5 tree), where the token-count test re-evaluates
     only the split.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    p = spark.sparkContext.defaultParallelism
-    # Metadata-only probe (inputFiles() is a FileIndex listing — no
-    # plan->RDD conversion, no job): repartition only when the scan cannot
-    # already yield >= parallelism splits. File count alone undercounts a
-    # large single file that maxPartitionBytes splits into many partitions,
-    # so total bytes / maxPartitionBytes joins the estimate; where sizes
-    # aren't cheaply readable (non-local FS) it degrades to the file count.
-    files = docs.inputFiles()
-    if len(files) < p:
-        # The whole estimate is best-effort: any unparseable size string
-        # (Spark accepts forms beyond k/m/g, e.g. '1t'), a zero setting, or
-        # an unreadable file degrades to the file count, never an error.
-        try:
-            import os as _os
-
-            raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-            units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-            s = raw.lower().rstrip("b")
-            max_split = (
-                int(s[:-1]) * units[s[-1]] if s and s[-1] in units else int(s)
-            )
-            total = sum(
-                _os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-                for f in files
-            )
-            est_splits = max(len(files), total // max_split)
-        except (OSError, ValueError, KeyError, ZeroDivisionError):
-            est_splits = len(files)
-        if est_splits < p:
-            docs = docs.repartition(p)
+    docs = load_table_widened(spark, sf_dir, "documents")
     if nonempty:
         # T.SHINGLE_K, not a literal: the prefilter must restate
         # shingles()'s own n >= k guard, and a hardcoded width would

@@ -7,9 +7,13 @@ grouping, metadata math) stays JVM-side.
 
 The bundled testdata has no real media. ``media_table`` exposes
 `documents.text` as a binary column for the JVM-side metadata query;
-every other query synthesizes spec-valid media bytes per document
-in-plan (``_per_doc``) and decodes them back, so the oracle predicts the
-decoded result from doc_id alone. Codecs are stdlib+numpy only:
+every other query runs ONE Python pass per document (``_per_doc``): it
+synthesizes spec-valid media bytes from doc_id, decodes them and returns
+the features, so payloads never cross the JVM/Python boundary and the
+oracle predicts the decoded result from doc_id alone. The per-payload
+feature functions (``_resize_features``, ``_wav_features``,
+``_avi_features``) take bytes and return a feature tuple. Codecs are
+stdlib+numpy only:
 
 - container headers (``_parse_image_header``: PNG IHDR / JPEG SOFn / GIF
   logical screen);
@@ -26,7 +30,8 @@ decoded result from doc_id alone. Codecs are stdlib+numpy only:
 
 Out-of-profile payloads (progressive JPEG, colour PNG, interlaced GIF,
 compressed video) need a codec library, absent in this container — every
-decoder returns None for them and the queries emit NULLs, never a throw.
+decoder returns None for them, the feature functions an all-None tuple,
+and the queries emit NULLs, never a throw.
 """
 
 from __future__ import annotations
@@ -38,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_hadoop_spark.sources.tables import load_table
+from mapreduce_hadoop_spark.sources.tables import load_table, load_table_widened
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,18 +90,16 @@ def _per_doc(
     """One ``row(doc_id)`` per document, computed in one Arrow-batched
     ``mapInPandas`` over the doc_id column.
 
-    The narrow doc_id scan is repartitioned to the session's parallelism
-    BEFORE the Python stage: codec work costs milliseconds per row, so
-    parallelism must follow cores, not parquet split count — and the
-    exchange moves only 8-byte doc_ids, three orders of magnitude cheaper
-    than the per-row Python it unlocks. (Without it, a single ~150 MB
-    parquet file caps a pixel pipeline at 2 threads.) Payloads built by
-    ``row`` live and die inside the batch; they never cross a shuffle."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    A narrow doc_id scan is widened to the session's parallelism BEFORE
+    the Python stage (``load_table_widened``): codec work costs
+    milliseconds per row, so parallelism must follow cores, not parquet
+    split count — and the exchange moves only 8-byte doc_ids, three
+    orders of magnitude cheaper than the per-row Python it unlocks.
+    (Without it, a single ~150 MB parquet file caps a pixel pipeline at 2
+    threads.) Payloads built by ``row`` live and die inside the batch;
+    they never cross a shuffle. A ``None`` in a ``row`` tuple becomes SQL
+    NULL in its declared column."""
+    docs = load_table_widened(spark, sf_dir, "documents").select("doc_id")
     columns = [field.split()[0] for field in schema.split(",")]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1276,92 +1279,62 @@ FROM documents
 RESIZE_BOX = 32  # aspect-fit target box (stand-in for a thumbnail pipeline)
 
 
-def resize_media(media: DataFrame) -> DataFrame:
-    """Arrow-batched resize over (doc_id, mime, payload): REAL pixel-level
-    decode dispatched on magic bytes — 8-bit grayscale PNG (stdlib
-    inflate + full scanline unfilter None/Sub/Up/Average/Paeth), 8-bit
-    palette GIF (sub-block reassembly + dictionary LZW + palette lookup),
-    or grayscale baseline JPEG (Huffman + dequantize + inverse DCT) — then
-    a nearest-neighbor aspect-fit into a RESIZE_BOX square, emitting
-    ``px_sum`` (sum of resampled pixel values, the verifiable fingerprint
-    of the pixel path). Payloads outside those profiles (video, colour
-    JPEG, progressive variants — still codec-library territory) yield
-    NULL dimensions and NULL px_sum, the tolerate-don't-throw crawl
-    contract."""
-
-    def gray(raw: bytes):
-        if raw[:6] in (b"GIF89a", b"GIF87a"):
-            return _gif_decode_gray(raw)
-        if raw[:2] == b"\xff\xd8":
-            planes = _jpeg_decode(raw)
-            return planes[0] if planes is not None and len(planes) == 1 else None
-        return _png_decode_gray(raw)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                px = gray(bytes(payload))
-                if px is None:
-                    rows.append((int(doc_id), mime, None, None, None, None, None))
-                    continue
-                h, w = px.shape
-                scale = min(RESIZE_BOX / w, RESIZE_BOX / h)
-                ow, oh = int(w * scale), int(h * scale)
-                out = _nn_resize(px, ow, oh)
-                px_sum = int(out.sum(dtype="int64"))
-                rows.append((int(doc_id), mime, w, h, ow, oh, px_sum))
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["doc_id", "mime", "width", "height", "out_w", "out_h", "px_sum"],
-            )
-            for c in ("width", "height", "out_w", "out_h"):
-                pdf_out[c] = pd.array(pdf_out[c], dtype="Int32")
-            pdf_out["px_sum"] = pd.array(pdf_out["px_sum"], dtype="Int64")
-            yield pdf_out
-
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, mime string, width int, height int, out_w int,"
-            " out_h int, px_sum bigint"
-        ),
-    )
+_RESIZE_SCHEMA = (
+    "doc_id bigint, mime string, width int, height int, out_w int,"
+    " out_h int, px_sum bigint"
+)
 
 
-def patterned_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mime, payload) with a spec-valid patterned image per doc,
-    sized by ``_doc_dims`` — PNG for even doc_id (scanline filters cycling
-    through all five types), GIF89a for odd doc_id (real dictionary-LZW
-    stream over a grayscale palette) — pixel (x, y) = (3x + 7y + doc_id)
-    % 256 in both formats."""
-
-    def row(d: int) -> tuple:
-        w, h = _doc_dims(d)
-        if d % 2 == 0:
-            return d, "image/png", _png_bytes_patterned(w, h, d)
-        return d, "image/gif", _gif_bytes_patterned(w, h, d)
-
-    return _per_doc(spark, sf_dir, row, "doc_id bigint, mime string, payload binary")
+def _resize_features(payload: bytes) -> tuple:
+    """(width, height, out_w, out_h, px_sum) of one image payload: REAL
+    pixel-level decode dispatched on magic bytes — 8-bit grayscale PNG
+    (stdlib inflate + full scanline unfilter None/Sub/Up/Average/Paeth),
+    8-bit palette GIF (sub-block reassembly + dictionary LZW + palette
+    lookup), or grayscale baseline JPEG (Huffman + dequantize + inverse
+    DCT) — then a nearest-neighbor aspect-fit into a RESIZE_BOX square;
+    ``px_sum`` is the sum of resampled pixel values, the verifiable
+    fingerprint of the pixel path. Payloads outside those profiles (video,
+    colour JPEG, progressive variants — still codec-library territory)
+    yield an all-None tuple, the tolerate-don't-throw crawl contract."""
+    if payload[:6] in (b"GIF89a", b"GIF87a"):
+        px = _gif_decode_gray(payload)
+    elif payload[:2] == b"\xff\xd8":
+        planes = _jpeg_decode(payload)
+        px = planes[0] if planes is not None and len(planes) == 1 else None
+    else:
+        px = _png_decode_gray(payload)
+    if px is None:
+        return (None,) * 5
+    h, w = px.shape
+    scale = min(RESIZE_BOX / w, RESIZE_BOX / h)
+    ow, oh = int(w * scale), int(h * scale)
+    return w, h, ow, oh, int(_nn_resize(px, ow, oh).sum(dtype="int64"))
 
 
 def media_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL pixel path, end-to-end and driver-verifiable: synthesize a
-    patterned image per document — PNG (all five scanline filter types)
-    for even doc_id, GIF89a (real dictionary-LZW stream) for odd — then
-    ``resize_media``: magic-byte dispatch into stdlib inflate + full
-    unfilter, or sub-block reassembly + LZW decode + palette lookup, then
-    nearest-neighbor resample. The oracle predicts the resampled pixel SUM
-    in closed form from doc_id alone, so the hash only matches if both
-    encoders, both decode paths, and the floor-index resampling are all
-    correct at the pixel level.
+    patterned image per document, sized by ``_doc_dims`` with pixel
+    (x, y) = (3x + 7y + doc_id) % 256 — PNG (scanline filters cycling
+    through all five types) for even doc_id, GIF89a (real dictionary-LZW
+    stream over a grayscale palette) for odd — then ``_resize_features``:
+    magic-byte dispatch into stdlib inflate + full unfilter, or sub-block
+    reassembly + LZW decode + palette lookup, then nearest-neighbor
+    resample. The oracle predicts the resampled pixel SUM in closed form
+    from doc_id alone, so the hash only matches if both encoders, both
+    decode paths, and the floor-index resampling are all correct at the
+    pixel level.
 
-    100 TB shape: two pipelined map-only Arrow stages over a narrow
-    doc_id scan; payloads never leave the executor or cross a shuffle.
+    100 TB shape: one map-only Arrow stage over a narrow doc_id scan;
+    payloads never leave the Python worker or cross a shuffle.
     """
-    return resize_media(patterned_media_table(spark, sf_dir))
+
+    def row(d: int) -> tuple:
+        w, h = _doc_dims(d)
+        if d % 2 == 0:
+            return d, "image/png", *_resize_features(_png_bytes_patterned(w, h, d))
+        return d, "image/gif", *_resize_features(_gif_bytes_patterned(w, h, d))
+
+    return _per_doc(spark, sf_dir, row, _RESIZE_SCHEMA)
 
 
 # Closed-form pixel-sum prediction for media_real_resize: the resampled
@@ -1401,28 +1374,26 @@ GROUP BY doc_id, w, h, ow, oh
 """
 
 
-def patterned_jpeg_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mime, payload): one spec-valid grayscale baseline JPEG per
-    document, sized by ``_doc_dims``, block-constant pattern
-    (3*(x//8) + 7*(y//8) + doc_id) % 256 — see ``_jpeg_pattern_planes``
-    for why block-constant makes the lossy codec oracle-exact."""
+def media_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Baseline-JPEG twin of ``media_real_resize``: synthesize a real
+    grayscale SOF0 stream per document, sized by ``_doc_dims``, with the
+    block-constant pattern (3*(x//8) + 7*(y//8) + doc_id) % 256, then the
+    REAL decode path (marker walk, canonical Huffman from DHT, DPCM DC,
+    dequantize, inverse DCT) + nearest-neighbor resample
+    (``_resize_features``). The oracle predicts the resampled pixel sum in
+    closed form from doc_id alone — possible for a lossy codec only
+    because the pattern is constant per 8x8 block, which the DCT
+    round-trip preserves exactly (see ``_jpeg_pattern_planes``)."""
     return _per_doc(
         spark,
         sf_dir,
-        lambda d: (d, "image/jpeg", _jpeg_bytes_patterned(*_doc_dims(d), d)),
-        "doc_id bigint, mime string, payload binary",
+        lambda d: (
+            d,
+            "image/jpeg",
+            *_resize_features(_jpeg_bytes_patterned(*_doc_dims(d), d)),
+        ),
+        _RESIZE_SCHEMA,
     )
-
-
-def media_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baseline-JPEG twin of ``media_real_resize``: synthesize a real
-    SOF0 stream per document, then the REAL decode path (marker walk,
-    canonical Huffman from DHT, DPCM DC, dequantize, inverse DCT) +
-    nearest-neighbor resample. The oracle predicts the resampled pixel
-    sum in closed form from doc_id alone — possible for a lossy codec
-    only because the pattern is constant per 8x8 block, which the DCT
-    round-trip preserves exactly (see ``_jpeg_pattern_planes``)."""
-    return resize_media(patterned_jpeg_table(spark, sf_dir))
 
 
 # Resampled source pixel (i, j) -> ((j*w)//ow, (i*h)//oh); the pattern
@@ -1640,88 +1611,47 @@ def _wav_decode(payload: bytes) -> "tuple[int, object] | None":
     return None  # no data chunk
 
 
-def patterned_wav_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mime, payload) with one real WAV per document."""
-    return _per_doc(
-        spark,
-        sf_dir,
-        lambda d: (d, "audio/wav", _wav_bytes_patterned(d)),
-        "doc_id bigint, mime string, payload binary",
-    )
+def _wav_features(payload: bytes) -> tuple:
+    """(sr, n_samples, out_n, samp_sum, samp_sq_sum) of one WAV payload:
+    REAL WAV parse, nearest-neighbor resample to WAV_TARGET_SR (out[j] =
+    in[(j*n)//out_n] — the same floor-index mapping the image resampler
+    uses), integer sum/sq-sum of the resampled signal (the
+    exactly-checkable stand-ins for energy/loudness features). A
+    malformed payload yields an all-None tuple; a signal too short to
+    resample keeps its rate and length and NULLs the rest."""
+    import numpy as np
 
-
-def wav_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched audio feature stage: REAL WAV parse, nearest-neighbor
-    resample to WAV_TARGET_SR (out[j] = in[(j*n)//out_n] — the same
-    floor-index mapping the image resampler uses), integer sum/sq-sum of
-    the resampled signal (the exactly-checkable stand-ins for
-    energy/loudness features). Malformed payloads yield NULL features."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                decoded = _wav_decode(payload) if mime == "audio/wav" else None
-                if decoded is None:
-                    out.append((int(doc_id), mime, None, None, None, None, None))
-                    continue
-                sr, samples = decoded
-                n = len(samples)
-                out_n = (n * WAV_TARGET_SR) // sr if sr else 0
-                if out_n < 1 or n < 1:
-                    out.append((int(doc_id), mime, int(sr), int(n), None, None, None))
-                    continue
-                import numpy as np
-
-                idx = (np.arange(out_n, dtype=np.int64) * n) // out_n
-                rs = samples[idx]
-                out.append(
-                    (
-                        int(doc_id),
-                        mime,
-                        int(sr),
-                        int(n),
-                        int(out_n),
-                        int(rs.sum()),
-                        int((rs * rs).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "mime",
-                    "sr",
-                    "n_samples",
-                    "out_n",
-                    "samp_sum",
-                    "samp_sq_sum",
-                ],
-            )
-
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, mime string, sr int, n_samples int, out_n int, "
-            "samp_sum bigint, samp_sq_sum bigint"
-        ),
-    )
+    decoded = _wav_decode(payload)
+    if decoded is None:
+        return (None,) * 5
+    sr, samples = decoded
+    n = len(samples)
+    out_n = (n * WAV_TARGET_SR) // sr
+    if out_n < 1:
+        return sr, n, None, None, None
+    rs = samples[(np.arange(out_n, dtype=np.int64) * n) // out_n]
+    return sr, n, out_n, int(rs.sum()), int((rs * rs).sum())
 
 
 def media_real_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio twin of ``media_real_resize``: synthesize a real RIFF/WAVE
     stream per document, then the REAL decode path (magic check, chunk
     walk with pad bytes, PCM fmt validation, 8/16-bit sample decode) +
-    floor-index resample + integer energy features. The oracle predicts
-    sum and sum-of-squares of the resampled signal in closed form from
-    doc_id alone, so the hash only matches if header parse, chunk
-    skipping, sample decode, and index mapping are all byte-correct.
+    floor-index resample + integer energy features (``_wav_features``).
+    The oracle predicts sum and sum-of-squares of the resampled signal in
+    closed form from doc_id alone, so the hash only matches if header
+    parse, chunk skipping, sample decode, and index mapping are all
+    byte-correct.
 
-    100 TB shape: two pipelined map-only Arrow stages over a narrow
-    doc_id scan; payloads never cross a shuffle."""
-    return wav_features(patterned_wav_table(spark, sf_dir))
+    100 TB shape: one map-only Arrow stage over a narrow doc_id scan;
+    payloads never cross a shuffle."""
+    return _per_doc(
+        spark,
+        sf_dir,
+        lambda d: (d, "audio/wav", *_wav_features(_wav_bytes_patterned(d))),
+        "doc_id bigint, mime string, sr int, n_samples int, out_n int, "
+        "samp_sum bigint, samp_sq_sum bigint",
+    )
 
 
 MEDIA_REAL_WAV_ORACLE = f"""
@@ -1963,77 +1893,45 @@ def _avi_decode(payload: bytes) -> "tuple[int, int, list] | None":
     return int(w), int(h), frames
 
 
-def patterned_avi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mime, payload) with one real AVI per document."""
-    return _per_doc(
-        spark,
-        sf_dir,
-        lambda d: (d, "video/avi", _avi_bytes_patterned(d)),
-        "doc_id bigint, mime string, payload binary",
-    )
-
-
-def avi_frame_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched video feature stage: REAL AVI parse, floor-index
-    sampling of AVI_SAMPLE_FRAMES frames (frame j -> (j * n_frames) //
-    AVI_SAMPLE_FRAMES — the WAV/image resampler's mapping), then integer
-    full-frame and top-left-quadrant pixel sums over the sampled frames.
-    The quadrant sum is what makes row ORIENTATION observable (a full-
-    frame sum is permutation-invariant; bottom-up confusion shifts which
-    rows land in the quadrant). Malformed payloads yield NULL features."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                decoded = _avi_decode(payload) if mime == "video/avi" else None
-                if decoded is None:
-                    out.append((int(doc_id), mime, None, None, None, None, None, None))
-                    continue
-                w, h, frames = decoded
-                nf = len(frames)
-                f_sum = 0
-                q_sum = 0
-                for j in range(AVI_SAMPLE_FRAMES):
-                    fr = frames[(j * nf) // AVI_SAMPLE_FRAMES]
-                    f_sum += int(fr.sum())
-                    q_sum += int(fr[: h // 2, : w // 2].sum())
-                out.append(
-                    (int(doc_id), mime, int(w), int(h), int(nf),
-                     int(AVI_SAMPLE_FRAMES), f_sum, q_sum)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "mime", "width", "height", "n_frames",
-                         "sampled_n", "f_sum", "q_sum"],
-            )
-
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, mime string, width int, height int, n_frames int, "
-            "sampled_n int, f_sum bigint, q_sum bigint"
-        ),
-    )
+def _avi_features(payload: bytes) -> tuple:
+    """(width, height, n_frames, sampled_n, f_sum, q_sum) of one AVI
+    payload: REAL AVI parse, floor-index sampling of AVI_SAMPLE_FRAMES
+    frames (frame j -> (j * n_frames) // AVI_SAMPLE_FRAMES — the
+    WAV/image resampler's mapping), then integer full-frame and
+    top-left-quadrant pixel sums over the sampled frames. The quadrant sum
+    is what makes row ORIENTATION observable (a full-frame sum is
+    permutation-invariant; bottom-up confusion shifts which rows land in
+    the quadrant). A malformed payload yields an all-None tuple."""
+    decoded = _avi_decode(payload)
+    if decoded is None:
+        return (None,) * 6
+    w, h, frames = decoded
+    nf = len(frames)
+    sampled = [frames[(j * nf) // AVI_SAMPLE_FRAMES] for j in range(AVI_SAMPLE_FRAMES)]
+    f_sum = sum(int(fr.sum()) for fr in sampled)
+    q_sum = sum(int(fr[: h // 2, : w // 2].sum()) for fr in sampled)
+    return w, h, nf, AVI_SAMPLE_FRAMES, f_sum, q_sum
 
 
 def media_real_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video twin of ``media_real_wav``: synthesize a real RIFF/AVI
     container per document, then the REAL parse path (chunk walk, header/
     stream/palette validation, movi frame collection with foreign-stream
-    skipping, idx1 cross-check) + frame sampling + integer pixel features.
-    The oracle predicts full-frame and quadrant sums in closed form from
-    doc_id alone, so the hash only matches if container walk, stride
-    handling, bottom-up orientation, and palette lookup are all
-    byte-correct.
+    skipping, idx1 cross-check) + frame sampling + integer pixel features
+    (``_avi_features``). The oracle predicts full-frame and quadrant sums
+    in closed form from doc_id alone, so the hash only matches if
+    container walk, stride handling, bottom-up orientation, and palette
+    lookup are all byte-correct.
 
-    100 TB shape: two pipelined map-only Arrow stages over a narrow
-    doc_id scan; payloads never cross a shuffle."""
-    return avi_frame_features(patterned_avi_table(spark, sf_dir))
+    100 TB shape: one map-only Arrow stage over a narrow doc_id scan;
+    payloads never cross a shuffle."""
+    return _per_doc(
+        spark,
+        sf_dir,
+        lambda d: (d, "video/avi", *_avi_features(_avi_bytes_patterned(d))),
+        "doc_id bigint, mime string, width int, height int, n_frames int, "
+        "sampled_n int, f_sum bigint, q_sum bigint",
+    )
 
 
 MEDIA_REAL_AVI_ORACLE = f"""

@@ -89,25 +89,6 @@ def normalize_events(df: DataFrame) -> DataFrame:
 _FOOTER_READ_CAP = 256
 
 
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """Read a size conf ('128MB' / '134217728b' / plain int) as bytes."""
-    try:
-        raw = str(spark.conf.get(key, str(default))).strip().lower()
-    except Exception:
-        return default
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-    mult = 1
-    for suffix in ("kb", "mb", "gb", "k", "m", "g", "b"):
-        if raw.endswith(suffix):
-            mult = units[suffix[0]]
-            raw = raw[: -len(suffix)]
-            break
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return default
-
-
 def parquet_scan_width(spark: SparkSession, path: str) -> "int | None":
     """Estimated NON-EMPTY scan partition count for a parquet path,
     from file metadata alone (no Spark job, no plan materialization) —
@@ -155,12 +136,12 @@ def parquet_scan_width(spark: SparkSession, path: str) -> "int | None":
     if not files:
         return None  # empty/missing listing: width unknown, caller decides
     cores = spark.sparkContext.defaultParallelism
-    maxpb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-    opencost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-    try:
-        minpn = int(str(spark.conf.get("spark.sql.files.minPartitionNum", str(cores))))
-    except Exception:
-        minpn = cores
+    # The session's own SQLConf parses the size strings ('128m', '4MB').
+    conf = spark._jsparkSession.sessionState().conf()
+    maxpb = conf.filesMaxPartitionBytes()
+    opencost = conf.filesOpenCostInBytes()
+    minpn_opt = conf.filesMinPartitionNum()
+    minpn = minpn_opt.get() if minpn_opt.isDefined() else cores
     data_bytes = sum(os.path.getsize(f) for f in files)
     # Spark's FilePartition arithmetic pads bytesPerCore with openCost per
     # file too (totalBytes = data + openCost * numFiles), not just the

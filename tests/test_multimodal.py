@@ -10,9 +10,8 @@ from mapreduce_hadoop_spark.operators.multimodal import (
     _parse_image_header,
     _png_bytes_patterned,
     _png_decode_gray,
+    _resize_features,
     media_table,
-    patterned_media_table,
-    resize_media,
 )
 
 # Real container headers, byte-for-byte per spec (width x height noted).
@@ -196,42 +195,108 @@ def test_nn_resize_floor_index_mapping():
     assert _nn_resize(src, 2, 2).tolist() == [[0, 2], [20, 22]]
 
 
-def test_resize_media_real_path_resamples_pixels(spark, sf_dir):
-    """resize_media must produce the pixel sums a local re-decode
-    predicts — the Spark plan and pure-python path agree pixel-for-pixel."""
-    media = patterned_media_table(spark, sf_dir).limit(8)
-    got = resize_media(media).collect()
-    assert len(got) == 8
-    from mapreduce_hadoop_spark.operators.multimodal import RESIZE_BOX
+def test_resize_media_real_path_resamples_pixels(sf_dir):
+    """``_resize_features`` must produce the pixel sums the oracles'
+    closed form predicts, through every decode path the resize queries
+    take: PNG and GIF (pixel (3x + 7y + d) % 256) and grayscale JPEG
+    (block-constant (3*(x//8) + 7*(y//8) + d) % 256), over the first 8
+    documents of the test table."""
+    import pyarrow.parquet as pq
 
-    for r in got:
-        d = int(r["doc_id"])
-        w, h = (d % 64) + 16, (d // 64) % 64 + 16
-        assert (r["width"], r["height"]) == (w, h)
+    from mapreduce_hadoop_spark.operators.multimodal import (
+        RESIZE_BOX,
+        _doc_dims,
+        _gif_bytes_patterned,
+        _jpeg_bytes_patterned,
+    )
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id"])
+    doc_ids = docs.column("doc_id").to_pylist()[:8]
+    assert len(doc_ids) == 8
+    for d in doc_ids:
+        w, h = _doc_dims(d)
         scale = min(RESIZE_BOX / w, RESIZE_BOX / h)
         ow, oh = int(w * scale), int(h * scale)
-        assert (r["out_w"], r["out_h"]) == (ow, oh)
-        px = _png_decode_gray(_png_bytes_patterned(w, h, d))
-        out = _nn_resize(px, ow, oh)
-        assert r["px_sum"] == int(out.sum(dtype="int64"))
+        src = [((j * w) // ow, (i * h) // oh) for i in range(oh) for j in range(ow)]
+        fine = sum((3 * x + 7 * y + d) % 256 for x, y in src)
+        block = sum((3 * (x // 8) + 7 * (y // 8) + d) % 256 for x, y in src)
+        for payload, px_sum in (
+            (_png_bytes_patterned(w, h, d), fine),
+            (_gif_bytes_patterned(w, h, d), fine),
+            (_jpeg_bytes_patterned(w, h, d), block),
+        ):
+            assert _resize_features(payload) == (w, h, ow, oh, px_sum), (d, payload[:6])
 
 
-def test_resize_media_real_path_nulls_undecodable(spark, sf_dir):
-    """Non-image payloads (the text-derived media) and colour JPEGs (no
-    single grayscale plane to resize) must yield NULLs, never an
-    exception."""
+def test_resize_media_real_path_nulls_undecodable():
+    """Each per-payload feature function answers a payload it cannot
+    decode with an all-None tuple, never an exception: text bytes (the
+    text-derived media) everywhere, a colour JPEG for the resize path (no
+    single grayscale plane to resize), truncated files for WAV and AVI."""
     from mapreduce_hadoop_spark.operators.multimodal import (
+        _avi_bytes_patterned,
+        _avi_features,
         _jpeg_color_bytes_patterned,
+        _wav_bytes_patterned,
+        _wav_features,
     )
 
-    color = spark.createDataFrame(
-        [(-1, "image/jpeg", bytearray(_jpeg_color_bytes_patterned(24, 16, 7)))],
-        "doc_id bigint, mime string, payload binary",
+    text = "the quick brown fox jumps over the lazy dog".encode()
+    color = _jpeg_color_bytes_patterned(24, 16, 7)
+    wav, avi = _wav_bytes_patterned(7), _avi_bytes_patterned(7)
+    cases = [
+        (_resize_features, text, 5),
+        (_resize_features, color, 5),
+        (_wav_features, text, 5),
+        (_wav_features, wav[: len(wav) // 2], 5),
+        (_avi_features, text, 6),
+        (_avi_features, avi[: len(avi) // 2], 6),
+    ]
+    for fn, payload, width in cases:
+        assert fn(payload) == (None,) * width, (fn.__name__, payload[:8])
+
+
+def test_per_doc_none_features_become_sql_nulls(spark, sf_dir):
+    """``_per_doc`` builds each batch from plain tuples, so a ``None``
+    feature must arrive as SQL NULL in its declared int/bigint column —
+    in a batch that mixes None with values and in an all-None column —
+    and a value must keep its declared type, never widened."""
+    from pyspark.sql.types import IntegerType, LongType
+
+    from mapreduce_hadoop_spark.operators.multimodal import _per_doc
+
+    undecodable = _resize_features(b"not an image")
+
+    def row(d: int) -> tuple:
+        if d % 2:
+            return (d, *undecodable)
+        return (d, d % 64 + 16, 7, 32, 20, 123_456_789_012, None)
+
+    df = _per_doc(
+        spark,
+        sf_dir,
+        row,
+        "doc_id bigint, width int, height int, out_w int, out_h int,"
+        " px_sum bigint, spare bigint",
     )
-    got = resize_media(media_table(spark, sf_dir).limit(5).unionByName(color)).collect()
-    assert len(got) == 6
-    assert all(r["px_sum"] is None and r["width"] is None for r in got)
-    assert [r["doc_id"] for r in got].count(-1) == 1
+    types = {f.name: type(f.dataType) for f in df.schema.fields}
+    assert types == {
+        "doc_id": LongType, "width": IntegerType, "height": IntegerType,
+        "out_w": IntegerType, "out_h": IntegerType, "px_sum": LongType,
+        "spare": LongType,
+    }
+    got = df.collect()
+    assert {r["doc_id"] % 2 for r in got} == {0, 1}
+    for r in got:
+        assert r["spare"] is None
+        if r["doc_id"] % 2:
+            assert (r["width"], r["height"], r["out_w"], r["out_h"], r["px_sum"]) == (
+                None, None, None, None, None
+            )
+        else:
+            assert (r["width"], r["height"], r["out_w"], r["out_h"], r["px_sum"]) == (
+                r["doc_id"] % 64 + 16, 7, 32, 20, 123_456_789_012
+            )
 
 
 def test_lzw_and_container_golden_streams_pinned():

@@ -454,6 +454,35 @@ def test_parquet_scan_width_remote_scheme_never_narrow(spark, sf_dir):
     assert out.rdd.getNumPartitions() == cores
 
 
+def test_per_doc_queries_are_one_python_pass(spark, sf_dir):
+    # Each per-document media query synthesizes, decodes and extracts its
+    # features in ONE MapInPandas over the doc_id scan, widened by exactly
+    # one round-robin exchange (load_table_widened): no payload crosses
+    # the JVM/Python boundary a second time. dedup_simhash's shingle scan
+    # keeps its one widen through the same rule.
+    from mapreduce_hadoop_spark import registry
+
+    def widens(plan: str) -> int:
+        # A cached intermediate prints its subtree under every scan of it;
+        # the plan_id tells one exchange printed twice from two exchanges.
+        return len(set(re.findall(r"RoundRobinPartitioning\(\d+\).*?plan_id=(\d+)", plan)))
+
+    queries = registry.queries()
+    for name in (
+        "multimodal_real_resize",
+        "multimodal_real_jpeg",
+        "multimodal_real_jpeg_color",
+        "multimodal_real_wav",
+        "multimodal_real_avi",
+        "multimodal_real_roundtrip",
+    ):
+        plan = executed_plan(queries[name](spark, sf_dir))
+        assert plan.count("MapInPandas") == 1, (name, plan)
+        assert widens(plan) == 1, (name, plan)
+    plan = executed_plan(queries["dedup_simhash"](spark, sf_dir))
+    assert widens(plan) == 1, plan
+
+
 def test_span_dedup_two_shuffles_no_joins(spark, sf_dir):
     # One exchange on span hash (first-occurrence window) + one for the
     # per-doc rollup; spans are hashed longs before either, and there is

@@ -5,6 +5,9 @@ Runs every ``queries()`` entry from ``__spark_entry__`` on Spark and its
 compares row count, column names, and an order-insensitive value hash.
 
 Usage:  python tools/check_oracle.py [query_name ...]
+
+``compare_gate_logs`` compares the rows of two such runs' output (the
+GATE_*.log files ``tools/run_gate_matrix.sh`` writes).
 """
 
 from __future__ import annotations
@@ -12,6 +15,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import re
 import sys
 import time
 
@@ -72,6 +76,28 @@ def value_hash(df: pd.DataFrame) -> str:
         for row in df[cols].itertuples(index=False, name=None)
     )
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+
+
+# One gate row: "PASS <name>: rows=<n> hash=<h> [<t>s]" or the rows-only
+# "ok?  <name>: rows-only (no oracle) rows=<n> hash=<h> [<t>s]".
+_GATE_ROW = re.compile(r"^(?:PASS|ok\?)\s+(\S+): .*?rows=(\d+) hash=([0-9a-f]+)", re.M)
+
+
+def gate_rows(log: str) -> dict[str, tuple[int, str]]:
+    """{query: (rows, value hash)} of every PASS / ok? row of a gate log;
+    the ``[t s]`` timing is not part of a row's identity."""
+    return {m[1]: (int(m[2]), m[3]) for m in _GATE_ROW.finditer(log)}
+
+
+def compare_gate_logs(prev: str, cur: str) -> tuple[int, list[str], list[str]]:
+    """(equal count, differing queries, missing queries) of gate log
+    ``cur`` against ``prev``. A query differs when its (rows, hash) moved
+    or ``prev`` has no row for it; it is missing when ``cur`` has no row
+    for it (a FAIL, or a dropped query)."""
+    a, b = gate_rows(prev), gate_rows(cur)
+    differ = [q for q in b if a.get(q) != b[q]]
+    missing = [q for q in a if q not in b]
+    return len(b) - len(differ), differ, missing
 
 
 def main() -> int:
