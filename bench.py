@@ -275,19 +275,17 @@ def _stream_timeout_bench(spark, sf_dir: str) -> dict:
 
     ``events.parquet`` ships as ONE file per scale dir, which would give a
     single micro-batch (no watermark movement, no timeout eviction). The
-    bench stages a time-ordered 8-file split (pyarrow, schema-preserving,
-    mtime-ordered so the file stream replays in event-time order) under
-    the repo-local ``.stream_stage/`` (gitignored) and streams THAT with
-    maxFilesPerTrigger=1: 8 batches, watermark advancing per batch,
-    timeouts firing mid-stream exactly as on a live ingest.
+    bench stages the benchmark's time-ordered split (``stream_split`` from
+    perfbench/inputs.py, 8 files, mtime-ordered so the file stream replays
+    in event-time order) under the repo-local ``.stream_stage/``
+    (gitignored) and streams THAT with maxFilesPerTrigger=1: 8 batches,
+    watermark advancing per batch, timeouts firing mid-stream exactly as
+    on a live ingest.
     """
-    import glob
     import shutil
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from mapreduce_hadoop_spark.streaming.trips import airport_trips_stream_timeout
+    from perfbench.inputs import stream_split
 
     n_files = 8
     repo = os.path.dirname(os.path.abspath(__file__))
@@ -301,21 +299,7 @@ def _stream_timeout_bench(spark, sf_dir: str) -> dict:
             os.path.isfile(marker) and open(marker).read() == src_mtime
         ):
             shutil.rmtree(stage, ignore_errors=True)
-            os.makedirs(stage)
-            tbl = pq.read_table(src)
-            order = pa.compute.sort_indices(tbl.column("ts"))
-            tbl = tbl.take(order)
-            step = (tbl.num_rows + n_files - 1) // n_files
-            for i in range(n_files):
-                chunk = tbl.slice(i * step, step)
-                if chunk.num_rows == 0:
-                    break
-                # Chunk 0 keeps the canonical name: the events stream
-                # reader infers its schema from {dir}/events.parquet.
-                name = "events.parquet" if i == 0 else f"events{i:02d}.parquet"
-                path = os.path.join(stage, name)
-                pq.write_table(chunk, path)
-                os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+            stream_split(sf_dir, stage, n_files)
             with open(marker, "w") as f:
                 f.write(src_mtime)
 

@@ -123,23 +123,12 @@ def run_train_split(inp: str, out: str) -> None:
     counts to <out>/counts (TSV). Assignment is a pure function of
     md5(doc_id) — re-running on a grown corpus never moves an existing
     doc across splits."""
-    from mapreduce_hadoop_spark.functions.hashing import md5_long
-    from mapreduce_hadoop_spark.operators.corpus import (
-        SPLIT_TRAIN_PCT,
-        SPLIT_VAL_PCT,
-        corpus_train_split,
-    )
+    from mapreduce_hadoop_spark.operators.corpus import corpus_train_split, split_column
     from mapreduce_hadoop_spark.sources.tables import load_table
 
     spark = get_spark("train-split")
-    bucket = md5_long(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
-        .when(bucket < SPLIT_VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     docs = load_table(spark, inp, "documents").select(
-        "doc_id", "source", split.alias("split")
+        "doc_id", "source", split_column().alias("split")
     )
     docs.write.mode("overwrite").partitionBy("split").parquet(f"{out}/manifest")
     counts = corpus_train_split(spark, inp).orderBy("source", "split")

@@ -16,7 +16,7 @@ a partial-agg groupBy. No driver-side loops anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_hadoop_spark.functions.hashing import md5_long, md5_long_sql
@@ -278,6 +278,17 @@ SPLIT_TRAIN_PCT = 90
 SPLIT_VAL_PCT = 95
 
 
+def split_column() -> Column:
+    """'train' / 'val' / 'test' for a documents row: a pure function of
+    md5(doc_id), so re-running on a grown corpus never moves a doc."""
+    bucket = md5_long(F.col("doc_id").cast("string")) % 100
+    return (
+        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
+        .when(bucket < SPLIT_VAL_PCT, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+
+
 def corpus_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (source, split) document and token counts for a deterministic
     90/5/5 train/val/test split.
@@ -297,14 +308,8 @@ def corpus_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", quality_exprs()["n_tokens"].alias("n_tokens")
     )
-    bucket = md5_long(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
-        .when(bucket < SPLIT_VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        docs.select("source", split.alias("split"), "n_tokens")
+        docs.select("source", split_column().alias("split"), "n_tokens")
         .groupBy("source", "split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

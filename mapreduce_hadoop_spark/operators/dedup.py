@@ -84,7 +84,7 @@ NGRAM_DF_CAP = 200  # shingles in more docs than this don't generate pairs
 # self-join quadratic; >cap docs sharing a 2-minhash signature is almost
 # surely boilerplate, and dropping the bucket bounds the blowup (same
 # tradeoff as NGRAM_DF_CAP — pairs whose every band is boilerplate are
-# lost, documented). ``lsh_dropped_buckets`` reports what the cap dropped.
+# lost, documented).
 LSH_BUCKET_CAP = 200
 
 _PERMS = minhash_params(NUM_PERMS)
@@ -340,18 +340,6 @@ def _band_keys(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", "bk.band", "bk.sig")
 
 
-def lsh_dropped_buckets(hs: DataFrame) -> DataFrame:
-    """(band, sig, bucket_n) for every band bucket the cap drops — the
-    observability side of LSH_BUCKET_CAP (run it alongside the dedup to
-    quantify what boilerplate the cap excluded)."""
-    return (
-        _band_keys(_minhash_from(hs))
-        .groupBy("band", "sig")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > F.lit(LSH_BUCKET_CAP))
-    )
-
-
 def minhash_lsh_pairs_from(hs: DataFrame) -> DataFrame:
     """Near-duplicate pairs: LSH banding for candidates, exact Jaccard verify.
 
@@ -492,8 +480,8 @@ def _simhash60_np(hs_list: "list") -> "object":
     """Vectorized 60-bit simhash over a batch of shingle-hash arrays.
 
     Integer arithmetic only — bit-for-bit the JVM fold it replaces
-    (``_simhash_from_hs_jvm``; parity pinned in tests/test_dedup_quality
-    and by the rule-1a gate-hash pin on ``dedup_simhash``): per bit j,
+    (parity pinned against that fold in tests/test_dedup_quality and by
+    the rule-1a gate-hash pin on ``dedup_simhash``): per bit j,
     the set-bit count across the row's hashes (``np.add.reduceat`` over
     the batch-concatenated hash array) decides the sign via the same
     ``2*cnt > n`` majority. Rows must be non-empty (the caller filters
@@ -520,9 +508,9 @@ def _simhash_from_hs(hs: DataFrame) -> DataFrame:
     """60-bit simhash per doc of a (doc_id, hs) relation with no empty
     ``hs`` (``_simhash60_np`` needs non-empty rows), Arrow-vectorized.
 
-    The JVM formulation (kept below as ``_simhash_from_hs_jvm``) folded a
-    60-counter array accumulator over each doc's hash array — ~60
-    interpreted lambda ops per shingle hash, measured as ~5-6 s of
+    The JVM formulation (kept in tests/test_dedup_quality as the parity
+    reference) folded a 60-counter array accumulator over each doc's hash
+    array — ~60 interpreted lambda ops per shingle hash, measured as ~5-6 s of
     ``dedup_simhash``'s 11.1 s sf1 wall. The fold is pure integer
     arithmetic, so it vectorizes with ZERO output-identity risk; the
     pandas_udf batch runs ``np.add.reduceat`` per bit over the
@@ -542,34 +530,6 @@ def _simhash_from_hs(hs: DataFrame) -> DataFrame:
     return hs.select(
         "doc_id", pandas_udf(sim60, "long")(F.col("hs")).alias("simhash")
     )
-
-
-def _simhash_from_hs_jvm(hs_rel: DataFrame) -> DataFrame:
-    """The JVM array-accumulator formulation — kept UNREGISTERED
-    as the parity reference for the Arrow rewrite above."""
-    hs = hs_rel.filter(F.size("hs") > 0)
-    n = F.size("hs")
-    masks = F.array(*[F.lit(1 << j).cast("long") for j in range(SIMHASH_BITS)])
-    counts = F.aggregate(
-        F.col("hs"),
-        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-        lambda acc, x: F.zip_with(
-            acc,
-            masks,
-            lambda c, m: c
-            + F.when(x.bitwiseAND(m) != F.lit(0), F.lit(1)).otherwise(F.lit(0)),
-        ),
-    )
-    sim = F.aggregate(
-        F.zip_with(
-            counts,
-            masks,
-            lambda c, m: F.when(c * 2 > n, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return hs.select("doc_id", sim.alias("simhash"))
 
 
 def _simhash_sigs_sql() -> str:

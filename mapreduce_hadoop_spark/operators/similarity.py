@@ -206,7 +206,7 @@ def near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``applyInPandas`` group, and each group evaluates its dense tile as a
     numpy outer-product ACCUMULATE whose summation order is the exact
     left fold of ``_dot`` / the DuckDB oracle's ``list_reduce`` — so
-    every output bit (pinned vs ``near_dup_cosine_bnlj`` in
+    every output bit (pinned vs a BroadcastNestedLoopJoin twin in
     tests/test_similarity_ivf.py) is unchanged while the arithmetic runs
     vectorized.
 
@@ -320,26 +320,6 @@ def near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def near_dup_cosine_bnlj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BroadcastNestedLoopJoin formulation of ``near_dup_cosine``
-    — kept UNREGISTERED as the JVM-fold parity reference:
-    tests/test_similarity_ivf.py asserts the blocked plan's output is
-    row- and bit-identical to this one."""
-    emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    a = emb.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na")
-    )
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("nb")
-    )
-    a = a.repartition(spark.sparkContext.defaultParallelism)
-    pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    cos = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
-    return pairs.select("vec_a", "vec_b", cos.alias("cosine")).filter(
-        F.col("cosine") >= F.lit(NEAR_DUP_COS)
-    )
-
-
 NEAR_DUP_ORACLE = f"""
 WITH e AS ({EMB_NORM_SQL})
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -446,25 +426,11 @@ def auto_sign_bits(n: int) -> int:
     return EMB_LSH_MAX_BITS
 
 
-# Probe memo: repeated LSH queries over an UNCHANGED corpus in one
-# session (bench loops, the topk+near_dup twins sharing one embeddings
-# relation) pay the count+probe once. Keyed on (applicationId, analyzed-
-# plan semanticHash): the semantic hash covers the
-# scan path and every transformation, so a different sf_dir or a
-# different projection never aliases; a same-plan re-read of a corpus
-# mutated IN PLACE mid-session would reuse the stale width — no engine
-# path does that (gate/bench/driver sessions each bind one immutable
-# sf_dir), and the width is re-derived fresh in every new session.
-_SIGN_BITS_MEMO: "dict[tuple, int]" = {}
-_SIGN_BITS_MEMO_CAP = 64
-# Test hook: counts actual probe executions (memo misses).
-PROBE_RUNS = 0
-
-
 def measured_sign_bits(emb: DataFrame) -> int:
     """Entropy-aware bit width: smallest b in [auto_sign_bits(n), MAX_BITS]
     whose MEASURED per-vector candidate mass is <= TARGET_BUCKET.
-    Memoized per (session, plan) — see ``_SIGN_BITS_MEMO`` above.
+    The probe runs on every call: the width is a function of the data the
+    plan reads now, not of an earlier read.
 
     ``auto_sign_bits`` assumes uniform buckets (collision mass 2^-bits);
     real embedding corpora have sign-pattern entropy below ``bits`` bits,
@@ -492,24 +458,12 @@ def measured_sign_bits(emb: DataFrame) -> int:
     measured pick can only fall below the count pick by sampling error,
     and the floor keeps the documented log2(n) growth contract exact.
     """
-    global PROBE_RUNS
-    key = (emb.sparkSession.sparkContext.applicationId, emb.semanticHash())
-    if key in _SIGN_BITS_MEMO:
-        return _SIGN_BITS_MEMO[key]
-    PROBE_RUNS += 1
-
-    def _memo(bits: int) -> int:
-        if len(_SIGN_BITS_MEMO) >= _SIGN_BITS_MEMO_CAP:
-            _SIGN_BITS_MEMO.pop(next(iter(_SIGN_BITS_MEMO)))
-        _SIGN_BITS_MEMO[key] = bits
-        return bits
-
     n = emb.count()
     if n <= 0:
-        return _memo(EMB_LSH_MIN_BITS)
+        return EMB_LSH_MIN_BITS
     floor_bits = auto_sign_bits(n)
     if floor_bits >= EMB_LSH_MAX_BITS:
-        return _memo(EMB_LSH_MAX_BITS)
+        return EMB_LSH_MAX_BITS
     samp = max(1, n // EMB_LSH_SAMPLE_TARGET)
     sig = emb if samp == 1 else emb.filter(F.col("vec_id") % samp == 0)
     # The probe hashes at MAX_BITS x EMB_DIM per row; on a narrow scan
@@ -550,7 +504,7 @@ def measured_sign_bits(emb: DataFrame) -> int:
         if n * mm <= EMB_LSH_TARGET_BUCKET * m * (m - 1):
             measured = b
             break
-    return _memo(max(floor_bits, measured))
+    return max(floor_bits, measured)
 
 
 def _srp_sign(band: int, bit: int, dim: int) -> float:
@@ -577,19 +531,6 @@ def srp_signs(bands: int, bits: int) -> list[list[list[float]]]:
     sign row would NULL-poison the projection."""
     return [
         [[_srp_sign(j, i, d) for d in range(EMB_DIM)] for i in range(bits)]
-        for j in range(bands)
-    ]
-
-
-def axis_signs(bands: int, bits: int, dim: int = EMB_DIM) -> list[list[list[float]]]:
-    """Axis-aligned hyperplanes (bit i of band j = sign of dim j*bits+i) —
-    kept for engineered-fixture tests that need to
-    place vectors in specific buckets by construction."""
-    return [
-        [
-            [1.0 if d == (j * bits + i) % dim else 0.0 for d in range(dim)]
-            for i in range(bits)
-        ]
         for j in range(bands)
     ]
 
@@ -650,7 +591,7 @@ def near_dup_lsh_from(
     is measured_sign_bits(emb) — the entropy-aware width (bounded probe;
     auto_sign_bits(n) as the count-based floor), the price of the
     scale-adaptive key. ``signs`` overrides the hash family (tests use
-    ``axis_signs`` to place vectors in engineered buckets). Buckets over
+    axis-aligned planes to place vectors in engineered buckets). Buckets over
     max(EMB_BUCKET_CAP_MIN, n/2) are dropped (degenerate-skew guard).
 
     Dedup is in-row, not a shuffle: every band relation carries the

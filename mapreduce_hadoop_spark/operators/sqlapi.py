@@ -10,16 +10,23 @@ pre-aggregated fact join), which the shared oracle hash certifies.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from mapreduce_hadoop_spark.operators.analytics import REVENUE_BY_NATION_ORACLE
 from mapreduce_hadoop_spark.sources.tables import TABLE_NAMES, load_table
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every testdata table as a temp view for spark.sql queries."""
+def sql_over_tables(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """``spark.sql(text)`` with each testdata table the text names (outside
+    ``--`` comments) exposed as a temp view. Only those tables are opened:
+    each open is a schema-inference job."""
+    code = re.sub(r"--[^\n]*", "", text)
     for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+        if re.search(rf"\b{t}\b", code):
+            load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    return spark.sql(text)
 
 
 _SQL = """
@@ -58,8 +65,7 @@ ORDER BY r_name, n_name
 
 
 def sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_SQL)
+    return sql_over_tables(spark, sf_dir, _SQL)
 
 
 # Same result contract as the DataFrame twin => same oracle.
@@ -89,8 +95,7 @@ WHERE cast(round(o_totalprice * 1e6) as bigint) > (
 
 
 def sql_orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_SQL_ABOVE_AVG)
+    return sql_over_tables(spark, sf_dir, _SQL_ABOVE_AVG)
 
 
 # DuckDB decorrelates the identical text natively — same SQL, same result.

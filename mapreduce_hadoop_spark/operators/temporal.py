@@ -26,8 +26,6 @@ same representation.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -118,25 +116,6 @@ RANGE_H = 24
 # window is far past that crossover and far above any uniform-key count.
 RANGE_HOT_VIEWS = 1000
 
-# Probe decisions per dataset path — table statistics, cached exactly like
-# the fitted IVF centroids: recomputed once per corpus, reused across
-# repeated queries (bench, gate) in a session. Keys are realpath-normalized
-# so 'sf1' vs 'sf1/' vs a symlinked spelling share one entry. The hot-user
-# SET always recomputes in-plan (never cached), but the cached boolean CAN
-# go stale if the dataset mutates in place: a stale True only costs a
-# conservative routed plan, while a stale False re-enables the pairwise
-# hot-key blowup until the cache is cleared. Fine for immutable snapshot
-# directories (this engine's data contract); pipelines that append in
-# place must call clear_stats_cache() at ingest boundaries
-# (tools/make_scale_data.py does).
-_HOT_PROBE_CACHE: dict[tuple[str, int], bool] = {}
-
-
-def clear_stats_cache() -> None:
-    """Drop cached probe decisions (call after mutating a dataset dir)."""
-    _HOT_PROBE_CACHE.clear()
-
-
 def views_before_purchase_range_join(
     spark: SparkSession, sf_dir: str, hot_views: int = RANGE_HOT_VIEWS
 ) -> DataFrame:
@@ -225,13 +204,9 @@ def views_before_purchase_range_join(
             .select(*contribution)
         )
 
-    # The statistics probe: no hot keys -> the pairwise plan, untouched.
-    cache_key = (os.path.realpath(sf_dir), hot_views)
-    has_hot = _HOT_PROBE_CACHE.get(cache_key)
-    if has_hot is None:
-        has_hot = not hot_users.isEmpty()
-        _HOT_PROBE_CACHE[cache_key] = has_hot
-    if not has_hot:
+    # The statistics probe, run on every build: no hot keys -> the pairwise
+    # plan, untouched.
+    if hot_users.isEmpty():
         return finish(pairwise(purchases, views))
 
     # Cold branch: pairwise day-bucket join (2-row probe fanout).

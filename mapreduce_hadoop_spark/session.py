@@ -3,7 +3,10 @@
 Pins the configuration the engine depends on:
 
 - UTC session timezone — the reference parses all timestamps as UTC
-  (``src/AirportTripsRevenue.java:106-126``).
+  (``src/AirportTripsRevenue.java:106-126``) — and the parquet timestamp
+  read confs. These are runtime SQL confs owned by
+  ``sources.tables.ensure_confs``, which ``get_spark`` and every
+  ``load_table`` call set, so a session the caller built gets them too.
 - AQE on (coalescing + skew-join handling) — replaces the reference's manual
   split-size / reducer-count tuning (``src/AirportTripsRevenue.java:525-560``).
 - Arrow enabled — every Python-side kernel in this engine is Arrow-batched
@@ -27,8 +30,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_hadoop_spark.sources.tables import ensure_confs
+
 DEFAULT_CONF = {
-    "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -46,17 +50,6 @@ DEFAULT_CONF = {
     # driver AND executors in local mode). Only effective when this factory
     # creates the JVM; a cluster deployment sizes driver/executors itself.
     "spark.driver.memory": "16g",
-    # The driver testdata stores events.ts as TIMESTAMP(NANOS), which Spark's
-    # parquet reader rejects natively; read as nanos-long, converted to a
-    # microsecond timestamp in sources/tables.py (same truncation DuckDB
-    # applies on read).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Driver testdata timestamps are parquet timestamp[us] with no timezone
-    # flag; Spark 4 infers TIMESTAMP_NTZ for those, which breaks epoch
-    # arithmetic (NTZ has no cast to numeric). Read them as session-tz
-    # TIMESTAMP (UTC above) — the exact semantics DuckDB's naive timestamps
-    # get in the oracle.
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.ui.enabled": "false",
     # Python workers skip re-reading unchanged zip archives per task; see
     # the module docstring and pyworker.py.
@@ -90,8 +83,8 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # Timezone must hold even when we inherit an existing session.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # The read confs must hold even when we inherit an existing session.
+    ensure_confs(spark)
     return spark
 
 

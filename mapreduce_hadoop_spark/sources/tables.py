@@ -23,20 +23,21 @@ TABLE_NAMES = [
 
 
 def ensure_confs(spark: SparkSession) -> None:
-    """Runtime confs the engine needs even on externally created sessions
-    (the driver passes its own SparkSession to entry()): events.ts is
-    TIMESTAMP(NANOS) parquet, which Spark only reads via this runtime-settable
-    legacy conf, and the engine's timestamp arithmetic assumes a UTC session."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # timestamp[us] parquet without the UTC flag must read as session-tz
-        # TIMESTAMP, not TIMESTAMP_NTZ — NTZ has no numeric cast and the
-        # engine's epoch arithmetic (and the DuckDB oracle) treat naive
-        # timestamps as UTC instants.
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
+    """Runtime SQL confs the engine needs, on its own sessions and on
+    externally created ones alike (the driver passes its own SparkSession
+    to entry()). They are runtime-settable, so a failure to set one is an
+    error, not something to read past."""
+    # The engine's timestamp arithmetic assumes a UTC session.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # events.ts is microsecond TIMESTAMP in every table this engine reads;
+    # Spark's parquet reader rejects TIMESTAMP(NANOS), so a nanosecond input
+    # is read as nanos-long and converted by normalize_events.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # timestamp[us] parquet without the UTC flag must read as session-tz
+    # TIMESTAMP, not TIMESTAMP_NTZ — NTZ has no numeric cast and the
+    # engine's epoch arithmetic (and the DuckDB oracle) treat naive
+    # timestamps as UTC instants.
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -51,10 +52,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _denaive_timestamps(df: DataFrame) -> DataFrame:
     """Cast any TIMESTAMP_NTZ column to session-tz TIMESTAMP.
 
-    Belt-and-braces for sessions where ensure_confs could not take effect
-    (conf locked, or the scan was planned before we ran): with the session
-    timezone pinned to UTC the cast maps each naive wall-clock to the same
-    instant the oracle assumes.
+    Input adaptation for a column that reads as TIMESTAMP_NTZ even under
+    ensure_confs (a parquet file whose writer recorded the NTZ type in
+    Spark's own schema metadata): with the session timezone pinned to UTC
+    the cast maps each naive wall-clock to the same instant the oracle
+    assumes.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
@@ -68,11 +70,12 @@ def _denaive_timestamps(df: DataFrame) -> DataFrame:
 def normalize_events(df: DataFrame) -> DataFrame:
     """Restore TimestampType on events.ts read as nanos-long.
 
-    events.ts is parquet TIMESTAMP(NANOS): with
-    spark.sql.legacy.parquet.nanosAsLong it arrives as bigint nanoseconds.
-    Truncate to microseconds (exactly what DuckDB does on read) using integer
-    division — nanos exceed 2^53, so a double round-trip would lose
-    sub-microsecond bits.
+    events.ts is microsecond TIMESTAMP in every table this engine reads,
+    which passes through unchanged. A parquet TIMESTAMP(NANOS) input
+    arrives as bigint nanoseconds under
+    spark.sql.legacy.parquet.nanosAsLong; truncate it to microseconds
+    (exactly what DuckDB does on read) using integer division — nanos
+    exceed 2^53, so a double round-trip would lose sub-microsecond bits.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType

@@ -17,24 +17,25 @@ Semantics and their streaming caveats, explicitly:
   per-taxi monotone arrival (the reference's input contract after the MR
   shuffle sort); a position older than the carrier's last-seen t cannot be
   replayed into already-consumed state and is dropped. The reference drops
-  such input silently; an engine should count what it drops, so every
-  entry point takes an optional ``dropped_acc`` Spark accumulator that
-  tallies late-dropped positions (same observability stance as
-  ``dedup.lsh_dropped_buckets``).
-- Trailing open trips are never emitted by ``airport_trips_stream``
-  (reference behavior: a trip still open at end-of-input is lost), so no
-  timeout is needed for result parity. ``airport_trips_stream_timeout`` is
-  the production extension: an event-time timeout force-closes any
-  session idle longer than ``idle_gap_s``, emits the flushed trip (the
-  machine's own M->E close, ``_flush_carrier``), and evicts the taxi's
-  state — bounding the state store by |recently active taxis|.
-  ``airport_trips_timeout_batch`` is its deterministic batch twin.
+  such input silently; an engine should count what it drops, so the
+  stream takes an optional ``dropped_acc`` Spark accumulator that
+  tallies late-dropped positions.
+- The reference never emits a trip still open at end-of-input. The
+  stream here bounds its state instead: an event-time timeout
+  force-closes any session idle longer than ``idle_gap_s``, emits the
+  flushed trip (the machine's own M->E close, ``_flush_carrier``), and
+  evicts the taxi's state — bounding the state store by |recently active
+  taxis|. With a gap and a watermark delay longer than the input spans,
+  no timeout fires and no row is watermark-dropped, so the stream emits
+  exactly the batch parity rows. ``airport_trips_timeout_batch`` is its
+  deterministic batch twin.
 - State per taxi is O(1) — one carrier row — so the state store scales
   with |active taxis|, not with data volume.
 
 ``tests/test_streaming_trips.py`` replays the derived GPS stream with an
 availableNow trigger, in one delivery and across checkpoint restarts, and
-asserts output identical to the batch parity path.
+asserts output identical to the batch parity path (no timeout firing) or
+to the batch twin (timeouts firing).
 """
 
 from __future__ import annotations
@@ -66,8 +67,9 @@ def _events_stream(
 ) -> DataFrame:
     ensure_confs(spark)
     path = f"{sf_dir}/events.parquet"
-    # Raw on-disk schema (ts as nanos-long under the nanosAsLong conf, which
-    # load_table sets); the stream converts to TimestampType in-flight.
+    # Raw on-disk schema: events.ts is microsecond TIMESTAMP in every table
+    # this engine reads; a nanosecond input arrives as nanos-long under the
+    # nanosAsLong conf, which normalize_events converts in-flight.
     raw_schema = spark.read.parquet(path).schema
     # The file stream source requires a directory; select the table file(s)
     # with a glob filter ("events*" also admits redelivered copies and
@@ -105,12 +107,11 @@ def _flush_carrier(taxi: int, carrier: Carrier, kwargs: dict) -> list[tuple]:
     return out
 
 
-def _state_fn(kwargs: dict, idle_gap_s: float | None, dropped_acc):
+def _state_fn(kwargs: dict, idle_gap_s: float, dropped_acc):
     """The per-taxi state function: replay the micro-batch's positions from
-    the stored carrier and store the result. With ``idle_gap_s`` set, also
-    arm an event-time timeout at last-seen + idle gap; when it fires, flush
-    the open trip and evict the taxi's state. Under ``NoTimeout``
-    (``idle_gap_s`` None) ``hasTimedOut`` is never true."""
+    the stored carrier, store the result and arm an event-time timeout at
+    last-seen + idle gap; when it fires, flush the open trip and evict the
+    taxi's state."""
 
     def fn(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -126,60 +127,18 @@ def _state_fn(kwargs: dict, idle_gap_s: float | None, dropped_acc):
         pdf = _drop_late(pd.concat(list(pdfs), ignore_index=True), carrier, dropped_acc)
         out, carrier = replay_frame(taxi, pdf, carrier, **kwargs)
         state.update(carrier)
-        if idle_gap_s is not None:
-            # The timestamp must lie beyond the current watermark (Spark
-            # requirement) — an all-late batch leaves prev_t behind the
-            # watermark, so clamp forward.
-            state.setTimeoutTimestamp(
-                max(
-                    int((carrier.prev_t + idle_gap_s) * 1000),
-                    state.getCurrentWatermarkMs() + 1,
-                )
+        # The timestamp must lie beyond the current watermark (Spark
+        # requirement) — an all-late batch leaves prev_t behind the
+        # watermark, so clamp forward.
+        state.setTimeoutTimestamp(
+            max(
+                int((carrier.prev_t + idle_gap_s) * 1000),
+                state.getCurrentWatermarkMs() + 1,
             )
+        )
         yield pd.DataFrame(out, columns=PARITY_COLUMNS)
 
     return fn
-
-
-def _trips_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    kwargs: dict,
-    dropped_acc,
-    idle_gap_s: float | None = None,
-    watermark_delay: str = "0 seconds",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    kwargs.setdefault("airport_radius_km", gps.DEMO_AIRPORT_RADIUS_KM)
-    pos = gps.positions_from(_events_stream(spark, sf_dir, max_files_per_trigger))
-    timeout = GroupStateTimeout.NoTimeout
-    if idle_gap_s is not None:
-        # The watermark rides a synthetic timestamp_seconds(t) column so
-        # timeout arithmetic stays in the stream's own timescale.
-        pos = pos.withColumn(
-            "t_event", F.timestamp_seconds(F.col("t"))
-        ).withWatermark("t_event", watermark_delay)
-        timeout = GroupStateTimeout.EventTimeTimeout
-    return pos.groupBy("taxi").applyInPandasWithState(
-        _state_fn(kwargs, idle_gap_s, dropped_acc),
-        outputStructType=PARITY_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-def airport_trips_stream(
-    spark: SparkSession, sf_dir: str, dropped_acc=None, **kwargs
-) -> DataFrame:
-    """Streaming DataFrame of closed airport trips (append mode).
-
-    ``kwargs`` override the reference thresholds, as in the batch parity
-    path; the demo airport radius matches the batch parity query so the two
-    are directly comparable. ``dropped_acc`` (optional Spark accumulator)
-    counts late positions dropped at the state boundary.
-    """
-    return _trips_stream(spark, sf_dir, kwargs, dropped_acc)
 
 
 def airport_trips_timeout_batch(
@@ -229,24 +188,34 @@ def airport_trips_stream_timeout(
     max_files_per_trigger: int | None = None,
     **kwargs,
 ) -> DataFrame:
-    """``airport_trips_stream`` plus an event-time timeout: any taxi idle
-    longer than ``idle_gap_s`` (in compressed stream seconds, i.e. the
-    ``t`` timescale) is force-closed — its open trip is flushed through the
-    machine's own M->E close and its state evicted from the store.
+    """Streaming DataFrame of closed airport trips (append mode), with an
+    event-time timeout: any taxi idle longer than ``idle_gap_s`` (in
+    compressed stream seconds, i.e. the ``t`` timescale) is force-closed —
+    its open trip is flushed through the machine's own M->E close and its
+    state evicted from the store.
 
-    Without the timeout, idle taxis' carriers live forever and trailing
-    trips are never emitted. With it, state is bounded by |taxis active
-    within the idle gap| and every qualifying trip eventually emits. The
-    default gap reuses the reference's 210 s session-split threshold
+    State is bounded by |taxis active within the idle gap| and every
+    qualifying trip eventually emits. The default gap reuses the
+    reference's 210 s session-split threshold
     (``AirportTripsRevenue.java:36-38``): a session the machine would have
     split on its next fix is exactly one the timeout may close in absentia.
+
+    ``kwargs`` override the reference thresholds, as in the batch parity
+    path; the demo airport radius matches the batch parity query so the
+    two are directly comparable. ``dropped_acc`` (optional Spark
+    accumulator) counts late positions dropped at the state boundary.
     """
-    return _trips_stream(
-        spark,
-        sf_dir,
-        kwargs,
-        dropped_acc,
-        idle_gap_s,
-        watermark_delay,
-        max_files_per_trigger,
+    kwargs.setdefault("airport_radius_km", gps.DEMO_AIRPORT_RADIUS_KM)
+    pos = gps.positions_from(_events_stream(spark, sf_dir, max_files_per_trigger))
+    # The watermark rides a synthetic timestamp_seconds(t) column so
+    # timeout arithmetic stays in the stream's own timescale.
+    pos = pos.withColumn("t_event", F.timestamp_seconds(F.col("t"))).withWatermark(
+        "t_event", watermark_delay
+    )
+    return pos.groupBy("taxi").applyInPandasWithState(
+        _state_fn(kwargs, idle_gap_s, dropped_acc),
+        outputStructType=PARITY_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

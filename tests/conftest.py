@@ -20,6 +20,36 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def jobs_run(spark):
+    """``jobs_run(fn)`` calls ``fn()`` in a job group of its own and returns
+    (its result, the number of Spark jobs it started)."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs_run_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # Job events reach the status tracker through the asynchronous
+        # listener bus: wait until the count stops moving.
+        n, deadline = -1, time.time() + 10
+        while time.time() < deadline:
+            now = len(sc.statusTracker().getJobIdsForGroup(group))
+            if now == n and now > 0:
+                break
+            n = now
+            time.sleep(0.5)
+        return out, n
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

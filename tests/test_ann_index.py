@@ -449,6 +449,42 @@ def test_append_lineage_missing_base_meta_warns(spark, sf_dir, index_dir, tmp_pa
     assert not caught, [str(w.message) for w in caught]
 
 
+def test_train_sample_caps_large_corpora(spark, sf_dir, index_dir, monkeypatch):
+    """Up to TRAIN_SAMPLE_CAP rows the k-means input is the whole corpus;
+    above it, a deterministic xxhash64(vec_id) sample of about the cap —
+    in one vec_id-sorted partition either way."""
+    emb = _emb(spark, sf_dir)
+    n = emb.count()
+    assert ann_index._train_sample(emb, sf_dir).count() == n
+    cap = n // 4
+    monkeypatch.setattr(ann_index, "TRAIN_SAMPLE_CAP", cap)
+    sample = ann_index._train_sample(emb, sf_dir)
+    assert sample.rdd.getNumPartitions() == 1
+    ids = [r["vec_id"] for r in sample.collect()]
+    assert 0 < len(ids) < 2 * cap
+    assert ids == sorted(set(ids))
+    assert [r["vec_id"] for r in ann_index._train_sample(emb, sf_dir).collect()] == ids
+
+
+def test_base_declaration_ignored_unless_readable_and_durable(tmp_path):
+    """An append declaration (``ann_base.json``) that cannot be parsed, or
+    whose base cannot be fingerprinted, is ignored: frozen models never
+    ride an unverifiable lineage."""
+    import json
+
+    decl = tmp_path / "ann_base.json"
+    assert ann_index._base_info(str(tmp_path)) is None  # no declaration
+    decl.write_text("{not json")
+    assert ann_index._base_info(str(tmp_path)) is None
+    decl.write_text(json.dumps({"base": str(tmp_path / "gone"), "watermark": 3}))
+    assert ann_index._base_info(str(tmp_path)) is None
+    base = tmp_path / "base"
+    base.mkdir()
+    (base / "embeddings.parquet").write_bytes(b"PAR1")
+    decl.write_text(json.dumps({"base": str(base), "watermark": 3}))
+    assert ann_index._base_info(str(tmp_path)) == {"base": str(base), "watermark": 3}
+
+
 def test_write_committed_post_swap_recheck(spark, index_dir, tmp_path):
     """The swap must end with a committed build in place; replacing an
     existing artifact goes through the aside-rename (never an in-place

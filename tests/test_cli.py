@@ -144,3 +144,13 @@ def test_quality_filter_cli_partitions_corpus_by_drop_reason(sf_dir, tmp_path):
     )
     assert kept.num_rows == n_kept
     assert 0 < n_kept < n_docs  # gate actually discriminates on this corpus
+
+
+def test_unknown_command_prints_usage_and_exits_2(capsys):
+    """An unknown or incomplete command line prints the module usage and
+    returns 2 without starting Spark."""
+    from mapreduce_hadoop_spark import cli
+
+    assert cli.main([]) == 2
+    assert cli.main(["histogram", "only-one-path"]) == 2
+    assert "histogram" in capsys.readouterr().out

@@ -121,6 +121,18 @@ def _normed(df):
     )
 
 
+def axis_signs(bands: int, bits: int, dim: int) -> list[list[list[float]]]:
+    """Axis-aligned hyperplanes (bit i of band j = sign of dim j*bits+i),
+    which place vectors in chosen buckets by construction."""
+    return [
+        [
+            [1.0 if d == (j * bits + i) % dim else 0.0 for d in range(dim)]
+            for i in range(bits)
+        ]
+        for j in range(bands)
+    ]
+
+
 def test_emb_lsh_pair_survives_when_first_matching_band_is_capped(spark):
     """A pair whose FIRST matching band is dropped by the bucket cap must
     still be emitted through a later surviving band (the NULL-mask
@@ -146,7 +158,7 @@ def test_emb_lsh_pair_survives_when_first_matching_band_is_capped(spark):
     pairs = {
         (r["vec_a"], r["vec_b"])
         for r in similarity.near_dup_lsh_from(
-            emb, signs=similarity.axis_signs(similarity.NEAR_DUP_BANDS, 4, dim=32)
+            emb, signs=axis_signs(similarity.NEAR_DUP_BANDS, 4, dim=32)
         ).collect()
     }
     assert (0, 16) in pairs

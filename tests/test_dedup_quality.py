@@ -5,6 +5,49 @@ from __future__ import annotations
 from mapreduce_hadoop_spark.operators import dedup
 
 
+def lsh_dropped_buckets(hs):
+    """(band, sig, bucket_n) for every band bucket ``LSH_BUCKET_CAP`` drops."""
+    from pyspark.sql import functions as F
+
+    return (
+        dedup._band_keys(dedup._minhash_from(hs))
+        .groupBy("band", "sig")
+        .agg(F.count(F.lit(1)).alias("bucket_n"))
+        .filter(F.col("bucket_n") > F.lit(dedup.LSH_BUCKET_CAP))
+    )
+
+
+def _simhash_from_hs_jvm(hs_rel):
+    """The JVM array-accumulator simhash fold: the parity reference for
+    the Arrow fold ``dedup._simhash_from_hs``."""
+    from pyspark.sql import functions as F
+
+    hs = hs_rel.filter(F.size("hs") > 0)
+    n = F.size("hs")
+    bits = dedup.SIMHASH_BITS
+    masks = F.array(*[F.lit(1 << j).cast("long") for j in range(bits)])
+    counts = F.aggregate(
+        F.col("hs"),
+        F.array_repeat(F.lit(0).cast("long"), bits),
+        lambda acc, x: F.zip_with(
+            acc,
+            masks,
+            lambda c, m: c
+            + F.when(x.bitwiseAND(m) != F.lit(0), F.lit(1)).otherwise(F.lit(0)),
+        ),
+    )
+    sim = F.aggregate(
+        F.zip_with(
+            counts,
+            masks,
+            lambda c, m: F.when(c * 2 > n, m).otherwise(F.lit(0).cast("long")),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    return hs.select("doc_id", sim.alias("simhash"))
+
+
 def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
     # With 8 bands x 2 rows, P(candidate | j=0.5) = 1-(1-0.25)^8 ~ 0.90 at
     # the threshold boundary (0.97 at j=0.6, ~1 at j>=0.8); the verify step
@@ -90,7 +133,7 @@ def test_lsh_bucket_cap_bounds_boilerplate_blowup(spark, monkeypatch):
         F.transform(T.shingles("text"), lambda s: md5_long(s) % F.lit(P)).alias("hs"),
     )
     assert dedup.minhash_lsh_pairs_from(hs).count() == 0
-    dropped = dedup.lsh_dropped_buckets(hs).collect()
+    dropped = lsh_dropped_buckets(hs).collect()
     assert len(dropped) == dedup.BANDS
     assert all(r["bucket_n"] == 300 for r in dropped)
     # An uncapped run on the same input explodes into the quadratic pairs.
@@ -332,7 +375,6 @@ def test_simhash_arrow_fold_matches_jvm(spark, sf_dir):
     from mapreduce_hadoop_spark.operators.dedup import (
         _shingle_hashes60,
         _simhash_from_hs,
-        _simhash_from_hs_jvm,
     )
 
     hs = _shingle_hashes60(spark, sf_dir)

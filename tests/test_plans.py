@@ -30,13 +30,28 @@ def executed_plan(df: DataFrame) -> str:
     return plan.split("== Initial Plan ==", 1)[0]
 
 
+def _distinct_operators(plan: str, pattern: str) -> int:
+    """Operators on plan lines matching ``pattern``, one per ``plan_id``:
+    a cached intermediate prints its whole subtree under every scan of
+    it, so one exchange can appear on several lines with one id."""
+    ids = set()
+    for i, line in enumerate(plan.splitlines()):
+        if re.search(pattern, line):
+            m = re.search(r"\[plan_id=(\d+)\]", line)
+            ids.add(m.group(1) if m else f"line {i}")
+    return len(ids)
+
+
 def plan_counts(df: DataFrame) -> dict[str, int]:
     plan = executed_plan(df)
     return {
         # \bExchange\b does not match inside "BroadcastExchange" (no word
         # boundary between 't' and 'E'), so this counts shuffles only.
-        "exchange": len(re.findall(r"\bExchange\b|\bShuffleExchange", plan)),
-        "broadcast_exchange": plan.count("BroadcastExchange"),
+        "exchange": _distinct_operators(plan, r"\bExchange\b|\bShuffleExchange"),
+        "round_robin_exchange": _distinct_operators(
+            plan, r"\bExchange RoundRobinPartitioning"
+        ),
+        "broadcast_exchange": _distinct_operators(plan, "BroadcastExchange"),
         "broadcast_hash_join": plan.count("BroadcastHashJoin"),
         "sort_merge_join": plan.count("SortMergeJoin"),
         "sort": plan.count("+- Sort") + plan.count(":- Sort"),
@@ -426,6 +441,32 @@ def test_parquet_scan_width_metadata_estimate(spark, sf_dir):
     assert parquet_scan_width(spark, f"file://{path}") == w
 
 
+def test_parquet_scan_width_listing_and_footer_paths(spark, tmp_path, monkeypatch):
+    # A directory lists its data files (skipping _/. names). Small files
+    # pad to openCost each, so four of them estimate cores-wide byte
+    # splits and the footers decide: one row group per parquet file, and
+    # an unreadable footer counts its file once. Past _FOOTER_READ_CAP
+    # files no footer is read and the byte estimate stands.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_hadoop_spark.sources import tables
+
+    cores = spark.sparkContext.defaultParallelism
+    d = tmp_path / "tbl"
+    d.mkdir()
+    for i in range(cores - 1):
+        pq.write_table(pa.table({"a": [i]}), str(d / f"part-{i}.parquet"))
+    (d / "part-x.parquet").write_bytes(b"not parquet")
+    (d / "_SUCCESS").write_bytes(b"")
+    assert tables.parquet_scan_width(spark, str(d)) == cores
+    calls = []
+    monkeypatch.setattr(tables, "_FOOTER_READ_CAP", 2)
+    monkeypatch.setattr(pq, "ParquetFile", lambda f: calls.append(f))
+    assert tables.parquet_scan_width(spark, str(d)) == cores
+    assert calls == []
+
+
 def test_parquet_scan_width_remote_scheme_never_narrow(spark, sf_dir):
     # The 100 TB deployment reads from a remote filesystem the driver's OS
     # cannot list. The width check must report UNKNOWN there, and
@@ -462,11 +503,6 @@ def test_per_doc_queries_are_one_python_pass(spark, sf_dir):
     # keeps its one widen through the same rule.
     from mapreduce_hadoop_spark import registry
 
-    def widens(plan: str) -> int:
-        # A cached intermediate prints its subtree under every scan of it;
-        # the plan_id tells one exchange printed twice from two exchanges.
-        return len(set(re.findall(r"RoundRobinPartitioning\(\d+\).*?plan_id=(\d+)", plan)))
-
     queries = registry.queries()
     for name in (
         "multimodal_real_resize",
@@ -476,11 +512,12 @@ def test_per_doc_queries_are_one_python_pass(spark, sf_dir):
         "multimodal_real_avi",
         "multimodal_real_roundtrip",
     ):
-        plan = executed_plan(queries[name](spark, sf_dir))
+        df = queries[name](spark, sf_dir)
+        plan = executed_plan(df)
         assert plan.count("MapInPandas") == 1, (name, plan)
-        assert widens(plan) == 1, (name, plan)
-    plan = executed_plan(queries["dedup_simhash"](spark, sf_dir))
-    assert widens(plan) == 1, plan
+        assert plan_counts(df)["round_robin_exchange"] == 1, (name, plan)
+    df = queries["dedup_simhash"](spark, sf_dir)
+    assert plan_counts(df)["round_robin_exchange"] == 1, executed_plan(df)
 
 
 def test_span_dedup_two_shuffles_no_joins(spark, sf_dir):

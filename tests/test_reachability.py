@@ -29,19 +29,6 @@ ALLOWED = {
     f"{PKG}.__version__": "package metadata, read by no code",
     f"{PKG}.functions.__all__": "public-API declaration",
     f"{PKG}.sources.__all__": "public-API declaration",
-    f"{PKG}.operators.dedup._simhash_from_hs_jvm": (
-        "reference twin: tests pin the Arrow simhash fold equal to it"
-    ),
-    f"{PKG}.operators.similarity.near_dup_cosine_bnlj": (
-        "reference twin: tests pin the exact near-dup plan against this "
-        "nested-loop join"
-    ),
-    f"{PKG}.operators.similarity.axis_signs": (
-        "reference twin: hand-built sign planes tests feed the LSH path"
-    ),
-    f"{PKG}.operators.dedup.lsh_dropped_buckets": (
-        "reference twin and the LSH bucket-cap count source"
-    ),
     f"{PKG}.registry.CHANGED_THIS_ROUND": (
         "registry rotation constant, checked by test_registry_rotation"
     ),
@@ -62,10 +49,6 @@ ALLOWED = {
     ),
     f"{PKG}.registry.ROUND": (
         "registry rotation constant, checked by test_registry_rotation"
-    ),
-    f"{PKG}.streaming.trips.airport_trips_stream": (
-        "its removal would change the trip state function's timeout arming "
-        "and the checkpoint-restart test's reference: a fold, not a deletion"
     ),
 }
 

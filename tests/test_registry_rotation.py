@@ -56,20 +56,20 @@ def test_head_window_size_and_total():
 # exactly registry.REWRITTEN_HASH_IDENTICAL — and MUST be updated in the
 # SAME commit that edits that tuple, or the suite goes red.
 PINNED_REWRITE_HASHES: dict[str, tuple[str, str]] = {
-    "similarity_topk_ivfpq_fixed": ("GATE_sf0.01_r30.log", "6a1948aaeb5952e9"),
-    "similarity_topk_ivfpq_trained": ("GATE_sf0.01_r30.log", "301db5bb25ca2186"),
-    "corpus_clean_stats": ("GATE_sf0.01_r30.log", "1c8da89924dfdcf7"),
-    "similarity_topk_ivf_adaptive": ("GATE_sf0.01_r30.log", "ca0d1a60e6a9b222"),
-    "dedup_clusters": ("GATE_sf0.01_r30.log", "9a946014010f31c1"),
-    "dedup_keep_best": ("GATE_sf0.01_r30.log", "e739163b2c22caaf"),
-    "text_quality_score": ("GATE_sf0.01_r30.log", "d7227a8ffa987e13"),
-    "dedup_exact": ("GATE_sf0.01_r30.log", "7ab7bc08b2572bb0"),
-    "dedup_exact_normalized": ("GATE_sf0.01_r30.log", "ea26fcaddcc61a85"),
-    "similarity_topk_lsh": ("GATE_sf0.01_r30.log", "0e7f2f0d8d7a2cfb"),
-    "dedup_simhash": ("GATE_sf0.01_r30.log", "15ca8f177d42b079"),
-    "segment_customer_setops": ("GATE_sf0.01_r30.log", "e75cc4483c2d5a2f"),
-    "text_tfidf_top_terms": ("GATE_sf0.01_r30.log", "233a4fef595713c6"),
-    "similarity_near_dup_lsh": ("GATE_sf0.01_r30.log", "8c65978035fd9679"),
+    "similarity_topk_ivfpq_fixed": ("GATE_sf0.01_r31.log", "6a1948aaeb5952e9"),
+    "similarity_topk_ivfpq_trained": ("GATE_sf0.01_r31.log", "301db5bb25ca2186"),
+    "corpus_clean_stats": ("GATE_sf0.01_r31.log", "1c8da89924dfdcf7"),
+    "similarity_topk_ivf_adaptive": ("GATE_sf0.01_r31.log", "ca0d1a60e6a9b222"),
+    "dedup_clusters": ("GATE_sf0.01_r31.log", "9a946014010f31c1"),
+    "dedup_keep_best": ("GATE_sf0.01_r31.log", "e739163b2c22caaf"),
+    "text_quality_score": ("GATE_sf0.01_r31.log", "d7227a8ffa987e13"),
+    "dedup_exact": ("GATE_sf0.01_r31.log", "7ab7bc08b2572bb0"),
+    "dedup_exact_normalized": ("GATE_sf0.01_r31.log", "ea26fcaddcc61a85"),
+    "similarity_topk_lsh": ("GATE_sf0.01_r31.log", "0e7f2f0d8d7a2cfb"),
+    "dedup_simhash": ("GATE_sf0.01_r31.log", "15ca8f177d42b079"),
+    "segment_customer_setops": ("GATE_sf0.01_r31.log", "e75cc4483c2d5a2f"),
+    "text_tfidf_top_terms": ("GATE_sf0.01_r31.log", "233a4fef595713c6"),
+    "similarity_near_dup_lsh": ("GATE_sf0.01_r31.log", "8c65978035fd9679"),
 }
 
 

@@ -6,15 +6,19 @@ import pytest
 
 from mapreduce_hadoop_spark.operators.sessionize import airport_trips_parity_query
 from mapreduce_hadoop_spark.streaming.trips import (
-    airport_trips_stream,
     airport_trips_stream_timeout,
     airport_trips_timeout_batch,
 )
 
+# An idle gap and a watermark delay far longer than any test corpus spans
+# (stream time is epoch seconds / 40): no timeout fires and no position is
+# watermark-dropped, so the stream emits exactly the batch parity rows.
+NO_TIMEOUT = {"idle_gap_s": 1e10, "watermark_delay": "36500 days"}
+
 
 def test_stream_trips_match_batch_parity(spark, sf_dir):
     q = (
-        airport_trips_stream(spark, sf_dir)
+        airport_trips_stream_timeout(spark, sf_dir, **NO_TIMEOUT)
         .writeStream.format("memory")
         .queryName("trips_stream_test")
         .outputMode("append")
@@ -126,7 +130,7 @@ def test_trip_state_survives_checkpoint_restart(spark, sf_dir, tmp_path, deliver
 
     def run_stream():
         q = (
-            airport_trips_stream(spark, src)
+            airport_trips_stream_timeout(spark, src, **NO_TIMEOUT)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -183,7 +187,7 @@ def test_late_positions_are_counted(spark, sf_dir, tmp_path):
 
     def run_stream():
         q = (
-            airport_trips_stream(spark, src, dropped_acc=acc)
+            airport_trips_stream_timeout(spark, src, dropped_acc=acc, **NO_TIMEOUT)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)

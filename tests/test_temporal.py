@@ -101,3 +101,15 @@ def test_range_join_hot_path_equals_pairwise(spark, sf_dir):
     assert len(got) == len(want) > 0
     for c in want.columns:
         assert (got[c].values == want[c].values).all(), c
+
+
+def test_range_join_probes_hot_users_on_every_build(spark, sf_dir, jobs_run):
+    """Each build of the range join runs its hot-user statistics probe:
+    the routing decision is worked out from the data on every call, never
+    reused from an earlier build over the same directory. A reused
+    decision shows as a second build running fewer jobs than the first
+    (only its table open)."""
+    first, n_first = jobs_run(lambda: views_before_purchase_range_join(spark, sf_dir))
+    second, n_second = jobs_run(lambda: views_before_purchase_range_join(spark, sf_dir))
+    assert n_second == n_first >= 2
+    assert sorted(second.collect()) == sorted(first.collect())

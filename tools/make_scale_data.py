@@ -199,13 +199,12 @@ def replicate(
         back = pq.read_schema(f"{dst}/{table}.parquet")
         assert back.equals(t.schema), (table, back, t.schema)
         print(f"{table}: {t.num_rows} -> {out.num_rows} rows")
-    # The dataset under dst may have been rewritten in place: drop any
-    # per-dataset statistics cached in this process (hot-key probe
-    # decisions, fitted IVF centroids) so queries re-probe the new data.
+    # The dataset under dst may have been rewritten in place: drop the
+    # fitted IVF models memoized in this process so queries refit on the
+    # new data.
     try:
-        from mapreduce_hadoop_spark.operators import ann_index, temporal
+        from mapreduce_hadoop_spark.operators import ann_index
 
-        temporal.clear_stats_cache()
         ann_index.clear_memos()
     except ImportError:
         pass  # standalone use outside the repo: nothing cached to clear
